@@ -295,9 +295,6 @@ object Bench {
       // that cannot get pages dies). Default 0.5 protected storage
       // starved 32 concurrent agg tasks at sf1.
       .config("spark.memory.storageFraction", "0.2")
-      // pipeline-input materialization mode (see Patterns.ensurePersisted)
-      .config("spark.graft.pipelineInput",
-        sys.env.getOrElse("GRAFT_PIPELINE_INPUT", "persist"))
       // ContextCleaner frees checkpoint/broadcast blocks only on GC; a
       // big-heap JVM may not GC for the whole battery, so stale blocks
       // squeeze execution memory (observed: one query 4.9s standalone →

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * the corpus is a pure function of the ids — no runtime randomness).
   * Rationale: uniform/rotated embeddings are ANN's theory floor
   * (recall ≈ fraction scanned); real embedding corpora cluster, which
-  * is the regime IVF's cells exist for — PqDial on a clustered dir
-  * measures the dial a user would actually see.
+  * is the regime IVF's cells exist for — recall measured on a
+  * clustered dir is the dial a user would actually see.
   */
 object ScaleUp {
 

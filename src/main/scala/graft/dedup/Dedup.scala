@@ -127,7 +127,7 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // Three consumers (banding + both verify sides) — materialize the
     // signature frame once instead of re-running the shingle+signature
-    // scan per consumer (policy knob: spark.graft.pipelineInput).
+    // scan per consumer.
     val withSig = graft.view.Patterns.ensurePersisted(
       sigProjection(df, idCol, textCol, numHashes, shingleK),
       graft.view.Patterns.TextInflation)
@@ -280,16 +280,10 @@ object Dedup {
     val withSig = sigProjection(df, idCol, textCol, numHashes, shingleK)
       .dropDuplicates("id")
       .localCheckpoint()
-    // The bucket/set checkpoints and the doc count all read ONLY the
-    // just-materialized signature frame — three independent actions,
-    // submitted concurrently (guide §2.6) instead of three serial
-    // job latencies on the ingestion loop's critical path.
-    val (buckets, sets, n) = graft.run.Par.join3(
-      () => bandBuckets(withSig, numHashes, bands).localCheckpoint(),
-      () => withSig.select(col("id"), col("hs")).localCheckpoint(),
-      () => withSig.count())
+    val buckets = bandBuckets(withSig, numHashes, bands).localCheckpoint()
+    val sets = withSig.select(col("id"), col("hs")).localCheckpoint()
     MinHashIndexModel(numHashes, bands, shingleK,
-      buckets = buckets, sets = sets, idCol = idCol, builtN = n)
+      buckets = buckets, sets = sets, idCol = idCol, builtN = withSig.count())
   }
 
   /** Near-dup pairs between a `delta` batch and an indexed corpus:
@@ -350,21 +344,16 @@ object Dedup {
       model.numHashes, model.shingleK)
       .join(model.sets.select(col("id")), Seq("id"), "left_anti")
       .localCheckpoint()
-    // The two union checkpoints and the bookkeeping count read only
-    // the materialized delta + the old (already materialized) index —
-    // independent actions, submitted concurrently (guide §2.6; the
-    // count is cheap — delta-sized — and rides the fork for free).
-    val (buckets, sets, admitted) = graft.run.Par.join3(
-      () => model.buckets
-        .unionByName(bandBuckets(dSig, model.numHashes, model.bands))
-        .localCheckpoint(),
-      () => model.sets.unionByName(dSig.select(col("id"), col("hs")))
-        .localCheckpoint(),
-      () => dSig.count())
-    // Rebuild-trigger bookkeeping on the admitted-row count.
+    val buckets = model.buckets
+      .unionByName(bandBuckets(dSig, model.numHashes, model.bands))
+      .localCheckpoint()
+    val sets = model.sets.unionByName(dSig.select(col("id"), col("hs")))
+      .localCheckpoint()
+    // Rebuild-trigger bookkeeping on the admitted-row count — skipped
+    // (no count job) for a loaded model, which has no build size.
     val extended =
       if (model.builtN < 0) model.extendedN
-      else model.extendedN + admitted
+      else model.extendedN + dSig.count()
     if (model.builtN >= 0 && extended > model.builtN &&
         model.extendedN <= model.builtN)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -473,8 +462,7 @@ object Dedup {
                           maxCandidates: Long = 0L): DataFrame = {
     // The shingle frame feeds four consumers (dfreq, the prefix
     // rebuild, and both verify sides) — materialize it once instead of
-    // re-running the normalize→shingle scan per consumer (same policy
-    // knob as the construct pipelines: spark.graft.pipelineInput).
+    // re-running the normalize→shingle scan per consumer.
     val docs = graft.view.Patterns.ensurePersisted(
       df.select(col(idCol).as("id"),
         graft.functions.ShingleHashesExpr(

@@ -39,27 +39,16 @@ object ConnectedComponents {
     *               duplicates/self-loops tolerated
     * @return       (idCol, "component") — component = min reachable id
     */
-  /** Measurement kill-switch: `GRAFT_CC_OBSERVE=0` reverts to the
-    * separate per-round convergence job (max over the checkpointed
-    * blocks) instead of the observe-fused single job, so the fusion
-    * can be A/B-ed on one build. */
-  private val observeFused: Boolean =
-    sys.env.get("GRAFT_CC_OBSERVE").forall(_ != "0")
-
   def run(nodes: DataFrame, edges: DataFrame,
           idCol: String = "id", srcCol: String = "src", dstCol: String = "dst",
           maxRounds: Int = 25): DataFrame = {
-    // The edge flip and the initial labels are independent
-    // checkpoints — submit them concurrently (guide §2.6).
-    val (und, lbl0) = graft.run.Par.join2(
-      () => edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(), // reused every round — compute the flip once
-      () => nodes.select(col(idCol).as("id"), col(idCol).as("lbl"))
-        .localCheckpoint())
-    var lbl = lbl0
+    val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint() // reused every round — compute the flip once
+    var lbl = nodes.select(col(idCol).as("id"), col(idCol).as("lbl"))
+      .localCheckpoint()
     var round = 0
     var converged = false
     // try/finally: on ANY exit — success, non-convergence, or a failed
@@ -89,30 +78,22 @@ object ConnectedComponents {
         .select(col("id"), col("plbl").as("lbl"))
         .join(lbl.select(col("id"), col("lbl").as("prev")), Seq("id"))
         .select(col("id"), col("lbl"), (col("lbl") =!= col("prev")).as("changed"))
-      if (observeFused) {
-        val observed = flagged.observe(s"cc_round_$round",
-          coalesce(max(col("changed")), lit(false)).as("any_changed"))
-        val next = observed.localCheckpoint()
-        // Missing metric must FAIL, not read as converged: a silent
-        // miss would return half-propagated labels as final.
-        val metric = observed.queryExecution.observedMetrics
-          .getOrElse(s"cc_round_$round", throw new IllegalStateException(
-            "CC convergence observe metric missing from the round's " +
-              "checkpoint action"))
-        converged = !metric.getBoolean(0)
-        freeCheckpoint(lbl)
-        lbl = next
-      } else {
-        val next = flagged.localCheckpoint()
-        converged = !next.agg(coalesce(max(col("changed")), lit(false)))
-          .head.getBoolean(0)
+      val observed = flagged.observe(s"cc_round_$round",
+        coalesce(max(col("changed")), lit(false)).as("any_changed"))
+      val next = observed.localCheckpoint()
+      // Missing metric must FAIL, not read as converged: a silent
+      // miss would return half-propagated labels as final.
+      val metric = observed.queryExecution.observedMetrics
+        .getOrElse(s"cc_round_$round", throw new IllegalStateException(
+          "CC convergence observe metric missing from the round's " +
+            "checkpoint action"))
+      converged = !metric.getBoolean(0)
       // `next` is materialized (checkpoint is eager), so the previous
       // round's blocks are unreachable from here on — free them, or
       // every round's checkpoint stays in block-manager memory for the
       // application lifetime.
-        freeCheckpoint(lbl)
-        lbl = next
-      }
+      freeCheckpoint(lbl)
+      lbl = next
         round += 1
       }
       require(converged, s"did not converge in $maxRounds rounds — " +

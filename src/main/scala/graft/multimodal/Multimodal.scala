@@ -96,7 +96,7 @@ object Multimodal {
     * row), which is what makes the decode parallelizable at all. The
     * readers themselves are stateless (all per-call state is local),
     * so sharing instances across tasks is safe. */
-  private lazy val audioFileReaders: Seq[javax.sound.sampled.spi.AudioFileReader] = {
+  private[multimodal] lazy val audioFileReaders: Seq[javax.sound.sampled.spi.AudioFileReader] = {
     val it = java.util.ServiceLoader
       .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
     val buf = scala.collection.mutable.ArrayBuffer
@@ -110,18 +110,21 @@ object Multimodal {
     * `AudioSystem.getAudioInputStream` (readers reject foreign formats
     * with UnsupportedAudioFileException; other errors propagate). Falls
     * back to the AudioSystem path only when the ServiceLoader saw no
-    * providers at all (an exotic platform). */
-  private def openAudioStream(bytes: Array[Byte]): AudioInputStream = {
-    val in = new ByteArrayInputStream(bytes)
-    val hit = audioFileReaders.iterator.flatMap { r =>
-      in.reset() // back to byte 0 for each candidate reader
-      try Some(r.getAudioInputStream(in))
+    * providers at all (an exotic platform). Each candidate reads its
+    * own stream: a rejecting reader may have `mark()`ed mid-stream, so
+    * `reset()` on a shared one would hand the next reader a truncated
+    * payload. */
+  private[multimodal] def openAudioStream(bytes: Array[Byte],
+      readers: Seq[javax.sound.sampled.spi.AudioFileReader] = audioFileReaders)
+      : AudioInputStream = {
+    val hit = readers.iterator.flatMap { r =>
+      try Some(r.getAudioInputStream(new ByteArrayInputStream(bytes)))
       catch {
         case _: javax.sound.sampled.UnsupportedAudioFileException => None
       }
     }.take(1).toSeq.headOption
     hit.getOrElse {
-      if (audioFileReaders.isEmpty)
+      if (readers.isEmpty)
         AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
       else throw new javax.sound.sampled.UnsupportedAudioFileException(
         "no cached provider accepts the payload")

@@ -760,29 +760,15 @@ object QuadBattery {
         col("schema_role_name"), col("thing_id"))
       val thing = tables("graph.thing")
         .select(col("id").as("thing_id"), col("schema_name").as("thing_name"))
-      // Materialize the nine family frames as CONCURRENT jobs (guide
-      // §2.6) instead of one mega-plan: single-plan stage scheduling
-      // left the branch chains' stages waiting on each other's
-      // barriers (r19 profile: stage-wall sum ~9× wall on 32 cores),
-      // while nine independent jobs let the scheduler interleave every
-      // branch's stages freely. The shared persisted melt is built by
-      // whichever job touches it first (block-level locking makes the
-      // rest wait, not recompute). GRAFT_FAM_CONC=0 reverts to the
-      // fused single plan for A/B measurement.
-      val famFrames = Seq(isp, collT, car, colr, repT, inc, fil, role, thing)
-      val m =
-        if (sys.env.get("GRAFT_FAM_CONC").contains("0")) famFrames
-        else graft.run.Par.joinAll(famFrames.map(f =>
-          () => f.localCheckpoint()))
-      m(0)
-        .join(m(1), Seq("collection_id"))
-        .join(m(2), Seq("id"))
-        .join(m(3), Seq("carrier_id"), "left")
-        .join(m(4), Seq("id"))
-        .join(m(5), Seq("rep_id"))
-        .join(m(6), Seq("file_id"))
-        .join(m(7), Seq("id"))
-        .join(m(8), Seq("thing_id"))
+      isp
+        .join(collT, Seq("collection_id"))
+        .join(car, Seq("id"))
+        .join(colr, Seq("carrier_id"), "left")
+        .join(repT, Seq("id"))
+        .join(inc, Seq("rep_id"))
+        .join(fil, Seq("file_id"))
+        .join(role, Seq("id"))
+        .join(thing, Seq("thing_id"))
         .select(col("id"), col("collection_id"), col("collection_type"),
           col("collection_name"), col("schema_season_number"),
           col("collection_parent"), col("carrier_id"), col("carrier_name"),

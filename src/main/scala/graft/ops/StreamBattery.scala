@@ -83,11 +83,10 @@ object StreamBattery {
       fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
     } catch { case _: Exception => 0L }
 
-  private[ops] def replayPartitions(s: SparkSession, feedDir: String): Int =
-    sys.env.get("GRAFT_REPLAY_PARTITIONS").flatMap(_.toIntOption).getOrElse {
-      val bytes = dirBytes(s, feedDir)
-      math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
-    }
+  private[ops] def replayPartitions(s: SparkSession, feedDir: String): Int = {
+    val bytes = dirBytes(s, feedDir)
+    math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
+  }
 
   private def writeSlice(df: DataFrame, dir: String, seq: Int): Unit = {
     val spark = df.sparkSession
@@ -484,15 +483,13 @@ object StreamBattery {
       // Initial bucket count derives from feed volume (the target's
       // steady-state size is ~the replayed feed): sf-scale feeds floor
       // at 4 — fewer per-batch file writes on a merge-bound gate —
-      // while a 90× feed derives up. GRAFT_MERGE_BUCKETS overrides for
-      // A/B runs.
+      // while a 90× feed derives up.
       val q = graft.streaming.StreamingSync.start(
         s.readStream.schema(graft.source.QuadSource.schema)
           .option("maxFilesPerTrigger", 1).parquet(feed),
         Seq(Tables.intellectualEntity, Tables.schemaLicense),
         target, s"$base/ckpt",
-        numBuckets = Env.intOr("GRAFT_MERGE_BUCKETS",
-          graft.sink.Upsert.bucketsFor(dirBytes(s, feed))))
+        numBuckets = graft.sink.Upsert.bucketsFor(dirBytes(s, feed)))
       q.awaitTermination()
       val parent = s.read.parquet(s"$target/graph_intellectual_entity")
         .select(col("id"), col("schema_name"))
@@ -727,16 +724,10 @@ object StreamBattery {
             val novel = b.join(
               pairs.select(col("delta_id").as("doc_id")).distinct(),
               Seq("doc_id"), "left_anti")
-            // The rolling-found fold and the index extend both read
-            // only the materialized pairs/batch — submit them
-            // concurrently (guide §2.6) instead of serializing the
-            // per-batch job chain.
-            val (f2, m2) = graft.run.Par.join2(
-              () => if (found == null) pairs
-                else found.unionByName(pairs).localCheckpoint(),
-              () => Dedup.minhashExtend(model, novel, "doc_id", "text"))
-            found = f2
-            model = m2
+            found =
+              if (found == null) pairs
+              else found.unionByName(pairs).localCheckpoint()
+            model = Dedup.minhashExtend(model, novel, "doc_id", "text")
             ()
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -909,43 +900,28 @@ object StreamBattery {
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val b = batch.filter(quality(col("text"))).localCheckpoint()
-            // The live model's pairing and the shadow twin's pairing
-            // read only the materialized batch + their own (already
-            // materialized) indexes — submit them concurrently (guide
-            // §2.6; same for the dependent action groups below, which
-            // previously ran as one serial ~17-job chain per batch).
-            val (pairs, spOpt) = graft.run.Par.join2(
-              () => Dedup.minhashDeltaPairs(model, b, "doc_id", "text",
-                minJaccard = 0.5).localCheckpoint(),
-              () => if (rebuilds > 0)
-                // post-rebuild: the twin that only extended must decide
-                // identically — ids AND jaccard values
-                Some(Dedup.minhashDeltaPairs(shadow, b, "doc_id", "text",
-                  minJaccard = 0.5).localCheckpoint())
-              else None)
-            // Invariance check fused to ONE action: the symmetric
-            // multiset difference is empty iff both exceptAll sides
-            // are empty, which already implies equal counts — the
-            // previous count()==count() conjunct was redundant (4
-            // driver actions → 1, same boolean).
-            val (novel, f2, _) = graft.run.Par.join3(
-              () => b.join(
-                pairs.select(col("delta_id").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti").localCheckpoint(),
-              () => if (found == null) pairs
-                else found.unionByName(pairs).localCheckpoint(),
-              () => spOpt.foreach { sp =>
-                invariant &&= pairs.exceptAll(sp)
-                  .unionByName(sp.exceptAll(pairs)).isEmpty
-              })
-            found = f2
-            val (m2, s2, c2) = graft.run.Par.join3(
-              () => Dedup.minhashExtend(model, novel, "doc_id", "text"),
-              () => Dedup.minhashExtend(shadow, novel, "doc_id", "text"),
-              () => corpus.unionByName(novel).localCheckpoint())
-            model = m2
-            shadow = s2
-            corpus = c2
+            val pairs = Dedup.minhashDeltaPairs(model, b, "doc_id", "text",
+              minJaccard = 0.5).localCheckpoint()
+            if (rebuilds > 0) {
+              // post-rebuild: the twin that only extended must decide
+              // identically — ids AND jaccard values
+              val sp = Dedup.minhashDeltaPairs(shadow, b, "doc_id", "text",
+                minJaccard = 0.5).localCheckpoint()
+              // Invariance check fused to ONE action: the symmetric
+              // multiset difference is empty iff both exceptAll sides
+              // are empty, which already implies equal counts.
+              invariant &&= pairs.exceptAll(sp)
+                .unionByName(sp.exceptAll(pairs)).isEmpty
+            }
+            val novel = b.join(
+              pairs.select(col("delta_id").as("doc_id")).distinct(),
+              Seq("doc_id"), "left_anti").localCheckpoint()
+            found =
+              if (found == null) pairs
+              else found.unionByName(pairs).localCheckpoint()
+            model = Dedup.minhashExtend(model, novel, "doc_id", "text")
+            shadow = Dedup.minhashExtend(shadow, novel, "doc_id", "text")
+            corpus = corpus.unionByName(novel).localCheckpoint()
             if (model.needsRebuild) {
               rebuilds += 1
               model = Dedup.minhashBuild(corpus, "doc_id", "text",
@@ -1081,22 +1057,14 @@ object StreamBattery {
             val pairs = Similarity.ivfSearch(model, b, topK = 1)
               .filter(col("cos") >= 0.9)
               .select(col("probe_id"), col("neighbor_id")).localCheckpoint()
-            // Fold, novel checkpoint, extend and corpus union read
-            // only materialized frames — overlap the independent ones
-            // (guide §2.6; the extend itself forks its union/count
-            // actions internally).
-            val (novel, f2) = graft.run.Par.join2(
-              () => b.join(
-                pairs.select(col("probe_id").as("vec_id")).distinct(),
-                Seq("vec_id"), "left_anti").localCheckpoint(),
-              () => if (found == null) pairs
-                else found.unionByName(pairs).localCheckpoint())
-            found = f2
-            val (m2, c2) = graft.run.Par.join2(
-              () => Similarity.ivfExtend(model, novel),
-              () => corpus.unionByName(novel).localCheckpoint())
-            model = m2
-            corpus = c2
+            val novel = b.join(
+              pairs.select(col("probe_id").as("vec_id")).distinct(),
+              Seq("vec_id"), "left_anti").localCheckpoint()
+            found =
+              if (found == null) pairs
+              else found.unionByName(pairs).localCheckpoint()
+            model = Similarity.ivfExtend(model, novel)
+            corpus = corpus.unionByName(novel).localCheckpoint()
             if (model.needsRebuild) {
               rebuilds += 1
               model = Similarity.ivfBuild(corpus)

@@ -25,12 +25,7 @@ object Tuning {
   }
 
   /** ~1 initial shuffle partition per MB of compressed input, clamped
-    * to [floor, cap]. Env `SPARK_GRAFT_INIT_PARTITIONS` still overrides
-    * for experiments. */
+    * to [floor, cap]. */
   def initialPartitions(sfDir: String, floor: Int = 256, cap: Int = 16384): Int =
-    // flatMap(toIntOption): a malformed override falls back to the
-    // derivation instead of crashing session construction.
-    sys.env.get("SPARK_GRAFT_INIT_PARTITIONS").flatMap(_.toIntOption).getOrElse {
-      math.min(cap.toLong, math.max(floor.toLong, inputBytes(sfDir) >> 20)).toInt
-    }
+    math.min(cap.toLong, math.max(floor.toLong, inputBytes(sfDir) >> 20)).toInt
 }

@@ -173,7 +173,7 @@ object Similarity {
     *    sf-scale recall regime the oracle was calibrated on. Uniform
     *    embeddings (the oracle's worst case) still see recall track
     *    the scanned fraction — that is inherent to ANN, measured and
-    *    documented in BENCH_NOTES via PqDial; clustered corpora (the
+    *    documented in BENCH_NOTES; clustered corpora (the
     *    realistic regime) concentrate recall into few cells.
     */
   private[graft] def derivedCells(n: Long): Int =
@@ -252,6 +252,16 @@ object Similarity {
       if (matrixForced || seedMatrix != null) Some(chunkedMatrix) else None
   }
 
+  /** Skew-derived sub-group chunk modulus for a bucketed index:
+    * ⌈max-occupancy / (2 × mean)⌉ over `keys` groups, floor 1, cap 64. */
+  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String]): Int = {
+    val occ = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .agg(max(col("c")).as("mx"), avg(col("c")).as("mean")).head()
+    if (occ.isNullAt(0)) 1
+    else math.min(64, math.max(1,
+      math.ceil(occ.getLong(0) / (2.0 * occ.getDouble(1))).toInt))
+  }
+
   /** Chunked per-cell matrix shared by the three bulk kernels' build
     * side: entries hash-partitioned into `nChunks` sub-cell chunks by
     * id, grouped per (cell, chunk). The modulus derives from skew —
@@ -267,27 +277,6 @@ object Similarity {
     * contains it). Costs one small occupancy aggregation at first
     * materialization; the probe fan explodes × nChunks (bounded by
     * the cap). */
-  /** Skew-derived sub-group chunk modulus for a bucketed index:
-    * ⌈max-occupancy / (2 × mean)⌉ over `keys` groups, floor 1, cap 64.
-    * GRAFT_ANN_CHUNKS overrides (A/B and ops escape hatch, same
-    * precedent as GRAFT_REPLAY_PARTITIONS). */
-  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String]): Int =
-    chunkModulus(df, keys, sys.env.get("GRAFT_ANN_CHUNKS").map(_.toInt))
-
-  /** Override-injectable body: the env escape hatch must be consulted
-    * BEFORE the occupancy aggregation so it also skips the Spark job
-    * it exists to bypass (the `.head()` forces a full group-by over
-    * the index table). */
-  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String],
-                                overrideChunks: Option[Int]): Int =
-    overrideChunks.getOrElse {
-      val occ = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).as("mx"), avg(col("c")).as("mean")).head()
-      if (occ.isNullAt(0)) 1
-      else math.min(64, math.max(1,
-        math.ceil(occ.getLong(0) / (2.0 * occ.getDouble(1))).toInt))
-    }
-
   private[sim] def chunkedCellMatrix(indexed: DataFrame,
                                      payload: String): (Int, DataFrame) = {
     val nChunks = chunkModulus(indexed, Seq("cell"))
@@ -476,20 +465,12 @@ object Similarity {
       .select(col("neighbor_id"), col("cv"),
         nearestCell(col("cv"), model.centroids).as("cell"))
       .localCheckpoint()
-    // The index-union checkpoint, the bookkeeping count and the matrix
-    // merge below all read only the materialized delta + the old
-    // (already materialized) index — independent actions, submitted
-    // concurrently (guide §2.6) instead of three serial job latencies
-    // per micro-batch on an ingestion loop. The count stays O(delta)
-    // per extend, like Dedup.minhashExtend, instead of an
-    // O(total-index) count on every extend.
-    val (indexed, admitted, seed) = graft.run.Par.join3(
-      () => model.indexed.unionByName(fresh).localCheckpoint(),
-      () => fresh.count(),
-      () => model.builtMatrix.map(mergeCellMatrix(_, fresh, "cv")).orNull)
+    val indexed = model.indexed.unionByName(fresh).localCheckpoint()
+    // The count stays O(delta) per extend, like Dedup.minhashExtend,
+    // and is skipped (no job) for a loaded model without a build size.
     val extended =
       if (model.builtN < 0) model.extendedN
-      else model.extendedN + admitted
+      else model.extendedN + fresh.count()
     if (model.builtN >= 0 && extended > model.builtN &&
         model.extendedN <= model.builtN)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -497,9 +478,10 @@ object Similarity {
           s"($extended extended vs ${model.builtN} built) — frozen " +
           "cells/nprobe/centroids are now sized for a minority of the " +
           "corpus; schedule a fresh ivfBuild (needsRebuild = true)")
-    // (The matrix merge — delta-bound shuffle, O(index) local read —
-    // ran on the fork above; see [[IvfIndexModel.chunkedMatrix]] /
-    // [[mergeCellMatrix]] for its contract.)
+    // Matrix merge — delta-bound shuffle, O(index) local read; see
+    // [[IvfIndexModel.chunkedMatrix]] / [[mergeCellMatrix]] for its
+    // contract.
+    val seed = model.builtMatrix.map(mergeCellMatrix(_, fresh, "cv")).orNull
     model.copy(indexed = indexed, extendedN = extended, seedMatrix = seed)
   }
 
@@ -801,7 +783,7 @@ object Similarity {
     // ~1% of the corpus survives ADC into the exact re-rank. A FIXED
     // shortlist saturates exactly like a fixed LSH plane count — at
     // 90× data, 32 of ~70k ADC candidates (0.05%) starved the re-rank
-    // to recall 0 (r13, PqDial). The r14 width: n/200 capped recall at
+    // to recall 0 (r13, BENCH_NOTES). The r14 width: n/200 capped recall at
     // 0.60 on the CLUSTERED 90× corpus — inside a tight cluster the
     // 4-bit ADC rank is noisy enough that true neighbors fall below
     // n/200, while n/100 (≈ one home cluster at K=100) measures
@@ -858,20 +840,12 @@ object Similarity {
       nearestCell(col(model.vecCol), model.coarse).as("cell"),
       array((0 until model.m).map(j =>
         argminL2(subvec(col(model.vecCol), j), model.books(j))): _*).as("codes"))
-    // Both union checkpoints, the bookkeeping count and the matrix
-    // merge read only the materialized delta + the old (already
-    // materialized) index — independent actions, submitted
-    // concurrently (guide §2.6; see [[ivfExtend]]). The count stays
-    // O(delta), not O(total-index).
-    val (indexed, corpus2, admitted, seed) = graft.run.Par.join4(
-      () => model.indexed.unionByName(freshIndexed).localCheckpoint(),
-      () => model.corpus2.unionByName(fresh).localCheckpoint(),
-      () => fresh.count(),
-      () => model.builtMatrix
-        .map(mergeCellMatrix(_, freshIndexed, "codes")).orNull)
+    val indexed = model.indexed.unionByName(freshIndexed).localCheckpoint()
+    val corpus2 = model.corpus2.unionByName(fresh).localCheckpoint()
+    // O(delta) count, skipped for a loaded model (see [[ivfExtend]]).
     val extended =
       if (model.builtN < 0) model.extendedN
-      else model.extendedN + admitted
+      else model.extendedN + fresh.count()
     if (model.builtN >= 0 && extended > model.builtN &&
         model.extendedN <= model.builtN)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -880,8 +854,10 @@ object Similarity {
           "cells/nprobe/shortlist/codebooks are now sized and trained " +
           "for a minority of the corpus; schedule a fresh pqBuild " +
           "(needsRebuild = true)")
-    // (Matrix maintenance ran on the fork above — see [[ivfExtend]] /
-    // the [[IvfIndexModel.chunkedMatrix]] contract.)
+    // Matrix maintenance — see [[ivfExtend]] / the
+    // [[IvfIndexModel.chunkedMatrix]] contract.
+    val seed = model.builtMatrix
+      .map(mergeCellMatrix(_, freshIndexed, "codes")).orNull
     model.copy(
       corpus2 = corpus2,
       indexed = indexed, extendedN = extended, seedMatrix = seed)

@@ -27,8 +27,8 @@ object Patterns {
     * would recompute the whole upstream tree, so pipelines materialize
     * their input on entry.
     *
-    * The default is `persist` (serialized compressed columnar,
-    * MEMORY_AND_DISK): measured faster than `localCheckpoint` at sf0.1
+    * Materialization is `persist` (serialized compressed columnar, at
+    * [[adaptiveLevel]]): measured faster than `localCheckpoint` at sf0.1
     * (entity pipeline 9.4 → 7.9 s, families 17.4 → 14.3 s) and the only
     * mode that survives 10× data on the same heap — checkpoint stores
     * DESERIALIZED rows, and a 69M-quad melt OOMs a 12 GiB driver
@@ -40,30 +40,14 @@ object Patterns {
     * than pinning heap. (An earlier measurement blaming persist for
     * 8 s → 46 s degradation over repeated runs was re-traced to JIT
     * code-cache exhaustion, fixed in build.sbt since round 6.)
-    * A long-lived service that wants deterministic release can pass
-    * `spark.graft.pipelineInput` = `checkpoint` (ContextCleaner frees
-    * blocks on GC) or clear the cache between jobs; `off` disables
-    * materialization. A caller that already persisted its input is left
-    * untouched. At 100 TB the pipeline input is the graph-pruned org
-    * slice, not the full corpus — that is the frame being
-    * materialized. */
+    * A caller that already persisted its input is left untouched. At
+    * 100 TB the pipeline input is the graph-pruned org slice, not the
+    * full corpus — that is the frame being materialized. */
   def ensurePersisted(df: DataFrame,
                       inflation: Long = CacheInflation): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.pipelineInput").getOrElse("persist") match {
-      case "off" => df
-      case "checkpoint" =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.localCheckpoint()
-        else df
-      case "disk" =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        else df
-      case _ =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist(adaptiveLevel(df, inflation))
-        else df
-    }
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persist(adaptiveLevel(df, inflation))
+    else df
 
   /** Leaf parquet bytes of a plan, or None when any leaf lacks real
     * size statistics (e.g. a LogicalRDD from a localCheckpoint'd
@@ -98,27 +82,23 @@ object Patterns {
     * max(defaultParallelism, inflatedBytes/64 MB) so the frame also
     * lands in sanely-sized partitions at mid scales. Derived from data
     * size and core count — no constant tuned to either local mode or a
-    * cluster; `GRAFT_SPREAD_WIDTH` overrides for A/B runs (0 disables).
+    * cluster.
     */
-  private[graft] def spreadWidth(df: DataFrame, inflation: Long): Option[Int] =
-    sys.env.get("GRAFT_SPREAD_WIDTH").flatMap(_.toIntOption) match {
-      case Some(0) => None
-      case Some(n) => Some(n)
-      case None =>
-        val par = df.sparkSession.sparkContext.defaultParallelism
-        leafParquetBytes(df).flatMap { leafBytes =>
-          val maxSplit =
-            try df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-            catch { case _: Exception => 128L << 20 }
-          val scanSplits = (leafBytes / BigInt(math.max(1L, maxSplit))).toLong + 1
-          if (scanSplits >= par) None
-          else {
-            val target = 64L << 20
-            val byBytes = (leafBytes * inflation / target).toLong + 1
-            Some(math.min(16384L, math.max(par.toLong, byBytes)).toInt)
-          }
-        }
+  private[graft] def spreadWidth(df: DataFrame, inflation: Long): Option[Int] = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    leafParquetBytes(df).flatMap { leafBytes =>
+      val maxSplit =
+        try df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+        catch { case _: Exception => 128L << 20 }
+      val scanSplits = (leafBytes / BigInt(math.max(1L, maxSplit))).toLong + 1
+      if (scanSplits >= par) None
+      else {
+        val target = 64L << 20
+        val byBytes = (leafBytes * inflation / target).toLong + 1
+        Some(math.min(16384L, math.max(par.toLong, byBytes)).toInt)
+      }
     }
+  }
 
   /** Round-robin repartition of a narrow input per [[spreadWidth]];
     * identity when the scan is already wide or stats are unknown.

@@ -48,6 +48,32 @@ class MultimodalSpec extends SparkSuite {
     assert(decodeAudio(1L, Array.emptyByteArray).isEmpty)
   }
 
+  test("a rejecting reader that mark()s mid-stream does not corrupt " +
+    "the next candidate's input") {
+    import javax.sound.sampled.UnsupportedAudioFileException
+    // Reads the 12-byte RIFF/WAVE preamble, marks there, then rejects:
+    // a shared stream reset() after it would resume at byte 12.
+    val marksThenRejects = new javax.sound.sampled.spi.AudioFileReader {
+      private def reject(in: java.io.InputStream): Nothing = {
+        in.readNBytes(12)
+        in.mark(Int.MaxValue)
+        throw new UnsupportedAudioFileException("fake reader rejects")
+      }
+      def getAudioFileFormat(in: java.io.InputStream) = reject(in)
+      def getAudioFileFormat(u: java.net.URL) = throw new UnsupportedAudioFileException()
+      def getAudioFileFormat(f: java.io.File) = throw new UnsupportedAudioFileException()
+      def getAudioInputStream(in: java.io.InputStream) = reject(in)
+      def getAudioInputStream(u: java.net.URL) = throw new UnsupportedAudioFileException()
+      def getAudioInputStream(f: java.io.File) = throw new UnsupportedAudioFileException()
+    }
+    val wav = MediaSynth.synthWav(42L)
+    val ais = openAudioStream(wav, marksThenRejects +: audioFileReaders)
+    try {
+      assert(ais.getFormat.getSampleRate == 8000f)
+      assert(ais.getFrameLength == 160 + 42)
+    } finally ais.close()
+  }
+
   test("WAV round trip: header fields and amplitude stats are exact") {
     val s = spark
     import s.implicits._

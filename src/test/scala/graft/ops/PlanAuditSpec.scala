@@ -104,4 +104,15 @@ class PlanAuditSpec extends SparkSuite {
         s"$q lost the WindowGroupLimit rewrite:\n$plan")
     }
   }
+
+  test("q_entity_families is one fused plan: no checkpointed family leaf") {
+    // The nine family frames join inside ONE Catalyst plan; a
+    // localCheckpoint per family would surface as LogicalRDD leaves.
+    val leaves = planOf("q_entity_families").analyzed.collectLeaves()
+    val checkpointed = leaves.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l
+    }
+    assert(checkpointed.isEmpty,
+      s"${checkpointed.size} checkpointed leaves in the families plan")
+  }
 }

@@ -397,23 +397,13 @@ class SimilaritySpec extends SparkSuite {
     assert(bc.forall(e => !e._3.isNaN))
   }
 
-  test("chunkModulus: the GRAFT_ANN_CHUNKS override short-circuits " +
-    "BEFORE the occupancy aggregation runs") {
-    import org.apache.spark.sql.functions._
-    // A frame whose grouping key raises on evaluation: if the
-    // override path still forced the occupancy .head() (the pre-fix
-    // behavior), this call would throw instead of returning 8 —
-    // the escape hatch must also skip the Spark job it bypasses.
-    val poisoned = spark.range(4).select(
-      when(col("id") >= 0, raise_error(lit("occupancy job ran")))
-        .otherwise(lit(0L)).as("cell"))
-    assert(Similarity.chunkModulus(poisoned, Seq("cell"), Some(8)) === 8)
-    // Without an override the derived formula runs: one cell of 8
-    // rows + 8 singleton cells -> max 8, mean 16/9, ceil(8/(2*16/9)) = 3.
+  test("chunkModulus derives the chunk count from cell occupancy skew") {
+    // One cell of 8 rows + 8 singleton cells -> max 8, mean 16/9,
+    // ceil(8/(2*16/9)) = 3.
     val s = spark
     import s.implicits._
     val occ = (Seq.fill(8)(0L) ++ (1L to 8L)).toDF("cell")
-    assert(Similarity.chunkModulus(occ, Seq("cell"), None) === 3)
+    assert(Similarity.chunkModulus(occ, Seq("cell")) === 3)
   }
 
   test("needsRebuild flips once extends outgrow the build; a fresh " +

@@ -44,18 +44,15 @@ class PatternsPersistSpec extends SparkSuite {
     assert(Patterns.adaptiveLevel(checkpointed) == StorageLevel.MEMORY_AND_DISK)
   }
 
-  test("ensurePersisted applies the dispatch; conf modes still override") {
+  test("ensurePersisted applies the dispatch; persisted input left as is") {
     val s = spark
     import s.implicits._
     val tiny = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val p = Patterns.ensurePersisted(tiny)
     assert(p.storageLevel == StorageLevel.MEMORY_AND_DISK) // tiny input
     p.unpersist()
-    s.conf.set("spark.graft.pipelineInput", "disk")
-    try {
-      val d = Patterns.ensurePersisted(tiny)
-      assert(d.storageLevel == StorageLevel.DISK_ONLY)
-      d.unpersist()
-    } finally s.conf.unset("spark.graft.pipelineInput")
+    val d = tiny.persist(StorageLevel.DISK_ONLY)
+    try assert(Patterns.ensurePersisted(d).storageLevel == StorageLevel.DISK_ONLY)
+    finally d.unpersist()
   }
 }
