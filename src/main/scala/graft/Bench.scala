@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.run.LocalSession
+
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -182,8 +184,7 @@ object Bench {
     // comma-decimal default can never emit invalid artifacts.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     sweepStaleLocalDirs()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = LocalSession.defaultSfDir
     // median-of-3 + reported min: three timed runs (plus warm-up) keep
     // the battery's wall-clock inside the driver's envelope at 108
     // queries; the min column is the contention-robust signal the
@@ -279,64 +280,24 @@ object Bench {
     }
     val envProbe: String = envNow()
     System.err.println(s"[bench] env $envProbe gate $gate")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Partition count must track DATA, not core count (measured:
-      // AGGREGATE_OUT_OF_MEMORY at sf1 with 32). Width is derived from
-      // the input size (see Tuning.initialPartitions) so scale runs no
-      // longer need hand knobs; AQE coalesces small stages back down.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.run.Tuning.initialPartitions(sfDir).toString)
-      // Execution-heavy battery: checkpointed pipeline inputs should
-      // yield to aggregation/sort memory instead of pinning half the
-      // unified pool (they spill to disk gracefully; an aggregation
-      // that cannot get pages dies). Default 0.5 protected storage
-      // starved 32 concurrent agg tasks at sf1.
-      .config("spark.memory.storageFraction", "0.2")
-      // ContextCleaner frees checkpoint/broadcast blocks only on GC; a
-      // big-heap JVM may not GC for the whole battery, so stale blocks
-      // squeeze execution memory (observed: one query 4.9s standalone →
-      // 134s mid-battery). The explicit System.gc() in settle() covers
-      // between-iteration frees; the periodic one is a backstop only —
-      // at 30s it fired MID-RUN and a full pause on a 12g heap showed
-      // up as sporadic 12-21s outliers on 4s queries.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // The generated-class cache defaults to 100 entries; a 100+-query
-      // battery holds far more codegen stages, and eviction forces the
-      // widest plan (~40 stages) to recompile on every run — measured
-      // 4.9s standalone vs 85s mid-battery for the same query. Static
-      // conf, so it must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // RAM-backed shuffle dir when the SYSTEM has real headroom: a
-      // disk-backed local dir was measured to cost 1.5-2× on every
-      // shuffle-heavy query (r11 A/B, BENCH_NOTES). Gate on
-      // /proc/meminfo MemAvailable ≥64 GB, NOT tmpfs mount free space —
-      // tmpfs pages are RAM, so a mount can report plenty of "free"
-      // space on a memory-starved box (round-11: mount showed 30 GB
-      // free while MemAvailable was 26 GB; the old guard picked disk
-      // AND the battery still OOM-killed). The tmpfs OOM-ratchet
-      // hazard is bounded two ways: per-query storage release below
-      // caps the live session's footprint, and sweepStaleLocalDirs()
-      // at startup removes any SIGKILLed predecessor's orphans. The
-      // disk fallback also lands in a graft-spark subdir so the sweep
-      // invariant covers both roots. SPARK_GRAFT_NO_SHM=1 opts out;
-      // a real cluster sizes spark.local.dir per node.
-      .config("spark.local.dir", localDir)
-      // legacy testdata compat: ns-encoded events.ts surfaces as LONG nanos
-      // (a no-op on the current TIMESTAMP_MICROS testdata — Td.tsUs adapts).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // RAM-backed shuffle dir when the SYSTEM has real headroom: a
+    // disk-backed local dir was measured to cost 1.5-2× on every
+    // shuffle-heavy query (r11 A/B, BENCH_NOTES). Gate on
+    // /proc/meminfo MemAvailable ≥64 GB, NOT tmpfs mount free space —
+    // tmpfs pages are RAM, so a mount can report plenty of "free"
+    // space on a memory-starved box (round-11: mount showed 30 GB
+    // free while MemAvailable was 26 GB; the old guard picked disk
+    // AND the battery still OOM-killed). The tmpfs OOM-ratchet
+    // hazard is bounded two ways: per-query storage release below
+    // caps the live session's footprint, and sweepStaleLocalDirs()
+    // at startup removes any SIGKILLed predecessor's orphans. The
+    // disk fallback also lands in a graft-spark subdir so the sweep
+    // invariant covers both roots. SPARK_GRAFT_NO_SHM=1 opts out;
+    // a real cluster sizes spark.local.dir per node.
+    val spark = LocalSession.build(32, sfDir, Map("spark.local.dir" -> localDir))
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      LocalSession.force(fn(spark, sfDir))
 
     // Local-dev filter: bench only the named queries (comma-separated).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -373,13 +334,9 @@ object Bench {
         val p = scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")
         (p(0).toDouble, p(1).toDouble, p(2).toDouble)
       } catch { case _: Exception => (-1.0, -1.0, -1.0) }
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .agg(org.apache.spark.sql.functions.sum("l_extendedprice"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def canaryOnce(): Double =
+      LocalSession.force(spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .agg(org.apache.spark.sql.functions.sum("l_extendedprice")))
     // Shuffle canary: same scan but grouped on the high-cardinality
     // order key, so real shuffle bytes flow through spark.local.dir.
     // The CPU canary above is shuffle-free BY DESIGN and therefore
@@ -387,14 +344,10 @@ object Bench {
     // local dir cost 1.5-2× on every shuffle-heavy query while the CPU
     // canary stayed flat) — this one closes that adjudication blind
     // spot: CPU flat + shuffle drifting ⇒ the local dir, not the CPUs.
-    def canaryShuffleOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+    def canaryShuffleOnce(): Double =
+      LocalSession.force(spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_orderkey")
-        .agg(org.apache.spark.sql.functions.sum("l_quantity"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+        .agg(org.apache.spark.sql.functions.sum("l_quantity")))
     val canaries = scala.collection.mutable.ListBuffer.empty[String]
     def recordCanary(at: String): Unit = {
       val sec = canaryOnce()
@@ -491,24 +444,12 @@ object Bench {
           R(name, 0.0, ok = false)
       } finally {
         // Release THIS query's storage before the next one is timed so
-        // the battery's footprint cannot ratchet:
-        //  - cached pipeline inputs (ensurePersisted's default mode);
-        //  - persistent RDDs — localCheckpoint blocks that would
-        //    otherwise wait for a GC-driven ContextCleaner pass;
-        //  - memory-sink temp views from streaming replays, which pin
-        //    their full result rows in driver heap via the catalog.
-        // In a finally so a FAILED query cannot leak its cached blocks
-        // and memory-sink rows into every subsequent query's timings —
-        // the failure path is exactly where clean numbers matter most.
-        try {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          spark.catalog.listTables().collect()
-            .filter(_.isTemporary)
-            .foreach(t => spark.catalog.dropTempView(t.name))
-          System.gc()
-        } catch { case e: Exception =>
+        // the battery's footprint cannot ratchet. In a finally so a
+        // FAILED query cannot leak its cached blocks and memory-sink
+        // rows into every subsequent query's timings — the failure
+        // path is exactly where clean numbers matter most.
+        try LocalSession.release(spark)
+        catch { case e: Exception =>
           System.err.println(s"[bench] post-$name release failed: ${e.getMessage}")
         }
       }

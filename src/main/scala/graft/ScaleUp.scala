@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for bench runs above the driver-provided
@@ -103,15 +103,7 @@ object ScaleUp {
       "--dim only applies to --clustered-embeddings (synthesized vectors)")
     val factor = factorS.toInt
     require(factor >= 1 && factor <= strides.length, s"factor 1..${strides.length}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.run.LocalSession.build(32, src)
 
     def rd(t: String) = s.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String, parts: Int): Unit =

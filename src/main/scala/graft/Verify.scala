@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.run.LocalSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,24 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // data-sized shuffles: start wide, AQE coalesces (see Tuning)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.run.Tuning.initialPartitions(sfDir).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy testdata compat: ns-encoded events.ts surfaces as LONG nanos
-      // (a no-op on the current TIMESTAMP_MICROS testdata — Td.tsUs adapts).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // free checkpoint/broadcast blocks between queries (see Bench)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // generated-class cache: battery >> default 100 entries (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build(4, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -36,13 +19,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Drop this query's cached pipeline inputs (ensurePersisted's
-      // default persists per distinct canonical plan, and ~100 queries
-      // share one session here — without this the CacheManager grows
-      // monotonically and spilled blocks accumulate on disk for the
-      // whole run), then let the ContextCleaner drop checkpoint blocks.
-      spark.catalog.clearCache()
-      System.gc()
+      // ~100 queries share one session: free each one's storage the
+      // way Bench does, or it accumulates for the whole run.
+      LocalSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1120,66 +1120,6 @@ object Dedup {
       .unionByName(stars)
   }
 
-  /** One entry point for the duplicate-group-collapsed ("spanning")
-    * near-dup family — four engines, one contract: the returned pair
-    * graph has the SAME transitive closure as the corresponding full
-    * every-pair variant, but exact-duplicate groups cost Σd star pairs
-    * instead of Σd²/2, so clustering consumers
-    * ([[graft.graph.ConnectedComponents]] → keepers) scale through
-    * duplicate-heavy corpora. Engines, their grouping keys, and their
-    * pairless-singleton degenerate classes side by side:
-    *
-    * {{{
-    * engine      grouping key (exact equality)     score col  pairless singletons
-    * ---------   -------------------------------   ---------  ----------------------------
-    * minhash     sorted distinct shingle-hash set  jaccard    NULL text (NULL shingle set)
-    * ngram       sorted distinct shingle-hash set  jaccard    NULL text (NULL shingle set)
-    * simhash     NORMALIZED TEXT (multiplicity!)   hamming    NULL text
-    * embedding   raw vector bytes                  cos        NULL / zero-norm / NaN / Inf
-    * }}}
-    *
-    * Why the keys differ: MinHash/ngram Jaccard are functions of the
-    * shingle SET, so set equality is the widest safe collapse; SimHash
-    * weights token MULTIPLICITY, so only full normalized-text equality
-    * guarantees identical signatures; embeddings collapse on exact
-    * vector equality, with non-finite/zero-norm vectors excluded to
-    * match the full variant's no-pair behavior. Star pairs carry the
-    * score an identical pair provably has (jaccard 1.0 / hamming 0 /
-    * cos 1.0). Per-engine knobs not in an engine's column are ignored
-    * by it; `dim` is required for `embedding`. `contentCol` is the
-    * text column for the three text engines and the vector column for
-    * `embedding`. */
-  def nearDupSpanning(df: DataFrame, idCol: String, contentCol: String,
-                      engine: String = "minhash",
-                      shingleK: Int = 3, minJaccard: Double = 0.8,
-                      numHashes: Int = 64, bands: Int = 16,
-                      maxHamming: Int = 3,
-                      tokenHash: Column => Column = xxhash64(_),
-                      rareFirst: Boolean = true,
-                      maxPosting: Int = Int.MaxValue,
-                      maxCandidates: Long = 0L,
-                      dim: Int = 0, minCosine: Double = 0.95,
-                      planes: Int = -1, seed: Long = 42L,
-                      multiProbe: Boolean = true): DataFrame =
-    engine match {
-      case "minhash" =>
-        minhashNearDupSpanning(df, idCol, contentCol,
-          numHashes, bands, shingleK, minJaccard)
-      case "simhash" =>
-        simhashNearDupSpanning(df, idCol, contentCol, maxHamming, tokenHash)
-      case "ngram" =>
-        ngramJaccardNearDupSpanning(df, idCol, contentCol,
-          shingleK, minJaccard, rareFirst, maxPosting, maxCandidates)
-      case "embedding" =>
-        require(dim > 0, "nearDupSpanning(engine=embedding) requires dim")
-        embeddingNearDupSpanning(df, idCol, contentCol,
-          dim, minCosine, planes, seed, multiProbe)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown spanning engine '$other' " +
-            "(expected minhash | simhash | ngram | embedding)")
-    }
-
   /** Cross-document repeated-span detection — substring-level dedup in
     * the sense of Lee et al. 2022 ("Deduplicating Training Data Makes
     * Language Models Better"): find every maximal token span whose

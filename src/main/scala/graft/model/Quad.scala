@@ -28,16 +28,7 @@ object Ns {
   val KgToPostgres = "urn:kg-to-postgres:"
   /** Predicate that names the target table for a record-subject. */
   val TableName: String = KgToPostgres + "tableName"
-  val XsdDuration = "http://www.w3.org/2001/XMLSchema#duration"
-  val XsdDate = "http://www.w3.org/2001/XMLSchema#date"
-  val XsdDateTime = "http://www.w3.org/2001/XMLSchema#dateTime"
   val XsdBoolean = "http://www.w3.org/2001/XMLSchema#boolean"
   val Rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
   val RdfType: String = Rdf + "type"
-
-  /** Strip the kg-to-postgres namespace off a predicate → column name
-    * (reference: typescript/src/stream.ts:92-95). */
-  def columnName(predicate: String): String =
-    if (predicate.startsWith(KgToPostgres)) predicate.substring(KgToPostgres.length)
-    else predicate
 }

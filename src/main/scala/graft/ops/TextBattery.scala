@@ -216,7 +216,7 @@ object TextBattery {
       spanningClosureOk(f,
         Dedup.minhashNearDup(f, "doc_id", "text",
           numHashes = 64, bands = 16, shingleK = 3, minJaccard = 0.5),
-        Dedup.nearDupSpanning(f, "doc_id", "text", engine = "minhash",
+        Dedup.minhashNearDupSpanning(f, "doc_id", "text",
           numHashes = 64, bands = 16, shingleK = 3, minJaccard = 0.5))
     }
   )
@@ -453,8 +453,7 @@ object TextBattery {
   )
 
   /** Duplicate-group-collapsed SimHash near-dup
-    * ([[graft.dedup.Dedup.simhashNearDupSpanning]] via the
-    * [[graft.dedup.Dedup.nearDupSpanning]] dispatcher) under an
+    * ([[graft.dedup.Dedup.simhashNearDupSpanning]]) under an
     * INDEPENDENT ground truth (r19; previously a pinned-true
     * self-equivalence): the oracle recomputes, from scratch in
     * DuckDB, every doc's 64-bit SimHash over the engine-neutral
@@ -489,7 +488,7 @@ object TextBattery {
     (s, dir) => {
       val f = spanningFixture(s, dir)
       spanningComponents(f,
-        Dedup.nearDupSpanning(f, "doc_id", "text", engine = "simhash",
+        Dedup.simhashNearDupSpanning(f, "doc_id", "text",
           maxHamming = 3, tokenHash = Dedup.md5Hash64))
     }
   )
@@ -505,8 +504,7 @@ object TextBattery {
     * fixture's shingle sets in DuckDB — the same independent pair
     * truth q_neardup_ngram states — plus its recursive transitive
     * closure, and the Spark side must reproduce those labels from the
-    * spanning pair graph (via the
-    * [[graft.dedup.Dedup.nearDupSpanning]] dispatcher) run through
+    * spanning pair graph run through
     * [[graft.graph.ConnectedComponents]]. The full engine is
     * 100%-recall at threshold when uncapped, so spanning closure =
     * full closure = the oracle's brute-force closure. */
@@ -521,7 +519,7 @@ object TextBattery {
     (s, dir) => {
       val f = spanningFixture(s, dir)
       spanningComponents(f,
-        Dedup.nearDupSpanning(f, "doc_id", "text", engine = "ngram",
+        Dedup.ngramJaccardNearDupSpanning(f, "doc_id", "text",
           shingleK = 3, minJaccard = 0.7))
     }
   )

@@ -1,6 +1,9 @@
 package graft.run
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
@@ -10,7 +13,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
   * ETA every 100 batches (typescript/src/2_database_load.ts:104-113,
   * stats.ts:1-16). The Spark-native equivalent is a `SparkListener`:
   * records and bytes come from task metrics — no instrumentation inside
-  * operators, no driver-side counting loops.
+  * operators, no driver-side counting loops. Alongside the run totals
+  * it keeps one [[StatsListener.Stage]] per completed stage, the
+  * "where do the seconds go" view `explain` can't give.
   */
 final class StatsListener(totalRecordsHint: Option[Long] = None) extends SparkListener {
   val recordsRead = new AtomicLong(0)
@@ -19,6 +24,7 @@ final class StatsListener(totalRecordsHint: Option[Long] = None) extends SparkLi
   val shuffleBytes = new AtomicLong(0)
   val tasksCompleted = new AtomicLong(0)
   val lastStage = new AtomicReference[String]("")
+  private val completed = new ConcurrentLinkedQueue[StatsListener.Stage]()
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
@@ -31,8 +37,20 @@ final class StatsListener(totalRecordsHint: Option[Long] = None) extends SparkLi
     }
   }
 
-  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-    lastStage.set(s.stageInfo.name)
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+    val i = s.stageInfo
+    lastStage.set(i.name)
+    val m = i.taskMetrics
+    completed.add(StatsListener.Stage(i.stageId, i.name.takeWhile(_ != '\n'),
+      (for (end <- i.completionTime; start <- i.submissionTime)
+        yield end - start).getOrElse(0L),
+      m.executorRunTime,
+      m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead,
+      m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
+  }
+
+  /** Completed stages, in completion order. */
+  def stages: Seq[StatsListener.Stage] = completed.asScala.toSeq
 
   /** Progress fraction against the hint, when one was provided —
     * mirrors statementIndex ÷ numberOfStatements (stats.ts:9-11). */
@@ -44,4 +62,13 @@ final class StatsListener(totalRecordsHint: Option[Long] = None) extends SparkLi
       s"records_written=${recordsWritten.get} shuffle_bytes=${shuffleBytes.get} " +
       s"tasks=${tasksCompleted.get}" +
       progress.map(p => f" progress=${p * 100}%.1f%%").getOrElse("")
+}
+
+object StatsListener {
+
+  /** One completed stage: wall from submission to completion, summed
+    * task run time, and records read from files and shuffles. */
+  final case class Stage(id: Int, name: String, wallMs: Long, taskMs: Long,
+                         recordsRead: Long, shuffleReadBytes: Long,
+                         shuffleWriteBytes: Long)
 }

@@ -7,12 +7,13 @@ import graft.functions.{Functions => F}
 
 /** Construct-pipeline parameters threaded through every view query
   * (reference: typescript/src/1_kg_view_construct.ts:33,47-64 —
-  * `since`, `or_ids`, `prefix_id_base` saved-query variables;
-  * incremental cutoff av-audio.sparql:220). */
+  * `since` and `or_ids` saved-query variables; incremental cutoff
+  * av-audio.sparql:220). The reference's `prefix_id_base` is only read
+  * by the delete flow, which takes it directly
+  * ([[graft.delete.DeleteFlow.flagDeletes]]). */
 final case class ViewParams(
     since: Option[String] = None,
-    orIds: Seq[String] = Nil,
-    prefixIdBase: String = "https://data.hetarchief.be/id/entity/")
+    orIds: Seq[String] = Nil)
 
 /** The organization construct pipeline — M0's vertical slice
   * (reference: typescript/queries/organization.sparql:59-127).

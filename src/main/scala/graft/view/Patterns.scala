@@ -146,29 +146,20 @@ object Patterns {
     * survive. */
   private[graft] def adaptiveLevel(df: DataFrame,
       inflation: Long = CacheInflation): org.apache.spark.storage.StorageLevel = {
-    // Leaves with no real statistics (e.g. a LogicalRDD from a
-    // localCheckpoint'd upstream) report spark.sql.defaultSizeInBytes
-    // — by default Long.MaxValue. Treating that as a size would
-    // silently force EVERY such input to DISK_ONLY (r13 advice):
-    // unknown means unknown, so keep the graceful MEMORY_AND_DISK
-    // default rather than pretending the input is infinite.
-    val unknownFloor =
-      try BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
-      catch { case _: Exception => BigInt(Long.MaxValue) }
-    val leafSizes =
-      try df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes)
-      catch { case _: Exception => Seq(BigInt(-1)) }
-    if (leafSizes.exists(s => s < 0 || s >= unknownFloor)) {
-      System.err.println(
-        "[graft.view] pipeline input has leaves without real size stats — keeping MEMORY_AND_DISK")
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    } else {
-      val leafBytes = leafSizes.sum
-      val level = chooseLevel(leafBytes, Runtime.getRuntime.maxMemory, inflation)
-      if (level == org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // Unknown leaf stats (see leafParquetBytes) keep the graceful
+    // MEMORY_AND_DISK default: treating defaultSizeInBytes as a size
+    // would silently force EVERY such input to DISK_ONLY (r13 advice).
+    leafParquetBytes(df) match {
+      case None =>
         System.err.println(
-          f"[graft.view] pipeline input est ${leafBytes.toDouble * inflation / 1e9}%.1f GB cached vs ${Runtime.getRuntime.maxMemory / 1e9}%.1f GB heap — persisting DISK_ONLY")
-      level
+          "[graft.view] pipeline input has leaves without real size stats — keeping MEMORY_AND_DISK")
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      case Some(leafBytes) =>
+        val level = chooseLevel(leafBytes, Runtime.getRuntime.maxMemory, inflation)
+        if (level == org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          System.err.println(
+            f"[graft.view] pipeline input est ${leafBytes.toDouble * inflation / 1e9}%.1f GB cached vs ${Runtime.getRuntime.maxMemory / 1e9}%.1f GB heap — persisting DISK_ONLY")
+        level
     }
   }
 
@@ -274,7 +265,19 @@ object Patterns {
   def optionalSingles(quads: DataFrame,
                       specs: Seq[(String, String, Option[String])]): DataFrame = {
     val preds = specs.map(_._1).distinct
-    val aggs = specs.map { case (pred, as, langF) =>
+    val aggs = singleAggs(specs)
+    quads.filter(col("predicate").isin(preds: _*))
+      .groupBy(col("subject"))
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumnRenamed("subject", "s")
+  }
+
+  /** One conditional `langPreferredFirst` per (predicate, outputCol,
+    * langFilter) spec over a multi-predicate quad slice: the value is
+    * null on other predicates' rows, so each aggregate sees only its
+    * own predicate. */
+  private def singleAggs(specs: Seq[(String, String, Option[String])]) =
+    specs.map { case (pred, as, langF) =>
       val v = langF match {
         case Some(l) =>
           when(col("predicate") === pred && col("lang").startsWith(l), col("obj"))
@@ -282,11 +285,6 @@ object Patterns {
       }
       graft.functions.Functions.langPreferredFirst(v, col("lang")).as(as)
     }
-    quads.filter(col("predicate").isin(preds: _*))
-      .groupBy(col("subject"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumnRenamed("subject", "s")
-  }
 
   /** `?s a <cls>` + N scalar binds on the SAME node in ONE aggregation
     * pass — the fused form of `typed(quads, cls).distinct + N ×
@@ -299,14 +297,7 @@ object Patterns {
   def typedWithSingles(quads: DataFrame, cls: String,
                        specs: Seq[(String, String, Option[String])]): DataFrame = {
     val preds = specs.map(_._1).distinct
-    val aggs = specs.map { case (pred, as, langF) =>
-      val v = langF match {
-        case Some(l) =>
-          when(col("predicate") === pred && col("lang").startsWith(l), col("obj"))
-        case None => when(col("predicate") === pred, col("obj"))
-      }
-      graft.functions.Functions.langPreferredFirst(v, col("lang")).as(as)
-    }
+    val aggs = singleAggs(specs)
     quads.filter((col("predicate") === Ns.RdfType && col("obj") === cls) ||
         col("predicate").isin(preds: _*))
       .groupBy(col("subject"))

@@ -11,8 +11,8 @@ class KnobInventorySpec extends AnyFunSuite {
   /** Knob -> why it exists (harness, deployment, platform or scale
     * valve). */
   private val pinned: Map[String, String] = Map(
-    "SPARK_GRAFT_SF_DIR" -> "harness: testdata directory Bench/ProfileQuery run on",
-    "SPARK_GRAFT_CPUS" -> "harness: local[N] core count of Bench, Verify, ScaleUp, ProfileQuery",
+    "SPARK_GRAFT_SF_DIR" -> "harness: testdata directory Bench and Inspect run on",
+    "SPARK_GRAFT_CPUS" -> "harness: local[N] core count of the LocalSession (Bench, Verify, ScaleUp, Inspect)",
     "SPARK_GRAFT_BENCH_ITERS" -> "harness: timed iterations per Bench query",
     "SPARK_GRAFT_BENCH_ONLY" -> "harness: Bench query subset",
     "SPARK_GRAFT_BENCH_REVERSE" -> "harness: reverse Bench query order",
@@ -21,7 +21,6 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_BENCH_DEBUG" -> "harness: Bench per-query debug trace",
     "GRAFT_LOAD_GATE" -> "harness: ambient load1 threshold before timing",
     "GRAFT_LOAD_GATE_MAX_WAIT" -> "harness: bound on the load-gate wait",
-    "GRAFT_PROFILE_EXPLAIN" -> "harness: ProfileQuery prints the plan too",
     "SPARK_GRAFT_NO_SHM" -> "deployment: keep Spark local dirs off /dev/shm",
     "GRAFT_STATE_STORE" -> "platform: HDFS state store where rocksdbjni is missing",
     "GRAFT_SSJOIN_MAX_POSTING" -> "scale valve: SSJoin per-side posting cap",

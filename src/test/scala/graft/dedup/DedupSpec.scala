@@ -927,38 +927,6 @@ class DedupSpec extends SparkSuite {
     }
   }
 
-  test("nearDupSpanning dispatcher is the four siblings under one name") {
-    val s = spark
-    import s.implicits._
-    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(rows(Dedup.nearDupSpanning(fixture, "doc_id", "text",
-        engine = "minhash", minJaccard = 0.5)) ===
-      rows(Dedup.minhashNearDupSpanning(fixture, "doc_id", "text",
-        minJaccard = 0.5)))
-    assert(rows(Dedup.nearDupSpanning(fixture, "doc_id", "text",
-        engine = "simhash", maxHamming = 8)) ===
-      rows(Dedup.simhashNearDupSpanning(fixture, "doc_id", "text",
-        maxHamming = 8)))
-    assert(rows(Dedup.nearDupSpanning(fixture, "doc_id", "text",
-        engine = "ngram", minJaccard = 0.5)) ===
-      rows(Dedup.ngramJaccardNearDupSpanning(fixture, "doc_id", "text",
-        minJaccard = 0.5)))
-    val dim = 4
-    val v = Array(0.1f, 0.2f, 0.3f, 0.4f)
-    val vecs = Seq((1L, v.toSeq), (2L, v.toSeq), (3L, Seq(1f, 0f, 0f, 0f)))
-      .toDF("doc_id", "vec")
-    assert(rows(Dedup.nearDupSpanning(vecs, "doc_id", "vec",
-        engine = "embedding", dim = dim, planes = 4)) ===
-      rows(Dedup.embeddingNearDupSpanning(vecs, "doc_id", "vec",
-        dim = dim, planes = 4)))
-    intercept[IllegalArgumentException] {
-      Dedup.nearDupSpanning(vecs, "doc_id", "vec", engine = "embedding")
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.nearDupSpanning(fixture, "doc_id", "text", engine = "levenshtein")
-    }
-  }
-
   test("md5Hash64 is the md5 hex prefix convention any engine can " +
     "reproduce, and simhash accepts it as a token-hash family") {
     val s = spark

@@ -53,4 +53,25 @@ class RunnerSpec extends SparkSuite {
       assert(listener.summary.contains("tasks="))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("stats listener keeps one record per completed stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stages").toString
+    spark.range(0, 1000).selectExpr("id % 7 AS k", "id AS v")
+      .write.mode("overwrite").parquet(dir)
+    val input = spark.read.parquet(dir) // schema read before the listener
+    val listener = new StatsListener()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // one shuffle: a file-scan map stage, then a shuffle-read stage
+      assert(input.groupBy("k").count().collect().length == 7)
+      val deadline = System.currentTimeMillis() + 10000
+      while (listener.stages.count(_.recordsRead > 0) < 2 &&
+          System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val read = listener.stages.filter(_.recordsRead > 0)
+      assert(read.size >= 2, s"stages: ${listener.stages}")
+      assert(read.exists(_.shuffleWriteBytes > 0) &&
+        read.exists(_.shuffleReadBytes > 0), s"stages: $read")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
