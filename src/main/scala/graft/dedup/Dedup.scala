@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextFunctions
+import graft.run.Checkpoints
+import graft.sim.ExtendableIndex
 
 /** Deduplication operators for training-data pipelines: exact
   * (hash-groupBy), MinHash + banded LSH near-dup, and SimHash.
@@ -246,23 +248,18 @@ object Dedup {
     *
     * At-rest size: `buckets` is bands × one (long, int, long) row per
     * doc — trivial beside the corpus; `sets` is ~8 bytes per distinct
-    * shingle occurrence, the irreducible verify state. */
+    * shingle occurrence, the irreducible verify state.
+    *
+    * MinHash geometry (numHashes/bands/shingleK) is data-independent,
+    * so unlike the ANN indexes recall does NOT drift past the rebuild
+    * point: `needsRebuild` here is about index hygiene (band-bucket
+    * posting lengths and the sets table growing from deltas that were
+    * never quality-gated as a corpus). */
   final case class MinHashIndexModel(
       numHashes: Int, bands: Int, shingleK: Int,
       buckets: DataFrame, sets: DataFrame, idCol: String,
-      builtN: Long = -1L, extendedN: Long = 0L) {
-    /** Rebuild recommendation — same contract as
-      * [[graft.sim.Similarity.IvfIndexModel.needsRebuild]]: flips once
-      * [[minhashExtend]] adds have grown the index past its BUILD-time
-      * doc count. MinHash geometry (numHashes/bands/shingleK) is
-      * data-independent, so unlike the ANN indexes recall does NOT
-      * drift — the trigger here is about index hygiene (band-bucket
-      * posting lengths and the sets table growing unboundedly from
-      * deltas that were never quality-gated as a corpus) and gives the
-      * ingestion loop the same operational signal at the same
-      * threshold. */
-    def needsRebuild: Boolean = builtN >= 0 && extendedN > builtN
-  }
+      builtN: Long = -1L, extendedN: Long = 0L)
+      extends ExtendableIndex
 
   /** Build a [[MinHashIndexModel]] over `df`. Both frames are
     * localCheckpoint'd (same rationale as `ivfBuild`): repeated
@@ -344,22 +341,11 @@ object Dedup {
       model.numHashes, model.shingleK)
       .join(model.sets.select(col("id")), Seq("id"), "left_anti")
       .localCheckpoint()
-    val buckets = model.buckets
-      .unionByName(bandBuckets(dSig, model.numHashes, model.bands))
-      .localCheckpoint()
-    val sets = model.sets.unionByName(dSig.select(col("id"), col("hs")))
-      .localCheckpoint()
-    // Rebuild-trigger bookkeeping on the admitted-row count — skipped
-    // (no count job) for a loaded model, which has no build size.
-    val extended =
-      if (model.builtN < 0) model.extendedN
-      else model.extendedN + dSig.count()
-    if (model.builtN >= 0 && extended > model.builtN &&
-        model.extendedN <= model.builtN)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"minhashExtend: index has grown past its build-time size " +
-          s"($extended extended vs ${model.builtN} built) — schedule " +
-          "a fresh minhashBuild (needsRebuild = true)")
+    val buckets = Checkpoints.union(model.buckets,
+      bandBuckets(dSig, model.numHashes, model.bands))
+    val sets = Checkpoints.union(model.sets, dSig.select(col("id"), col("hs")))
+    val extended = ExtendableIndex.extendedAfter("minhashExtend", model,
+      dSig.count(), "schedule a fresh minhashBuild")
     model.copy(buckets = buckets, sets = sets, extendedN = extended)
   }
 
@@ -383,6 +369,7 @@ object Dedup {
   def minhashLoad(spark: org.apache.spark.sql.SparkSession,
                   path: String): MinHashIndexModel = {
     val meta = spark.read.parquet(s"$path/meta").head()
+    val (builtN, extendedN) = ExtendableIndex.sizesOf(meta)
     MinHashIndexModel(
       numHashes = meta.getAs[Int]("num_hashes"),
       bands = meta.getAs[Int]("bands"),
@@ -390,11 +377,7 @@ object Dedup {
       buckets = spark.read.parquet(s"$path/buckets"),
       sets = spark.read.parquet(s"$path/sets"),
       idCol = meta.getAs[String]("id_col"),
-      // Pre-trigger saves carry no baseline (see Similarity.ivfLoad).
-      builtN = if (meta.schema.fieldNames.contains("built_n"))
-        meta.getAs[Long]("built_n") else -1L,
-      extendedN = if (meta.schema.fieldNames.contains("extended_n"))
-        meta.getAs[Long]("extended_n") else 0L)
+      builtN = builtN, extendedN = extendedN)
   }
 
   /** Exact n-gram Jaccard near-dup via the prefix-filter set-similarity

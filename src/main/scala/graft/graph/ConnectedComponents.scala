@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.run.Checkpoints
+
 /** Distributed connected components — the clustering step a dedup
   * pipeline needs between "near-duplicate PAIRS" and "keep one doc per
   * duplicate CLUSTER" (absent in the reference, which has no graph
@@ -92,39 +94,20 @@ object ConnectedComponents {
       // round's blocks are unreachable from here on — free them, or
       // every round's checkpoint stays in block-manager memory for the
       // application lifetime.
-      freeCheckpoint(lbl)
+      Checkpoints.free(lbl)
       lbl = next
         round += 1
       }
       require(converged, s"did not converge in $maxRounds rounds — " +
         "component diameter exceeds 2^maxRounds or the graph is malformed")
     } catch {
-      case e: Throwable => freeCheckpoint(lbl); throw e
-    } finally freeCheckpoint(und)
+      case e: Throwable => Checkpoints.free(lbl); throw e
+    } finally Checkpoints.free(und)
     // The result still reads the final round's checkpointed label
     // blocks — callers that materialize the result (write/collect)
-    // should then hand it to [[release]] to drop them.
+    // should then hand it to `Checkpoints.free` to drop them.
     lbl.select(col("id").as(idCol), col("lbl").as("component"))
   }
-
-  /** Free the checkpoint blocks behind a frame returned by [[run]].
-    * Call only AFTER materializing (writing/collecting) every result
-    * derived from it — a local checkpoint truncates lineage, so the
-    * data cannot be recomputed once released. */
-  def release(components: DataFrame): Unit = freeCheckpoint(components)
-
-  /** Drop the block-manager blocks behind a `localCheckpoint`ed frame.
-    * Only call once nothing can recompute from it — a local checkpoint
-    * truncates lineage, so unpersisted blocks are gone for good. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    // Traverse, don't pattern-match the root: [[release]] hands in a
-    // Project over the checkpointed LogicalRDD, not the LogicalRDD
-    // itself.
-    df.queryExecution.logical.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Keeper per component: the smallest id — composes [[run]] into the
     * dedup contract (`keep = doc whose id == its component label`). */

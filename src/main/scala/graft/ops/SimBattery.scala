@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{MediaSynth, Multimodal}
@@ -9,6 +10,61 @@ import graft.sim.Similarity
   * `embeddings` / `documents` tables.
   */
 object SimBattery {
+
+  /** Oracle of every recall-floor gate: DuckDB states the five probes
+    * with `recall_ok = true`, so a regression flips rows AND hash. */
+  private val ProbeRecallOracle = Some(
+    "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
+      "WHERE vec_id < 5 ORDER BY 1")
+
+  /** One deterministic (probe_id, recall_ok) row per probe: `search`,
+    * an approximate top-3 (probe_id, neighbor_id), must recover at
+    * least `floor` of the probe's exact top-3 (the brute path, itself
+    * rank-validated by `q_ann_cosine`). */
+  private def probeRecall(emb: DataFrame, probes: DataFrame, floor: Int)(
+      search: => DataFrame): DataFrame = {
+    val found = search
+    val brute = Similarity.bruteTopK(emb, probes, k = 3)
+    val hits = found.join(brute.select(col("probe_id"), col("neighbor_id")),
+      Seq("probe_id", "neighbor_id"), "left_semi")
+      .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
+    probes.select(col("vec_id").as("probe_id"))
+      .join(hits, Seq("probe_id"), "left")
+      .select(col("probe_id"),
+        (coalesce(col("n_hits"), lit(0L)) >= floor).as("recall_ok"))
+      .orderBy(col("probe_id"))
+  }
+
+  /** One synthesized PNG per document. The 8-byte id rows are spread
+    * before the synth+codec mapPartitions pass: a one-row-group scan
+    * would otherwise run the whole encode+decode chain in ONE task
+    * (r19; no-op once the scan is wide — see Patterns.spreadWidth). */
+  private def pngMedia(s: SparkSession, dir: String) = {
+    import s.implicits._
+    graft.view.Patterns.spreadNarrow(
+        Td(s, dir, "documents").select(col("doc_id")),
+        graft.view.Patterns.TextInflation).as[Long]
+      .mapPartitions(_.map(id =>
+        Multimodal.MediaRow(id, MediaSynth.synthPng(id), "image/png")))
+  }
+
+  /** The embeddings ∪ a planted exact copy (id + 1e6) of the first 50. */
+  private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
+    val emb = Td(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    emb.unionByName(
+      emb.filter(col("vec_id") < 50)
+        .select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
+  }
+
+  /** A recall-floor gate: [[probeRecall]] of `search` over the first
+    * five embeddings as probes. */
+  private def recallGate(name: String, floor: Int = 1)(
+      search: (DataFrame, DataFrame) => DataFrame): Q =
+    Q(name, ProbeRecallOracle, (s, dir) => {
+      val emb = Td(s, dir, "embeddings")
+      val probes = emb.filter(col("vec_id") < 5)
+      probeRecall(emb, probes, floor)(search(emb, probes))
+    })
 
   /** Exact cosine top-3 for a 5-probe set — the brute-force baseline.
     * Output is rank-only (probe, rank → neighbor): cosine *values*
@@ -41,26 +97,9 @@ object SimBattery {
     * regression (lost bucket, broken multi-probe, bad hyperplane seed)
     * flips rows AND hash. Multi-table LSH measures 3/3 on every probe
     * at sf0.01; the floor of 2 leaves slack for data drift, not bugs. */
-  val annLsh = Q(
-    "q_ann_lsh",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val lsh = Similarity.lshTopK(emb, probes, k = 3)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = lsh.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 2).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annLsh = recallGate("q_ann_lsh", floor = 2) { (emb, probes) =>
+    Similarity.lshTopK(emb, probes, k = 3)
+  }
 
   /** Multimodal metadata path: text bytes as the opaque binary payload,
     * frame-sampled into fixed windows — byte length and frame count are
@@ -99,10 +138,7 @@ object SimBattery {
         "ON a.vec_id < b.vec_id " +
         "WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.99 ORDER BY 1, 2"),
     (s, dir) => {
-      val emb = Td(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.unionByName(
-        emb.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
+      val planted = plantedEmbeddings(s, dir)
       graft.dedup.Dedup.embeddingNearDup(planted, "vec_id", "embedding",
         dim = 64, minCosine = 0.99)
         .select(col("id_a"), col("id_b"))
@@ -122,26 +158,9 @@ object SimBattery {
     * real clustered embeddings the same operator concentrates recall
     * into few cells; the floor here gates the machinery, not the
     * data. */
-  val annIvf = Q(
-    "q_ann_ivf",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val ivf = Similarity.ivfTopK(emb, probes, topK = 3)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = ivf.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annIvf = recallGate("q_ann_ivf") { (emb, probes) =>
+    Similarity.ivfTopK(emb, probes, topK = 3)
+  }
 
   /** Int8 scalar quantization + L2 normalization under an exact oracle:
     * quantization is defined as floor(x·scale + 0.5) (engine-neutral,
@@ -195,16 +214,7 @@ object SimBattery {
         "CAST((doc_id * 31) % 256 + (doc_id * 57) % 256 AS DOUBLE) / 2 AS mean_luma " +
         "FROM documents ORDER BY doc_id"),
     (s, dir) => {
-      import s.implicits._
-      // Spread the 8-byte id rows before the synth+codec mapPartitions
-      // pass: a one-row-group scan would otherwise run the whole
-      // encode+decode chain in ONE task (r19; no-op once the scan is
-      // wide — see Patterns.spreadWidth).
-      val media = graft.view.Patterns.spreadNarrow(
-          Td(s, dir, "documents").select(col("doc_id")),
-          graft.view.Patterns.TextInflation).as[Long]
-        .mapPartitions(_.map(id =>
-          Multimodal.MediaRow(id, MediaSynth.synthPng(id), "image/png")))
+      val media = pngMedia(s, dir)
       val half = (col("width") / 2).cast("int")
       def arrMean(a: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
         aggregate(a, lit(0.0), (acc, x) => acc + x) / n
@@ -240,16 +250,7 @@ object SimBattery {
         "CAST(4 * ((doc_id * 31) % 256) + 3 * ((doc_id * 57) % 256) AS DOUBLE) / 7 AS mean_all " +
         "FROM documents ORDER BY doc_id"),
     (s, dir) => {
-      import s.implicits._
-      // Spread the 8-byte id rows before the synth+codec mapPartitions
-      // pass: a one-row-group scan would otherwise run the whole
-      // encode+decode chain in ONE task (r19; no-op once the scan is
-      // wide — see Patterns.spreadWidth).
-      val media = graft.view.Patterns.spreadNarrow(
-          Td(s, dir, "documents").select(col("doc_id")),
-          graft.view.Patterns.TextInflation).as[Long]
-        .mapPartitions(_.map(id =>
-          Multimodal.MediaRow(id, MediaSynth.synthPng(id), "image/png")))
+      val media = pngMedia(s, dir)
       def arrMean(a: org.apache.spark.sql.Column, n: Int) =
         aggregate(a, lit(0.0), (acc, x) => acc + x) / n
       Multimodal.decodeResizeImages(media, outW = 7, outH = 5)
@@ -313,26 +314,9 @@ object SimBattery {
     * machinery (measured: every probe recovers its full reachable
     * truth — the ADC shortlist does not lose cell-reachable true
     * neighbors). */
-  val annPq = Q(
-    "q_ann_pq",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val pq = Similarity.ivfPqTopK(emb, probes, topK = 3)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = pq.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annPq = recallGate("q_ann_pq") { (emb, probes) =>
+    Similarity.ivfPqTopK(emb, probes, topK = 3)
+  }
 
   /** SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
     * "SemDeDup": embedding-space duplicate CLUSTERS, keep one
@@ -364,10 +348,7 @@ object SimBattery {
         "ORDER BY vec_id % 97 DESC, vec_id) AS rn FROM comp) " +
         "SELECT vec_id, component, quality FROM rk WHERE rn = 1 ORDER BY 1"),
     (s, dir) => {
-      val emb = Td(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = emb.unionByName(
-        emb.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
+      val planted = plantedEmbeddings(s, dir)
       // The packaged library composition (spanning near-dup → CC →
       // keepers): its pair graph is transitive-closure-equal to the
       // full contract's (spec-pinned), so clusters — and therefore
@@ -391,28 +372,10 @@ object SimBattery {
     * a regression that silently forces the broadcast (or breaks the
     * shuffle path's dedup/rank determinism) fails here, not in a
     * user's 100 TB run. */
-  val annPqBulk = Q(
-    "q_ann_pq_bulk",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = Similarity.pqBuild(emb)
-      val pq = Similarity.pqSearch(model, probes, topK = 3,
-        broadcastProbes = false)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = pq.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annPqBulk = recallGate("q_ann_pq_bulk") { (emb, probes) =>
+    Similarity.pqSearch(Similarity.pqBuild(emb), probes, topK = 3,
+      broadcastProbes = false)
+  }
 
   /** The bulk-probe (non-broadcast) IVF search path under the same
     * recall-floor oracle as `q_ann_ivf` — the full-precision twin of
@@ -422,28 +385,10 @@ object SimBattery {
     * rank ≤ topK window prunes map-side via WindowGroupLimit), so it
     * needs its own gate: a regression that re-widens the candidate
     * rows or forces the broadcast fails here. */
-  val annIvfBulk = Q(
-    "q_ann_ivf_bulk",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = Similarity.ivfBuild(emb)
-      val ivf = Similarity.ivfSearch(model, probes, topK = 3,
-        broadcastProbes = false)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = ivf.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annIvfBulk = recallGate("q_ann_ivf_bulk") { (emb, probes) =>
+    Similarity.ivfSearch(Similarity.ivfBuild(emb), probes, topK = 3,
+      broadcastProbes = false)
+  }
 
   /** No-retrain index growth under the oracle: build the IVF index on
     * HALF the corpus (even vec_ids), `ivfExtend` with the other half,
@@ -452,58 +397,24 @@ object SimBattery {
     * mis-assigned cells, duplicated rows fanning out the top-k
     * window) fails the floor; the probes themselves are split across
     * both halves so the gate exercises built AND extended regions. */
-  val annIvfExtend = Q(
-    "q_ann_ivf_extend",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = Similarity.ivfBuild(emb.filter(col("vec_id") % 2 === 0))
-      val extended = Similarity.ivfExtend(model,
-        emb.filter(col("vec_id") % 2 === 1))
-      val ivf = Similarity.ivfSearch(extended, probes, topK = 3)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = ivf.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annIvfExtend = recallGate("q_ann_ivf_extend") { (emb, probes) =>
+    val model = Similarity.ivfBuild(emb.filter(col("vec_id") % 2 === 0))
+    val extended = Similarity.ivfExtend(model,
+      emb.filter(col("vec_id") % 2 === 1))
+    Similarity.ivfSearch(extended, probes, topK = 3)
+  }
 
   /** [[annIvfExtend]]'s IVF-PQ twin: half-corpus `pqBuild`, `pqExtend`
     * with the other half (frozen codebooks encode the delta), recall
     * floor vs full-corpus brute force through the extended index —
     * both the compressed candidate side and the exact re-rank side
     * must have grown correctly for the floor to hold. */
-  val annPqExtend = Q(
-    "q_ann_pq_extend",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
-    (s, dir) => {
-      val emb = Td(s, dir, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = Similarity.pqBuild(emb.filter(col("vec_id") % 2 === 0))
-      val extended = Similarity.pqExtend(model,
-        emb.filter(col("vec_id") % 2 === 1))
-      val pq = Similarity.pqSearch(extended, probes, topK = 3)
-      val brute = Similarity.bruteTopK(emb, probes, k = 3)
-      val hits = pq.join(brute.select(col("probe_id"), col("neighbor_id")),
-        Seq("probe_id", "neighbor_id"), "left_semi")
-        .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-      probes.select(col("vec_id").as("probe_id"))
-        .join(hits, Seq("probe_id"), "left")
-        .select(col("probe_id"),
-          (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-        .orderBy(col("probe_id"))
-    }
-  )
+  val annPqExtend = recallGate("q_ann_pq_extend") { (emb, probes) =>
+    val model = Similarity.pqBuild(emb.filter(col("vec_id") % 2 === 0))
+    val extended = Similarity.pqExtend(model,
+      emb.filter(col("vec_id") % 2 === 1))
+    Similarity.pqSearch(extended, probes, topK = 3)
+  }
 
   /** PQ index persistence under the oracle: build → `pqSave` →
     * `pqLoad` in the same session, search the LOADED index, and hold
@@ -513,9 +424,7 @@ object SimBattery {
     * loses precision or geometry fails an oracle, not just a spec. */
   val annPqPersist = Q(
     "q_pq_persist",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
+    ProbeRecallOracle,
     (s, dir) => {
       val emb = Td(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
@@ -523,17 +432,8 @@ object SimBattery {
       // saved index is deleted — nothing lazy may still read idxDir.
       Scratch.withDir("graft_pq_persist") { idxDir =>
         Similarity.pqSave(Similarity.pqBuild(emb), idxDir)
-        val loaded = Similarity.pqLoad(s, idxDir)
-        val pq = Similarity.pqSearch(loaded, probes, topK = 3)
-        val brute = Similarity.bruteTopK(emb, probes, k = 3)
-        val hits = pq.join(brute.select(col("probe_id"), col("neighbor_id")),
-          Seq("probe_id", "neighbor_id"), "left_semi")
-          .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-        probes.select(col("vec_id").as("probe_id"))
-          .join(hits, Seq("probe_id"), "left")
-          .select(col("probe_id"),
-            (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-          .orderBy(col("probe_id"))
+        probeRecall(emb, probes, floor = 1)(
+          Similarity.pqSearch(Similarity.pqLoad(s, idxDir), probes, topK = 3))
           .localCheckpoint()
       }
     }
@@ -546,26 +446,15 @@ object SimBattery {
     * round trip and the strategy split for the uncompressed index. */
   val annIvfPersist = Q(
     "q_ivf_persist",
-    Some(
-      "SELECT vec_id AS probe_id, true AS recall_ok FROM embeddings " +
-        "WHERE vec_id < 5 ORDER BY 1"),
+    ProbeRecallOracle,
     (s, dir) => {
       val emb = Td(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
       Scratch.withDir("graft_ivf_persist") { idxDir =>
         Similarity.ivfSave(Similarity.ivfBuild(emb), idxDir)
-        val loaded = Similarity.ivfLoad(s, idxDir)
-        val ivf = Similarity.ivfSearch(loaded, probes, topK = 3,
-          broadcastProbes = false)
-        val brute = Similarity.bruteTopK(emb, probes, k = 3)
-        val hits = ivf.join(brute.select(col("probe_id"), col("neighbor_id")),
-          Seq("probe_id", "neighbor_id"), "left_semi")
-          .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hits"))
-        probes.select(col("vec_id").as("probe_id"))
-          .join(hits, Seq("probe_id"), "left")
-          .select(col("probe_id"),
-            (coalesce(col("n_hits"), lit(0L)) >= 1).as("recall_ok"))
-          .orderBy(col("probe_id"))
+        probeRecall(emb, probes, floor = 1)(
+          Similarity.ivfSearch(Similarity.ivfLoad(s, idxDir), probes,
+            topK = 3, broadcastProbes = false))
           .localCheckpoint()
       }
     }

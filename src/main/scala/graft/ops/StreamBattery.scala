@@ -1,10 +1,16 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
+import graft.dedup.Dedup
+import graft.run.Checkpoints
+import graft.sim.Similarity
 import graft.streaming.EventTimeOps
+import graft.text.{CorpusPrep, TextFunctions}
 
 /** The custom-state streaming operators under the DuckDB oracle gate —
   * replayed deterministically from parquet file feeds, the same
@@ -30,18 +36,22 @@ object StreamBattery {
     * Restores the previous provider afterwards — Verify/Bench share one
     * session across the battery. `GRAFT_STATE_STORE=hdfs` opts out
     * (e.g. a platform without the rocksdbjni native lib). */
-  private def withStateStore[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
+  private def withStateStore[A](s: SparkSession)(body: => A): A =
     if (sys.env.get("GRAFT_STATE_STORE").contains("hdfs")) body
-    else {
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
+    else withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")(body)
+
+  /** Run `body` with session conf `key` set to `value`, restoring the
+    * previous value afterwards. */
+  private def withConf[A](s: SparkSession, key: String, value: String)(
+      body: => A): A = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
     }
   }
 
@@ -58,16 +68,8 @@ object StreamBattery {
     * state contracts are per-key and every gate orderBy's its result,
     * so the oracle hash is invariant. A real deployment sizes shuffle
     * partitions to its stream volume exactly the same way. */
-  private[ops] def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, n.toString)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private[ops] def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
   /** Data-derived shuffle width for a replay feed: ~1 MB of feed
     * parquet per partition, floored at 4 and capped at the session's
@@ -168,7 +170,7 @@ object StreamBattery {
           .parquet(feed).as[EventTimeOps.Ev],
         gapMinutes = 30, watermarkDelay = "1 minute")
         .writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .outputMode("append").start()
       q.awaitTermination()
       s.table(name)
@@ -216,7 +218,7 @@ object StreamBattery {
         s.readStream.schema(docsFrame.schema).option("maxFilesPerTrigger", 1)
           .parquet(feed).as[EventTimeOps.Doc])
         .writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .outputMode("append").start()
       q.awaitTermination()
       s.table(name).select(col("doc_id"), col("content_hash"))
@@ -301,7 +303,7 @@ object StreamBattery {
           col("click_ts") <= col("view_ts") + expr("INTERVAL 10 MINUTES"))
       val name = s"stream_join_${System.nanoTime()}"
       val q = joined.writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .outputMode("append").start()
       q.awaitTermination()
       s.table(name).select(col("user_id"), col("view_id"), col("click_id"),
@@ -386,7 +388,7 @@ object StreamBattery {
         "left_outer")
       val name = s"stream_join_outer_${System.nanoTime()}"
       val q = joined.writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .outputMode("append").start()
       q.awaitTermination()
       s.table(name)
@@ -445,8 +447,8 @@ object StreamBattery {
       val o = Td(s, dir, "orders").filter(col("o_orderkey") % 9 === 0)
       val kg = Ns.KgToPostgres
       // one quad as a struct matching QuadSource.schema
-      def q3(subj: org.apache.spark.sql.Column, pred: String,
-             ob: org.apache.spark.sql.Column) =
+      def q3(subj: Column, pred: String,
+             ob: Column) =
         struct(subj.as("subject"), lit(pred).as("predicate"), ob.as("obj"),
           lit(null).cast("string").as("lang"),
           lit(null).cast("string").as("datatype"),
@@ -545,7 +547,7 @@ object StreamBattery {
         .parquet(feed)
         .join(static, Seq("content_hash"), "left_anti")
         .writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .outputMode("append").start()
       q.awaitTermination()
       s.table(name).select(col("doc_id"), col("content_hash"))
@@ -581,6 +583,137 @@ object StreamBattery {
       .filter(col("c").cast("double") /
         (col("na") + col("nb") - col("c")) >= minJ)
       .select(col("id_a").as("doc_id")).distinct()
+  }
+
+  /** Replay `feed` one file per micro-batch, oldest first, until it is
+    * exhausted (`AvailableNow`). Each batch is filtered by `admit` and
+    * checkpointed once (every step reads it more than once) before
+    * `step` sees it. */
+  private def replay(s: SparkSession, feed: String, schema: StructType,
+                     admit: Column = lit(true))(step: DataFrame => Unit): Unit =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(feed)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        step(batch.filter(admit).localCheckpoint())
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** Rows of batch `b` that no found pair matched (`pairCol` against
+    * `idCol`): the novel arrivals a loop admits. */
+  private def unmatched(b: DataFrame, pairs: DataFrame, pairCol: String,
+                        idCol: String): DataFrame =
+    b.join(pairs.select(col(pairCol).as(idCol)).distinct(), Seq(idCol),
+      "left_anti")
+
+  /** The quality gate the MinHash ingestion loops admit arrivals
+    * through, and its DuckDB twin. */
+  private def quality(c: Column): Column =
+    CorpusPrep.qualityFilter(c, CorpusPrep.Quality())
+
+  private def qualitySql(e: String): String =
+    s"length($e) >= 50 " +
+      raw"AND len(regexp_extract_all($e, '[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]')) >= 10 " +
+      raw"AND len(regexp_extract_all($e, '[^\w\s]')) * 5 <= length($e)"
+
+  /** The planted near-dup mutation of a document: its text from the
+    * 12th character on (DuckDB: `text[12:]`). */
+  private def mutText(c: Column): Column = substring(c, 12, 1000000)
+
+  /** Checkpointed J ≥ 0.5 delta pairs of batch `b` against `model`. */
+  private def minhashPairs(model: Dedup.MinHashIndexModel,
+                           b: DataFrame): DataFrame =
+    Dedup.minhashDeltaPairs(model, b, "doc_id", "text", minJaccard = 0.5)
+      .localCheckpoint()
+
+  /** DuckDB CTEs of the planted MinHash truth over `documents` split
+    * into families by `doc_id % modulus`, both sides of every pair
+    * quality-restricted (the loop filters before pairing, so the truth
+    * must too): `base` holds the family-0 docs whose mutation keeps
+    * J ≥ 0.5; `next` the same for family 1 minus `xc`, its docs with an
+    * EXACT J ≥ 0.5 collision against family 0. The loop drops those
+    * when they arrive, so their mutation cannot produce the
+    * (corpus_id, corpus_id + offset) pair the recall filter requires;
+    * without the exclusion the gate leaned on the 5% slack absorbing
+    * data-dependent cross-family collisions (r16 advice). Pairs found
+    * on arrival are a SUBSET of this exact set (LSH verify is exact, no
+    * false positives), so every truth doc is genuinely recoverable at
+    * any corpus or scale. [[plantedTruth]] is the Spark twin. */
+  private def plantedTruthSql(modulus: Int, base: String, next: String): String = {
+    def truthCte(name: String, mod: Int, exclude: Option[String]): String =
+      s"$name AS (SELECT doc_id FROM (SELECT doc_id, " +
+        s"${TextBattery.shinglesSqlOf("text")} AS sh_o, " +
+        s"${TextBattery.shinglesSqlOf("text[12:]")} AS sh_m " +
+        s"FROM documents WHERE doc_id % $modulus = $mod " +
+        s"AND ${qualitySql("text")} AND ${qualitySql("text[12:]")}) " +
+        "WHERE CAST(len(list_intersect(sh_o, sh_m)) AS DOUBLE) / " +
+        "len(list_distinct(list_concat(sh_o, sh_m))) >= 0.5" +
+        exclude.map(x =>
+          s" AND doc_id NOT IN (SELECT doc_id FROM $x)").getOrElse("") + ")"
+    def xsCte(name: String, mod: Int): String =
+      s"$name AS (SELECT doc_id, ${TextBattery.shinglesSqlOf("text")} AS sh " +
+        s"FROM documents WHERE doc_id % $modulus = $mod AND ${qualitySql("text")})"
+    val xcCte =
+      // sh lists are distinct per doc, so the shared count IS |∩|
+      // and J = c/(n1+n0−c) — same count-then-size form as
+      // exactCrossCollisions.
+      "xc AS (SELECT DISTINCT p.id1 AS doc_id FROM " +
+        "(SELECT a.doc_id AS id1, b.doc_id AS id0, count(*) AS c " +
+        "FROM (SELECT doc_id, unnest(sh) AS t FROM xs1) a " +
+        "JOIN (SELECT doc_id, unnest(sh) AS t FROM xs0) b ON a.t = b.t " +
+        "GROUP BY 1, 2) p " +
+        "JOIN (SELECT doc_id, len(sh) AS n1 FROM xs1) s1 ON s1.doc_id = p.id1 " +
+        "JOIN (SELECT doc_id, len(sh) AS n0 FROM xs0) s0 ON s0.doc_id = p.id0 " +
+        "WHERE CAST(p.c AS DOUBLE) / (s1.n1 + s0.n0 - p.c) >= 0.5)"
+    s"${truthCte(base, 0, None)}, ${xsCte("xs1", 1)}, " +
+      s"${xsCte("xs0", 0)}, $xcCte, ${truthCte(next, 1, Some("xc"))}"
+  }
+
+  /** Spark's independent count of [[plantedTruthSql]]: the doc ids of
+    * the family-0 truth and of the family-1 truth minus its exact
+    * cross-collisions. */
+  private def plantedTruth(docs: => DataFrame,
+                           modulus: Int): (DataFrame, DataFrame) = {
+    def sh(c: Column) =
+      graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3)
+    def truthIds(mod: Int) =
+      docs.filter(col("doc_id") % modulus === mod)
+        .filter(quality(col("text")) && quality(mutText(col("text"))))
+        .select(col("doc_id"), sh(col("text")).as("sh_o"),
+          sh(mutText(col("text"))).as("sh_m"))
+        .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
+          size(array_union(col("sh_o"), col("sh_m"))) >= 0.5)
+        .select(col("doc_id"))
+    def shSet(mod: Int) =
+      docs.filter(col("doc_id") % modulus === mod)
+        .filter(quality(col("text")))
+        .select(col("doc_id"), sh(col("text")).as("sh"))
+    val xc = exactCrossCollisions(shSet(1), shSet(0), 0.5)
+    (truthIds(0), truthIds(1).join(xc, Seq("doc_id"), "left_anti"))
+  }
+
+  /** An ingestion loop's found pairs, read for recall: `deltaCol`
+    * arrivals paired with `corpusCol` ids, planted families split by
+    * id % `modulus`. */
+  private final case class Found(pairs: DataFrame, corpusCol: String,
+                                 deltaCol: String, idCol: String,
+                                 modulus: Int) {
+    /** Recall row of family `family`, whose planted copies arrive as
+      * id + `offset`: at least 95% of `truth` must be found paired
+      * with its copy. */
+    def recallRow(truth: DataFrame, family: Int, offset: Long,
+                  prefix: String): DataFrame = {
+      val id = col(corpusCol)
+      val hits = pairs.filter(id % modulus === family && id < 1000000L &&
+          col(deltaCol) === id + offset)
+        .select(id.as(idCol))
+      truth.join(hits.withColumn("f", lit(1)).distinct(), Seq(idCol), "left")
+        .agg(count(lit(1)).as(s"n_truth_$prefix"),
+          (count(col("f")) >= count(lit(1)) * 0.95)
+            .as(s"recall_${prefix}_ok"))
+    }
   }
 
   /** Streaming MinHash INGESTION LOOP — the reference's central
@@ -622,60 +755,15 @@ object StreamBattery {
     * (q_minhash_persist). */
   val streamIngestDedup = Q(
     "q_stream_ingest_dedup",
-    Some {
-      def qual(e: String): String =
-        s"length($e) >= 50 " +
-          raw"AND len(regexp_extract_all($e, '[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]')) >= 10 " +
-          raw"AND len(regexp_extract_all($e, '[^\w\s]')) * 5 <= length($e)"
-      def truthCte(name: String, mod: Int, exclude: Option[String]): String =
-        s"$name AS (SELECT doc_id FROM (SELECT doc_id, " +
-          s"${TextBattery.shinglesSqlOf("text")} AS sh_o, " +
-          s"${TextBattery.shinglesSqlOf("text[12:]")} AS sh_m " +
-          s"FROM documents WHERE doc_id % 3 = $mod " +
-          s"AND ${qual("text")} AND ${qual("text[12:]")}) " +
-          "WHERE CAST(len(list_intersect(sh_o, sh_m)) AS DOUBLE) / " +
-          "len(list_distinct(list_concat(sh_o, sh_m))) >= 0.5" +
-          exclude.map(x =>
-            s" AND doc_id NOT IN (SELECT doc_id FROM $x)").getOrElse("") + ")"
-      // Batch-2 truth excludes %3=1 docs carrying an EXACT J≥0.5
-      // collision with the quality-passing standing corpus (%3=0): the
-      // loop drops such docs at batch 1, so their +2e6 mutation cannot
-      // produce the (corpus_id, corpus_id+2e6) pair the recall filter
-      // requires — without the exclusion the gate leaned on the 5%
-      // slack absorbing data-dependent cross-family collisions (r16
-      // advice). Found-at-batch-1 pairs are a SUBSET of this exact set
-      // (LSH verify is exact, no false positives), so every truth doc
-      // is genuinely recoverable at any corpus or scale.
-      def xsCte(name: String, mod: Int): String =
-        s"$name AS (SELECT doc_id, ${TextBattery.shinglesSqlOf("text")} AS sh " +
-          s"FROM documents WHERE doc_id % 3 = $mod AND ${qual("text")})"
-      val xcCte =
-        // sh lists are distinct per doc, so the shared count IS |∩|
-        // and J = c/(n1+n0−c) — same count-then-size form as
-        // exactCrossCollisions.
-        "xc AS (SELECT DISTINCT p.id1 AS doc_id FROM " +
-          "(SELECT a.doc_id AS id1, b.doc_id AS id0, count(*) AS c " +
-          "FROM (SELECT doc_id, unnest(sh) AS t FROM xs1) a " +
-          "JOIN (SELECT doc_id, unnest(sh) AS t FROM xs0) b ON a.t = b.t " +
-          "GROUP BY 1, 2) p " +
-          "JOIN (SELECT doc_id, len(sh) AS n1 FROM xs1) s1 ON s1.doc_id = p.id1 " +
-          "JOIN (SELECT doc_id, len(sh) AS n0 FROM xs0) s0 ON s0.doc_id = p.id0 " +
-          "WHERE CAST(p.c AS DOUBLE) / (s1.n1 + s0.n0 - p.c) >= 0.5)"
-      s"WITH ${truthCte("tr1", 0, None)}, ${xsCte("xs1", 1)}, " +
-        s"${xsCte("xs0", 0)}, $xcCte, ${truthCte("tr2", 1, Some("xc"))}, " +
+    Some(
+      s"WITH ${plantedTruthSql(3, "tr1", "tr2")}, " +
         "junk AS (SELECT count(*) AS n FROM documents WHERE doc_id % 15 = 2 " +
-        s"AND ${qual("text || repeat('!', length(text))")}) " +
+        s"AND ${qualitySql("text || repeat('!', length(text))")}) " +
         "SELECT (SELECT count(*) FROM tr1) AS n_truth_b1, true AS recall_b1_ok, " +
         "(SELECT count(*) FROM tr2) AS n_truth_b2, true AS recall_b2_ok, " +
-        "(SELECT n FROM junk) = 0 AS junk_clean"
-    },
+        "(SELECT n FROM junk) = 0 AS junk_clean"),
     (s, dir) => {
-      import graft.dedup.Dedup
-      import graft.text.{CorpusPrep, TextFunctions}
       def docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      def quality(c: org.apache.spark.sql.Column) =
-        CorpusPrep.qualityFilter(c, CorpusPrep.Quality())
-      def mut(c: org.apache.spark.sql.Column) = substring(c, 12, 1000000)
       val feed = FeedCache(
         s"stream_ingest:$dir:mod=3:mutbases=1e6,2e6:junk=mod15+9e6:pad=len") {
         feedDir =>
@@ -686,7 +774,7 @@ object StreamBattery {
             docs.filter(col("doc_id") % 3 === 1)
               .unionByName(docs.filter(col("doc_id") % 3 === 0)
                 .select((col("doc_id") + 1000000L).as("doc_id"),
-                  mut(col("text")).as("text")))
+                  mutText(col("text")).as("text")))
               .unionByName(docs.filter(col("doc_id") % 15 === 2)
                 .select((col("doc_id") + 9000000L).as("doc_id"),
                   concat(col("text"),
@@ -700,85 +788,32 @@ object StreamBattery {
             docs.filter(col("doc_id") % 3 === 2)
               .unionByName(docs.filter(col("doc_id") % 3 === 1)
                 .select((col("doc_id") + 2000000L).as("doc_id"),
-                  mut(col("text")).as("text"))),
+                  mutText(col("text")).as("text"))),
             feedDir, 1)
       }
       withShufflePartitions(s, replayPartitions(s, feed)) {
         var model = Dedup.minhashBuild(
           docs.filter(col("doc_id") % 3 === 0).filter(quality(col("text"))),
           "doc_id", "text", numHashes = 64, bands = 16, shingleK = 3)
-        // Running checkpointed fold (not a driver buffer unioned at the
-        // end): each batch's pairs frame is already materialized, so
-        // the rolling union stays a flat two-checkpoint plan at ANY
+        // Rolling checkpointed fold (not a driver buffer unioned at the
+        // end): the union stays a flat one-checkpoint plan at ANY
         // batch count — the shape a many-batch deployment needs.
-        var found: org.apache.spark.sql.DataFrame = null
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            // quality → delta-dedup → admit novel; the batch is read
-            // twice (pairing + extend), checkpoint the survivors once
-            val b = batch.filter(quality(col("text"))).localCheckpoint()
-            val pairs = Dedup.minhashDeltaPairs(model, b, "doc_id", "text",
-              minJaccard = 0.5).localCheckpoint()
-            val novel = b.join(
-              pairs.select(col("delta_id").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-            found =
-              if (found == null) pairs
-              else found.unionByName(pairs).localCheckpoint()
-            model = Dedup.minhashExtend(model, novel, "doc_id", "text")
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Planted truth, quality-restricted on BOTH sides (the loop
-        // filters before pairing, so the truth must too) — Spark's
-        // independent count of the same closed form the oracle states.
-        def truthIds(mod: Int) = {
-          def sh(c: org.apache.spark.sql.Column) =
-            graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3)
-          docs.filter(col("doc_id") % 3 === mod)
-            .filter(quality(col("text")) && quality(mut(col("text"))))
-            .select(col("doc_id"), sh(col("text")).as("sh_o"),
-              sh(mut(col("text"))).as("sh_m"))
-            .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
-              size(array_union(col("sh_o"), col("sh_m"))) >= 0.5)
-            .select(col("doc_id"))
+        var found: DataFrame = null
+        // quality → delta-dedup → admit novel
+        replay(s, feed, docs.schema, quality(col("text"))) { b =>
+          val pairs = minhashPairs(model, b)
+          found = Checkpoints.fold(found, pairs)
+          model = Dedup.minhashExtend(model,
+            unmatched(b, pairs, "delta_id", "doc_id"), "doc_id", "text")
         }
-        def recallRow(truth: org.apache.spark.sql.DataFrame,
-                      foundIds: org.apache.spark.sql.DataFrame,
-                      prefix: String) =
-          truth.join(foundIds.withColumn("f", lit(1)).distinct(),
-            Seq("doc_id"), "left")
-            .agg(count(lit(1)).as(s"n_truth_$prefix"),
-              (count(col("f")) >= count(lit(1)) * 0.95)
-                .as(s"recall_${prefix}_ok"))
-        val r1 = recallRow(truthIds(0),
-          found.filter(col("corpus_id") % 3 === 0 &&
-            col("corpus_id") < 1000000L &&
-            col("delta_id") === col("corpus_id") + 1000000L)
-            .select(col("corpus_id").as("doc_id")), "b1")
-        // Exclude %3=1 docs the loop legitimately dropped at batch 1
-        // (exact cross-family collision with the standing corpus —
-        // see exactCrossCollisions; mirrors the oracle's xc CTE).
-        def shSet(mod: Int) =
-          docs.filter(col("doc_id") % 3 === mod)
-            .filter(quality(col("text")))
-            .select(col("doc_id"),
-              graft.functions.ShingleHashesExpr(
-                TextFunctions.normalize(col("text")), 3).as("sh"))
-        val xc = exactCrossCollisions(shSet(1), shSet(0), 0.5)
-        val r2 = recallRow(truthIds(1).join(xc, Seq("doc_id"), "left_anti"),
-          found.filter(col("corpus_id") % 3 === 1 &&
-            col("corpus_id") < 1000000L &&
-            col("delta_id") === col("corpus_id") + 2000000L)
-            .select(col("corpus_id").as("doc_id")), "b2")
+        val (truth0, truth1) = plantedTruth(docs, 3)
+        val hits = Found(found, "corpus_id", "delta_id", "doc_id", 3)
         val junk = found.agg(
           (count(when(col("corpus_id") >= 9000000L, lit(1))) === 0)
             .as("junk_clean"))
-        r1.crossJoin(r2).crossJoin(junk)
+        hits.recallRow(truth0, 0, 1000000L, "b1")
+          .crossJoin(hits.recallRow(truth1, 1, 2000000L, "b2"))
+          .crossJoin(junk)
       }
     }
   )
@@ -819,51 +854,15 @@ object StreamBattery {
     * mutation pair). */
   val streamIngestRebuild = Q(
     "q_stream_ingest_rebuild",
-    Some {
-      def qual(e: String): String =
-        s"length($e) >= 50 " +
-          raw"AND len(regexp_extract_all($e, '[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]')) >= 10 " +
-          raw"AND len(regexp_extract_all($e, '[^\w\s]')) * 5 <= length($e)"
-      def truthCte(name: String, mod: Int, exclude: Option[String]): String =
-        s"$name AS (SELECT doc_id FROM (SELECT doc_id, " +
-          s"${TextBattery.shinglesSqlOf("text")} AS sh_o, " +
-          s"${TextBattery.shinglesSqlOf("text[12:]")} AS sh_m " +
-          s"FROM documents WHERE doc_id % 4 = $mod " +
-          s"AND ${qual("text")} AND ${qual("text[12:]")}) " +
-          "WHERE CAST(len(list_intersect(sh_o, sh_m)) AS DOUBLE) / " +
-          "len(list_distinct(list_concat(sh_o, sh_m))) >= 0.5" +
-          exclude.map(x =>
-            s" AND doc_id NOT IN (SELECT doc_id FROM $x)").getOrElse("") + ")"
-      def xsCte(name: String, mod: Int): String =
-        s"$name AS (SELECT doc_id, ${TextBattery.shinglesSqlOf("text")} AS sh " +
-          s"FROM documents WHERE doc_id % 4 = $mod AND ${qual("text")})"
-      val xcCte =
-        // sh lists are distinct per doc, so the shared count IS |∩|
-        // and J = c/(n1+n0−c) — same count-then-size form as
-        // exactCrossCollisions.
-        "xc AS (SELECT DISTINCT p.id1 AS doc_id FROM " +
-          "(SELECT a.doc_id AS id1, b.doc_id AS id0, count(*) AS c " +
-          "FROM (SELECT doc_id, unnest(sh) AS t FROM xs1) a " +
-          "JOIN (SELECT doc_id, unnest(sh) AS t FROM xs0) b ON a.t = b.t " +
-          "GROUP BY 1, 2) p " +
-          "JOIN (SELECT doc_id, len(sh) AS n1 FROM xs1) s1 ON s1.doc_id = p.id1 " +
-          "JOIN (SELECT doc_id, len(sh) AS n0 FROM xs0) s0 ON s0.doc_id = p.id0 " +
-          "WHERE CAST(p.c AS DOUBLE) / (s1.n1 + s0.n0 - p.c) >= 0.5)"
-      s"WITH ${truthCte("tr_base", 0, None)}, ${xsCte("xs1", 1)}, " +
-        s"${xsCte("xs0", 0)}, $xcCte, ${truthCte("tr1", 1, Some("xc"))} " +
+    Some(
+      s"WITH ${plantedTruthSql(4, "tr_base", "tr1")} " +
         "SELECT CAST(1 AS BIGINT) AS n_rebuilds, " +
         "(SELECT count(*) FROM tr_base) AS n_truth_base, " +
         "true AS recall_base_ok, " +
         "(SELECT count(*) FROM tr1) AS n_truth_b1, " +
-        "true AS recall_b1_ok, true AS decisions_invariant"
-    },
+        "true AS recall_b1_ok, true AS decisions_invariant"),
     (s, dir) => {
-      import graft.dedup.Dedup
-      import graft.text.{CorpusPrep, TextFunctions}
       def docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      def quality(c: org.apache.spark.sql.Column) =
-        CorpusPrep.qualityFilter(c, CorpusPrep.Quality())
-      def mut(c: org.apache.spark.sql.Column) = substring(c, 12, 1000000)
       val feed = FeedCache(
         s"stream_ingest_rebuild:$dir:mod=4:b1=1,2:b2=base+1e6,b1+2e6") {
         feedDir =>
@@ -877,101 +876,54 @@ object StreamBattery {
           writeSlice(
             docs.filter(col("doc_id") % 4 === 0)
               .select((col("doc_id") + 1000000L).as("doc_id"),
-                mut(col("text")).as("text"))
+                mutText(col("text")).as("text"))
               .unionByName(docs.filter(col("doc_id") % 4 === 1)
                 .select((col("doc_id") + 2000000L).as("doc_id"),
-                  mut(col("text")).as("text"))),
+                  mutText(col("text")).as("text"))),
             feedDir, 1)
       }
       withShufflePartitions(s, replayPartitions(s, feed)) {
         val base = docs.filter(col("doc_id") % 4 === 0)
           .filter(quality(col("text"))).localCheckpoint()
         // The stored-corpus table a real pipeline rebuilds from:
-        // base ∪ every admitted batch, kept flat via checkpointed folds.
+        // base ∪ every admitted batch, kept flat by the rolling fold.
         var corpus = base
         var model = Dedup.minhashBuild(base, "doc_id", "text",
           numHashes = 64, bands = 16, shingleK = 3)
         var shadow = model // extend-only twin — never rebuilt
         var rebuilds = 0
         var invariant = true
-        var found: org.apache.spark.sql.DataFrame = null
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val b = batch.filter(quality(col("text"))).localCheckpoint()
-            val pairs = Dedup.minhashDeltaPairs(model, b, "doc_id", "text",
-              minJaccard = 0.5).localCheckpoint()
-            if (rebuilds > 0) {
-              // post-rebuild: the twin that only extended must decide
-              // identically — ids AND jaccard values
-              val sp = Dedup.minhashDeltaPairs(shadow, b, "doc_id", "text",
-                minJaccard = 0.5).localCheckpoint()
-              // Invariance check fused to ONE action: the symmetric
-              // multiset difference is empty iff both exceptAll sides
-              // are empty, which already implies equal counts.
-              invariant &&= pairs.exceptAll(sp)
-                .unionByName(sp.exceptAll(pairs)).isEmpty
-            }
-            val novel = b.join(
-              pairs.select(col("delta_id").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti").localCheckpoint()
-            found =
-              if (found == null) pairs
-              else found.unionByName(pairs).localCheckpoint()
-            model = Dedup.minhashExtend(model, novel, "doc_id", "text")
-            shadow = Dedup.minhashExtend(shadow, novel, "doc_id", "text")
-            corpus = corpus.unionByName(novel).localCheckpoint()
-            if (model.needsRebuild) {
-              rebuilds += 1
-              model = Dedup.minhashBuild(corpus, "doc_id", "text",
-                numHashes = 64, bands = 16, shingleK = 3)
-            }
-            ()
+        var found: DataFrame = null
+        replay(s, feed, docs.schema, quality(col("text"))) { b =>
+          val pairs = minhashPairs(model, b)
+          if (rebuilds > 0) {
+            // post-rebuild: the twin that only extended must decide
+            // identically — ids AND jaccard values
+            val sp = minhashPairs(shadow, b)
+            // Invariance check fused to ONE action: the symmetric
+            // multiset difference is empty iff both exceptAll sides
+            // are empty, which already implies equal counts.
+            invariant &&= pairs.exceptAll(sp)
+              .unionByName(sp.exceptAll(pairs)).isEmpty
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        def shSet(mod: Int) =
-          docs.filter(col("doc_id") % 4 === mod)
-            .filter(quality(col("text")))
-            .select(col("doc_id"),
-              graft.functions.ShingleHashesExpr(
-                TextFunctions.normalize(col("text")), 3).as("sh"))
-        def truthIds(mod: Int) = {
-          def sh(c: org.apache.spark.sql.Column) =
-            graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3)
-          docs.filter(col("doc_id") % 4 === mod)
-            .filter(quality(col("text")) && quality(mut(col("text"))))
-            .select(col("doc_id"), sh(col("text")).as("sh_o"),
-              sh(mut(col("text"))).as("sh_m"))
-            .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
-              size(array_union(col("sh_o"), col("sh_m"))) >= 0.5)
-            .select(col("doc_id"))
+          val novel = unmatched(b, pairs, "delta_id", "doc_id").localCheckpoint()
+          found = Checkpoints.fold(found, pairs)
+          model = Dedup.minhashExtend(model, novel, "doc_id", "text")
+          shadow = Dedup.minhashExtend(shadow, novel, "doc_id", "text")
+          corpus = Checkpoints.fold(corpus, novel)
+          if (model.needsRebuild) {
+            rebuilds += 1
+            model = Dedup.minhashBuild(corpus, "doc_id", "text",
+              numHashes = 64, bands = 16, shingleK = 3)
+          }
         }
-        def recallRow(truth: org.apache.spark.sql.DataFrame,
-                      foundIds: org.apache.spark.sql.DataFrame,
-                      prefix: String) =
-          truth.join(foundIds.withColumn("f", lit(1)).distinct(),
-            Seq("doc_id"), "left")
-            .agg(count(lit(1)).as(s"n_truth_$prefix"),
-              (count(col("f")) >= count(lit(1)) * 0.95)
-                .as(s"recall_${prefix}_ok"))
-        val rBase = recallRow(truthIds(0),
-          found.filter(col("corpus_id") % 4 === 0 &&
-            col("corpus_id") < 1000000L &&
-            col("delta_id") === col("corpus_id") + 1000000L)
-            .select(col("corpus_id").as("doc_id")), "base")
-        val xc = exactCrossCollisions(shSet(1), shSet(0), 0.5)
-        val rB1 = recallRow(truthIds(1).join(xc, Seq("doc_id"), "left_anti"),
-          found.filter(col("corpus_id") % 4 === 1 &&
-            col("corpus_id") < 1000000L &&
-            col("delta_id") === col("corpus_id") + 2000000L)
-            .select(col("corpus_id").as("doc_id")), "b1")
+        val (truth0, truth1) = plantedTruth(docs, 4)
+        val hits = Found(found, "corpus_id", "delta_id", "doc_id", 4)
         val flags = s.range(1).select(
           lit(rebuilds.toLong).as("n_rebuilds"),
           lit(invariant).as("decisions_invariant"))
-        flags.crossJoin(rBase).crossJoin(rB1)
+        flags.crossJoin(hits.recallRow(truth0, 0, 1000000L, "base"))
+          .crossJoin(hits.recallRow(truth1, 1, 2000000L, "b1"))
           .select(col("n_rebuilds"), col("n_truth_base"),
             col("recall_base_ok"), col("n_truth_b1"),
             col("recall_b1_ok"), col("decisions_invariant"))
@@ -1025,9 +977,8 @@ object StreamBattery {
         "true AS recall_b1_ok"
     },
     (s, dir) => {
-      import graft.sim.Similarity
       def emb = Td(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      def mut(c: org.apache.spark.sql.Column) =
+      def mut(c: Column) =
         concat(array(c.getItem(0) + lit(0.25f)), slice(c, 2, 1000000))
       val feed = FeedCache(
         s"stream_ingest_ann:$dir:mod=3:b1=1,2:b2=0+1e6,1+2e6:bump=0.25f") {
@@ -1048,32 +999,20 @@ object StreamBattery {
         var corpus = base
         var model = Similarity.ivfBuild(base)
         var rebuilds = 0
-        var found: org.apache.spark.sql.DataFrame = null
-        val q = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val b = batch.localCheckpoint()
-            val pairs = Similarity.ivfSearch(model, b, topK = 1)
-              .filter(col("cos") >= 0.9)
-              .select(col("probe_id"), col("neighbor_id")).localCheckpoint()
-            val novel = b.join(
-              pairs.select(col("probe_id").as("vec_id")).distinct(),
-              Seq("vec_id"), "left_anti").localCheckpoint()
-            found =
-              if (found == null) pairs
-              else found.unionByName(pairs).localCheckpoint()
-            model = Similarity.ivfExtend(model, novel)
-            corpus = corpus.unionByName(novel).localCheckpoint()
-            if (model.needsRebuild) {
-              rebuilds += 1
-              model = Similarity.ivfBuild(corpus)
-            }
-            ()
+        var found: DataFrame = null
+        replay(s, feed, emb.schema) { b =>
+          val pairs = Similarity.ivfSearch(model, b, topK = 1)
+            .filter(col("cos") >= 0.9)
+            .select(col("probe_id"), col("neighbor_id")).localCheckpoint()
+          val novel = unmatched(b, pairs, "probe_id", "vec_id").localCheckpoint()
+          found = Checkpoints.fold(found, pairs)
+          model = Similarity.ivfExtend(model, novel)
+          corpus = Checkpoints.fold(corpus, novel)
+          if (model.needsRebuild) {
+            rebuilds += 1
+            model = Similarity.ivfBuild(corpus)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
         def truthIds(m: Int) =
           emb.filter(col("vec_id") % 3 === m)
             .filter(Similarity.cosine(col("embedding"),
@@ -1084,26 +1023,11 @@ object StreamBattery {
           emb.filter(col("vec_id") % 3 === 1), k = 1)
           .filter(col("cos") >= 0.9)
           .select(col("probe_id").as("vec_id")).distinct()
-        def recallRow(truth: org.apache.spark.sql.DataFrame,
-                      foundIds: org.apache.spark.sql.DataFrame,
-                      prefix: String) =
-          truth.join(foundIds.withColumn("f", lit(1)).distinct(),
-            Seq("vec_id"), "left")
-            .agg(count(lit(1)).as(s"n_truth_$prefix"),
-              (count(col("f")) >= count(lit(1)) * 0.95)
-                .as(s"recall_${prefix}_ok"))
-        val rBase = recallRow(truthIds(0),
-          found.filter(col("neighbor_id") % 3 === 0 &&
-            col("neighbor_id") < 1000000L &&
-            col("probe_id") === col("neighbor_id") + 1000000L)
-            .select(col("neighbor_id").as("vec_id")), "base")
-        val rB1 = recallRow(truthIds(1).join(x1, Seq("vec_id"), "left_anti"),
-          found.filter(col("neighbor_id") % 3 === 1 &&
-            col("neighbor_id") < 1000000L &&
-            col("probe_id") === col("neighbor_id") + 2000000L)
-            .select(col("neighbor_id").as("vec_id")), "b1")
+        val hits = Found(found, "neighbor_id", "probe_id", "vec_id", 3)
         s.range(1).select(lit(rebuilds.toLong).as("n_rebuilds"))
-          .crossJoin(rBase).crossJoin(rB1)
+          .crossJoin(hits.recallRow(truthIds(0), 0, 1000000L, "base"))
+          .crossJoin(hits.recallRow(
+            truthIds(1).join(x1, Seq("vec_id"), "left_anti"), 1, 2000000L, "b1"))
           .select(col("n_rebuilds"), col("n_truth_base"),
             col("recall_base_ok"), col("n_truth_b1"), col("recall_b1_ok"))
       }

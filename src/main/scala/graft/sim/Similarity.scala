@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.run.Checkpoints
+
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   * Two paths, as a training-data pipeline needs them:
@@ -122,13 +124,12 @@ object Similarity {
   private def nearestCell(vec: Column, cs: Array[Array[Double]]): Column =
     graft.functions.ArgMaxDotExpr(vec, unitRows(cs))
 
-  /** Deterministic coarse quantizer shared by IVF and IVF-PQ: seeds =
-    * the `k` hash-smallest corpus vectors (content-derived, no runtime
-    * randomness), then one Lloyd assign+mean refinement over the
-    * corpus. The driver holds only `k × dim` doubles. */
-  private def coarseCentroids(corpus2: DataFrame, k: Int,
-                              idCol: String, vecCol: String): Array[Array[Double]] = {
-    val seeds = corpus2
+  /** The `k` hash-smallest vectors of an (id, vector) projection, as
+    * doubles: the content-derived seeds both quantizers train from (no
+    * runtime randomness). */
+  private def hashSmallest(corpus2: DataFrame, k: Int,
+                           idCol: String): Array[Array[Double]] =
+    corpus2
       .orderBy(xxhash64(col(idCol)), col(idCol))
       .limit(k)
       .collect()
@@ -137,6 +138,14 @@ object Similarity {
         case d: Double => d
         case n: java.lang.Number => n.doubleValue()
       }.toArray)
+
+  /** Deterministic coarse quantizer shared by IVF and IVF-PQ: seeds =
+    * the `k` hash-smallest corpus vectors (content-derived, no runtime
+    * randomness), then one Lloyd assign+mean refinement over the
+    * corpus. The driver holds only `k × dim` doubles. */
+  private def coarseCentroids(corpus2: DataFrame, k: Int,
+                              idCol: String, vecCol: String): Array[Array[Double]] = {
+    val seeds = hashSmallest(corpus2, k, idCol)
     val assigned = corpus2.select(col(vecCol).as("v"),
       nearestCell(col(vecCol), seeds).as("cell"))
     assigned
@@ -194,23 +203,21 @@ object Similarity {
     * one). Build ONCE, [[ivfSearch]] many times: training and the
     * O(n·cells·dim) assignment pass are the dominant cost of a single
     * [[ivfTopK]] call, and a real deployment amortizes them across
-    * every probe batch the way Faiss persists an IndexIVFFlat. */
+    * every probe batch the way Faiss persists an IndexIVFFlat.
+    *
+    * `needsRebuild` flips once [[ivfExtend]] adds outgrow the build:
+    * cells/nprobe are then sized for half the corpus and the centroids
+    * never saw most of it. A fresh [[ivfBuild]] re-derives the
+    * geometry; recall degrades gradually as cells fill. */
   final case class IvfIndexModel(
       cells: Int, nprobe: Int, dim: Int,
       centroids: Array[Array[Double]],
       indexed: DataFrame, idCol: String, vecCol: String,
       builtN: Long = -1L, extendedN: Long = 0L,
-      private val seedMatrix: (Int, DataFrame) = null) {
-    /** Rebuild recommendation for the frozen-geometry extend lifecycle:
-      * flips once no-retrain adds ([[ivfExtend]]) have grown the index
-      * past its BUILD-time size (extended > built) — the point where
-      * cells/nprobe are sized for half the corpus and centroids never
-      * saw the majority of it. A long-running ingestion loop should
-      * check this each extend and schedule a fresh [[ivfBuild]] (cheap
-      * relative to any search batch; re-derives geometry from the
-      * doubled corpus). Conservative threshold, not a cliff: recall
-      * degrades gradually as cells fill. */
-    def needsRebuild: Boolean = builtN >= 0 && extendedN > builtN
+      private val seedMatrix: (Int, DataFrame) = null)
+      extends ExtendableIndex {
+    @transient private[sim] lazy val matrix =
+      new CellMatrix(indexed, "cv", seedMatrix)
 
     /** Chunked per-cell matrix view of the index — (chunk modulus,
       * frame of one row per (cell, chunk) carrying its (neighbor_id,
@@ -238,18 +245,27 @@ object Similarity {
       * chunk)) — without this, every batch of the loop would pay a
       * full O(index) re-group shuffle, re-introducing the
       * linear-per-batch cost the rebuild trigger exists to prevent. */
-    @transient lazy val chunkedMatrix: (Int, DataFrame) = {
-      matrixForced = true
-      if (seedMatrix != null) seedMatrix
-      else chunkedCellMatrix(indexed, "cv")
+    def chunkedMatrix: (Int, DataFrame) = matrix.value
+  }
+
+  /** The chunked cell matrix of one index instance: the matrix an
+    * extend seeded it with, else built from `indexed` on first use.
+    * [[extended]] merges a delta only into a matrix that already
+    * exists, so an extend never FORCES a matrix on models whose
+    * callers use the broadcast path and would otherwise never build
+    * one. */
+  private[sim] final class CellMatrix(indexed: DataFrame, payload: String,
+                                      seed: (Int, DataFrame)) {
+    private var forced = false
+    lazy val value: (Int, DataFrame) = {
+      forced = true
+      if (seed != null) seed else chunkedCellMatrix(indexed, payload)
     }
-    @transient private var matrixForced = false
-    /** The matrix iff it is already materialized (forced or seeded) —
-      * what [[ivfExtend]] consults so it never FORCES a matrix on
-      * models whose callers use the broadcast path and would
-      * otherwise never build one. */
-    private[sim] def builtMatrix: Option[(Int, DataFrame)] =
-      if (matrixForced || seedMatrix != null) Some(chunkedMatrix) else None
+    /** The seed for the model that admits `fresh` (null if this
+      * matrix was never materialized). */
+    def extended(fresh: DataFrame): (Int, DataFrame) =
+      if (forced || seed != null) mergeCellMatrix(value, fresh, payload)
+      else null
   }
 
   /** Skew-derived sub-group chunk modulus for a bucketed index:
@@ -465,24 +481,15 @@ object Similarity {
       .select(col("neighbor_id"), col("cv"),
         nearestCell(col("cv"), model.centroids).as("cell"))
       .localCheckpoint()
-    val indexed = model.indexed.unionByName(fresh).localCheckpoint()
-    // The count stays O(delta) per extend, like Dedup.minhashExtend,
-    // and is skipped (no job) for a loaded model without a build size.
-    val extended =
-      if (model.builtN < 0) model.extendedN
-      else model.extendedN + fresh.count()
-    if (model.builtN >= 0 && extended > model.builtN &&
-        model.extendedN <= model.builtN)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ivfExtend: index has grown past its build-time size " +
-          s"($extended extended vs ${model.builtN} built) — frozen " +
-          "cells/nprobe/centroids are now sized for a minority of the " +
-          "corpus; schedule a fresh ivfBuild (needsRebuild = true)")
+    val indexed = Checkpoints.union(model.indexed, fresh)
+    val extended = ExtendableIndex.extendedAfter("ivfExtend", model,
+      fresh.count(), "frozen cells/nprobe/centroids are now sized for a " +
+        "minority of the corpus; schedule a fresh ivfBuild")
     // Matrix merge — delta-bound shuffle, O(index) local read; see
     // [[IvfIndexModel.chunkedMatrix]] / [[mergeCellMatrix]] for its
     // contract.
-    val seed = model.builtMatrix.map(mergeCellMatrix(_, fresh, "cv")).orNull
-    model.copy(indexed = indexed, extendedN = extended, seedMatrix = seed)
+    model.copy(indexed = indexed, extendedN = extended,
+      seedMatrix = model.matrix.extended(fresh))
   }
 
   /** Persist a built IVF index to `path`: the cell-indexed corpus as
@@ -506,6 +513,7 @@ object Similarity {
     * searches on the original build exactly (spec-pinned). */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndexModel = {
     val meta = spark.read.parquet(s"$path/meta").head()
+    val (builtN, extendedN) = ExtendableIndex.sizesOf(meta)
     IvfIndexModel(
       cells = meta.getAs[Int]("cells"),
       nprobe = meta.getAs[Int]("nprobe"),
@@ -515,12 +523,7 @@ object Similarity {
       indexed = spark.read.parquet(s"$path/index"),
       idCol = meta.getAs[String]("id_col"),
       vecCol = meta.getAs[String]("vec_col"),
-      // Indexes saved before the rebuild trigger existed carry no
-      // baseline — needsRebuild stays permanently false for them.
-      builtN = if (meta.schema.fieldNames.contains("built_n"))
-        meta.getAs[Long]("built_n") else -1L,
-      extendedN = if (meta.schema.fieldNames.contains("extended_n"))
-        meta.getAs[Long]("extended_n") else 0L)
+      builtN = builtN, extendedN = extendedN)
   }
 
   /** LSH-bucketed cosine top-k: `tables` independent hyperplane sets
@@ -627,6 +630,14 @@ object Similarity {
       concat(vec, array(lit(1.0))), augmented)
   }
 
+  /** PQ code of a vector: per subspace, the index of the L2-nearest
+    * codebook entry (`books` is `[m][k][dim/m]`). */
+  private def pqCodes(vec: Column, books: Array[Array[Array[Double]]]): Column = {
+    val sub = books.head.head.length
+    array(books.indices.map(j =>
+      argminL2(slice(vec, j * sub + 1, sub), books(j))): _*)
+  }
+
   /** Per-subspace product-quantization codebooks: `[m][k][dim/m]`,
     * trained exactly like the coarse quantizer (hash-smallest seeds +
     * one Lloyd refinement) but per subspace, with the refinement's
@@ -637,15 +648,7 @@ object Similarity {
                           idCol: String, vecCol: String): Array[Array[Array[Double]]] = {
     val sub = dim / m
     require(m * sub == dim, s"dim $dim must be divisible by m $m")
-    val seedRows = corpus2
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(k)
-      .collect()
-      .map(_.getSeq[Any](1).iterator.map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case n: java.lang.Number => n.doubleValue()
-      }.toArray)
+    val seedRows = hashSmallest(corpus2, k, idCol)
     val seedBooks: Array[Array[Array[Double]]] =
       Array.tabulate(m)(j => seedRows.map(v => v.slice(j * sub, (j + 1) * sub)))
     def subvec(vec: Column, j: Int): Column =
@@ -714,21 +717,22 @@ object Similarity {
     * exact re-rank). Build ONCE, [[pqSearch]] many times — training
     * and encoding are the dominant cost of a single [[ivfPqTopK]]
     * call, and a real deployment amortizes them across every query
-    * batch the way Faiss persists an index. */
+    * batch the way Faiss persists an index.
+    *
+    * `needsRebuild` bites harder here than for IVF: the frozen
+    * shortlist stays ~1% of the BUILD corpus and the PQ codebooks
+    * never saw the delta, so ADC precision drifts with the data. A
+    * fresh [[pqBuild]] re-derives cells/nprobe/shortlist and retrains
+    * both quantizer levels. */
   final case class PqIndexModel(
       cells: Int, nprobe: Int, m: Int, k: Int, dim: Int, shortlist: Int,
       coarse: Array[Array[Double]], books: Array[Array[Array[Double]]],
       corpus2: DataFrame, indexed: DataFrame, idCol: String, vecCol: String,
       builtN: Long = -1L, extendedN: Long = 0L,
-      private val seedMatrix: (Int, DataFrame) = null) {
-    /** Rebuild recommendation — same contract as
-      * [[IvfIndexModel.needsRebuild]], with a sharper bite here: the
-      * frozen shortlist stays ~1% of the BUILD corpus (a halved
-      * effective re-rank fraction once extended > built) and the PQ
-      * codebooks never saw the delta, so ADC precision drifts with the
-      * data. Check each [[pqExtend]]; a fresh [[pqBuild]] re-derives
-      * cells/nprobe/shortlist and retrains both quantizer levels. */
-    def needsRebuild: Boolean = builtN >= 0 && extendedN > builtN
+      private val seedMatrix: (Int, DataFrame) = null)
+      extends ExtendableIndex {
+    @transient private[sim] lazy val matrix =
+      new CellMatrix(indexed, "codes", seedMatrix)
 
     /** Chunked per-cell matrix view of the compressed index — the
       * input to the bulk search's [[graft.functions.AdcTopSExpr]]
@@ -737,14 +741,7 @@ object Similarity {
       * frozen across extends, incrementally maintained when already
       * materialized); per-entry width is 8 + m bytes — the compressed
       * codes, NOT full vectors. */
-    @transient lazy val chunkedMatrix: (Int, DataFrame) = {
-      matrixForced = true
-      if (seedMatrix != null) seedMatrix
-      else chunkedCellMatrix(indexed, "codes")
-    }
-    @transient private var matrixForced = false
-    private[sim] def builtMatrix: Option[(Int, DataFrame)] =
-      if (matrixForced || seedMatrix != null) Some(chunkedMatrix) else None
+    def chunkedMatrix: (Int, DataFrame) = matrix.value
   }
 
   /** Train quantizers and encode the corpus (see [[ivfPqTopK]] for
@@ -797,15 +794,12 @@ object Similarity {
       else math.max(32L, n / 100L).toInt
     val coarse = coarseCentroids(corpus2, effCells, idCol, vecCol)
     val books = pqCodebooks(corpus2, m, k, dim, idCol, vecCol)
-    def subvec(vec: Column, j: Int): Column = slice(vec, j * sub + 1, sub)
-    def codesOf(vec: Column): Column =
-      array((0 until m).map(j => argminL2(subvec(vec, j), books(j))): _*)
     // The index: only (cell, id, codes) — m small ints per vector.
     // Checkpointed so the n × m × k encode runs once per BUILD, not
     // once per search.
     val indexed = corpus2.select(col(idCol).as("neighbor_id"),
       nearestCell(col(vecCol), coarse).as("cell"),
-      codesOf(col(vecCol)).as("codes"))
+      pqCodes(col(vecCol), books).as("codes"))
       .localCheckpoint()
     PqIndexModel(effCells, effNprobe, m, k, dim, effShortlist,
       coarse, books, corpus2, indexed, idCol, vecCol, builtN = n)
@@ -827,8 +821,6 @@ object Similarity {
     * [[pqBuild]], which restores derived geometry and retrains the
     * quantizers. */
   def pqExtend(model: PqIndexModel, delta: DataFrame): PqIndexModel = {
-    val sub = model.dim / model.m
-    def subvec(vec: Column, j: Int): Column = slice(vec, j * sub + 1, sub)
     val fresh = graft.sim.Embeddings
       .withL2Normalized(delta.select(col(model.idCol), col(model.vecCol)),
         model.vecCol)
@@ -838,29 +830,16 @@ object Similarity {
       .localCheckpoint()
     val freshIndexed = fresh.select(col(model.idCol).as("neighbor_id"),
       nearestCell(col(model.vecCol), model.coarse).as("cell"),
-      array((0 until model.m).map(j =>
-        argminL2(subvec(col(model.vecCol), j), model.books(j))): _*).as("codes"))
-    val indexed = model.indexed.unionByName(freshIndexed).localCheckpoint()
-    val corpus2 = model.corpus2.unionByName(fresh).localCheckpoint()
-    // O(delta) count, skipped for a loaded model (see [[ivfExtend]]).
-    val extended =
-      if (model.builtN < 0) model.extendedN
-      else model.extendedN + fresh.count()
-    if (model.builtN >= 0 && extended > model.builtN &&
-        model.extendedN <= model.builtN)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"pqExtend: index has grown past its build-time size " +
-          s"($extended extended vs ${model.builtN} built) — frozen " +
-          "cells/nprobe/shortlist/codebooks are now sized and trained " +
-          "for a minority of the corpus; schedule a fresh pqBuild " +
-          "(needsRebuild = true)")
-    // Matrix maintenance — see [[ivfExtend]] / the
-    // [[IvfIndexModel.chunkedMatrix]] contract.
-    val seed = model.builtMatrix
-      .map(mergeCellMatrix(_, freshIndexed, "codes")).orNull
-    model.copy(
-      corpus2 = corpus2,
-      indexed = indexed, extendedN = extended, seedMatrix = seed)
+      pqCodes(col(model.vecCol), model.books).as("codes"))
+    val indexed = Checkpoints.union(model.indexed, freshIndexed)
+    val corpus2 = Checkpoints.union(model.corpus2, fresh)
+    val extended = ExtendableIndex.extendedAfter("pqExtend", model,
+      fresh.count(), "frozen cells/nprobe/shortlist/codebooks are now " +
+        "sized and trained for a minority of the corpus; schedule a " +
+        "fresh pqBuild")
+    // Matrix maintenance — see [[ivfExtend]].
+    model.copy(corpus2 = corpus2, indexed = indexed, extendedN = extended,
+      seedMatrix = model.matrix.extended(freshIndexed))
   }
 
   /** Persist a built index to `path`: the compressed index and the
@@ -894,6 +873,7 @@ object Similarity {
     * on the original build exactly (spec-pinned). */
   def pqLoad(spark: org.apache.spark.sql.SparkSession, path: String): PqIndexModel = {
     val meta = spark.read.parquet(s"$path/meta").head()
+    val (builtN, extendedN) = ExtendableIndex.sizesOf(meta)
     def d2(v: Any): Array[Array[Double]] =
       v.asInstanceOf[scala.collection.Seq[scala.collection.Seq[Double]]]
         .map(_.toArray).toArray
@@ -910,11 +890,7 @@ object Similarity {
       indexed = spark.read.parquet(s"$path/index"),
       idCol = meta.getAs[String]("id_col"),
       vecCol = meta.getAs[String]("vec_col"),
-      // Pre-trigger saves carry no baseline (see ivfLoad).
-      builtN = if (meta.schema.fieldNames.contains("built_n"))
-        meta.getAs[Long]("built_n") else -1L,
-      extendedN = if (meta.schema.fieldNames.contains("extended_n"))
-        meta.getAs[Long]("extended_n") else 0L)
+      builtN = builtN, extendedN = extendedN)
   }
 
   /** Query a built IVF-PQ index (see [[ivfPqTopK]] for semantics).

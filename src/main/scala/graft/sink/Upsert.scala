@@ -1,10 +1,11 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Tables, TableSpec}
+import graft.run.Checkpoints
 
 /** Merge/upsert writer family (SURVEY.md §2.9 #74-77, #80).
   *
@@ -131,29 +132,12 @@ object Upsert {
     math.max(floor,
       math.min(cap, (expectedBytes / math.max(1L, perBucketBytes)).toInt))
 
-  /** Parquet-backed upsert, partition-scoped: the target lives
-    * partitioned by `__bucket = pmod(xxhash64(mergeKey), numBuckets)`, so
-    * an incremental batch touching 0.1% of entities rewrites only the
-    * bucket directories its keys hash into — not the full snapshot. At
-    * 100 TB this is the difference between an incremental sync moving
-    * ~gigabytes and moving the whole table; the pure-merge semantics are
-    * exactly `merge` either way (same key → same bucket → target row and
-    * staged row meet inside the pruned read).
-    *
-    * Full sync (or first write) still snapshots everything via tmp-write
-    * + atomic rename (read-your-own-input safety + the dual-write
-    * ordering the reference gets from transactions,
-    * arc_db_delete_flow.py:56-61). Incremental: read ONLY touched buckets
-    * (partition pruning), merge, localCheckpoint the result (cuts the
-    * lineage that would otherwise read the path being overwritten), and
-    * dynamic-partition-overwrite just those buckets. The touched-bucket
-    * collect is bounded by `numBuckets`, never by data size. */
   /** Marker file pinning the bucket count a target was laid out with.
     * The underscore prefix keeps parquet readers from treating it as
     * data (same convention as _SUCCESS). */
   private val BucketMarker = "_graft_buckets"
 
-  private def writeBucketMarker(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeBucketMarker(fs: FileSystem,
                                 dir: Path, n: Int): Unit = {
     val out = fs.create(new Path(dir, BucketMarker), true)
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
@@ -177,7 +161,7 @@ object Upsert {
     * mean a legacy (pre-marker) target; unparseable/out-of-range
     * content or a read error means the layout is UNKNOWN — callers
     * must refuse to merge incrementally rather than guess. */
-  private def readBucketMarker(fs: org.apache.hadoop.fs.FileSystem,
+  private def readBucketMarker(fs: FileSystem,
                                dir: Path): MarkerState = {
     val p = new Path(dir, BucketMarker)
     if (!fs.exists(p)) MarkerAbsent
@@ -197,6 +181,24 @@ object Upsert {
     }
   }
 
+  /** Parquet-backed upsert, partition-scoped: the target lives
+    * partitioned by `__bucket = pmod(xxhash64(mergeKey), numBuckets)`, so
+    * an incremental batch touching 0.1% of entities rewrites only the
+    * bucket directories its keys hash into — not the full snapshot. At
+    * 100 TB this is the difference between an incremental sync moving
+    * ~gigabytes and moving the whole table; the pure-merge semantics are
+    * exactly `merge` either way (same key → same bucket → target row and
+    * staged row meet inside the pruned read).
+    *
+    * Full sync (or first write) still snapshots everything via tmp-write
+    * + atomic rename (read-your-own-input safety + the dual-write
+    * ordering the reference gets from transactions,
+    * arc_db_delete_flow.py:56-61; see [[swapIn]] for the failure path).
+    * Incremental: read ONLY touched buckets (partition pruning), merge,
+    * localCheckpoint the result (cuts the lineage that would otherwise
+    * read the path being overwritten), dynamic-partition-overwrite just
+    * those buckets, and free the snapshot. The touched-bucket collect
+    * is bounded by `numBuckets`, never by data size. */
   def mergeAndWrite(spark: SparkSession, path: String, staged: DataFrame,
                     spec: TableSpec, fullSync: Boolean,
                     numBuckets: Int = 64): Unit = {
@@ -209,8 +211,7 @@ object Upsert {
       // Pin the layout's bucket count INSIDE the snapshot before the
       // atomic rename, so target + marker can never be seen apart.
       writeBucketMarker(fs, tmp, numBuckets)
-      if (exists) fs.delete(new Path(path), true)
-      fs.rename(tmp, new Path(path))
+      swapIn(fs, tmp, new Path(path))
     } else {
       // The bucket function MUST be the one the target was laid out
       // with — an incremental caller passing a different numBuckets
@@ -247,11 +248,43 @@ object Upsert {
         .drop(BucketCol)
       val merged = merge(targetTouched, staged, spec, fullSync = false)
         .withColumn(BucketCol, bucket)
-      stage(merged) // lineage cut: the write below overwrites what it read
-        .write.mode("overwrite")
+      val snapshot = stage(merged) // lineage cut: the write below overwrites what it read
+      try snapshot.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BucketCol)
         .parquet(path)
+      finally Checkpoints.free(snapshot)
     }
+  }
+
+  /** Replace `target` by the fully written snapshot `fresh`. The old
+    * target moves aside first, the snapshot renames in, and only then
+    * is the old target deleted. A rename that fails or returns false
+    * puts the old target back and throws, so a failed swap leaves the
+    * target as it was. A leftover from a swap that crashed is cleared
+    * first: deleted if the target survived, else moved back as the
+    * target. */
+  private def swapIn(fs: FileSystem, fresh: Path, target: Path): Unit = {
+    val aside = new Path(target.toString + "__old")
+    if (fs.exists(aside)) {
+      if (fs.exists(target)) fs.delete(aside, true)
+      else if (!fs.rename(aside, target))
+        throw new java.io.IOException(s"could not restore $aside to $target")
+    }
+    val hadTarget = fs.exists(target)
+    if (hadTarget && !fs.rename(target, aside))
+      throw new java.io.IOException(s"could not move $target aside to $aside")
+    try {
+      if (!fs.rename(fresh, target))
+        throw new java.io.IOException(s"rename $fresh to $target returned false")
+    } catch {
+      case e: Throwable =>
+        if (hadTarget) {
+          if (fs.exists(target)) fs.delete(target, true)
+          fs.rename(aside, target)
+        }
+        throw e
+    }
+    if (hadTarget) fs.delete(aside, true)
   }
 }
