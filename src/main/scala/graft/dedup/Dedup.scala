@@ -79,33 +79,77 @@ object Dedup {
       array_min(transform(baseHashCol, h => xxhash64(lit(seed), h)))
     }: _*)
 
-  /** Banded-LSH candidate pairs with exact Jaccard verification.
-    *
-    * signature(H) split into `bands` rows of r = H/bands values; docs
-    * sharing any (band index, band hash) bucket become candidates;
-    * candidates are verified with exact Jaccard over distinct shingle
-    * sets and filtered at `minJaccard`. Returns (id_a, id_b, jaccard)
-    * with id_a < id_b.
-    *
-    * SCALE CAVEAT — duplicate groups: the every-pair contract is
-    * quadratic in a duplicate group's size (d byte-identical docs ⇒
-    * d²/2 output pairs — measured in BENCH_NOTES r17), and no
-    * partitioning fix shrinks a join's product. Clustering consumers
-    * should use [[minhashNearDupSpanning]], whose output is
-    * transitive-closure-equal and linear in group size.
-    */
-  /** (id, hs, sig) projection — the shared scan-side kernel chain of
-    * [[minhashNearDup]] and [[minhashBuild]]: normalize (codegen'd
-    * regex) → one-pass native distinct-shingle hashes → one-pass
-    * native signature. Bit-identical to the staged HOF chain
-    * (NativeShingleSpec / NativeMinHashSpec) without the per-element
-    * interpreted lambda dispatch. */
-  private def sigProjection(df: DataFrame, idCol: String, textCol: String,
-                            numHashes: Int, shingleK: Int): DataFrame =
+  /** (id, hs) projection — the scan side of every shingle-set operator
+    * here: normalize (codegen'd regex) → one-pass native
+    * distinct-shingle hashes, bit-identical to the staged HOF chain
+    * (NativeShingleSpec) without the per-element interpreted lambda
+    * dispatch. */
+  private def shingleProjection(df: DataFrame, idCol: String,
+                                textCol: String, shingleK: Int): DataFrame =
     df.select(col(idCol).as("id"),
       graft.functions.ShingleHashesExpr(
         TextFunctions.normalize(col(textCol)), shingleK).as("hs"))
+
+  /** [[shingleProjection]] materialized once: the SSJoin reads each
+    * side from its dfreq pass, its prefix rebuild and the verify. */
+  private def persistedShingles(df: DataFrame, idCol: String,
+                                textCol: String, shingleK: Int): DataFrame =
+    graft.view.Patterns.ensurePersisted(
+      shingleProjection(df, idCol, textCol, shingleK),
+      graft.view.Patterns.TextInflation)
+
+  /** (id, hs, sig) projection — the shared scan-side kernel chain of
+    * [[minhashNearDup]] and [[minhashBuild]]: [[shingleProjection]] →
+    * one-pass native signature (NativeMinHashSpec). */
+  private def sigProjection(df: DataFrame, idCol: String, textCol: String,
+                            numHashes: Int, shingleK: Int): DataFrame =
+    shingleProjection(df, idCol, textCol, shingleK)
       .withColumn("sig", minhashSignature(col("hs"), numHashes))
+
+  /** Exact-Jaccard verify of candidate `pairs` (id columns `a`, `b`)
+    * against each side's (id, hs) sets — the one verify of every
+    * shingle-set operator here. The sets join in by id (never shuffled
+    * through the candidate stage) and move 8-byte longs, not strings;
+    * Jaccard over the 64-bit hash sets equals Jaccard over the shingle
+    * sets up to hash collisions. The sets are distinct
+    * ([[shingleProjection]]), so the union size is na + nb − o and one
+    * array op per pair suffices. A NULL set (NULL text) gives a NULL
+    * jaccard, which the threshold drops. Returns (a, b, jaccard). */
+  private def verifyJaccard(pairs: DataFrame, a: String, b: String,
+                            setsA: DataFrame, setsB: DataFrame,
+                            minJaccard: Double): DataFrame =
+    pairs
+      .join(setsA.select(col("id").as(a), col("hs").as("sh_a")), Seq(a))
+      .join(setsB.select(col("id").as(b), col("hs").as("sh_b")), Seq(b))
+      .withColumn("o", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard", col("o").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("o")))
+      .filter(col("jaccard") >= minJaccard)
+      .select(col(a), col(b), col("jaccard"))
+
+  /** Exact-group ("spanning") collapse shared by the four
+    * `*NearDupSpanning` variants. `rows` is (id, payload…) with the
+    * caller's degenerate rows already filtered out; rows with equal
+    * `fingerprint` form one group whose min id is its representative.
+    * One shuffle keys the rows by fingerprint, materialized once by
+    * `materialize` — the consumers are the star emission and the
+    * representative side. Returns `engine` over the representatives
+    * (the `rows` columns) ∪ one (rep, member) star pair per
+    * non-representative member, carrying the caller's constant `star`
+    * column (the engine's value for an identical pair). */
+  private def collapse(rows: DataFrame, fingerprint: Column, star: Column,
+                       materialize: DataFrame => DataFrame =
+                         graft.view.Patterns.ensurePersisted(
+                           _, graft.view.Patterns.TextInflation))(
+      engine: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val keyed = materialize(rows.withColumn("rep",
+      min(col("id")).over(Window.partitionBy(fingerprint))))
+    val stars = keyed.filter(col("id") =!= col("rep"))
+      .select(col("rep").as("id_a"), col("id").as("id_b"), star)
+    engine(keyed.filter(col("id") === col("rep")).drop("rep"))
+      .unionByName(stars)
+  }
 
   /** (id, band, band_hash) LSH bucket rows from a [[sigProjection]]
     * frame. Bucket rows carry ONLY the id: a pair colliding in all
@@ -123,6 +167,21 @@ object Dedup {
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
   }
 
+  /** Banded-LSH candidate pairs with exact Jaccard verification.
+    *
+    * signature(H) split into `bands` rows of r = H/bands values; docs
+    * sharing any (band index, band hash) bucket become candidates;
+    * candidates are verified with exact Jaccard over distinct shingle
+    * sets and filtered at `minJaccard`. Returns (id_a, id_b, jaccard)
+    * with id_a < id_b.
+    *
+    * SCALE CAVEAT — duplicate groups: the every-pair contract is
+    * quadratic in a duplicate group's size (d byte-identical docs ⇒
+    * d²/2 output pairs — measured in BENCH_NOTES r17), and no
+    * partitioning fix shrinks a join's product. Clustering consumers
+    * should use [[minhashNearDupSpanning]], whose output is
+    * transitive-closure-equal and linear in group size.
+    */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
                      minJaccard: Double = 0.8): DataFrame = {
@@ -149,20 +208,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
-
-    // Attach shingle-hash sets once per unique pair, verify exactly —
-    // Jaccard over the 64-bit hash sets equals Jaccard over the shingle
-    // sets up to hash collisions, and moves 8-byte longs (not strings)
-    // through the pair-verify shuffle.
-    val shOf = withSig.select(col("id"), col("hs").as("sh"))
-    candidates
-      .join(shOf.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(shOf.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    verifyJaccard(candidates, "id_a", "id_b", withSig, withSig, minJaccard)
   }
 
   /** Duplicate-group-collapsed ("spanning") variant of
@@ -201,11 +247,7 @@ object Dedup {
                              shingleK: Int = 3,
                              minJaccard: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    import org.apache.spark.sql.expressions.Window
-    // One shuffle keys the corpus by its exact content fingerprint
-    // (the sorted shingle-hash set); the window's min-id is the
-    // group's representative. Materialized once — consumers are the
-    // star emission, the rep band side, and both rep verify sides.
+    // The exact content fingerprint is the sorted shingle-hash set.
     //
     // NULL-text docs have a NULL shingle set (ShingleHashesExpr
     // null-propagates). The full variant emits NO pairs for them —
@@ -220,19 +262,11 @@ object Dedup {
     // and empty-normalized docs share {hash("")} — a group the full
     // variant also pairs at exactly 1/1 = 1.0. Verified empirically;
     // see the short-doc/null fixture in DedupSpec.)
-    val keyed = graft.view.Patterns.ensurePersisted(
+    collapse(
       sigProjection(df, idCol, textCol, numHashes, shingleK)
-        .filter(size(col("hs")) > 0)
-        .withColumn("rep",
-          min(col("id")).over(Window.partitionBy(array_sort(col("hs"))))),
-      graft.view.Patterns.TextInflation)
-    val stars = keyed.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    val reps = keyed.filter(col("id") === col("rep"))
-      .select(col("id"), col("hs"), col("sig"))
-    nearDupFromSig(reps, numHashes, bands, minJaccard)
-      .unionByName(stars)
+        .filter(size(col("hs")) > 0),
+      array_sort(col("hs")), lit(1.0).as("jaccard"))(
+      nearDupFromSig(_, numHashes, bands, minJaccard))
   }
 
   /** A built MinHash-LSH dedup index: the banded bucket table (one row
@@ -312,16 +346,8 @@ object Dedup {
       .filter(col("delta_id") =!= col("corpus_id"))
       .select(col("delta_id"), col("corpus_id"))
       .distinct()
-    candidates
-      .join(dSig.select(col("id").as("delta_id"), col("hs").as("sh_d")),
-        Seq("delta_id"))
-      .join(model.sets.select(col("id").as("corpus_id"), col("hs").as("sh_c")),
-        Seq("corpus_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_d"), col("sh_c"))).cast("double") /
-          size(array_union(col("sh_d"), col("sh_c"))))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("delta_id"), col("corpus_id"), col("jaccard"))
+    verifyJaccard(candidates, "delta_id", "corpus_id", dSig, model.sets,
+      minJaccard)
   }
 
   /** Fold a batch into the index: the delta is signed with the model's
@@ -396,16 +422,6 @@ object Dedup {
     * prefix rebuild, and the candidate join all shuffle longs; shingle
     * arrays join in only for the exact verify of surviving pairs.
     *
-    * `rareFirst = false` orders tokens by hash value instead: the
-    * recall guarantee is unchanged (any consistent total order works)
-    * and the df pass + per-doc struct sort disappear (prefix = a
-    * sorted-array slice; measured ~3 s cheaper at sf0.1) — the right
-    * choice when the shingle distribution is known flat (no hot
-    * boilerplate), e.g. pre-deduplicated or synthetic corpora. Zipfian
-    * corpora should keep the rare-first default: one hot token landing
-    * in many prefixes turns the candidate join quadratic in its
-    * posting length.
-    *
     * == Exact-vs-LSH operator choice (measured, BENCH_NOTES.md r8) ==
     * On the ScaleUp corpus family (vocabulary growing with corpus),
     * exact SSJoin costs 2.6× banded-LSH [[minhashNearDup]] at 5k docs
@@ -423,8 +439,8 @@ object Dedup {
     * tokens whose posting exceeds the cap are dropped via a broadcast
     * anti-join BEFORE the candidate self-join, so the worst bucket
     * contributes at most cap² candidate rows. The drop is logged
-    * (token count + posting mass) and costs recall explicitly: a pair
-    * whose prefixes share ONLY capped tokens is missed — so the
+    * (token count + candidate volume) and costs recall explicitly: a
+    * pair whose prefixes share ONLY capped tokens is missed — so the
     * default is uncapped (exact), and the cap is the operator-choice
     * rule's pressure valve for skewed corpora where LSH is rejected.
     *
@@ -440,122 +456,61 @@ object Dedup {
     * ≈ executor-memory / 500: a 24 g node holds ~4·10⁷. */
   def ngramJaccardNearDup(df: DataFrame, idCol: String, textCol: String,
                           shingleK: Int = 3, minJaccard: Double = 0.8,
-                          rareFirst: Boolean = true,
                           maxPosting: Int = Int.MaxValue,
-                          maxCandidates: Long = 0L): DataFrame = {
-    // The shingle frame feeds four consumers (dfreq, the prefix
-    // rebuild, and both verify sides) — materialize it once instead of
-    // re-running the normalize→shingle scan per consumer.
-    val docs = graft.view.Patterns.ensurePersisted(
-      df.select(col(idCol).as("id"),
-        graft.functions.ShingleHashesExpr(
-          TextFunctions.normalize(col(textCol)), shingleK).as("hs")),
-      graft.view.Patterns.TextInflation)
-    ngramNearDupFromShingles(docs, minJaccard, rareFirst,
-      maxPosting, maxCandidates)
-  }
+                          maxCandidates: Long = 0L): DataFrame =
+    ngramSelfJoin(persistedShingles(df, idCol, textCol, shingleK),
+      minJaccard, maxPosting, maxCandidates)
 
-  /** SSJoin core over an already-materialized (id, hs) shingle frame —
-    * the prefix-filter/positional-filter/exact-verify machinery of
-    * [[ngramJaccardNearDup]], factored so the spanning variant can run
-    * it over group representatives without re-shingling (the
-    * [[nearDupFromSig]] pattern). `docs` must be persisted by the
-    * caller: it feeds the dfreq pass, the prefix rebuild, and both
-    * verify sides. */
-  private def ngramNearDupFromShingles(docs: DataFrame, minJaccard: Double,
-                                       rareFirst: Boolean, maxPosting: Int,
-                                       maxCandidates: Long): DataFrame = {
+  /** The SSJoin as a self-join over a materialized (id, hs) frame:
+    * pairs id_a < id_b, and a token of posting length plen puts
+    * C(plen, 2) pairs into the candidate join. */
+  private def ngramSelfJoin(docs: DataFrame, minJaccard: Double,
+                            maxPosting: Int, maxCandidates: Long): DataFrame =
+    ssJoin(docs, None, minJaccard, maxPosting, maxCandidates,
+      volume = col("plen") * (col("plen") - 1) / 2)
+
+  /** SSJoin core shared by [[ngramJaccardNearDup]], its spanning
+    * variant and [[crossJaccardJoin]]: the prefix-filter /
+    * positional-filter / exact-verify machinery over materialized
+    * (id, hs) frames. `r = None` is the self-join of `l` (pairs
+    * id_a < id_b); `Some(r)` joins every `l` doc against every `r` doc.
+    * Returns (id_a, id_b, jaccard), id_a from `l`.
+    *
+    * `volume` is the caller's candidate rows per token over the
+    * posting table — (tok, plen) for the self-join, (tok, plen_l,
+    * plen_r, plen = the larger side) for the cross join — and drives
+    * the `maxCandidates` cap derivation and the drop log. */
+  private def ssJoin(l: DataFrame, r: Option[DataFrame], minJaccard: Double,
+                     maxPosting: Int, maxCandidates: Long,
+                     volume: Column): DataFrame = {
+    val t = minJaccard
+    val sides = l +: r.toSeq
+    // Global rare-first order: (document frequency asc, token asc) over
+    // every side — any consistent total order preserves the
+    // prefix-filter guarantee; rare-first keeps the postings short.
+    def toks(s: DataFrame) = s.select(col("id"), explode(col("hs")).as("tok"))
+    val dfreq = sides.map(toks(_).select(col("tok"))).reduce(_ unionByName _)
+      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // ceil(t·n) in doubles can overshoot the exact integer grid
     // (t=0.84, n=50: 42.000000000000004 → ceil 43), shortening the
     // prefix by one token and silently losing an at-threshold pair —
     // the same double-rounding hazard as the α filter below, so the
-    // same epsilon-below-the-grid discipline applies.
-    def prefixSlice(ord: Column): Column =
-      slice(ord, lit(1),
-        greatest(lit(1),
-          (size(ord) -
-            ceil(lit(minJaccard) * size(ord) - lit(1e-9)).cast("int") + 1)))
-    // Global rare-first order: (document frequency asc, token asc) —
-    // any consistent total order preserves the prefix-filter guarantee;
-    // rare-first keeps the inverted-index postings short.
-    val prefixes =
-      if (!rareFirst)
-        docs.select(col("id"), array_sort(col("hs")).as("ord"))
-          .select(col("id"), size(col("ord")).as("n"),
-            prefixSlice(col("ord")).as("pref"))
-      else {
-        val toks = docs.select(col("id"), explode(col("hs")).as("tok"))
-        val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        toks.join(dfreq, Seq("tok"))
-          .groupBy(col("id"))
-          .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ord"))
-          .select(col("id"), size(col("ord")).as("n"),
-            transform(prefixSlice(col("ord")),
-              s => s.getField("tok")).as("pref"))
-      }
-    // Positions ride along for the positional filter below.
-    val pt0 = prefixes.select(col("id"), col("n"),
-      posexplode(col("pref")))
-      .withColumnsRenamed(Map("pos" -> "p", "col" -> "tok"))
-    // Posting cap (engaged only when maxPosting is set): measure the
-    // ACTUAL index posting length per token — valid under either token
-    // order, and it measures exactly the quantity that blows up the
-    // candidate join — and anti-join the hot tokens out of the index.
-    // The hot set is by construction tiny (≤ |index| / cap tokens), so
-    // the anti-join broadcasts; the one extra count() action runs only
-    // in capped mode and is the price of an attributable, logged
-    // degradation instead of a silent executor kill.
+    // same epsilon-below-the-grid discipline applies. Positions ride
+    // along for the positional filter.
+    def prefix(s: DataFrame) = toks(s).join(dfreq, Seq("tok"))
+      .groupBy(col("id"))
+      .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ord"))
+      .select(col("id"), size(col("ord")).as("n"),
+        posexplode(slice(col("ord"), lit(1),
+          greatest(lit(1),
+            size(col("ord")) -
+              ceil(lit(t) * size(col("ord")) - lit(1e-9)).cast("int") + 1))))
+      .select(col("id"), col("n"), col("pos").as("p"),
+        col("col").getField("tok").as("tok"))
+    val prefixes = sides.map(prefix)
     val pt =
-      if (maxPosting == Int.MaxValue && maxCandidates <= 0L) pt0
-      else {
-        val cached = graft.view.Patterns.ensurePersisted(pt0, graft.view.Patterns.TextInflation)
-        val postings = cached.groupBy(col("tok"))
-          .agg(count(lit(1)).as("plen"))
-        // `maxCandidates` derives the cap from a TOTAL candidate-volume
-        // budget instead of a hand-guessed posting length (measured at
-        // 90×: cap 200 still admitted a host-OOM-scale Σ C(plen,2) —
-        // the right knob is the volume itself). The posting-length
-        // histogram is tiny (one row per distinct length), so it
-        // collects to the driver and a binary search finds the largest
-        // cap whose SURVIVING volume Σ_{plen≤cap} n·C(plen,2) fits the
-        // budget — exact for this drop-whole-token implementation.
-        val effectiveCap: Int =
-          if (maxCandidates <= 0L) maxPosting
-          else {
-            val hist = postings.groupBy(col("plen"))
-              .agg(count(lit(1)).as("n_tok"))
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-            def volume(c: Long): Double = hist.iterator
-              .filter(_._1 <= c)
-              .map { case (p, n) => n.toDouble * p * (p - 1) / 2 }.sum
-            var lo = 1L
-            var hi = if (hist.isEmpty) 1L else hist.map(_._1).max
-            if (volume(hi) <= maxCandidates) lo = hi
-            else while (lo < hi) {
-              val mid = lo + (hi - lo + 1) / 2
-              if (volume(mid) <= maxCandidates) lo = mid else hi = mid - 1
-            }
-            math.min(lo, maxPosting.toLong).toInt
-          }
-        val hot = postings.filter(col("plen") > effectiveCap)
-        val stats = hot.agg(
-          coalesce(count(lit(1)), lit(0L)).as("n_tok"),
-          coalesce(sum(col("plen")), lit(0L)).as("mass")).head()
-        val capTag = s"[graft.dedup] ngram SSJoin posting cap $effectiveCap engaged" +
-          (if (maxCandidates > 0L) s" (derived from candidate budget $maxCandidates)"
-           else "")
-        // The degradation warning only when tokens were actually
-        // dropped — a generous budget can derive a cap above every
-        // posting length, and telling operators "recall < 100%" about
-        // an output identical to the uncapped one is a false alarm.
-        System.err.println(
-          if (stats.getLong(0) > 0L)
-            capTag + s": dropping ${stats.getLong(0)} hot tokens " +
-              s"(${stats.getLong(1)} index entries) — pairs sharing ONLY " +
-              "capped prefix tokens are missed (recall < 100%)"
-          else capTag + ": no posting exceeds the cap — nothing dropped, recall 100%")
-        cached.join(broadcast(hot.select(col("tok"))), Seq("tok"), "left_anti")
-      }
+      if (maxPosting == Int.MaxValue && maxCandidates <= 0L) prefixes
+      else capPostings(prefixes, maxPosting, maxCandidates, volume)
     // Candidate pruning, in increasing strength (all standard prunes of
     // the set-similarity-join literature):
     //  - length filter: J ≥ t forces t·max(na,nb) ≤ min(na,nb);
@@ -567,14 +522,13 @@ object Dedup {
     //    overlap α = ceil(t/(1+t)·(na+nb)). This kills the long tail
     //    of pairs sharing only a few late (common) prefix tokens
     //    without touching recall.
-    val t = minJaccard
-    val a = pt.select(col("tok"), col("id").as("id_a"), col("n").as("na"),
-      col("p").as("pa"))
-    val b = pt.select(col("tok"), col("id").as("id_b"), col("n").as("nb"),
-      col("p").as("pb"))
+    val a = pt.head.select(col("tok"), col("id").as("id_a"),
+      col("n").as("na"), col("p").as("pa"))
+    val b = pt.last.select(col("tok"), col("id").as("id_b"),
+      col("n").as("nb"), col("p").as("pb"))
+    val lengthOk = greatest(col("na"), col("nb")) * t <= least(col("na"), col("nb"))
     val candidates = a.join(b, Seq("tok"))
-      .filter(col("id_a") < col("id_b") &&
-        greatest(col("na"), col("nb")) * t <= least(col("na"), col("nb")))
+      .filter(if (r.isEmpty) col("id_a") < col("id_b") && lengthOk else lengthOk)
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(max(least(col("na") - col("pa"), col("nb") - col("pb"))).as("ub"))
       // α = ceil(t/(1+t)·(na+nb)) — but computing that ceil in doubles
@@ -586,19 +540,81 @@ object Dedup {
       // slightly-under pair admitted is rejected by the exact verify.
       .filter(col("ub") >=
         lit(t) * (col("na") + col("nb")) / lit(1 + t) - lit(1e-9))
-      .select(col("id_a"), col("id_b"), col("na"), col("nb"))
-    // Exact verify on survivors only; union size is na + nb − o, so one
-    // array op per pair, and the arrays join in by id (never shuffled
-    // through the candidate stage).
-    val shOf = docs.select(col("id"), col("hs"))
-    candidates
-      .join(shOf.select(col("id").as("id_a"), col("hs").as("sh_a")), Seq("id_a"))
-      .join(shOf.select(col("id").as("id_b"), col("hs").as("sh_b")), Seq("id_b"))
-      .withColumn("o", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("o").cast("double") / (col("na") + col("nb") - col("o")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id_a"), col("id_b"))
+    verifyJaccard(candidates, "id_a", "id_b", l, r.getOrElse(l), minJaccard)
+  }
+
+  /** The SSJoin posting cap over the per-side (id, n, p, tok) prefix
+    * frames: measure the ACTUAL index posting length per token — the
+    * quantity that blows up the candidate join — and anti-join the
+    * tokens over the cap out of every side. The capped length is the
+    * per-side posting length (the larger side's in the cross join), so
+    * `maxPosting` means "no single posting list longer than this feeds
+    * the candidate join" in both joins; tokens present on only one side
+    * produce no candidates, so the cross join's posting table
+    * inner-joins the two sides. The hot set is by construction tiny
+    * (≤ |index| / cap tokens), so the anti-join broadcasts; the extra
+    * actions run only in capped mode and are the price of an
+    * attributable, logged degradation instead of a silent executor
+    * kill.
+    *
+    * `maxCandidates` derives the cap from a TOTAL candidate-volume
+    * budget instead of a hand-guessed posting length (measured at 90×:
+    * cap 200 still admitted a host-OOM-scale Σ C(plen,2) — the right
+    * knob is the volume itself). The histogram of `volume` by posting
+    * length is tiny (one row per distinct length), so it collects to
+    * the driver and a binary search finds the largest cap whose
+    * SURVIVING volume fits the budget — exact for this drop-whole-token
+    * implementation. */
+  private def capPostings(prefixes: Seq[DataFrame], maxPosting: Int,
+                          maxCandidates: Long,
+                          volume: Column): Seq[DataFrame] = {
+    val cached = prefixes.map(
+      graft.view.Patterns.ensurePersisted(_, graft.view.Patterns.TextInflation))
+    def plen(s: DataFrame, as: String) =
+      s.groupBy(col("tok")).agg(count(lit(1)).as(as))
+    val post = (
+      if (cached.size == 1) plen(cached.head, "plen")
+      else plen(cached.head, "plen_l")
+        .join(plen(cached.last, "plen_r"), Seq("tok"))
+        .withColumn("plen", greatest(col("plen_l"), col("plen_r"))))
+      .withColumn("vol", volume)
+    val cap: Int =
+      if (maxCandidates <= 0L) maxPosting
+      else {
+        val hist = post.groupBy(col("plen"))
+          .agg(sum(col("vol")).cast("double"))
+          .collect().map(r => (r.getLong(0), r.getDouble(1)))
+        def volumeAt(c: Long): Double =
+          hist.iterator.filter(_._1 <= c).map(_._2).sum
+        var lo = 1L
+        var hi = if (hist.isEmpty) 1L else hist.map(_._1).max
+        if (volumeAt(hi) <= maxCandidates) lo = hi
+        else while (lo < hi) {
+          val mid = lo + (hi - lo + 1) / 2
+          if (volumeAt(mid) <= maxCandidates) lo = mid else hi = mid - 1
+        }
+        math.min(lo, maxPosting.toLong).toInt
+      }
+    val hot = post.filter(col("plen") > cap)
+    val stats = hot.agg(count(lit(1)),
+      coalesce(sum(col("vol")), lit(0)).cast("long")).head()
+    val capTag = s"[graft.dedup] ${if (cached.size == 1) "ngram" else "cross"} " +
+      s"SSJoin posting cap $cap engaged" +
+      (if (maxCandidates > 0L) s" (derived from candidate budget $maxCandidates)"
+       else "")
+    // The degradation warning only when tokens were actually dropped —
+    // a generous budget can derive a cap above every posting length,
+    // and telling operators "recall < 100%" about an output identical
+    // to the uncapped one is a false alarm.
+    System.err.println(
+      if (stats.getLong(0) > 0L)
+        capTag + s": dropping ${stats.getLong(0)} hot tokens " +
+          s"(${stats.getLong(1)} candidate rows) — pairs sharing ONLY " +
+          "capped prefix tokens are missed (recall < 100%)"
+      else capTag + ": no posting exceeds the cap — nothing dropped, recall 100%")
+    val hotToks = broadcast(hot.select(col("tok")))
+    cached.map(_.join(hotToks, Seq("tok"), "left_anti"))
   }
 
   /** Duplicate-group-collapsed variant of [[ngramJaccardNearDup]] —
@@ -624,30 +640,18 @@ object Dedup {
     * the pairs whose prefixes share only capped tokens. NULL-text docs
     * (NULL shingle set) pass through as pairless singletons, matching
     * the full variant's no-pair behavior (same guard as the MinHash
-    * sibling). */
+    * sibling). The representatives derive from the materialized
+    * collapse, so the engine reads them without a second persist. */
   def ngramJaccardNearDupSpanning(df: DataFrame, idCol: String,
                                   textCol: String, shingleK: Int = 3,
                                   minJaccard: Double = 0.8,
-                                  rareFirst: Boolean = true,
                                   maxPosting: Int = Int.MaxValue,
-                                  maxCandidates: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = graft.view.Patterns.ensurePersisted(
-      df.select(col(idCol).as("id"),
-        graft.functions.ShingleHashesExpr(
-          TextFunctions.normalize(col(textCol)), shingleK).as("hs"))
-        .filter(size(col("hs")) > 0)
-        .withColumn("rep",
-          min(col("id")).over(Window.partitionBy(array_sort(col("hs"))))),
-      graft.view.Patterns.TextInflation)
-    val stars = keyed.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    ngramNearDupFromShingles(
-      keyed.filter(col("id") === col("rep")).select(col("id"), col("hs")),
-      minJaccard, rareFirst, maxPosting, maxCandidates)
-      .unionByName(stars)
-  }
+                                  maxCandidates: Long = 0L): DataFrame =
+    collapse(
+      shingleProjection(df, idCol, textCol, shingleK)
+        .filter(size(col("hs")) > 0),
+      array_sort(col("hs")), lit(1.0).as("jaccard"))(
+      ngramSelfJoin(_, minJaccard, maxPosting, maxCandidates))
 
   /** Cross-table fuzzy join (record linkage): every (left, right) pair
     * whose shingle Jaccard clears `minJaccard` — the two-table sibling
@@ -667,120 +671,23 @@ object Dedup {
     * min(na−i, nb−j), as in the self-join version), then verified
     * exactly. If J(a,b) ≥ t the prefixes must share a token under any
     * shared total order, so recall is 100% — never all-pairs, shuffle
-    * ∝ sum of prefix lengths. */
+    * ∝ sum of prefix lengths.
+    *
+    * The posting valves mean the same as in the self-join: a token
+    * feeds plen_l · plen_r candidate rows, `maxPosting` caps the larger
+    * side's posting length, and `maxCandidates` budgets the surviving
+    * Σ plen_l · plen_r. */
   def crossJaccardJoin(left: DataFrame, right: DataFrame,
                        leftId: String, leftText: String,
                        rightId: String, rightText: String,
                        shingleK: Int = 3, minJaccard: Double = 0.8,
                        maxPosting: Int = Int.MaxValue,
-                       maxCandidates: Long = 0L): DataFrame = {
-    val t = minJaccard
-    def side(df: DataFrame, id: String, text: String, as: String) =
-      graft.view.Patterns.ensurePersisted(
-        df.select(col(id).as(as),
-          graft.functions.ShingleHashesExpr(
-            TextFunctions.normalize(col(text)), shingleK).as(s"hs_$as")),
-        graft.view.Patterns.TextInflation)
-    val l = side(left, leftId, leftText, "id_l")
-    val r = side(right, rightId, rightText, "id_r")
-    // Document frequency over BOTH corpora — one shared total order.
-    val dfreq = l.select(explode(col("hs_id_l")).as("tok"))
-      .unionByName(r.select(explode(col("hs_id_r")).as("tok")))
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    def prefixed(df: DataFrame, as: String) = {
-      val toks = df.select(col(as), explode(col(s"hs_$as")).as("tok"))
-      val ord = toks.join(dfreq, Seq("tok"))
-        .groupBy(col(as))
-        .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ord"))
-      // Same epsilon guard on ceil(t·n) as ngramJaccardNearDup's
-      // prefixSlice — double rounding must not shorten the prefix.
-      ord.select(col(as), size(col("ord")).as(s"n_$as"),
-        posexplode(slice(col("ord"), lit(1),
-          greatest(lit(1),
-            (size(col("ord")) -
-              ceil(lit(t) * size(col("ord")) - lit(1e-9)).cast("int") + 1)))))
-        .select(col(as), col(s"n_$as"), col("pos").as(s"p_$as"),
-          col("col").getField("tok").as("tok"))
-    }
-    val pl0 = prefixed(l, "id_l")
-    val pr0 = prefixed(r, "id_r")
-    // Same Σ posting-product pressure valve as the self-join (a skewed
-    // corpus hits the identical blow-up: candidate rows per token =
-    // plen_l · plen_r). The capped quantity is the PER-SIDE posting
-    // length, max(plen_l, plen_r), so `maxPosting` means the same thing
-    // here as in the self-join — "no single posting list longer than
-    // this feeds the candidate join" — instead of the earlier combined
-    // plen_l+plen_r reading, which made one operator-chosen value prune
-    // roughly twice as aggressively in the cross gate (r12 advice).
-    // Tokens present on only one side produce zero candidates, so the
-    // volume accounting inner-joins the two posting tables;
-    // `maxCandidates` binary-searches the largest cap whose surviving
-    // Σ plen_l·plen_r fits the budget, exactly as the self-join derives
-    // its cap from Σ n·C(plen,2).
-    val (pl, pr) =
-      if (maxPosting == Int.MaxValue && maxCandidates <= 0L) (pl0, pr0)
-      else {
-        val cl = graft.view.Patterns.ensurePersisted(pl0, graft.view.Patterns.TextInflation)
-        val cr = graft.view.Patterns.ensurePersisted(pr0, graft.view.Patterns.TextInflation)
-        val post = cl.groupBy(col("tok")).agg(count(lit(1)).as("plen_l"))
-          .join(cr.groupBy(col("tok")).agg(count(lit(1)).as("plen_r")), Seq("tok"))
-          .withColumn("mlen", greatest(col("plen_l"), col("plen_r")))
-          .withColumn("vol", col("plen_l") * col("plen_r"))
-        val effectiveCap: Int =
-          if (maxCandidates <= 0L) maxPosting
-          else {
-            val hist = post.groupBy(col("mlen"))
-              .agg(sum(col("vol")).as("v"))
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-            def volume(c: Long): Double =
-              hist.iterator.filter(_._1 <= c).map(_._2.toDouble).sum
-            var lo = 1L
-            var hi = if (hist.isEmpty) 1L else hist.map(_._1).max
-            if (volume(hi) <= maxCandidates) lo = hi
-            else while (lo < hi) {
-              val mid = lo + (hi - lo + 1) / 2
-              if (volume(mid) <= maxCandidates) lo = mid else hi = mid - 1
-            }
-            math.min(lo, maxPosting.toLong).toInt
-          }
-        val hot = post.filter(col("mlen") > effectiveCap)
-        val stats = hot.agg(
-          coalesce(count(lit(1)), lit(0L)).as("n_tok"),
-          coalesce(sum(col("vol")), lit(0L)).as("vol")).head()
-        val capTag = s"[graft.dedup] cross SSJoin posting cap $effectiveCap engaged" +
-          (if (maxCandidates > 0L) s" (derived from candidate budget $maxCandidates)"
-           else "")
-        System.err.println(
-          if (stats.getLong(0) > 0L)
-            capTag + s": dropping ${stats.getLong(0)} hot tokens " +
-              s"(${stats.getLong(1)} candidate rows) — pairs sharing ONLY " +
-              "capped prefix tokens are missed (recall < 100%)"
-          else capTag + ": no posting exceeds the cap — nothing dropped, recall 100%")
-        val hotToks = hot.select(col("tok"))
-        (cl.join(broadcast(hotToks), Seq("tok"), "left_anti"),
-          cr.join(broadcast(hotToks), Seq("tok"), "left_anti"))
-      }
-    val candidates = pl.join(pr, Seq("tok"))
-      .filter(greatest(col("n_id_l"), col("n_id_r")) * t <=
-        least(col("n_id_l"), col("n_id_r")))
-      .groupBy(col("id_l"), col("id_r"), col("n_id_l"), col("n_id_r"))
-      .agg(max(least(col("n_id_l") - col("p_id_l"),
-        col("n_id_r") - col("p_id_r"))).as("ub"))
-      // α = ceil(t/(1+t)·(na+nb)) with the epsilon-margin comparison —
-      // see ngramJaccardNearDup for the double-rounding rationale.
-      .filter(col("ub") >=
-        lit(t) * (col("n_id_l") + col("n_id_r")) / lit(1 + t) - lit(1e-9))
-      .select(col("id_l"), col("id_r"))
-    candidates
-      .join(l, Seq("id_l"))
-      .join(r, Seq("id_r"))
-      .withColumn("o", size(array_intersect(col("hs_id_l"), col("hs_id_r"))))
-      .withColumn("jaccard",
-        col("o").cast("double") /
-          (size(col("hs_id_l")) + size(col("hs_id_r")) - col("o")))
-      .filter(col("jaccard") >= t)
-      .select(col("id_l"), col("id_r"), col("jaccard"))
-  }
+                       maxCandidates: Long = 0L): DataFrame =
+    ssJoin(persistedShingles(left, leftId, leftText, shingleK),
+      Some(persistedShingles(right, rightId, rightText, shingleK)),
+      minJaccard, maxPosting, maxCandidates,
+      volume = col("plen_l") * col("plen_r"))
+      .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("jaccard"))
 
   /** Embedding-cosine near-dup: semantic duplicates via random-hyperplane
     * buckets (candidates = same sign-bit bucket, an equi-join) verified
@@ -789,8 +696,8 @@ object Dedup {
     * `planes` (fewer planes → bigger buckets → higher recall, more
     * verify work).
     *
-    * `multiProbe` (default on) additionally probes every single-bit
-    * flip of one side's bucket — the same trick as
+    * Every probe also covers each single-bit flip of one side's
+    * bucket — the same trick as
     * [[graft.sim.Similarity.lshTopK]] — so a near-boundary pair whose
     * vectors straddle exactly one hyperplane still becomes a candidate.
     * Cost: the probe side fans out ×(planes+1), but rows carry only
@@ -809,8 +716,7 @@ object Dedup {
     * above describes. */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
                        dim: Int, minCosine: Double = 0.95,
-                       planes: Int = -1, seed: Long = 42L,
-                       multiProbe: Boolean = true): DataFrame = {
+                       planes: Int = -1, seed: Long = 42L): DataFrame = {
     import graft.sim.Similarity
     val proj0 = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     // The derived-plane path counts the projection AND scans it again
@@ -829,11 +735,9 @@ object Dedup {
       }
     val bucketed = proj.select(col("id"), col("v"),
       Similarity.lshBucket(col("v"), nPlanes, dim, seed).as("bucket"))
-    // Probe side: base bucket plus (optionally) each 1-bit flip; ids
-    // only, so the fan-out shuffles 16 bytes per probe row.
-    val flips =
-      if (multiProbe) array(lit(0L) +: (0 until nPlanes).map(i => lit(1L << i)): _*)
-      else array(lit(0L))
+    // Probe side: base bucket plus each 1-bit flip; ids only, so the
+    // fan-out shuffles 16 bytes per probe row.
+    val flips = array(lit(0L) +: (0 until nPlanes).map(i => lit(1L << i)): _*)
     val a = bucketed
       .select(col("id").as("id_a"),
         explode(flips).as("flip"), col("bucket"))
@@ -876,17 +780,12 @@ object Dedup {
     * results. */
   def embeddingNearDupSpanning(df: DataFrame, idCol: String, vecCol: String,
                                dim: Int, minCosine: Double = 0.95,
-                               planes: Int = -1, seed: Long = 42L,
-                               multiProbe: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // One shuffle keys the corpus by the raw vector; min-id is the
-    // representative. Checkpointed: consumers are the star emission
-    // and the rep-side near-dup (which re-checkpoints its own
-    // projection for the derived-plane count).
-    //
-    // Degenerate vectors are excluded up front, matching the full
-    // variant's no-pair behavior (the MinHash sibling's empty-set
-    // rule, in embedding space): a zero-norm vector's cosine is NULL
+                               planes: Int = -1, seed: Long = 42L)
+      : DataFrame = {
+    // The fingerprint is the raw vector. Degenerate vectors are
+    // excluded up front, matching the full variant's no-pair behavior
+    // (the MinHash sibling's empty-set rule, in embedding space): a
+    // zero-norm vector's cosine is NULL
     // (kernel contract), a NaN-component vector's cosine is NaN
     // (dropped by the full variant's explicit !isnan verify), and a
     // NULL vector never survives the bucket equi-join — the full
@@ -901,17 +800,19 @@ object Dedup {
     // cos = Inf/Inf = NaN for it and drops the pair — grouping
     // byte-identical Inf vectors here would mint cos=1.0 stars the
     // full closure does not have. Only finite positive norms group.
+    //
+    // Checkpointed, not persisted: AQE cannot coalesce a cached plan's
+    // output, so a persisted window keeps every initial shuffle
+    // partition, and each stage of the derived-plane engine below then
+    // runs one task per partition (measured on q_semantic_dedup: 2.5×
+    // the checkpointed form's wall). The checkpoint runs under AQE.
     val sq = aggregate(col("v"), lit(0.0d),
       (acc, x) => acc + x.cast("double") * x.cast("double"))
-    val keyed = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .filter(!isnan(sq) && sq > 0 && sq < lit(Double.PositiveInfinity))
-      .withColumn("rep", min(col("id")).over(Window.partitionBy(col("v"))))
-      .localCheckpoint()
-    val stars = keyed.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"), lit(1.0).as("cos"))
-    embeddingNearDup(keyed.filter(col("id") === col("rep")),
-        "id", "v", dim, minCosine, planes, seed, multiProbe)
-      .unionByName(stars)
+    collapse(
+      df.select(col(idCol).as("id"), col(vecCol).as("v"))
+        .filter(!isnan(sq) && sq > 0 && sq < lit(Double.PositiveInfinity)),
+      col("v"), lit(1.0).as("cos"), _.localCheckpoint())(
+      embeddingNearDup(_, "id", "v", dim, minCosine, planes, seed))
   }
 
   /** One-call SemDeDup-shaped semantic dedup: spanning embedding
@@ -1082,26 +983,16 @@ object Dedup {
   def simhashNearDupSpanning(df: DataFrame, idCol: String, textCol: String,
                              maxHamming: Int = 3,
                              tokenHash: Column => Column = xxhash64(_))
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      : DataFrame =
     // normalize() is idempotent, so the rep side feeds the normalized
     // text back through the full engine without a second regex pass
-    // changing anything; keyed is materialized once for the star
-    // emission and the rep filter.
-    val keyed = graft.view.Patterns.ensurePersisted(
+    // changing anything.
+    collapse(
       df.select(col(idCol).as("id"),
         TextFunctions.normalize(col(textCol)).as("ntext"))
-        .filter(col("ntext").isNotNull)
-        .withColumn("rep",
-          min(col("id")).over(Window.partitionBy(col("ntext")))),
-      graft.view.Patterns.TextInflation)
-    val stars = keyed.filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"),
-        lit(0).as("hamming"))
-    simhashNearDup(keyed.filter(col("id") === col("rep")),
-        "id", "ntext", maxHamming, tokenHash)
-      .unionByName(stars)
-  }
+        .filter(col("ntext").isNotNull),
+      col("ntext"), lit(0).as("hamming"))(
+      simhashNearDup(_, "id", "ntext", maxHamming, tokenHash))
 
   /** Cross-document repeated-span detection — substring-level dedup in
     * the sense of Lee et al. 2022 ("Deduplicating Training Data Makes

@@ -303,16 +303,6 @@ object TextBattery {
     }
   )
 
-  /** Exact n-gram Jaccard near-dup (prefix-filter set-similarity join)
-    * under a FULL closed-form oracle: because the prefix filter has
-    * 100% recall at the threshold, the result is the exact pair set —
-    * so unlike the LSH entries the oracle states every (id_a, id_b,
-    * jaccard) row, via the inverted-index form (pairs sharing ≥1
-    * shingle, overlap counted by join, sizes joined in — a pair with no
-    * shared shingle has J=0 and can't clear the threshold).
-    * `rareFirst = false` is the documented flat-distribution fast path:
-    * this corpus has no hot shingles (max df 25 at sf0.1), and
-    * `DedupSpec` asserts both orderings return identical pairs. */
   /** Tripled duplicate-heavy fixture shared by the spanning gates:
     * every selected doc appears as itself, a mutated copy, and an
     * exact copy — groups of 2 with near-dup satellites. A quarter of
@@ -524,6 +514,13 @@ object TextBattery {
     }
   )
 
+  /** Exact n-gram Jaccard near-dup (prefix-filter set-similarity join)
+    * under a FULL closed-form oracle: because the prefix filter has
+    * 100% recall at the threshold, the result is the exact pair set —
+    * so unlike the LSH entries the oracle states every (id_a, id_b,
+    * jaccard) row, via the inverted-index form (pairs sharing ≥1
+    * shingle, overlap counted by join, sizes joined in — a pair with no
+    * shared shingle has J=0 and can't clear the threshold). */
   val neardupNgram = Q(
     "q_neardup_ngram",
     Some(

@@ -315,14 +315,6 @@ class DedupSpec extends SparkSuite {
     val cartesian = out.queryExecution.executedPlan
       .collect { case c: CartesianProductExec => c }
     assert(cartesian.isEmpty, "prefix-filter candidates must be an equi-join")
-    // any consistent global token order gives the same exact result —
-    // hash order (the flat-distribution fast path) must match rare-first
-    val hashOrder = Dedup.ngramJaccardNearDup(fixture, "doc_id", "text",
-      shingleK = 3, minJaccard = 0.5, rareFirst = false)
-      .collect()
-      .map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
-        r.getAs[Double]("jaccard"))).toMap
-    assert(hashOrder == pairs)
   }
 
   test("ngram-jaccard posting cap degrades predictably: rare-token pairs " +
@@ -351,10 +343,6 @@ class DedupSpec extends SparkSuite {
     // cost — while the rare pair (posting length 2) is untouched
     assert(capped == Set((1L, 2L)))
     assert(capped.subsetOf(uncapped))
-    // the same cap under the hash-order fast path behaves identically
-    assert(pairsOf(5) == Dedup.ngramJaccardNearDup(f, "doc_id", "text",
-      shingleK = 3, minJaccard = 0.5, rareFirst = false, maxPosting = 5)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet)
     // candidate-BUDGET form: the boiler tokens' surviving volume
     // (5+ tokens × C(12,2)=66) blows a 100-candidate budget, so the
     // derived cap lands below 12 and only the rare pair survives; a
@@ -366,6 +354,33 @@ class DedupSpec extends SparkSuite {
         .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(budgetPairs(100L) == Set((1L, 2L)))
     assert(budgetPairs(1000000L) == uncapped)
+  }
+
+  test("ngram self-join equals the cross join of a corpus with itself " +
+    "(id_l < id_r), uncapped and capped") {
+    // The posting-cap fixture: joined with itself, every posting
+    // length doubles in the document frequency but not in the per-side
+    // posting, so both joins see the same token order and the same cap.
+    val boiler = "alpha beta gamma delta epsilon zeta eta theta"
+    val rare = "unique one two three four five six seven"
+    val f = docs(
+      (Seq(1L -> rare, 2L -> rare) ++
+        (3L to 14L).map(_ -> boiler)): _*)
+    for (cap <- Seq(Int.MaxValue, 5)) {
+      val self = Dedup.ngramJaccardNearDup(f, "doc_id", "text",
+        shingleK = 3, minJaccard = 0.5, maxPosting = cap)
+        .collect()
+        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+          r.getAs[Double]("jaccard"))).toSet
+      val cross = Dedup.crossJaccardJoin(f, f, "doc_id", "text",
+        "doc_id", "text", shingleK = 3, minJaccard = 0.5, maxPosting = cap)
+        .filter(col("id_l") < col("id_r"))
+        .collect()
+        .map(r => (r.getAs[Long]("id_l"), r.getAs[Long]("id_r"),
+          r.getAs[Double]("jaccard"))).toSet
+      assert(self.nonEmpty, s"cap $cap")
+      assert(self === cross, s"cap $cap")
+    }
   }
 
   test("embedding near-dup multi-probe recovers a near-boundary pair") {
@@ -398,13 +413,11 @@ class DedupSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     val df = Seq((1L, v.toSeq), (2L, u.toSeq)).toDF("doc_id", "embedding")
-    def pairs(mp: Boolean) =
+    val pairs =
       Dedup.embeddingNearDup(df, "doc_id", "embedding", dim = dim,
-        minCosine = 0.95, planes = planes, seed = seed, multiProbe = mp)
+        minCosine = 0.95, planes = planes, seed = seed)
         .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(!pairs(mp = false).contains((1L, 2L)),
-      "single-probe unexpectedly bucketed a boundary-straddling pair")
-    assert(pairs(mp = true).contains((1L, 2L)),
+    assert(pairs.contains((1L, 2L)),
       "multi-probe must recover a 1-bit-apart pair")
   }
 
