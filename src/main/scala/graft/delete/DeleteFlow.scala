@@ -1,7 +1,9 @@
 package graft.delete
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.view.Patterns
 
@@ -42,62 +44,73 @@ object DeleteFlow {
 
   /** Synthesize delete flags. Returns (intellectual_entity_id,
     * mh_fragment_identifier, is_deleted=true) rows — empty when `since`
-    * is unbound, mirroring `FILTER(bound(?since) && …)`. */
+    * is unbound, mirroring `FILTER(bound(?since) && …)`.
+    *
+    * A bound `since` returns the flags staged (`localCheckpoint`, the
+    * form of `Upsert.stage`), the way the reference writes them once
+    * into `mh_fragment_identifier` before its DELETEs: every later read
+    * — the dead-id collect, each table rewrite, the documents'
+    * anti-join — scans the staged rows instead of re-running the flag
+    * plan. The stage runs under AQE, so the rows land in data-sized
+    * partitions; a persist of the unstaged plan would keep every
+    * initial shuffle partition of its `distinct`. The caller frees the
+    * staged flags with `Checkpoints.free` once nothing reads them. An
+    * input that this call had to persist is unpersisted before it
+    * returns. */
   def flagDeletes(quadsIn: DataFrame, since: Option[String],
                   prefixIdBase: String,
-                  allowedLicenses: Seq[String] = DefaultAllowedLicenses): DataFrame = {
-    // 5 pattern slices read this input; persist once (Patterns scaladoc).
-    val quads = Patterns.ensurePersisted(quadsIn)
-    val spark = quads.sparkSession
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("intellectual_entity_id",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("mh_fragment_identifier",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("is_deleted",
-          org.apache.spark.sql.types.BooleanType, nullable = false))))
+                  allowedLicenses: Seq[String] = DefaultAllowedLicenses): DataFrame =
     since match {
-      case None => empty // bound-guard: deletes are incremental-only
+      case None => // bound-guard: deletes are incremental-only
+        val spark = quadsIn.sparkSession
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+          StructField("intellectual_entity_id", StringType),
+          StructField("mh_fragment_identifier", StringType),
+          StructField("is_deleted", BooleanType, nullable = false))))
       case Some(cutoff) =>
-        val modified = Patterns.po(quads, V.Modified, "modified")
-          .filter(col("modified") >= lit(cutoff))
-          .select(col("s"))
-        val pid = Patterns.po(quads, V.Pid, "pid")
+        // 5 pattern slices read this input; persist once (Patterns scaladoc).
+        val ownsPersist = quadsIn.storageLevel == StorageLevel.NONE
+        val quads = Patterns.ensurePersisted(quadsIn)
+        try {
+          val modified = Patterns.po(quads, V.Modified, "modified")
+            .filter(col("modified") >= lit(cutoff))
+            .select(col("s"))
+          val pid = Patterns.po(quads, V.Pid, "pid")
 
-        // (a) tombstoned fragments: entity key rebuilt from the PID.
-        val tombstoned = Patterns.po(quads, V.DateDeleted, "deleted_at")
-          .select(col("s"))
-          .join(modified, Seq("s"), "left_semi")
-          .join(pid, Seq("s"))
-          .select(concat(lit(prefixIdBase), col("pid")).as("intellectual_entity_id"),
-            col("s").as("mh_fragment_identifier"))
+          // (a) tombstoned fragments: entity key rebuilt from the PID.
+          val tombstoned = Patterns.po(quads, V.DateDeleted, "deleted_at")
+            .select(col("s"))
+            .join(modified, Seq("s"), "left_semi")
+            .join(pid, Seq("s"))
+            .select(concat(lit(prefixIdBase), col("pid")).as("intellectual_entity_id"),
+              col("s").as("mh_fragment_identifier"))
 
-        // (b) fragments whose derived entity lacks every allowed license.
-        val derived = Patterns.po(quads, V.DerivedFrom, "ie")
-        val licensed = Patterns.po(quads, V.License, "license")
-          .filter(col("license").isin(allowedLicenses: _*))
-          .select(col("s").as("ie")).distinct()
-        val unlicensed = derived
-          .join(modified, Seq("s"), "left_semi")
-          .join(licensed, Seq("ie"), "left_anti") // FILTER NOT EXISTS
-          .select(col("ie").as("intellectual_entity_id"),
-            col("s").as("mh_fragment_identifier"))
+          // (b) fragments whose derived entity lacks every allowed license.
+          val derived = Patterns.po(quads, V.DerivedFrom, "ie")
+          val licensed = Patterns.po(quads, V.License, "license")
+            .filter(col("license").isin(allowedLicenses: _*))
+            .select(col("s").as("ie")).distinct()
+          val unlicensed = derived
+            .join(modified, Seq("s"), "left_semi")
+            .join(licensed, Seq("ie"), "left_anti") // FILTER NOT EXISTS
+            .select(col("ie").as("intellectual_entity_id"),
+              col("s").as("mh_fragment_identifier"))
 
-        tombstoned.unionByName(unlicensed)
-          .distinct()
-          .withColumn("is_deleted", lit(true))
+          tombstoned.unionByName(unlicensed)
+            .distinct()
+            .withColumn("is_deleted", lit(true))
+            .localCheckpoint(eager = true)
+        } finally if (ownsPersist) quads.unpersist(blocking = false)
     }
-  }
 
   /** Apply flags: drop flagged entities and every fragment row of a
     * flagged entity (arc_db_delete_flow.py:34-43 — two DELETEs, one
     * transaction). Returns (entities', fragments'). */
   def applyDeletes(entities: DataFrame, fragments: DataFrame,
                    flags: DataFrame): (DataFrame, DataFrame) = {
+    // a left-anti join ignores duplicate keys, so no distinct here
     val deadEntities = flags.filter(col("is_deleted"))
-      .select(col("intellectual_entity_id").as("id")).distinct()
+      .select(col("intellectual_entity_id").as("id"))
     val keptEntities = entities.join(deadEntities, Seq("id"), "left_anti")
     val keptFragments = fragments.join(
       deadEntities.select(col("id").as("intellectual_entity_id")),

@@ -50,8 +50,8 @@ object Upsert {
     * (SURVEY.md §7.4). */
   def keyClearMerge(target: DataFrame, staged: DataFrame, entityKey: String): DataFrame = {
     val checked = requireKeys(staged, Seq(entityKey), "keyClearMerge")
-    val touched = checked.select(col(entityKey)).distinct()
-    target.join(touched, Seq(entityKey), "left_anti")
+    // a left-anti join ignores duplicate keys, so no distinct here
+    target.join(checked.select(col(entityKey)), Seq(entityKey), "left_anti")
       .unionByName(checked)
   }
 
@@ -60,7 +60,7 @@ object Upsert {
     * database.ts:214-223). */
   def pkMerge(target: DataFrame, staged: DataFrame, pk: Seq[String]): DataFrame = {
     val checked = requireKeys(staged, pk, "pkMerge")
-    target.join(checked.select(pk.map(col): _*).distinct(), pk, "left_anti")
+    target.join(checked.select(pk.map(col): _*), pk, "left_anti")
       .unionByName(checked)
   }
 
@@ -198,7 +198,8 @@ object Upsert {
     * localCheckpoint the result (cuts the lineage that would otherwise
     * read the path being overwritten), dynamic-partition-overwrite just
     * those buckets, and free the snapshot. The touched-bucket collect
-    * is bounded by `numBuckets`, never by data size. */
+    * is bounded by `numBuckets`, never by data size; an empty staged
+    * batch ends after it. */
   def mergeAndWrite(spark: SparkSession, path: String, staged: DataFrame,
                     spec: TableSpec, fullSync: Boolean,
                     numBuckets: Int = 64): Unit = {
@@ -243,17 +244,20 @@ object Upsert {
       val bucket = bucketOf(spec, layoutBuckets)
       val touched = staged.select(bucket.as(BucketCol)).distinct()
         .collect().map(_.getInt(0)).sorted // ≤ layoutBuckets values
-      val targetTouched = spark.read.parquet(path)
-        .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-        .drop(BucketCol)
-      val merged = merge(targetTouched, staged, spec, fullSync = false)
-        .withColumn(BucketCol, bucket)
-      val snapshot = stage(merged) // lineage cut: the write below overwrites what it read
-      try snapshot.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BucketCol)
-        .parquet(path)
-      finally Checkpoints.free(snapshot)
+      // A batch that touches no bucket leaves the target as it is.
+      if (touched.nonEmpty) {
+        val targetTouched = spark.read.parquet(path)
+          .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+          .drop(BucketCol)
+        val merged = merge(targetTouched, staged, spec, fullSync = false)
+          .withColumn(BucketCol, bucket)
+        val snapshot = stage(merged) // lineage cut: the write below overwrites what it read
+        try snapshot.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(BucketCol)
+          .parquet(path)
+        finally Checkpoints.free(snapshot)
+      }
     }
   }
 

@@ -10,8 +10,12 @@ class MaterializationInventorySpec extends AnyFunSuite {
 
   /** The count after the last change that moved it. Lower it when a
     * site is removed; raising it needs a reason in the change that
-    * adds the site. */
-  private val pinned = 47
+    * adds the site. 47 → 48: `DeleteFlow.flagDeletes` stages its flags
+    * with a `localCheckpoint`, so a caller's persist of them holds the
+    * AQE-coalesced partitions instead of every initial shuffle
+    * partition of the flags' `distinct`; the caller frees them with
+    * `Checkpoints.free`. */
+  private val pinned = 48
 
   /** `ensurePersisted` persists through one `.persist(` in its own
     * body, so each of its callers is a site too; its definition is

@@ -49,37 +49,12 @@ class ConnectedComponentsSpec extends SparkSuite {
 
   test("rounds read convergence from the observe metric: no head/collect " +
     "action from ConnectedComponents") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     // Every Dataset action opens one SQL execution described by its
-    // call site ("localCheckpoint at ConnectedComponents.scala:NN"). A
-    // sentinel action marks the end: the listener bus delivers in
-    // order, so once it is seen every CC action before it has been too.
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    @volatile var sentinelSeen = false
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart =>
-          if (x.description.contains("cc-sentinel")) sentinelSeen = true
-          else if (x.description.contains("ConnectedComponents.scala"))
-            sites.add(x.description)
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // call site ("localCheckpoint at ConnectedComponents.scala:NN").
+    val seen = sqlExecutions {
       val got = cc(0L until 200L, (0L until 199L).map(i => (i, i + 1)))
       assert(got.values.toSet === Set(0L))
-      spark.sparkContext.setJobDescription("cc-sentinel")
-      try spark.range(1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!sentinelSeen && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(sentinelSeen, "listener never saw the sentinel action")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val seen = sites.asScala.toSeq
+    }.filter(_.contains("ConnectedComponents.scala"))
     assert(seen.exists(_.startsWith("localCheckpoint")),
       s"no round checkpoint action observed: $seen")
     val actions = seen.filter(n =>

@@ -153,6 +153,29 @@ class UpsertSpec extends SparkSuite {
     assert(out.size == 200 - 4 + 1) // ie1 had 4 seed rows (1,51,101,151)
   }
 
+  test("an empty staged batch runs only the touched-bucket collect and " +
+    "leaves the target's files as they were") {
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-empty").toString + "/tbl"
+    val spec = TableSpec("t.child", Seq("v" -> ColType.Str),
+      pk = Nil, entityKey = Some("intellectual_entity_id"))
+    Upsert.mergeAndWrite(spark, tmp, target, spec, fullSync = true)
+    def listing: Set[String] = {
+      val root = java.nio.file.Paths.get(tmp)
+      val files = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        files.iterator().asScala.map(p => root.relativize(p).toString).toSet
+      } finally files.close()
+    }
+    val before = listing
+    val executions = sqlExecutions {
+      Upsert.mergeAndWrite(spark, tmp, df(Nil), spec, fullSync = false)
+    }
+    assert(executions.size === 1, executions)
+    assert(listing === before)
+    assert(rows(spark.read.parquet(tmp)) === rows(target))
+  }
+
   test("incremental merge uses the LAYOUT's bucket count, not the caller's") {
     // A target laid out with 8 buckets, incrementally merged by a
     // caller passing 64: without the _graft_buckets marker the touched
