@@ -22,10 +22,11 @@ import graft.run.LocalSession
   * zero numbers recorded): every artifact is rewritten incrementally
   * after EACH query, so a killed run still lands numbers for everything
   * it completed; and the battery's storage footprint is released
-  * eagerly between queries (cache + persistent RDDs + memory-sink temp
-  * views) instead of waiting for GC-driven cleaning — which also
-  * bounds the RAM-backed shuffle dir (see spark.local.dir below) to
-  * one query's footprint instead of an unreclaimable tmpfs ratchet.
+  * eagerly between queries and before every timed iteration (cache +
+  * persistent RDDs + memory-sink temp views) instead of waiting for
+  * GC-driven cleaning — which also bounds the RAM-backed shuffle dir
+  * (see spark.local.dir below) to one query's footprint instead of an
+  * unreclaimable tmpfs ratchet.
   */
 object Bench {
   /** System MemAvailable in bytes (kernel's estimate of allocatable RAM
@@ -177,7 +178,9 @@ object Bench {
   // no longer run the full engine in-gate (mins roughly halve, a gate
   // shape change, not an engine speedup); prepare composes the
   // spanning variant.
-  private val WorkloadVersion = 10
+  // v11: storage is released before every timed iteration, so a gate
+  // that read a cache leaked by its warm-up now times a cold call.
+  private val WorkloadVersion = 11
 
   def main(args: Array[String]): Unit = {
     // All f"" interpolations below format JSON: pin the locale so a
@@ -416,14 +419,14 @@ object Bench {
       sinceCanary += 1
       if (sinceCanary >= 20) { sinceCanary = 0; recordCanary("mid") }
       val r = try {
-        // GC between iterations: a pipeline invocation leaves its
-        // (unreferenced) checkpoint blocks behind, and the ContextCleaner
-        // frees them only on GC — without this, iteration N of a
-        // checkpoint-heavy query measures iteration N-1's storage
-        // eviction (observed 4.7s → 16.7s within one query's runs).
-        // The cleaner drains its reference queue asynchronously after
-        // GC — give it a beat, or the next run still races the frees.
-        def settle(): Unit = { System.gc(); Thread.sleep(200) }
+        // Release storage before every timed iteration: a cache the
+        // warm-up (or iteration N-1) leaves behind would otherwise be
+        // timed as a hit, and its checkpoint blocks freed only on GC
+        // would be timed as eviction (observed 4.7s → 16.7s within one
+        // query's runs). `release` ends in a GC; the ContextCleaner
+        // drains its reference queue asynchronously after it — give it
+        // a beat, or the next run still races the frees.
+        def settle(): Unit = { LocalSession.release(spark); Thread.sleep(200) }
         val warm = once(fn) // warm-up, untimed
         val raw = Seq.fill(iters) { settle(); once(fn) }
         if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))

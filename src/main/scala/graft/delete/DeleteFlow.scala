@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.sink.Upsert
 import graft.view.Patterns
 
 /** Delete flow: flag synthesis + anti-join removal
@@ -35,7 +36,8 @@ object DeleteFlow {
   }
 
   /** Licenses that keep an entity alive (deletes.sparql:65-75 — the
-    * 9-license allow-list; shortened here, injected by callers). */
+    * 9-license allow-list). The delete flag rule and the entity views'
+    * base match both read this one list. */
   val DefaultAllowedLicenses: Seq[String] = Seq(
     "VIAA-PUBLIEK-METADATA-LTD", "VIAA-PUBLIEK-METADATA-ALL",
     "VIAA-PUBLIEK-CONTENT", "VIAA-INTRA_CP-METADATA-ALL",
@@ -46,8 +48,8 @@ object DeleteFlow {
     * mh_fragment_identifier, is_deleted=true) rows — empty when `since`
     * is unbound, mirroring `FILTER(bound(?since) && …)`.
     *
-    * A bound `since` returns the flags staged (`localCheckpoint`, the
-    * form of `Upsert.stage`), the way the reference writes them once
+    * A bound `since` returns the flags staged (`Upsert.stage`, an eager
+    * `localCheckpoint`), the way the reference writes them once
     * into `mh_fragment_identifier` before its DELETEs: every later read
     * — the dead-id collect, each table rewrite, the documents'
     * anti-join — scans the staged rows instead of re-running the flag
@@ -58,8 +60,7 @@ object DeleteFlow {
     * input that this call had to persist is unpersisted before it
     * returns. */
   def flagDeletes(quadsIn: DataFrame, since: Option[String],
-                  prefixIdBase: String,
-                  allowedLicenses: Seq[String] = DefaultAllowedLicenses): DataFrame =
+                  prefixIdBase: String): DataFrame =
     since match {
       case None => // bound-guard: deletes are incremental-only
         val spark = quadsIn.sparkSession
@@ -88,7 +89,7 @@ object DeleteFlow {
           // (b) fragments whose derived entity lacks every allowed license.
           val derived = Patterns.po(quads, V.DerivedFrom, "ie")
           val licensed = Patterns.po(quads, V.License, "license")
-            .filter(col("license").isin(allowedLicenses: _*))
+            .filter(col("license").isin(DefaultAllowedLicenses: _*))
             .select(col("s").as("ie")).distinct()
           val unlicensed = derived
             .join(modified, Seq("s"), "left_semi")
@@ -96,10 +97,9 @@ object DeleteFlow {
             .select(col("ie").as("intellectual_entity_id"),
               col("s").as("mh_fragment_identifier"))
 
-          tombstoned.unionByName(unlicensed)
+          Upsert.stage(tombstoned.unionByName(unlicensed)
             .distinct()
-            .withColumn("is_deleted", lit(true))
-            .localCheckpoint(eager = true)
+            .withColumn("is_deleted", lit(true)))
         } finally if (ownsPersist) quads.unpersist(blocking = false)
     }
 

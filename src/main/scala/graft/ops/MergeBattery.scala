@@ -10,11 +10,12 @@ import graft.sink.Upsert
   *
   * Each query stages a since-filtered slice of a testdata table as "the
   * incremental batch", merges it into the full table through the real
-  * `Upsert.merge` dispatch, and the oracle states the expected post-merge
-  * table in closed form (anti-join ∪ staged). Rows carry a `src` marker
-  * so a wrong merge (old row surviving where staged must win, or a
-  * sibling child row surviving a key-clear) flips the hash, not just the
-  * row count.
+  * `Upsert.merge` on the spec's merge key, and the oracle states the
+  * expected post-merge table in closed form (anti-join ∪ staged). The
+  * child spec keys on its entity key, the PK specs on their PK. Rows
+  * carry a `src` marker so a wrong merge (old row surviving where
+  * staged must win, or a sibling child row surviving a key-clear) flips
+  * the hash, not just the row count.
   */
 object MergeBattery {
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Tables, TableSpec}
-import graft.run.Checkpoints
 
 /** Merge/upsert writer family (SURVEY.md §2.9 #74-77, #80).
   *
@@ -19,58 +18,48 @@ import graft.run.Checkpoints
   *    DO UPDATE` (:214-223)
   * applied in FK topological order (2_database_load.ts:188-207).
   *
-  * Here each strategy is a pure DataFrame → DataFrame merge (tested for
-  * idempotence) plus a parquet-backed writer. Scale notes: both merges
-  * are one anti-join shuffle on the key — at 100 TB the win is
-  * partitioning the target by the merge key so only touched partitions
-  * rewrite (dynamic partition overwrite); the pure-merge semantics stay
-  * identical.
+  * Both incremental strategies are one plan here: drop the target rows
+  * whose merge key ([[mergeKeys]]: the entity key, else the PK) the
+  * staged batch carries, then append the batch. [[mergeAndWrite]]
+  * lays the target out in hash buckets of that same key, so an
+  * incremental merge reads and rewrites only the buckets its batch
+  * touches, through a dynamic partition overwrite.
   */
 object Upsert {
 
-  /** In-plan NULL-key guard for the merge strategies: a NULL merge key
-    * never survives the anti-join's equi-comparison, so a staged row
-    * with a NULL key would be APPENDED on every merge of the same
-    * batch — silent duplication where the reference target (Postgres,
-    * NOT NULL primary keys) rejects the insert loudly. One codegen'd
+  /** In-plan NULL-key guard for the merge: a NULL merge key never
+    * survives the anti-join's equi-comparison, so a staged row with a
+    * NULL key would be APPENDED on every merge of the same batch —
+    * silent duplication where the reference target (Postgres, NOT NULL
+    * primary keys) rejects the insert loudly. One codegen'd
     * when-branch per key column converts that into the loud failure
     * the reference has; the key columns feed the join, so the check
     * is never pruned. */
   private def requireKeys(df: DataFrame, keys: Seq[String],
-                          op: String): DataFrame =
+                          table: String): DataFrame =
     keys.foldLeft(df)((d, k) => d.withColumn(k,
       when(col(k).isNotNull, col(k)).otherwise(raise_error(lit(
-        s"$op: NULL in merge-key column '$k' — the reference target " +
+        s"$table: NULL in merge-key column '$k' — the reference target " +
           "rejects NULL keys (NOT NULL PK); repair the staged batch " +
           "upstream")))))
 
-  /** Incremental child-table merge: replace *all* rows of every entity
-    * touched by the staged batch (database.ts:186-212). Getting this
-    * wrong per-PK instead of per-entity silently duplicates child rows
-    * (SURVEY.md §7.4). */
-  def keyClearMerge(target: DataFrame, staged: DataFrame, entityKey: String): DataFrame = {
-    val checked = requireKeys(staged, Seq(entityKey), "keyClearMerge")
-    // a left-anti join ignores duplicate keys, so no distinct here
-    target.join(checked.select(col(entityKey)), Seq(entityKey), "left_anti")
-      .unionByName(checked)
-  }
-
-  /** PK upsert: staged wins on key collision, untouched target rows
-    * survive (MERGE INTO matched→UPDATE / not-matched→INSERT,
-    * database.ts:214-223). */
-  def pkMerge(target: DataFrame, staged: DataFrame, pk: Seq[String]): DataFrame = {
-    val checked = requireKeys(staged, pk, "pkMerge")
-    target.join(checked.select(pk.map(col): _*), pk, "left_anti")
-      .unionByName(checked)
-  }
-
-  /** Pick the merge strategy the reference would for this table. */
+  /** Merge `staged` into `target` the way the reference would for this
+    * table. Full sync is TRUNCATE + INSERT: the staged batch replaces
+    * the target. Incremental drops every target row whose merge key the
+    * batch carries, then appends the batch. On an entity key that
+    * replaces *all* rows of a touched entity (database.ts:186-212; per
+    * PK it would silently duplicate child rows, SURVEY.md §7.4); on a
+    * PK the staged row wins and untouched rows survive (MERGE INTO
+    * matched→UPDATE / not-matched→INSERT, database.ts:214-223). */
   def merge(target: DataFrame, staged: DataFrame, spec: TableSpec,
             fullSync: Boolean): DataFrame =
-    if (fullSync) staged // TRUNCATE + INSERT ≡ staged replaces target
-    else spec.entityKey match {
-      case Some(k) => keyClearMerge(target, staged, k)
-      case None    => pkMerge(target, staged, spec.pk)
+    if (fullSync) staged
+    else {
+      val keys = mergeKeys(spec)
+      val checked = requireKeys(staged, keys, spec.name)
+      // a left-anti join ignores duplicate keys, so no distinct here
+      target.join(checked.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(checked)
     }
 
   /** Orphan cleanup (SURVEY.md §2.3 #30): keep child rows whose FK
@@ -104,12 +93,13 @@ object Upsert {
   /** Hash-bucket partition column for partition-scoped merges. */
   val BucketCol = "__bucket"
 
-  /** The key an incremental merge joins on: the entity key for
-    * key-clear tables, the PK for upsert tables. */
+  /** The key an incremental merge joins on and a bucketed target
+    * hashes: the entity key for child tables, else the PK. A spec with
+    * neither cannot be merged incrementally. */
   def mergeKeys(spec: TableSpec): Seq[String] = {
     val keys = spec.entityKey.map(Seq(_)).getOrElse(spec.pk)
     require(keys.nonEmpty,
-      s"${spec.name}: partition-scoped merge needs an entityKey or a PK")
+      s"${spec.name}: an incremental merge needs an entityKey or a PK")
     keys
   }
 
@@ -195,11 +185,14 @@ object Upsert {
     * ordering the reference gets from transactions,
     * arc_db_delete_flow.py:56-61; see [[swapIn]] for the failure path).
     * Incremental: read ONLY touched buckets (partition pruning), merge,
-    * localCheckpoint the result (cuts the lineage that would otherwise
-    * read the path being overwritten), dynamic-partition-overwrite just
-    * those buckets, and free the snapshot. The touched-bucket collect
-    * is bounded by `numBuckets`, never by data size; an empty staged
-    * batch ends after it. */
+    * and dynamic-partition-overwrite just those buckets in one job.
+    * That job may read the directories it replaces: a dynamic overwrite
+    * writes into a staging directory and swaps the partitions in only
+    * at job commit, and a failed job deletes its staging directory, so
+    * the target stays as it was (`UpsertFaultSpec`). A static overwrite
+    * would delete the target before reading it. The touched-bucket
+    * collect is bounded by `numBuckets`, never by data size; an empty
+    * staged batch ends after it. */
   def mergeAndWrite(spark: SparkSession, path: String, staged: DataFrame,
                     spec: TableSpec, fullSync: Boolean,
                     numBuckets: Int = 64): Unit = {
@@ -249,14 +242,12 @@ object Upsert {
         val targetTouched = spark.read.parquet(path)
           .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
           .drop(BucketCol)
-        val merged = merge(targetTouched, staged, spec, fullSync = false)
+        merge(targetTouched, staged, spec, fullSync = false)
           .withColumn(BucketCol, bucket)
-        val snapshot = stage(merged) // lineage cut: the write below overwrites what it read
-        try snapshot.write.mode("overwrite")
+          .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(BucketCol)
           .parquet(path)
-        finally Checkpoints.free(snapshot)
       }
     }
   }

@@ -58,8 +58,9 @@ object CollectionPipeline {
 
     val collections = collIds
       .join(typeOf, Seq("s"), "left")
-      .join(optionalSingle(quads, Name, "schema_name"), Seq("s"), "left")
-      .join(optionalSingle(quads, SeasonNumber, "season_raw"), Seq("s"), "left")
+      .join(optionalSingles(quads, Seq(
+        (Name, "schema_name", None),
+        (SeasonNumber, "season_raw", None))), Seq("s"), "left")
       .select(col("s").as("id"),
         collectionType(col("type_iri")).as("collection_type"),
         col("schema_name"),

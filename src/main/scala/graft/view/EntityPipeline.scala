@@ -199,8 +199,7 @@ object EntityPipeline {
       entityTypes: Seq[String],
       mimeTypes: Seq[String],
       includePeaks: Boolean,
-      nullLicenses: Seq[String], // licenses BIND'd to NULL for this family
-      licenses: Seq[String] = graft.delete.DeleteFlow.DefaultAllowedLicenses)
+      nullLicenses: Seq[String]) // licenses BIND'd to NULL for this family
 
   val avAudio = Config("av-audio",
     Seq(SchemaNs + "AudioObject"),
@@ -220,12 +219,12 @@ object EntityPipeline {
     includePeaks = false,
     nullLicenses = Nil) // newspapers keep the public licenses
 
-  /** Default child-table branches — the reference's UNION attribute
+  /** The child-table branches — the reference's UNION attribute
     * families (av-audio.sparql:231-324), data-driven: plain literals,
     * nl-filtered literals, `/`-paths through mid nodes, and the
     * copyright-holder prefLabel|name alternative as two rows on one
     * table. */
-  def defaultBranches: Seq[BranchSpec] = Seq(
+  private val branches: Seq[BranchSpec] = Seq(
     BranchSpec("graph.schema_keywords", Keywords, "schema_keywords"),
     BranchSpec("graph.schema_genre", Genre, "schema_genre"),
     BranchSpec("graph.schema_in_language", InLanguage, "schema_in_language"),
@@ -244,17 +243,15 @@ object EntityPipeline {
     BranchSpec("graph.schema_copyright_holder", SchemaNs + "name",
       "schema_copyright_holder", via = Some(CopyrightHolder)))
 
-  /** Default EXISTS-flag binds (av-audio.sparql:392-394 captioning). */
-  def defaultFlags: Seq[FlagSpec] = Seq(
+  /** The EXISTS-flag binds (av-audio.sparql:392-394 captioning). */
+  private val flags: Seq[FlagSpec] = Seq(
     FlagSpec("has_open_captions", HasCaptioning, graft.model.Ns.RdfType,
       OpenCaptions))
 
   import Patterns._
 
   def apply(quadsIn: DataFrame, cfg: Config,
-            params: ViewParams = ViewParams(),
-            branches: Seq[BranchSpec] = defaultBranches,
-            flags: Seq[FlagSpec] = defaultFlags): Map[String, DataFrame] = {
+            params: ViewParams = ViewParams()): Map[String, DataFrame] = {
     // ~12 derived frames slice this input; persist once, not recompute 12×.
     val quads = Patterns.ensurePersisted(quadsIn)
 
@@ -266,7 +263,7 @@ object EntityPipeline {
     val isTyped = col("predicate") === graft.model.Ns.RdfType &&
       col("obj").isin(cfg.entityTypes: _*)
     val isLicensed = col("predicate") === License &&
-      col("obj").isin(cfg.licenses: _*)
+      col("obj").isin(graft.delete.DeleteFlow.DefaultAllowedLicenses: _*)
     val sinceHit = params.since match {
       case None         => lit(true)
       case Some(cutoff) => col("predicate") === Modified && col("obj") >= lit(cutoff)

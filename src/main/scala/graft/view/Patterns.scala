@@ -228,33 +228,18 @@ object Patterns {
     quads.filter(col("predicate") === pred)
       .select(col("obj").as("s"), col("subject").as(as), lit(null).cast("string").as(s"${as}_lang"))
 
-  /** OPTIONAL { ?s <pred> ?o } with the nl-preferred single-value rule —
-    * one row per s, for left-joining onto a base match
-    * (reference: organization.sparql:69-126 OPTIONAL blocks feeding
-    * single columns; nl rule stream.ts:97-103). `langFilter` models
-    * `FILTER langMatches(lang(?o), "nl")` inside the OPTIONAL
-    * (av-audio.sparql:277-283). */
-  def optionalSingle(quads: DataFrame, pred: String, as: String,
-                     langFilter: Option[String] = None): DataFrame = {
-    val rows = po(quads, pred, as)
-    val filtered = langFilter match {
-      case Some(lang) => rows.filter(col(s"${as}_lang").startsWith(lang))
-      case None       => rows
-    }
-    filtered
-      .groupBy(col("s"))
-      .agg(graft.functions.Functions
-        .langPreferredFirst(col(as), col(s"${as}_lang")).as(as))
-  }
-
-  /** N OPTIONAL single-value binds in ONE aggregation pass — the
-    * shuffle-minimal form of folding [[optionalSingle]] N times: every
-    * spec is a conditional `langPreferredFirst` over one
-    * multi-predicate slice, so N scalar OPTIONALs cost one scan + one
-    * groupBy shuffle + one left join instead of N of each. Null-value
-    * rows are excluded per aggregate (the `when` yields null for other
-    * predicates), so per-column semantics are identical to the
-    * one-at-a-time form. Specs: (predicate, outputCol, langFilter).
+  /** N `OPTIONAL { ?s <pred> ?o }` single-value binds in ONE
+    * aggregation pass, one row per s, for left-joining onto a base
+    * match (reference: organization.sparql:69-126 OPTIONAL blocks
+    * feeding single columns). Each spec is a conditional
+    * `langPreferredFirst` (the nl-preferred rule, stream.ts:97-103)
+    * over one multi-predicate slice, so N scalar OPTIONALs cost one
+    * scan + one groupBy shuffle + one left join instead of N of each.
+    * Null-value rows are excluded per aggregate (the `when` yields null
+    * for other predicates), so each column sees only its own
+    * predicate. A `langFilter` models `FILTER langMatches(lang(?o),
+    * "nl")` inside the OPTIONAL (av-audio.sparql:277-283). Specs:
+    * (predicate, outputCol, langFilter).
     *
     * Plan note: min-of-struct buffers are not UnsafeRow-mutable, so
     * this (like ANY string-valued min/max in Spark, measured
@@ -287,8 +272,8 @@ object Patterns {
     }
 
   /** `?s a <cls>` + N scalar binds on the SAME node in ONE aggregation
-    * pass — the fused form of `typed(quads, cls).distinct + N ×
-    * optionalSingle + joins` (one scan + one shuffle instead of 1+N of
+    * pass — the fused form of `typed(quads, cls).distinct + N
+    * single-value binds + joins` (one scan + one shuffle instead of 1+N of
     * each). The type row is a `bool_or` flag over the same grouped
     * slice, so only `cls`-typed subjects survive; the distinct is free
     * (groupBy). Scalar semantics are optionalSingles': null when the

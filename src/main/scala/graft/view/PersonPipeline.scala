@@ -38,7 +38,7 @@ object PersonPipeline {
     val mentionOf = invPath(quads, Mentions, "ie")
       .select(col("s").as("mention"), col("ie"))
 
-    val confidence = optionalSingle(quads, Confidence, "confidence_raw")
+    val confidence = optionalSingles(quads, Seq((Confidence, "confidence_raw", None)))
       .select(col("s").as("mention"), col("confidence_raw"))
 
     val mentions = mentionOf

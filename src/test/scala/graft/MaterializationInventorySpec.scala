@@ -14,8 +14,10 @@ class MaterializationInventorySpec extends AnyFunSuite {
     * with a `localCheckpoint`, so a caller's persist of them holds the
     * AQE-coalesced partitions instead of every initial shuffle
     * partition of the flags' `distinct`; the caller frees them with
-    * `Checkpoints.free`. */
-  private val pinned = 48
+    * `Checkpoints.free`. 48 → 47: that stage now calls `Upsert.stage`,
+    * the engine's one staging form, instead of its own inline
+    * `localCheckpoint`. */
+  private val pinned = 47
 
   /** `ensurePersisted` persists through one `.persist(` in its own
     * body, so each of its callers is a site too; its definition is

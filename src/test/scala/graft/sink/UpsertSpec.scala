@@ -23,18 +23,36 @@ class UpsertSpec extends SparkSuite {
     ("r1", "ie1", "old-a"), ("r2", "ie1", "old-b"), ("r3", "ie2", "keep")))
   private val staged = df(Seq(("r9", "ie1", "new-a")))
 
-  test("keyClearMerge replaces ALL child rows of touched entities") {
-    val out = rows(Upsert.keyClearMerge(target, staged, "intellectual_entity_id"))
+  /** A child table merged on its entity key, and a PK table on `id`. */
+  private val childSpec = TableSpec("t.child", Seq("v" -> ColType.Str),
+    pk = Nil, entityKey = Some("intellectual_entity_id"))
+  private val pkSpec = TableSpec("t.pk", Seq("v" -> ColType.Str))
+
+  private def merge(t: DataFrame, s: DataFrame, spec: TableSpec) =
+    Upsert.merge(t, s, spec, fullSync = false)
+
+  test("merge on an entity key replaces ALL child rows of touched entities") {
+    val out = rows(merge(target, staged, childSpec))
     // both ie1 rows must go, even though only one staged row arrived
     assert(out == Set(("r3", "ie2", "keep"), ("r9", "ie1", "new-a")))
   }
 
-  test("pkMerge: staged wins on PK, others survive") {
+  test("merge on a PK: staged wins on PK, others survive") {
     val st = df(Seq(("r1", "ie1", "updated"), ("r4", "ie3", "inserted")))
-    val out = rows(Upsert.pkMerge(target, st, Seq("id")))
+    val out = rows(merge(target, st, pkSpec))
     assert(out == Set(
       ("r1", "ie1", "updated"), ("r2", "ie1", "old-b"),
       ("r3", "ie2", "keep"), ("r4", "ie3", "inserted")))
+  }
+
+  test("merge with neither an entity key nor a PK throws instead of " +
+    "dropping every target row") {
+    val keyless = TableSpec("t.keyless", Seq("v" -> ColType.Str), pk = Nil)
+    val e = intercept[IllegalArgumentException] { merge(target, staged, keyless) }
+    assert(e.getMessage.contains("t.keyless"), e.getMessage)
+    // a full sync needs no key: the staged batch replaces the target
+    assert(rows(Upsert.merge(target, staged, keyless, fullSync = true)) ==
+      rows(staged))
   }
 
   test("a NULL merge key fails LOUDLY instead of duplicating forever") {
@@ -43,35 +61,30 @@ class UpsertSpec extends SparkSuite {
     // batch (idempotence silently broken); the reference target
     // rejects NULL PKs, and so do we.
     val badPk = df(Seq((null.asInstanceOf[String], "ie9", "poison")))
-    val e1 = intercept[Exception] { rows(Upsert.pkMerge(target, badPk, Seq("id"))) }
+    val e1 = intercept[Exception] { rows(merge(target, badPk, pkSpec)) }
     assert(e1.getMessage.contains("NULL in merge-key column 'id'"),
       e1.getMessage)
     val badEk = df(Seq(("r9", null.asInstanceOf[String], "poison")))
-    val e2 = intercept[Exception] {
-      rows(Upsert.keyClearMerge(target, badEk, "intellectual_entity_id"))
-    }
+    val e2 = intercept[Exception] { rows(merge(target, badEk, childSpec)) }
     assert(e2.getMessage.contains(
       "NULL in merge-key column 'intellectual_entity_id'"), e2.getMessage)
     // Non-key NULLs stay legal: only the key columns are guarded.
     val nullPayload = df(Seq(("r9", "ie9", null.asInstanceOf[String])))
-    assert(rows(Upsert.pkMerge(target, nullPayload, Seq("id")))
-      .exists(_._1 == "r9"))
+    assert(rows(merge(target, nullPayload, pkSpec)).exists(_._1 == "r9"))
   }
 
   test("merges are idempotent: f(f(x)) = f(x)") {
-    val once = Upsert.keyClearMerge(target, staged, "intellectual_entity_id")
-    val twice = Upsert.keyClearMerge(once, staged, "intellectual_entity_id")
+    val once = merge(target, staged, childSpec)
+    val twice = merge(once, staged, childSpec)
     assert(rows(once) == rows(twice))
-    val p1 = Upsert.pkMerge(target, staged, Seq("id"))
-    val p2 = Upsert.pkMerge(p1, staged, Seq("id"))
+    val p1 = merge(target, staged, pkSpec)
+    val p2 = merge(p1, staged, pkSpec)
     assert(rows(p1) == rows(p2))
   }
 
   test("incremental after full == full on union (disjoint entities)") {
     val batch2 = df(Seq(("r5", "ie9", "late")))
-    val incremental = Upsert.keyClearMerge(
-      Upsert.keyClearMerge(df(Nil), target, "intellectual_entity_id"),
-      batch2, "intellectual_entity_id")
+    val incremental = merge(merge(df(Nil), target, childSpec), batch2, childSpec)
     val full = target.unionByName(batch2)
     assert(rows(incremental) == rows(full))
   }
@@ -106,12 +119,22 @@ class UpsertSpec extends SparkSuite {
 
   test("mergeAndWrite round-trips through parquet with a dir swap") {
     val tmp = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
-    val spec = TableSpec("t.child", Seq("v" -> ColType.Str),
-      pk = Nil, entityKey = Some("intellectual_entity_id"))
-    Upsert.mergeAndWrite(spark, tmp, target, spec, fullSync = true)
-    Upsert.mergeAndWrite(spark, tmp, staged, spec, fullSync = false)
+    Upsert.mergeAndWrite(spark, tmp, target, childSpec, fullSync = true)
+    Upsert.mergeAndWrite(spark, tmp, staged, childSpec, fullSync = false)
     val out = rows(spark.read.parquet(tmp).select("id", "intellectual_entity_id", "v"))
     assert(out == Set(("r3", "ie2", "keep"), ("r9", "ie1", "new-a")))
+  }
+
+  test("a non-empty incremental mergeAndWrite runs two SQL executions: " +
+    "the touched-bucket collect and the write") {
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-jobs").toString + "/tbl"
+    Upsert.mergeAndWrite(spark, tmp, target, childSpec, fullSync = true)
+    val executions = sqlExecutions {
+      Upsert.mergeAndWrite(spark, tmp, staged, childSpec, fullSync = false)
+    }
+    assert(executions.size === 2, executions)
+    assert(rows(spark.read.parquet(tmp)) ===
+      Set(("r3", "ie2", "keep"), ("r9", "ie1", "new-a")))
   }
 
   test("incremental mergeAndWrite rewrites ONLY the touched bucket dirs") {
