@@ -202,85 +202,14 @@ object NativeAdc {
   }
 
   /** `cells` is array<struct<neighbor_id: long, codes: array<int>>>.
-    * Returns the cell's candidates scored by ADC, sorted (adc desc,
-    * id asc), truncated to `s`, excluding the probe's own id. Entries
-    * whose ADC is NULL (malformed codes) are skipped — the window
-    * form ranked them behind every finite candidate.
-    *
-    * The ADC table is decoded to primitive rows ONCE per (probe,
-    * cell) row, then each candidate scores with raw lookups — the
-    * same doubles added in the same order as
-    * [[NativeVector.adcSum]] (values bit-identical, spec-pinned),
-    * without `getArray` allocating a wrapper per subspace per
-    * candidate (occupancy × m allocations per row at bulk scale).
-    * Honestly graded: measured timing-NEUTRAL at 90× local[32]
-    * (kernel-stage CPU ~equal across runs; local JIT escape analysis
-    * likely elides the wrappers already) — kept because it bounds
-    * allocation pressure on executors where it may not. */
+    * Returns the cell's candidates scored by ADC
+    * ([[NativeVector.adcSum]] per candidate), sorted (adc desc, id
+    * asc), truncated to `s`, excluding the probe's own id. Entries
+    * whose ADC is NULL (malformed codes, or a code that hits a NULL
+    * table entry) are skipped — the window form ranked them behind
+    * every finite candidate. */
   def adcTopS(probeId: Long, dtable: ArrayData, cells: ArrayData,
               s: Int): ArrayData = {
-    val m = dtable.numElements()
-    val dt = new Array[Array[Double]](m)
-    var decoded = true
-    var j = 0
-    while (decoded && j < m) {
-      if (dtable.isNullAt(j)) decoded = false
-      else {
-        val row = dtable.getArray(j)
-        var p = 0
-        val kk = row.numElements()
-        while (decoded && p < kk) {
-          if (row.isNullAt(p)) decoded = false
-          p += 1
-        }
-        if (decoded) dt(j) = row.toDoubleArray()
-      }
-      j += 1
-    }
-    // A table with null rows/elements (never produced by pqSearch —
-    // MatVecDots emits containsNull=false — but reachable for direct
-    // kernel users) takes the element-checking adcSum path so the
-    // skip-vs-score decision is identical at every index.
-    if (!decoded) return adcTopSSlow(probeId, dtable, cells, s)
-    val n = cells.numElements()
-    val ids = new Array[Long](n)
-    val adcs = new Array[Double](n)
-    var cnt = 0
-    var i = 0
-    while (i < n) {
-      val st = cells.getStruct(i, 2)
-      val id = st.getLong(0)
-      if (id != probeId) {
-        val codes = st.getArray(1)
-        // Inlined adcSum over the decoded table: identical null/range
-        // contract (any mismatch or bad code ⇒ the candidate is
-        // skipped, like a NULL adc).
-        var acc = 0.0
-        var ok = codes.numElements() == m
-        j = 0
-        while (ok && j < m) {
-          if (codes.isNullAt(j) || dt(j) == null) ok = false
-          else {
-            val c = codes.getInt(j)
-            if (c < 0 || c >= dt(j).length) ok = false
-            else acc += dt(j)(c)
-          }
-          j += 1
-        }
-        if (ok) {
-          ids(cnt) = id; adcs(cnt) = acc; cnt += 1
-        }
-      }
-      i += 1
-    }
-    emitSorted(ids, adcs, cnt, s)
-  }
-
-  /** Element-checking fallback for degenerate ADC tables — scores via
-    * [[NativeVector.adcSum]] per candidate (the exact original
-    * contract), paying its per-subspace wrapper allocations. */
-  private def adcTopSSlow(probeId: Long, dtable: ArrayData,
-                          cells: ArrayData, s: Int): ArrayData = {
     val n = cells.numElements()
     val ids = new Array[Long](n)
     val adcs = new Array[Double](n)

@@ -175,18 +175,16 @@ object MergeBattery {
       val feed = FeedCache(
         s"stream_sync:$dir:slices=9701-9709,9709-9901,9901-0201") { feedDir =>
         Seq("1997-01-01" -> "1997-09-01", "1997-09-01" -> "1999-01-01",
-          "1999-01-01" -> "2002-01-01").foreach { case (lo, hi) =>
-          staged(lo, hi).coalesce(1).write.mode("append").parquet(feedDir)
+          "1999-01-01" -> "2002-01-01").zipWithIndex.foreach { case ((lo, hi), i) =>
+          Replay.writeSlice(staged(lo, hi), feedDir, i)
         }
       }
-      // Feed-derived shuffle width (see StreamBattery.replayPartitions:
+      // Feed-derived shuffle width (see Replay.replayPartitions:
       // per-partition machinery, not the operator, dominates a tiny
       // replay at the battery's full width).
-      StreamBattery.withShufflePartitions(s,
-        StreamBattery.replayPartitions(s, feed)) {
+      Replay.withShufflePartitions(s, Replay.replayPartitions(s, feed)) {
         val q = graft.streaming.StreamingSync.syncTable(
-          s.readStream.schema(staged("1997-01-01", "1997-05-01").schema)
-            .option("maxFilesPerTrigger", 1).parquet(feed),
+          Replay.source(s, feed, staged("1997-01-01", "1997-05-01").schema),
           target, s"$base/ckpt", ordersPk, numBuckets = 16)
         q.awaitTermination()
         s.read.parquet(target).drop(Upsert.BucketCol).orderBy(col("id"))

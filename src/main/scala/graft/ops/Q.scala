@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import graft.source.QuadSource
 
 /** One registered correctness/bench query.
   *
@@ -89,6 +93,165 @@ object Scratch {
       finally s.close()
     }
   }
+}
+
+/** View-shaped quads melted from relational testdata rows. Every
+  * quad-path gate builds its feed the same way: one `quad` struct per
+  * statement, exploded per row by `explode` — a narrow transformation,
+  * no shuffle. */
+object Quads {
+  private val NoStr = lit(null).cast("string")
+
+  /** One quad as a struct with `QuadSource.schema`'s fields, in its
+    * order. The object is cast to string; datatype and graph are NULL. */
+  def quad(subject: Column, predicate: String, obj: Column,
+           lang: Option[String] = None): Column =
+    struct(subject.as("subject"), lit(predicate).as("predicate"),
+      obj.cast("string").as("obj"), lang.fold(NoStr)(lit).as("lang"),
+      NoStr.as("datatype"), NoStr.as("graph"))
+
+  /** Each row of `rows` melted into its `quads`, in `QuadSource.schema`
+    * form. A quad whose object is NULL is dropped: an absent optional
+    * value melts to no quad. */
+  def frame(rows: DataFrame, quads: Column*): DataFrame =
+    rows.select(explode(array(quads: _*)).as("t"))
+      .filter(col("t.obj").isNotNull)
+      .select(QuadSource.schema.fieldNames.map(f => col(s"t.$f").as(f)).toSeq: _*)
+}
+
+/** Deterministic file-feed replay for the streaming gates.
+  *
+  *  - batch ORDER is pinned by explicit file modification times (the
+  *    file source triggers oldest-first), so the replay is
+  *    reproducible run over run;
+  *  - `drain` reads one file per micro-batch and runs the query to
+  *    exhaustion (`AvailableNow`) into a memory sink.
+  */
+object Replay {
+
+  /** Run `body` with session conf `key` set to `value`, restoring the
+    * previous value afterwards — Verify/Bench share one session across
+    * the battery. */
+  def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
+  }
+
+  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
+    * restoring the previous value afterwards. The replay feeds are
+    * deliberately tiny (the gates prove STATE CONTRACTS — watermark
+    * eviction, cross-batch state, topo-ordered merges — not volume),
+    * but every stateful operator opens a state-store instance PER
+    * SHUFFLE PARTITION per micro-batch: at the battery's 32
+    * partitions, the 4-batch outer join opened ~hundreds of store
+    * instances to shuffle a few thousand rows, and that store churn —
+    * not the operators — dominated ~31 s of battery time (r13 verdict
+    * #2). Partition count is a volume dial, not a semantics dial:
+    * state contracts are per-key and every gate orderBy's its result,
+    * so the oracle hash is invariant. A real deployment sizes shuffle
+    * partitions to its stream volume exactly the same way. */
+  def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Run `body` with the RocksDB state store provider — the provider a
+    * full-corpus deployment uses (state no longer bounded by executor
+    * heap; see EventTimeOps scaladoc). Gating the custom-state queries
+    * on it proves the sessionize/dedup state contracts are not
+    * HDFSBackedStateStore-only: same oracle hashes either way.
+    * `GRAFT_STATE_STORE=hdfs` opts out (e.g. a platform without the
+    * rocksdbjni native lib). */
+  private def withRocksDb[A](s: SparkSession)(body: => A): A =
+    if (sys.env.get("GRAFT_STATE_STORE").contains("hdfs")) body
+    else withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")(body)
+
+  /** Bytes of the files directly under `dir` (0 when unreadable). */
+  def dirBytes(s: SparkSession, dir: String): Long =
+    try {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
+    } catch { case _: Exception => 0L }
+
+  /** Data-derived shuffle width for a replay feed: ~1 MB of feed
+    * parquet per partition, floored at 4 and capped at the session's
+    * core count. At sf0.1 every feed is well under 4 MB → width 4; at
+    * 90× the same feeds carry 90× the rows and derive back up to the
+    * full width — a fixed width would either pay store churn at sf
+    * scale or starve the 90× replay (both measured; see
+    * withShufflePartitions). */
+  def replayPartitions(s: SparkSession, feedDir: String): Int = {
+    val bytes = dirBytes(s, feedDir)
+    math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
+  }
+
+  /** Append `df` to the feed `dir` as its slice `seq` (one file), and
+    * pin the batch order by modification time. */
+  def writeSlice(df: DataFrame, dir: String, seq: Int): Unit = {
+    val spark = df.sparkSession
+    df.coalesce(1).write.mode("append").parquet(dir)
+    // pin the batch order: the file source sorts by modification time
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.listStatus(new Path(dir))
+      .filter(f => f.getPath.getName.startsWith("part-"))
+      .sortBy(_.getModificationTime)
+    status.zipWithIndex.foreach { case (f, i) =>
+      fs.setTimes(f.getPath, 1000000000000L + i * 10000L, -1)
+    }
+    require(status.length == seq + 1, s"expected ${seq + 1} slice files")
+  }
+
+  /** Write `ev` as `n` ascending event-time slices (slices 0 until n)
+    * of equal time span, cut on the millisecond grid of its `ts`
+    * column. Ascending order means no slice can fall behind the
+    * watermark. Returns the last event's epoch-millis, from which
+    * callers place their sentinels. */
+  def writeTimeSlices(ev: DataFrame, n: Int, dir: String): Long = {
+    val mm = ev.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts")))).head()
+    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val ms = unix_millis(col("ts"))
+    val cuts = (1 until n).map(k => lo + k * ((hi - lo) / n))
+    for (i <- 0 until n) {
+      val after = if (i == 0) lit(true) else ms >= cuts(i - 1)
+      val before = if (i == n - 1) lit(true) else ms < cuts(i)
+      writeSlice(ev.filter(after && before), dir, i)
+    }
+    hi
+  }
+
+  /** The feed `feed` (rows of `schema`) as a file-source stream of one
+    * file per micro-batch, oldest first. */
+  def source(s: SparkSession, feed: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(feed)
+
+  /** Replay `feed` (rows of `schema`) one file per micro-batch through
+    * `query` into a uniquely named memory sink, under `AvailableNow`,
+    * and return the sink's table. `query` receives the feed's source
+    * and may open it more than once (one stream per join side). The
+    * shuffle width derives from the feed (`replayPartitions`); `rocksDb`
+    * selects the RocksDB state store. Both settings are restored on
+    * return and on failure, and a failed query's exception propagates. */
+  def drain(s: SparkSession, feed: String, schema: StructType,
+            rocksDb: Boolean = false)(
+      query: (() => DataFrame) => Dataset[_]): DataFrame =
+    withShufflePartitions(s, replayPartitions(s, feed)) {
+      def run: DataFrame = {
+        val name = s"graft_drain_${System.nanoTime()}"
+        val q = query(() => source(s, feed, schema))
+          .writeStream.format("memory").queryName(name)
+          .trigger(Trigger.AvailableNow())
+          .outputMode("append").start()
+        try q.awaitTermination() finally q.stop()
+        s.table(name)
+      }
+      if (rocksDb) withRocksDb(s)(run) else run
+    }
 }
 
 /** Testdata table loader (TESTDATA.md: one parquet file per table). */

@@ -13,18 +13,18 @@ import graft.view.Patterns
   *
   * The driver testdata has no quad tables, so each query first *melts*
   * relational rows into view-shaped quads (`urn:kg-to-postgres:` routing
-  * + one quad per column, FIXTURES.md §A) with a codegen'd
-  * `explode(array(struct…))` — a narrow transformation, no shuffle —
-  * and then runs the real engine operators on the quads. The oracle
+  * + one quad per column, FIXTURES.md §A) with `Quads.frame` — a
+  * codegen'd `explode(array(struct…))`, a narrow transformation, no
+  * shuffle — and then runs the real engine operators on the quads. The oracle
   * states the expected result directly over the relational tables, so
   * the melt→match→pivot round-trip is what's being checked.
   */
 object QuadBattery {
 
+  import Quads.quad
+
   private val ns = Ns.KgToPostgres
-  private def q(pred: Column, obj: Column, lang: Column): Column =
-    struct(pred.as("predicate"), obj.cast("string").as("obj"), lang.as("lang"))
-  private val noLang = lit(null).cast("string")
+  private val nl = Some("nl")
 
   private def ttlEscape(c: Column): Column =
     graft.functions.Functions.ntEscapeLiteral(c)
@@ -34,36 +34,23 @@ object QuadBattery {
     * uppercase name (must override, stream.ts:97-103) and a second
     * `zz_`-prefixed segment value (deterministic min must drop it). */
   def melt(s: SparkSession, dir: String): DataFrame = {
-    val c = Td(s, dir, "customer").select(
-      concat(lit("urn:c/"), col("c_custkey")).as("subject"),
-      explode(array(
-        q(lit(Ns.TableName), lit("graph.customer_view"), noLang),
-        q(lit(ns + "c_name"), col("c_name"), noLang),
-        q(lit(ns + "c_name"), upper(col("c_name")), lit("nl")),
-        q(lit(ns + "c_mktsegment"), col("c_mktsegment"), noLang),
-        q(lit(ns + "c_mktsegment"), concat(lit("zz_"), col("c_mktsegment")), noLang),
-        q(lit(ns + "c_nationkey"), col("c_nationkey"), noLang),
-        q(lit("urn:p/nk"), concat(lit("urn:n/"), col("c_nationkey")), noLang)
-      )).as("t"))
-    val o = Td(s, dir, "orders").select(
-      concat(lit("urn:o/"), col("o_orderkey")).as("subject"),
-      explode(array(
-        q(lit("urn:p/cust"), concat(lit("urn:c/"), col("o_custkey")), noLang),
-        q(lit("urn:p/status"), col("o_orderstatus"), noLang),
-        q(lit("urn:p/priority"),
-          when(col("o_orderpriority") === "1-URGENT", col("o_orderpriority")), noLang)
-      )).as("t"))
-    val n = Td(s, dir, "nation").select(
-      concat(lit("urn:n/"), col("n_nationkey")).as("subject"),
-      explode(array(
-        q(lit("urn:p/n_name"), col("n_name"), noLang)
-      )).as("t"))
-    c.unionByName(o).unionByName(n)
-      .filter(col("t.obj").isNotNull) // absent optional values melt to no quad
-      .select(col("subject"), col("t.predicate").as("predicate"),
-        col("t.obj").as("obj"), col("t.lang").as("lang"),
-        lit(null).cast("string").as("datatype"),
-        lit(null).cast("string").as("graph"))
+    val c = concat(lit("urn:c/"), col("c_custkey"))
+    val o = concat(lit("urn:o/"), col("o_orderkey"))
+    Quads.frame(Td(s, dir, "customer"),
+      quad(c, Ns.TableName, lit("graph.customer_view")),
+      quad(c, ns + "c_name", col("c_name")),
+      quad(c, ns + "c_name", upper(col("c_name")), nl),
+      quad(c, ns + "c_mktsegment", col("c_mktsegment")),
+      quad(c, ns + "c_mktsegment", concat(lit("zz_"), col("c_mktsegment"))),
+      quad(c, ns + "c_nationkey", col("c_nationkey")),
+      quad(c, "urn:p/nk", concat(lit("urn:n/"), col("c_nationkey"))))
+      .unionByName(Quads.frame(Td(s, dir, "orders"),
+        quad(o, "urn:p/cust", concat(lit("urn:c/"), col("o_custkey"))),
+        quad(o, "urn:p/status", col("o_orderstatus")),
+        quad(o, "urn:p/priority",
+          when(col("o_orderpriority") === "1-URGENT", col("o_orderpriority")))))
+      .unionByName(Quads.frame(Td(s, dir, "nation"),
+        quad(concat(lit("urn:n/"), col("n_nationkey")), "urn:p/n_name", col("n_name"))))
   }
 
   /** Subject pivot round-trip: melt → `SubjectPivot.pivotTable` →
@@ -175,21 +162,14 @@ object QuadBattery {
         "c_name AS skos_pref_label FROM customer ORDER BY 1"),
     (s, dir) => {
       import graft.view.OrganizationPipeline.{V => OV}
-      val cust = Td(s, dir, "customer")
-      val orgQuads = cust.select(
-        concat(lit("urn:c/"), col("c_custkey")).as("subject"),
-        explode(array(
-          q(lit(Ns.RdfType), lit(OV.Organization), noLang),
-          q(lit(OV.PrefLabel), col("c_name"), lit("nl")),
-          q(lit(OV.Identifier), concat(lit("OR-"), col("c_custkey")), noLang),
-          q(lit(OV.Description), col("c_mktsegment"), noLang),
-          q(lit(OV.Classification),
-            concat(lit("https://example.org/klass/"), col("c_mktsegment")), noLang)
-        )).as("t"))
-        .select(col("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
+      val c = concat(lit("urn:c/"), col("c_custkey"))
+      val orgQuads = Quads.frame(Td(s, dir, "customer"),
+        quad(c, Ns.RdfType, lit(OV.Organization)),
+        quad(c, OV.PrefLabel, col("c_name"), nl),
+        quad(c, OV.Identifier, concat(lit("OR-"), col("c_custkey"))),
+        quad(c, OV.Description, col("c_mktsegment")),
+        quad(c, OV.Classification,
+          concat(lit("https://example.org/klass/"), col("c_mktsegment"))))
       graft.view.OrganizationPipeline(orgQuads)("graph.organization")
         .orderBy(col("id"))
     }
@@ -218,24 +198,13 @@ object QuadBattery {
         "FROM orders ORDER BY 2"),
     (s, dir) => {
       import graft.view.PersonPipeline.{V => PV}
-      val orders = Td(s, dir, "orders")
-      val quads = orders.select(
-        concat(lit("urn:o/"), col("o_orderkey")).as("ie"),
-        concat(lit("urn:m/"), col("o_orderkey")).as("m"),
-        col("o_orderkey"))
-        .select(explode(array(
-          struct(col("ie").as("subject"), lit(PV.Mentions).as("predicate"),
-            col("m").as("obj"), noLang.as("lang")),
-          struct(col("m").as("subject"), lit(PV.Confidence).as("predicate"),
-            when(col("o_orderkey") % 2 === 0,
-              concat(lit("0."), lpad(col("o_orderkey") % 100, 2, "0")))
-              .otherwise(lit(null)).as("obj"), noLang.as("lang"))
-        )).as("t"))
-        .filter(col("t.obj").isNotNull)
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
+      val m = concat(lit("urn:m/"), col("o_orderkey"))
+      val quads = Quads.frame(Td(s, dir, "orders"),
+        quad(concat(lit("urn:o/"), col("o_orderkey")), PV.Mentions, m),
+        quad(m, PV.Confidence,
+          when(col("o_orderkey") % 2 === 0,
+            concat(lit("0."), lpad(col("o_orderkey") % 100, 2, "0")))
+            .otherwise(lit(null))))
       graft.view.PersonPipeline(quads)("graph.schema_mentions")
         .withColumn("confidence", col("confidence").cast("double"))
         .orderBy(col("intellectual_entity_id"))
@@ -261,33 +230,16 @@ object QuadBattery {
         "WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND c_acctbal <= 0) ORDER BY 1, 2"),
     (s, dir) => {
       import graft.delete.DeleteFlow.{V => DV}
-      val orders = Td(s, dir, "orders")
-      val customer = Td(s, dir, "customer")
-      val fragQuads = orders.select(
-        concat(lit("urn:f/"), col("o_orderkey")).as("f"),
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("mod"))
-        .select(explode(array(
-          struct(col("f").as("subject"), lit(DV.Modified).as("predicate"), col("mod").as("obj")),
-          struct(col("f").as("subject"), lit(DV.DateDeleted).as("predicate"),
-            when(col("o_orderstatus") === "F", col("mod")).as("obj")),
-          struct(col("f").as("subject"), lit(DV.Pid).as("predicate"),
-            col("o_orderkey").cast("string").as("obj")),
-          struct(col("f").as("subject"), lit(DV.DerivedFrom).as("predicate"),
-            concat(lit("urn:c/"), col("o_custkey")).as("obj"))
-        )).as("t"))
-      val licQuads = customer.select(
-        concat(lit("urn:c/"), col("c_custkey")).as("subject"),
-        lit(DV.License).as("predicate"),
-        when(col("c_acctbal") > 0, lit("VIAA-PUBLIEK-METADATA-ALL")).as("obj"))
-      val quads = fragQuads
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"))
-        .unionByName(licQuads)
-        .filter(col("obj").isNotNull)
-        .withColumn("lang", lit(null).cast("string"))
-        .withColumn("datatype", lit(null).cast("string"))
-        .withColumn("graph", lit(null).cast("string"))
+      val f = concat(lit("urn:f/"), col("o_orderkey"))
+      val mod = date_format(col("o_orderdate"), "yyyy-MM-dd")
+      val quads = Quads.frame(Td(s, dir, "orders"),
+        quad(f, DV.Modified, mod),
+        quad(f, DV.DateDeleted, when(col("o_orderstatus") === "F", mod)),
+        quad(f, DV.Pid, col("o_orderkey")),
+        quad(f, DV.DerivedFrom, concat(lit("urn:c/"), col("o_custkey"))))
+        .unionByName(Quads.frame(Td(s, dir, "customer"),
+          quad(concat(lit("urn:c/"), col("c_custkey")), DV.License,
+            when(col("c_acctbal") > 0, lit("VIAA-PUBLIEK-METADATA-ALL")))))
       graft.delete.DeleteFlow
         .flagDeletes(quads, since = Some("1997-01-01"), prefixIdBase = "urn:ie/")
         .orderBy(col("intellectual_entity_id"), col("mh_fragment_identifier"))
@@ -440,73 +392,52 @@ object QuadBattery {
       val sp = concat(lit("urn:sp/"), col("o_orderkey"))
       val ch = concat(lit("urn:ch/"), col("o_orderkey"))
       val cap = concat(lit("urn:cap/"), col("o_orderkey"))
-      val quads = orders.select(explode(array(
-        q(lit(Ns.RdfType), lit(EV.SchemaNs + "AudioObject"), noLang)
-          .withField("subject", e),
-        q(lit(EV.Identifier), col("o_orderkey"), noLang).withField("subject", e),
-        q(lit(EV.Name), col("o_orderpriority"), noLang).withField("subject", e),
-        q(lit(EV.Modified), date_format(col("o_orderdate"), "yyyy-MM-dd"), noLang)
-          .withField("subject", e),
-        q(lit(EV.License),
+      val quads = Quads.frame(orders,
+        quad(e, Ns.RdfType, lit(EV.SchemaNs + "AudioObject")),
+        quad(e, EV.Identifier, col("o_orderkey")),
+        quad(e, EV.Name, col("o_orderpriority")),
+        quad(e, EV.Modified, date_format(col("o_orderdate"), "yyyy-MM-dd")),
+        quad(e, EV.License,
           when(col("o_orderstatus") =!= "F", lit("VIAA-PUBLIEK-METADATA-ALL"))
-            .otherwise(lit("NOT-ALLOWED")), noLang).withField("subject", e),
+            .otherwise(lit("NOT-ALLOWED"))),
         // nl abstract + en decoy: the lang filter must keep only nl
-        q(lit(EV.Abstract), concat(lit("samenvatting "), col("o_orderpriority")), lit("nl"))
-          .withField("subject", e),
-        q(lit(EV.Abstract), concat(lit("EN "), col("o_orderpriority")), lit("en"))
-          .withField("subject", e),
+        quad(e, EV.Abstract, concat(lit("samenvatting "), col("o_orderpriority")), nl),
+        quad(e, EV.Abstract, concat(lit("EN "), col("o_orderpriority")), Some("en")),
         // en-only description: the nl filter must leave the column NULL
-        q(lit(EV.Description), concat(lit("EN desc "), col("o_orderpriority")), lit("en"))
-          .withField("subject", e),
+        quad(e, EV.Description,
+          concat(lit("EN desc "), col("o_orderpriority")), Some("en")),
         // audit-added scalar families (av-audio.sparql:262-274,303-311)
-        q(lit(EV.DctRights), concat(lit("rights-"), col("o_orderstatus")), noLang)
-          .withField("subject", e),
-        q(lit(EV.HasObjectType), col("o_orderpriority"), noLang)
-          .withField("subject", e),
-        q(lit(EV.HasCastMember), concat(lit("cast-"), col("o_custkey")), noLang)
-          .withField("subject", e),
-        q(lit(EV.Synopsis), concat(lit("syn "), col("o_orderpriority")), noLang)
-          .withField("subject", e),
-        q(lit(EV.CopyrightYear), date_format(col("o_orderdate"), "yyyy"), noLang)
-          .withField("subject", e),
-        q(lit(EV.CreditText), concat(lit("credit "), col("o_orderstatus")), noLang)
-          .withField("subject", e),
-        q(lit(EV.MinDateCreated),
-          concat(date_format(col("o_orderdate"), "yyyy"), lit("-01-01")), noLang)
-          .withField("subject", e),
-        q(lit(EV.MaxDateCreated),
-          concat(date_format(col("o_orderdate"), "yyyy"), lit("-12-31")), noLang)
-          .withField("subject", e),
-        q(lit(EV.DateCreated), date_format(col("o_orderdate"), "yyyy-MM-dd"), noLang)
-          .withField("subject", e),
-        q(lit(EV.IsPartOfRel), concat(lit("urn:col/"), col("o_custkey")), noLang)
-          .withField("subject", e),
+        quad(e, EV.DctRights, concat(lit("rights-"), col("o_orderstatus"))),
+        quad(e, EV.HasObjectType, col("o_orderpriority")),
+        quad(e, EV.HasCastMember, concat(lit("cast-"), col("o_custkey"))),
+        quad(e, EV.Synopsis, concat(lit("syn "), col("o_orderpriority"))),
+        quad(e, EV.CopyrightYear, date_format(col("o_orderdate"), "yyyy")),
+        quad(e, EV.CreditText, concat(lit("credit "), col("o_orderstatus"))),
+        quad(e, EV.MinDateCreated,
+          concat(date_format(col("o_orderdate"), "yyyy"), lit("-01-01"))),
+        quad(e, EV.MaxDateCreated,
+          concat(date_format(col("o_orderdate"), "yyyy"), lit("-12-31"))),
+        quad(e, EV.DateCreated, date_format(col("o_orderdate"), "yyyy-MM-dd")),
+        quad(e, EV.IsPartOfRel, concat(lit("urn:col/"), col("o_custkey"))),
         // spatial /-path: e --spatial--> sp --name--> clerk
-        q(lit(EV.Spatial), sp, noLang).withField("subject", e),
-        q(lit(EV.SchemaNs + "name"), col("o_orderpriority"), noLang).withField("subject", sp),
-        q(lit(EV.Temporal), col("o_orderstatus"), noLang).withField("subject", e),
+        quad(e, EV.Spatial, sp),
+        quad(sp, EV.SchemaNs + "name", col("o_orderpriority")),
+        quad(e, EV.Temporal, col("o_orderstatus")),
         // copyright holder: prefLabel|name alternative through a mid node
-        q(lit(EV.CopyrightHolder), ch, noLang).withField("subject", e),
-        q(lit(EV.PrefLabel),
+        quad(e, EV.CopyrightHolder, ch),
+        quad(ch, EV.PrefLabel,
           when(col("o_orderkey") % 2 === 0, concat(lit("CH-"), col("o_custkey")))
-            .otherwise(lit(null)), noLang).withField("subject", ch),
-        q(lit(EV.SchemaNs + "name"),
+            .otherwise(lit(null))),
+        quad(ch, EV.SchemaNs + "name",
           when(col("o_orderkey") % 2 === 1, concat(lit("CH-"), col("o_custkey")))
-            .otherwise(lit(null)), noLang).withField("subject", ch),
+            .otherwise(lit(null))),
         // EXISTS flag: e --hasCaptioning--> cap --rdf:type--> OpenCaptions
-        q(lit(EV.HasCaptioning),
-          when(col("o_orderstatus") === "O", cap).otherwise(lit(null)), noLang)
-          .withField("subject", e),
-        q(lit(Ns.RdfType),
+        quad(e, EV.HasCaptioning,
+          when(col("o_orderstatus") === "O", cap).otherwise(lit(null))),
+        quad(cap, Ns.RdfType,
           when(col("o_orderstatus") === "O", lit(EV.OpenCaptions))
-            .otherwise(lit(null)), noLang).withField("subject", cap)
-      )).as("t"))
-        .filter(col("t.obj").isNotNull)
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
-      val cfg = EntityPipeline.Config("gate", Seq(EV.SchemaNs + "AudioObject"),
+            .otherwise(lit(null))))
+      val cfg = EntityPipeline.Config(Seq(EV.SchemaNs + "AudioObject"),
         mimeTypes = Nil, includePeaks = true, nullLicenses = Nil)
       val tables = EntityPipeline(quads, cfg,
         graft.view.ViewParams(since = Some("1996-01-01")))
@@ -607,125 +538,86 @@ object QuadBattery {
       val even = ok % 2 === 0
       val open = col("o_orderstatus") === "O"
       def onlyIf(cond: Column, v: Column): Column = when(cond, v).otherwise(lit(null))
-      val quads = orders.select(explode(array(
+      val quads = Quads.frame(orders,
         // base match
-        q(lit(graft.model.Ns.RdfType), lit(EV.SchemaNs + "AudioObject"), noLang)
-          .withField("subject", e),
-        q(lit(EV.License),
+        quad(e, Ns.RdfType, lit(EV.SchemaNs + "AudioObject")),
+        quad(e, EV.License,
           when(col("o_orderstatus") =!= "F", lit("VIAA-PUBLIEK-METADATA-ALL"))
-            .otherwise(lit("NOT-ALLOWED")), noLang).withField("subject", e),
+            .otherwise(lit("NOT-ALLOWED"))),
         // collection family
-        q(lit(EV.IsPartOf), coll, noLang).withField("subject", e),
-        q(lit(graft.model.Ns.RdfType),
+        quad(e, EV.IsPartOf, coll),
+        quad(coll, Ns.RdfType,
           when(ck % 2 === 0, lit(EV.SchemaNs + "Episode"))
-            .otherwise(lit(EV.SchemaNs + "ArchiveComponent")), noLang)
-          .withField("subject", coll),
-        q(lit(EV.SchemaNs + "name"), concat(lit("Collection "), ck), noLang)
-          .withField("subject", coll),
-        q(lit(EV.SeasonNumber), onlyIf(ck % 2 === 0, ck % 12), noLang)
-          .withField("subject", coll),
-        q(lit(EV.IsPartOf), concat(lit("urn:super/"), ck % 5), noLang)
-          .withField("subject", coll),
+            .otherwise(lit(EV.SchemaNs + "ArchiveComponent"))),
+        quad(coll, EV.SchemaNs + "name", concat(lit("Collection "), ck)),
+        quad(coll, EV.SeasonNumber, onlyIf(ck % 2 === 0, ck % 12)),
+        quad(coll, EV.IsPartOf, concat(lit("urn:super/"), ck % 5)),
         // carrier family — crep/pc carry their REQUIRED type rows
         // (av-audio.sparql:379-384)
-        q(lit(EV.Isr), crep, noLang).withField("subject", e),
-        q(lit(graft.model.Ns.RdfType), lit(EV.CarrierRepresentation), noLang)
-          .withField("subject", crep),
-        q(lit(EV.StoredAt), pc, noLang).withField("subject", crep),
-        q(lit(graft.model.Ns.RdfType), lit(EV.PhysicalCarrier), noLang)
-          .withField("subject", pc),
+        quad(e, EV.Isr, crep),
+        quad(crep, Ns.RdfType, lit(EV.CarrierRepresentation)),
+        quad(crep, EV.StoredAt, pc),
+        quad(pc, Ns.RdfType, lit(EV.PhysicalCarrier)),
         // reel arm (:437-453): even carriers are ImageReels; the
         // ontology labels the type nl (plus an en decoy the lang filter
         // must drop) — car_type binds and the coloring arm unlocks
-        q(lit(graft.model.Ns.RdfType), onlyIf(even, lit(EV.ImageReel)), noLang)
-          .withField("subject", pc),
-        q(lit(EV.RdfsLabel), lit("beeldspoel"), lit("nl"))
-          .withField("subject", lit(EV.ImageReel)),
-        q(lit(EV.RdfsLabel), lit("image reel"), lit("en"))
-          .withField("subject", lit(EV.ImageReel)),
-        q(lit(EV.SchemaNs + "name"), concat(lit("Carrier "), ok), lit("nl"))
-          .withField("subject", pc),
-        q(lit(EV.SchemaNs + "name"), lit("EN Carrier"), lit("en"))
-          .withField("subject", pc),
-        q(lit(EV.Medium), med, noLang).withField("subject", pc),
-        q(lit(EV.PrefLabel), concat(lit("medium-"), col("o_orderstatus")), lit("nl"))
-          .withField("subject", med),
-        q(lit(EV.ProductionMethod), pm, noLang).withField("subject", crep),
-        q(lit(EV.PrefLabel), concat(lit("pm-"), col("o_orderpriority")), lit("nl"))
-          .withField("subject", pm),
-        q(lit(EV.Identifier), ok, noLang).withField("subject", pc),
-        q(lit(EV.Material),
-          onlyIf(ok % 2 === 1, concat(lit("mat-"), col("o_orderstatus"))), noLang)
-          .withField("subject", pc),
-        q(lit(EV.MaterialExtent),
-          onlyIf(even, concat(lit("ext-"), col("o_orderstatus"))), noLang)
-          .withField("subject", pc),
-        q(lit(EV.HeightProp), h, noLang).withField("subject", pc),
-        q(lit(EV.ValueProp), ok % 50, noLang).withField("subject", h),
-        q(lit(EV.UnitText), lit("cm"), noLang).withField("subject", h),
-        q(lit(EV.HasCaptioning), onlyIf(open, cc), noLang).withField("subject", pc),
-        q(lit(graft.model.Ns.RdfType), onlyIf(open, lit(EV.OpenCaptions)), noLang)
-          .withField("subject", cc),
-        q(lit(EV.ErorSou), onlyIf(open, pc), noLang).withField("subject", ev),
-        q(lit(graft.model.Ns.RdfType), onlyIf(open, lit(EV.DigitizationType)), noLang)
-          .withField("subject", ev),
-        q(lit(EV.StartedAtTime),
-          onlyIf(open, date_format(col("o_orderdate"), "yyyy-MM-dd")), noLang)
-          .withField("subject", ev),
-        q(lit(EV.ColoringType), onlyIf(even, ct), noLang).withField("subject", pc),
-        q(lit(EV.PrefLabel), concat(lit("color-"), col("o_orderpriority")), lit("nl"))
-          .withField("subject", ct),
+        quad(pc, Ns.RdfType, onlyIf(even, lit(EV.ImageReel))),
+        quad(lit(EV.ImageReel), EV.RdfsLabel, lit("beeldspoel"), nl),
+        quad(lit(EV.ImageReel), EV.RdfsLabel, lit("image reel"), Some("en")),
+        quad(pc, EV.SchemaNs + "name", concat(lit("Carrier "), ok), nl),
+        quad(pc, EV.SchemaNs + "name", lit("EN Carrier"), Some("en")),
+        quad(pc, EV.Medium, med),
+        quad(med, EV.PrefLabel, concat(lit("medium-"), col("o_orderstatus")), nl),
+        quad(crep, EV.ProductionMethod, pm),
+        quad(pm, EV.PrefLabel, concat(lit("pm-"), col("o_orderpriority")), nl),
+        quad(pc, EV.Identifier, ok),
+        quad(pc, EV.Material,
+          onlyIf(ok % 2 === 1, concat(lit("mat-"), col("o_orderstatus")))),
+        quad(pc, EV.MaterialExtent,
+          onlyIf(even, concat(lit("ext-"), col("o_orderstatus")))),
+        quad(pc, EV.HeightProp, h),
+        quad(h, EV.ValueProp, ok % 50),
+        quad(h, EV.UnitText, lit("cm")),
+        quad(pc, EV.HasCaptioning, onlyIf(open, cc)),
+        quad(cc, Ns.RdfType, onlyIf(open, lit(EV.OpenCaptions))),
+        quad(ev, EV.ErorSou, onlyIf(open, pc)),
+        quad(ev, Ns.RdfType, onlyIf(open, lit(EV.DigitizationType))),
+        quad(ev, EV.StartedAtTime,
+          onlyIf(open, date_format(col("o_orderdate"), "yyyy-MM-dd"))),
+        quad(pc, EV.ColoringType, onlyIf(even, ct)),
+        quad(ct, EV.PrefLabel, concat(lit("color-"), col("o_orderpriority")), nl),
         // representation + file
-        q(lit(EV.Represents), e, noLang).withField("subject", rep),
-        q(lit(EV.SchemaNs + "name"), concat(lit("Rep "), ok), lit("nl"))
-          .withField("subject", rep),
-        q(lit(EV.Caption), concat(lit("cap-"), ok), noLang).withField("subject", rep),
-        q(lit(EV.Transcript), concat(lit("tr-"), ok), noLang).withField("subject", rep),
-        q(lit(EV.StartTime), onlyIf(ok % 2 === 1, lit("0")), noLang)
-          .withField("subject", rep),
-        q(lit(EV.EndTime), onlyIf(ok % 2 === 1, ok % 100), noLang)
-          .withField("subject", rep),
-        q(lit(EV.IsMediaFragmentOf),
-          onlyIf(ok % 2 === 1, concat(lit("urn:parent/"), ok)), noLang)
-          .withField("subject", rep),
-        q(lit(EV.Hsr), concat(lit("urn:root/"), ok), noLang).withField("subject", rep),
-        q(lit(EV.NextInSequence), onlyIf(even, concat(lit("urn:prev/"), ok)), noLang)
-          .withField("subject", rep),
-        q(lit(EV.MimeType), lit("audio/mpeg"), noLang).withField("subject", file),
-        q(lit(EV.OriginalName), concat(lit("f"), ok, lit(".mp3")), noLang)
-          .withField("subject", file),
-        q(lit(EV.Duration), lit("PT2M"), noLang).withField("subject", file),
-        q(lit(EV.SchemaNs + "name"), concat(lit("File "), ok), lit("nl"))
-          .withField("subject", file),
-        q(lit(EV.ThumbnailUrl), concat(lit("http://t/"), ok), noLang)
-          .withField("subject", file),
-        q(lit(EV.StoredAt), loc, noLang).withField("subject", file),
-        q(lit(EV.RdfValue), concat(lit("s3://b/"), ok), noLang)
-          .withField("subject", loc),
-        q(lit(EV.Includes), file, noLang).withField("subject", rep),
+        quad(rep, EV.Represents, e),
+        quad(rep, EV.SchemaNs + "name", concat(lit("Rep "), ok), nl),
+        quad(rep, EV.Caption, concat(lit("cap-"), ok)),
+        quad(rep, EV.Transcript, concat(lit("tr-"), ok)),
+        quad(rep, EV.StartTime, onlyIf(ok % 2 === 1, lit("0"))),
+        quad(rep, EV.EndTime, onlyIf(ok % 2 === 1, ok % 100)),
+        quad(rep, EV.IsMediaFragmentOf,
+          onlyIf(ok % 2 === 1, concat(lit("urn:parent/"), ok))),
+        quad(rep, EV.Hsr, concat(lit("urn:root/"), ok)),
+        quad(rep, EV.NextInSequence, onlyIf(even, concat(lit("urn:prev/"), ok))),
+        quad(file, EV.MimeType, lit("audio/mpeg")),
+        quad(file, EV.OriginalName, concat(lit("f"), ok, lit(".mp3"))),
+        quad(file, EV.Duration, lit("PT2M")),
+        quad(file, EV.SchemaNs + "name", concat(lit("File "), ok), nl),
+        quad(file, EV.ThumbnailUrl, concat(lit("http://t/"), ok)),
+        quad(file, EV.StoredAt, loc),
+        quad(loc, EV.RdfValue, concat(lit("s3://b/"), ok)),
+        quad(rep, EV.Includes, file),
         // roles + things — the TWO-node structure (av-audio.sparql
         // :328-343): e →creator→ role (a Role, roleName) →creator→
         // thing (a Thing, name). The direct e →contributor→ thing decoy
         // is the OLD flattened shape and must produce NO role row (the
         // thing is not a typed Role node).
-        q(lit(EV.Creator), roleNode, noLang).withField("subject", e),
-        q(lit(graft.model.Ns.RdfType), lit(EV.SchemaRole), noLang)
-          .withField("subject", roleNode),
-        q(lit(EV.RoleName), lit("maker"), noLang).withField("subject", roleNode),
-        q(lit(EV.Creator), th, noLang).withField("subject", roleNode),
-        q(lit(EV.Contributor), th, noLang).withField("subject", e),
-        q(lit(graft.model.Ns.RdfType), lit(EV.SchemaThing), noLang)
-          .withField("subject", th),
-        q(lit(EV.SchemaNs + "name"), concat(lit("Thing "), ck), noLang)
-          .withField("subject", th)
-      )).as("t"))
-        .filter(col("t.obj").isNotNull)
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
-      val cfg = EntityPipeline.Config("gate-families",
-        Seq(EV.SchemaNs + "AudioObject"),
+        quad(e, EV.Creator, roleNode),
+        quad(roleNode, Ns.RdfType, lit(EV.SchemaRole)),
+        quad(roleNode, EV.RoleName, lit("maker")),
+        quad(roleNode, EV.Creator, th),
+        quad(e, EV.Contributor, th),
+        quad(th, Ns.RdfType, lit(EV.SchemaThing)),
+        quad(th, EV.SchemaNs + "name", concat(lit("Thing "), ck)))
+      val cfg = EntityPipeline.Config(Seq(EV.SchemaNs + "AudioObject"),
         mimeTypes = Seq("audio/mpeg"), includePeaks = true, nullLicenses = Nil)
       val tables = EntityPipeline(quads, cfg)
       val isp = tables("graph.schema_is_part_of")
@@ -808,20 +700,13 @@ object QuadBattery {
       val e = concat(lit("urn:e/"), col("o_orderkey"))
       val img = concat(lit("urn:img/"), col("o_orderkey"))
       val st = concat(lit("urn:st/"), col("o_orderkey"))
-      val quads = orders.select(explode(array(
-        q(lit(IV.HasIIIFCopy), img, noLang).withField("subject", e),
-        q(lit(IV.StoredAt), st, noLang).withField("subject", img),
-        q(lit(IV.RdfValue),
-          when(col("o_orderkey") % 2 === 0,
-            concat(lit("http://u/"), col("o_orderkey"))).otherwise(lit(null)),
-          noLang).withField("subject", st),
-        q(lit(IV.MimeType), lit("image/jpeg"), noLang).withField("subject", img)
-      )).as("t"))
-        .filter(col("t.obj").isNotNull)
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
+      val quads = Quads.frame(orders,
+        quad(e, IV.HasIIIFCopy, img),
+        quad(img, IV.StoredAt, st),
+        quad(st, IV.RdfValue,
+          when(col("o_orderkey") % 2 === 0, concat(lit("http://u/"), col("o_orderkey")))
+            .otherwise(lit(null))),
+        quad(img, IV.MimeType, lit("image/jpeg")))
       graft.view.IiifPipeline(quads).orderBy(col("intellectual_entity_id"))
     }
   )
@@ -853,26 +738,15 @@ object QuadBattery {
         array(lit("Episode"), lit("ArchiveComponent"), lit("CreativeWorkSeries"),
           lit("CreativeWorkSeason"), lit("BroadcastEvent"), lit("Thing")),
         (col("c_custkey") % 6 + 1).cast("int"))
-      val cQuads = Td(s, dir, "customer").select(explode(array(
-        q(lit(Ns.RdfType), concat(lit(CV.SchemaNs), typeLocal), noLang)
-          .withField("subject", colSubj),
-        q(lit(CV.Name), col("c_name"), noLang).withField("subject", colSubj),
-        q(lit(CV.SeasonNumber), col("c_custkey") % 10, noLang)
-          .withField("subject", colSubj),
-        q(lit(CV.InLanguage),
-          when(col("c_custkey") % 3 === 0, lit("nl")).otherwise(lit(null)), noLang)
-          .withField("subject", colSubj)
-      )).as("t"))
-      val oQuads = Td(s, dir, "orders").select(explode(array(
-        q(lit(CV.IsPartOf), concat(lit("urn:col/"), col("o_custkey")), noLang)
-          .withField("subject", concat(lit("urn:e/"), col("o_orderkey")))
-      )).as("t"))
-      val quads = cQuads.unionByName(oQuads)
-        .filter(col("t.obj").isNotNull)
-        .select(col("t.subject").as("subject"), col("t.predicate").as("predicate"),
-          col("t.obj").as("obj"), col("t.lang").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
+      val quads = Quads.frame(Td(s, dir, "customer"),
+        quad(colSubj, Ns.RdfType, concat(lit(CV.SchemaNs), typeLocal)),
+        quad(colSubj, CV.Name, col("c_name")),
+        quad(colSubj, CV.SeasonNumber, col("c_custkey") % 10),
+        quad(colSubj, CV.InLanguage,
+          when(col("c_custkey") % 3 === 0, lit("nl")).otherwise(lit(null))))
+        .unionByName(Quads.frame(Td(s, dir, "orders"),
+          quad(concat(lit("urn:e/"), col("o_orderkey")), CV.IsPartOf,
+            concat(lit("urn:col/"), col("o_custkey")))))
       val tables = graft.view.CollectionPipeline(quads)
       val members = tables("graph.schema_is_part_of")
         .groupBy(col("collection_id"))

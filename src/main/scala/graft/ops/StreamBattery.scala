@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -28,81 +27,7 @@ import graft.text.{CorpusPrep, TextFunctions}
   */
 object StreamBattery {
 
-  /** Run `body` with the RocksDB state store provider — the provider a
-    * full-corpus deployment uses (state no longer bounded by executor
-    * heap; see EventTimeOps scaladoc). Gating the custom-state queries
-    * on it proves the sessionize/dedup state contracts are not
-    * HDFSBackedStateStore-only: same oracle hashes either way.
-    * Restores the previous provider afterwards — Verify/Bench share one
-    * session across the battery. `GRAFT_STATE_STORE=hdfs` opts out
-    * (e.g. a platform without the rocksdbjni native lib). */
-  private def withStateStore[A](s: SparkSession)(body: => A): A =
-    if (sys.env.get("GRAFT_STATE_STORE").contains("hdfs")) body
-    else withConf(s, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")(body)
-
-  /** Run `body` with session conf `key` set to `value`, restoring the
-    * previous value afterwards. */
-  private def withConf[A](s: SparkSession, key: String, value: String)(
-      body: => A): A = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the previous value afterwards. The replay feeds are
-    * deliberately tiny (the gates prove STATE CONTRACTS — watermark
-    * eviction, cross-batch state, topo-ordered merges — not volume),
-    * but every stateful operator opens a state-store instance PER
-    * SHUFFLE PARTITION per micro-batch: at the battery's 32
-    * partitions, the 4-batch outer join opened ~hundreds of store
-    * instances to shuffle a few thousand rows, and that store churn —
-    * not the operators — dominated ~31 s of battery time (r13 verdict
-    * #2). Partition count is a volume dial, not a semantics dial:
-    * state contracts are per-key and every gate orderBy's its result,
-    * so the oracle hash is invariant. A real deployment sizes shuffle
-    * partitions to its stream volume exactly the same way. */
-  private[ops] def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A =
-    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
-
-  /** Data-derived shuffle width for a replay feed: ~1 MB of feed
-    * parquet per partition, floored at 4 and capped at the session's
-    * core count. At sf0.1 every feed is well under 4 MB → width 4; at
-    * 90× the same feeds carry 90× the rows and derive back up to the
-    * full width — a fixed width would either pay store churn at sf
-    * scale or starve the 90× replay (both measured; see
-    * withShufflePartitions). */
-  private[ops] def dirBytes(s: SparkSession, dir: String): Long =
-    try {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-    } catch { case _: Exception => 0L }
-
-  private[ops] def replayPartitions(s: SparkSession, feedDir: String): Int = {
-    val bytes = dirBytes(s, feedDir)
-    math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
-  }
-
-  private def writeSlice(df: DataFrame, dir: String, seq: Int): Unit = {
-    val spark = df.sparkSession
-    df.coalesce(1).write.mode("append").parquet(dir)
-    // pin the batch order: the file source sorts by modification time
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status = fs.listStatus(new Path(dir))
-      .filter(f => f.getPath.getName.startsWith("part-"))
-      .sortBy(_.getModificationTime)
-    status.zipWithIndex.foreach { case (f, i) =>
-      fs.setTimes(f.getPath, 1000000000000L + i * 10000L, -1)
-    }
-    require(status.length == seq + 1, s"expected ${seq + 1} slice files")
-  }
+  import Replay.{replayPartitions, withShufflePartitions, writeSlice}
 
   /** Streaming gap sessionization (EventTimeOps.sessionize,
     * watermark-final emission) replayed over the events table in three
@@ -142,15 +67,7 @@ object StreamBattery {
       }
       val feed = FeedCache(
         s"stream_sess:$dir:mod=3:cuts=thirds:sentinels=100d") { feedDir =>
-        val ev = evFrame
-        val Row2 = ev.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-          .head()
-        val (lo, hi) = (Row2.getLong(0), Row2.getLong(1))
-        val cut1 = lo + (hi - lo) / 3; val cut2 = lo + 2 * ((hi - lo) / 3)
-        val ms = unix_millis(col("ts"))
-        writeSlice(ev.filter(ms < cut1), feedDir, 0)
-        writeSlice(ev.filter(ms >= cut1 && ms < cut2), feedDir, 1)
-        writeSlice(ev.filter(ms >= cut2), feedDir, 2)
+        val hi = Replay.writeTimeSlices(evFrame, 3, feedDir)
         // sentinels: far beyond every real end+gap, for a user id outside
         // the real key space — the second one triggers the timeout pass
         // under the watermark the first one advanced. They sit within one
@@ -163,21 +80,13 @@ object StreamBattery {
         writeSlice(Seq((-1L, new java.sql.Timestamp(hi + 100 * day + 60000L)))
           .toDF("user_id", "ts"), feedDir, 4)
       }
-      withShufflePartitions(s, replayPartitions(s, feed)) { withStateStore(s) {
-      val name = s"stream_sess_${System.nanoTime()}"
-      val q = EventTimeOps.sessionize(
-        s.readStream.schema(evFrame.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed).as[EventTimeOps.Ev],
-        gapMinutes = 30, watermarkDelay = "1 minute")
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name)
+      Replay.drain(s, feed, evFrame.schema, rocksDb = true) { src =>
+        EventTimeOps.sessionize(src().as[EventTimeOps.Ev],
+          gapMinutes = 30, watermarkDelay = "1 minute")
+      }
         .select(col("user_id"), unix_millis(col("session_start")).as("start_ms"),
           unix_millis(col("session_end")).as("end_ms"), col("n_events"))
         .orderBy(col("user_id"), col("start_ms"))
-      }}
     }
   )
 
@@ -212,18 +121,11 @@ object StreamBattery {
         writeSlice(dups.filter(col("doc_id") % 2 === 0), feedDir, 1)
         writeSlice(dups.filter(col("doc_id") % 2 === 1), feedDir, 2)
       }
-      withShufflePartitions(s, replayPartitions(s, feed)) { withStateStore(s) {
-      val name = s"stream_dedup_${System.nanoTime()}"
-      val q = EventTimeOps.streamingExactDedup(
-        s.readStream.schema(docsFrame.schema).option("maxFilesPerTrigger", 1)
-          .parquet(feed).as[EventTimeOps.Doc])
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name).select(col("doc_id"), col("content_hash"))
+      Replay.drain(s, feed, docsFrame.schema, rocksDb = true) { src =>
+        EventTimeOps.streamingExactDedup(src().as[EventTimeOps.Doc])
+      }
+        .select(col("doc_id"), col("content_hash"))
         .orderBy(col("doc_id"))
-      }}
     }
   )
 
@@ -264,54 +166,8 @@ object StreamBattery {
     // RocksDB coverage stays on the sessionize/dedup gates, and the
     // two-sided join would otherwise open 2 stores x partitions of
     // RocksDB per micro-batch - measured 1.6x the whole gate's cost.
-    (s, dir) => {
-      def evFrame = {
-        val ev0 = Td(s, dir, "events").filter(col("user_id") % 5 === 0)
-        ev0.select(col("user_id"), col("event_id"),
-          timestamp_millis(Td.tsMs(ev0)).as("ts"))
-      }
-      // Two ascending halves: state must survive a batch boundary
-      // (views from slice 0 match clicks arriving in slice 1), which
-      // one more slice would not prove any harder — and each extra
-      // slice costs a full two-source micro-batch of machinery.
-      val feed = FeedCache(
-        s"stream_join:$dir:mod=5:cuts=halves-by-time") { feedDir =>
-        val ev = evFrame
-        val mm = ev.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-          .head()
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val cut1 = lo + (hi - lo) / 2
-        val ms = unix_millis(col("ts"))
-        writeSlice(ev.filter(ms < cut1), feedDir, 0)
-        writeSlice(ev.filter(ms >= cut1), feedDir, 1)
-      }
-      withShufflePartitions(s, replayPartitions(s, feed)) {
-      val schema = evFrame.schema
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-      val views = src().filter(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts").as("view_ts"))
-        .withWatermark("view_ts", "10 minutes")
-      val clicks = src().filter(col("event_id") % 2 === 1)
-        .select(col("user_id").as("c_user_id"),
-          col("event_id").as("click_id"), col("ts").as("click_ts"))
-        .withWatermark("click_ts", "10 minutes")
-      val joined = views.join(clicks,
-        col("user_id") === col("c_user_id") &&
-          col("click_ts") >= col("view_ts") &&
-          col("click_ts") <= col("view_ts") + expr("INTERVAL 10 MINUTES"))
-      val name = s"stream_join_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name).select(col("user_id"), col("view_id"), col("click_id"),
-        unix_millis(col("view_ts")).as("view_ms"),
-        unix_millis(col("click_ts")).as("click_ms"))
-        .orderBy(col("user_id"), col("view_id"), col("click_id"))
-      }
-    }
+    (s, dir) => intervalJoin(s, dir, modulus = 5, outer = false,
+      s"stream_join:$dir:mod=5:cuts=halves-by-time")
   )
 
   /** LEFT OUTER stream-stream join — the watermark-held half of the
@@ -342,25 +198,33 @@ object StreamBattery {
         "AND c.click_ms >= v.view_ms AND c.click_ms <= v.view_ms + 600000 " +
         "ORDER BY 1, 2, 3"),
     // Default state store - see streamJoin's note.
-    (s, dir) => {
-      import s.implicits._
-      def evFrame = {
-        val ev0 = Td(s, dir, "events").filter(col("user_id") % 10 === 0)
-        ev0.select(col("user_id"), col("event_id"),
-          timestamp_millis(Td.tsMs(ev0)).as("ts"))
-      }
-      // Two ascending halves + two sentinel slices (see streamJoin's
-      // slice-count rationale).
-      val feed = FeedCache(
-        s"stream_join_outer:$dir:mod=10:cuts=halves:sentinels=100d-bothparities") { feedDir =>
-        val ev = evFrame
-        val mm = ev.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-          .head()
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val cut1 = lo + (hi - lo) / 2
-        val ms = unix_millis(col("ts"))
-        writeSlice(ev.filter(ms < cut1), feedDir, 0)
-        writeSlice(ev.filter(ms >= cut1), feedDir, 1)
+    (s, dir) => intervalJoin(s, dir, modulus = 10, outer = true,
+      s"stream_join_outer:$dir:mod=10:cuts=halves:sentinels=100d-bothparities")
+  )
+
+  /** The two join gates' shared body: views (even event ids) and clicks
+    * (odd) of the users with `user_id % modulus = 0` replay from one
+    * feed as two file-source streams, each with a 10-minute watermark,
+    * and a click joins a view of the same user when it lands within
+    * [view_ts, view_ts + 10 min].
+    *
+    * The feed is two ascending halves: state must survive a batch
+    * boundary (views from slice 0 match clicks arriving in slice 1),
+    * which one more slice would not prove any harder — and each extra
+    * slice costs a full two-source micro-batch of machinery. The
+    * `outer` form joins LEFT OUTER, appends its two sentinel slices and
+    * drops the sentinel users from the result. */
+  private def intervalJoin(s: SparkSession, dir: String, modulus: Int,
+                           outer: Boolean, feedKey: String): DataFrame = {
+    import s.implicits._
+    def evFrame = {
+      val ev0 = Td(s, dir, "events").filter(col("user_id") % modulus === 0)
+      ev0.select(col("user_id"), col("event_id"),
+        timestamp_millis(Td.tsMs(ev0)).as("ts"))
+    }
+    val feed = FeedCache(feedKey) { feedDir =>
+      val hi = Replay.writeTimeSlices(evFrame, 2, feedDir)
+      if (outer) {
         val day = 86400000L
         def sentinel(atMs: Long) = Seq(
           (-1L, -2L, new java.sql.Timestamp(atMs)),  // even id → views
@@ -369,37 +233,31 @@ object StreamBattery {
         writeSlice(sentinel(hi + 100 * day), feedDir, 2)
         writeSlice(sentinel(hi + 100 * day + 60000L), feedDir, 3)
       }
-      withShufflePartitions(s, replayPartitions(s, feed)) {
-      val schema = evFrame.schema
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
+    }
+    // the odd sentinel id is negative: abs keeps it on the click side
+    val clickId = if (outer) abs(col("event_id")) else col("event_id")
+    val joined = Replay.drain(s, feed, evFrame.schema) { src =>
       val views = src().filter(col("event_id") % 2 === 0)
         .select(col("user_id"), col("event_id").as("view_id"),
           col("ts").as("view_ts"))
         .withWatermark("view_ts", "10 minutes")
-      val clicks = src().filter(abs(col("event_id")) % 2 === 1)
+      val clicks = src().filter(clickId % 2 === 1)
         .select(col("user_id").as("c_user_id"),
           col("event_id").as("click_id"), col("ts").as("click_ts"))
         .withWatermark("click_ts", "10 minutes")
-      val joined = views.join(clicks,
+      views.join(clicks,
         col("user_id") === col("c_user_id") &&
           col("click_ts") >= col("view_ts") &&
           col("click_ts") <= col("view_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      val name = s"stream_join_outer_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name)
-        .filter(col("user_id") >= 0) // drop the held-back sentinel space
-        .select(col("user_id"), col("view_id"), col("click_id"),
-          unix_millis(col("view_ts")).as("view_ms"),
-          unix_millis(col("click_ts")).as("click_ms"))
-        .orderBy(col("user_id"), col("view_id"), col("click_id"))
-      }
+        if (outer) "left_outer" else "inner")
     }
-  )
+    // drop the held-back sentinel space
+    (if (outer) joined.filter(col("user_id") >= 0) else joined)
+      .select(col("user_id"), col("view_id"), col("click_id"),
+        unix_millis(col("view_ts")).as("view_ms"),
+        unix_millis(col("click_ts")).as("click_ms"))
+      .orderBy(col("user_id"), col("view_id"), col("click_id"))
+  }
 
   /** Multi-table streaming sync ([[graft.streaming.StreamingSync.start]]):
     * each micro-batch of RAW QUADS is pivoted per registry table and
@@ -446,30 +304,24 @@ object StreamBattery {
       // and q_upsert_*'s job
       val o = Td(s, dir, "orders").filter(col("o_orderkey") % 9 === 0)
       val kg = Ns.KgToPostgres
-      // one quad as a struct matching QuadSource.schema
-      def q3(subj: Column, pred: String,
-             ob: Column) =
-        struct(subj.as("subject"), lit(pred).as("predicate"), ob.as("obj"),
-          lit(null).cast("string").as("lang"),
-          lit(null).cast("string").as("datatype"),
-          lit(null).cast("string").as("graph"))
+      import Quads.quad
       // one slice: parent record + `lics` license child records per order
       def slice(rows: DataFrame, prefix: String, lics: Seq[String],
                 tag: String): DataFrame = {
         val okS = col("o_orderkey").cast("string")
         val ie = concat(lit("urn:ie/"), okS)
         val parent = Seq(
-          q3(ie, Ns.TableName, lit(Tables.intellectualEntity.name)),
-          q3(ie, kg + "id", okS),
-          q3(ie, kg + "schema_name", concat(lit(prefix), okS)))
+          quad(ie, Ns.TableName, lit(Tables.intellectualEntity.name)),
+          quad(ie, kg + "id", okS),
+          quad(ie, kg + "schema_name", concat(lit(prefix), okS)))
         val lic = lics.zipWithIndex.flatMap { case (l, i) =>
           val subj = concat(lit(s"urn:lic/$tag/$i/"), okS)
           Seq(
-            q3(subj, Ns.TableName, lit(Tables.schemaLicense.name)),
-            q3(subj, kg + "intellectual_entity_id", okS),
-            q3(subj, kg + "schema_license", lit(l)))
+            quad(subj, Ns.TableName, lit(Tables.schemaLicense.name)),
+            quad(subj, kg + "intellectual_entity_id", okS),
+            quad(subj, kg + "schema_license", lit(l)))
         }
-        rows.select(explode(array(parent ++ lic: _*)).as("t")).select("t.*")
+        Quads.frame(rows, parent ++ lic: _*)
       }
       val feed = FeedCache(
         s"stream_multi:$dir:cuts=9701,9901:fams=L0L1|L2|L3L4") { feedDir =>
@@ -487,11 +339,10 @@ object StreamBattery {
       // at 4 — fewer per-batch file writes on a merge-bound gate —
       // while a 90× feed derives up.
       val q = graft.streaming.StreamingSync.start(
-        s.readStream.schema(graft.source.QuadSource.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feed),
+        Replay.source(s, feed, graft.source.QuadSource.schema),
         Seq(Tables.intellectualEntity, Tables.schemaLicense),
         target, s"$base/ckpt",
-        numBuckets = graft.sink.Upsert.bucketsFor(dirBytes(s, feed)))
+        numBuckets = graft.sink.Upsert.bucketsFor(Replay.dirBytes(s, feed)))
       q.awaitTermination()
       val parent = s.read.parquet(s"$target/graph_intellectual_entity")
         .select(col("id"), col("schema_name"))
@@ -540,19 +391,11 @@ object StreamBattery {
         writeSlice(leaked.filter(col("doc_id") % 2 === 0), feedDir, 1)
         writeSlice(leaked.filter(col("doc_id") % 2 === 1), feedDir, 2)
       }
-      withShufflePartitions(s, replayPartitions(s, feed)) {
-      val name = s"stream_decon_${System.nanoTime()}"
-      val q = s.readStream.schema(streamFrame.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .join(static, Seq("content_hash"), "left_anti")
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name).select(col("doc_id"), col("content_hash"))
-        .orderBy(col("doc_id"))
+      Replay.drain(s, feed, streamFrame.schema) { src =>
+        src().join(static, Seq("content_hash"), "left_anti")
       }
+        .select(col("doc_id"), col("content_hash"))
+        .orderBy(col("doc_id"))
     }
   )
 
@@ -591,8 +434,7 @@ object StreamBattery {
     * `step` sees it. */
   private def replay(s: SparkSession, feed: String, schema: StructType,
                      admit: Column = lit(true))(step: DataFrame => Unit): Unit =
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(feed)
+    Replay.source(s, feed, schema)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         step(batch.filter(admit).localCheckpoint())
@@ -618,9 +460,7 @@ object StreamBattery {
       raw"AND len(regexp_extract_all($e, '[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]')) >= 10 " +
       raw"AND len(regexp_extract_all($e, '[^\w\s]')) * 5 <= length($e)"
 
-  /** The planted near-dup mutation of a document: its text from the
-    * 12th character on (DuckDB: `text[12:]`). */
-  private def mutText(c: Column): Column = substring(c, 12, 1000000)
+  import TextBattery.Planted
 
   /** Checkpointed J ≥ 0.5 delta pairs of batch `b` against `model`. */
   private def minhashPairs(model: Dedup.MinHashIndexModel,
@@ -676,20 +516,15 @@ object StreamBattery {
     * cross-collisions. */
   private def plantedTruth(docs: => DataFrame,
                            modulus: Int): (DataFrame, DataFrame) = {
-    def sh(c: Column) =
-      graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3)
-    def truthIds(mod: Int) =
+    def truthIds(mod: Int) = Planted.truth(
       docs.filter(col("doc_id") % modulus === mod)
-        .filter(quality(col("text")) && quality(mutText(col("text"))))
-        .select(col("doc_id"), sh(col("text")).as("sh_o"),
-          sh(mutText(col("text"))).as("sh_m"))
-        .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
-          size(array_union(col("sh_o"), col("sh_m"))) >= 0.5)
-        .select(col("doc_id"))
+        .filter(quality(col("text")) && quality(Planted.text(col("text")))),
+      0.5)
     def shSet(mod: Int) =
       docs.filter(col("doc_id") % modulus === mod)
         .filter(quality(col("text")))
-        .select(col("doc_id"), sh(col("text")).as("sh"))
+        .select(col("doc_id"),
+          graft.functions.ShingleHashesExpr(TextFunctions.normalize(col("text")), 3).as("sh"))
     val xc = exactCrossCollisions(shSet(1), shSet(0), 0.5)
     (truthIds(0), truthIds(1).join(xc, Seq("doc_id"), "left_anti"))
   }
@@ -772,9 +607,7 @@ object StreamBattery {
           // docs (%15=2, +9e6) that MUST die at the quality stage
           writeSlice(
             docs.filter(col("doc_id") % 3 === 1)
-              .unionByName(docs.filter(col("doc_id") % 3 === 0)
-                .select((col("doc_id") + 1000000L).as("doc_id"),
-                  mutText(col("text")).as("text")))
+              .unionByName(Planted.copies(docs.filter(col("doc_id") % 3 === 0)))
               .unionByName(docs.filter(col("doc_id") % 15 === 2)
                 .select((col("doc_id") + 9000000L).as("doc_id"),
                   concat(col("text"),
@@ -786,9 +619,8 @@ object StreamBattery {
           // the batch-1 extend
           writeSlice(
             docs.filter(col("doc_id") % 3 === 2)
-              .unionByName(docs.filter(col("doc_id") % 3 === 1)
-                .select((col("doc_id") + 2000000L).as("doc_id"),
-                  mutText(col("text")).as("text"))),
+              .unionByName(Planted.copies(docs.filter(col("doc_id") % 3 === 1),
+                2000000L)),
             feedDir, 1)
       }
       withShufflePartitions(s, replayPartitions(s, feed)) {
@@ -874,12 +706,9 @@ object StreamBattery {
           // batch 2: mutations of the build corpus ∪ mutations of
           // batch-1's %4=1 docs — recall against the REBUILT index
           writeSlice(
-            docs.filter(col("doc_id") % 4 === 0)
-              .select((col("doc_id") + 1000000L).as("doc_id"),
-                mutText(col("text")).as("text"))
-              .unionByName(docs.filter(col("doc_id") % 4 === 1)
-                .select((col("doc_id") + 2000000L).as("doc_id"),
-                  mutText(col("text")).as("text"))),
+            Planted.copies(docs.filter(col("doc_id") % 4 === 0))
+              .unionByName(Planted.copies(docs.filter(col("doc_id") % 4 === 1),
+                2000000L)),
             feedDir, 1)
       }
       withShufflePartitions(s, replayPartitions(s, feed)) {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -41,31 +42,52 @@ object TextBattery {
       s"len(list_distinct(list_concat(sh_o, sh_m))) >= $minJ) " +
       "SELECT count(*) AS n_truth, true AS recall_ok FROM tr"
 
-  /** Spark side of the same planted truth. Shingle sets are carried as
-    * 64-bit hashes (one-pass native kernel): set ops over longs instead
-    * of ~200-char strings, and Jaccard over the hash sets equals the
-    * oracle's string-set Jaccard up to 2^-64 collisions. */
-  private def plantedTruth(docs: org.apache.spark.sql.DataFrame,
-                           minJ: Double): org.apache.spark.sql.DataFrame = {
-    def sh(d: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
-      d.select(col("doc_id"),
-        graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3).as("sh"))
-    val o = sh(docs, col("text")).withColumnRenamed("sh", "sh_o")
-    val m = sh(docs, substring(col("text"), 12, 1000000)).withColumnRenamed("sh", "sh_m")
-    o.join(m, Seq("doc_id"))
-      .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
-        size(array_union(col("sh_o"), col("sh_m"))) >= minJ)
-      .select(col("doc_id"))
+  /** Planted near-duplicates: the gates plant a mutated copy of each
+    * document and check that the operator finds the pair. */
+  private[ops] object Planted {
+    /** The planted mutation of a text: from the 12th character on
+      * (DuckDB: `text[12:]`). */
+    def text(c: Column): Column = substring(c, 12, 1000000)
+
+    /** The planted copies of `docs` (doc_id, text): ids shifted by
+      * `offset`, texts mutated. */
+    def copies(docs: DataFrame, offset: Long = 1000000L): DataFrame =
+      docs.select((col("doc_id") + offset).as("doc_id"), text(col("text")).as("text"))
+
+    /** `docs` ∪ their planted copies: planted near-duplicates so the LSH
+      * entries return non-empty, verifiable candidate sets on any scale
+      * factor. */
+    def withCopies(docs: DataFrame): DataFrame = docs.unionByName(copies(docs))
+
+    /** Spark side of the planted truth: the ids of `docs` whose planted
+      * copy keeps an exact shingle Jaccard ≥ `minJ`. Shingle sets are
+      * carried as 64-bit hashes (one-pass native kernel): set ops over
+      * longs instead of ~200-char strings, and Jaccard over the hash
+      * sets equals the oracle's string-set Jaccard up to 2^-64
+      * collisions. */
+    def truth(docs: DataFrame, minJ: Double): DataFrame = {
+      def sh(c: Column) = graft.functions.ShingleHashesExpr(TextFunctions.normalize(c), 3)
+      docs.select(col("doc_id"), sh(col("text")).as("sh_o"),
+          sh(text(col("text"))).as("sh_m"))
+        .filter(size(array_intersect(col("sh_o"), col("sh_m"))).cast("double") /
+          size(array_union(col("sh_o"), col("sh_m"))) >= minJ)
+        .select(col("doc_id"))
+    }
   }
+  import Planted.{withCopies, truth => plantedTruth}
+
+  /** The (doc_id, text) columns of the testdata `documents` table. */
+  private def documents(s: SparkSession, dir: String): DataFrame =
+    Td(s, dir, "documents").select(col("doc_id"), col("text"))
 
   /** (n_truth, recall_ok): n_truth is computed independently by both
     * engines (a real cross-engine check of the whole shingle/Jaccard
     * chain); recall_ok asserts the near-dup operator recovered at least
     * `floor` of the planted truth — deterministic, so a seed/bucketing
     * regression flips it. */
-  private def recallStats(truth: org.apache.spark.sql.DataFrame,
-                          found: org.apache.spark.sql.DataFrame,
-                          floor: Double): org.apache.spark.sql.DataFrame = {
+  private def recallStats(truth: DataFrame,
+                          found: DataFrame,
+                          floor: Double): DataFrame = {
     val foundPlanted = found
       .filter(col("id_a") < 1000000 && col("id_b") === col("id_a") + 1000000)
       .select(col("id_a").as("doc_id"), lit(1).as("f"))
@@ -157,16 +179,6 @@ object TextBattery {
         .orderBy(col("doc_id"))
   )
 
-  /** Documents ∪ a mutated copy (ids shifted, first chars dropped) —
-    * planted near-duplicates so the LSH entries return non-empty,
-    * verifiable candidate sets on any scale factor. */
-  private def withPlantedDups(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-    docs.unionByName(
-      docs.select((col("doc_id") + 1000000).as("doc_id"),
-        substring(col("text"), 12, 1000000).as("text")))
-  }
-
   /** MinHash + banded LSH near-dup: candidates via band-bucket equi-join
     * (never all-pairs), exact Jaccard verify inside buckets — under a
     * recall-floor oracle: both engines count the planted J≥0.5 truth
@@ -177,8 +189,8 @@ object TextBattery {
     "q_neardup_minhash",
     Some(truthSql(0.5)),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      val found = Dedup.minhashNearDup(withPlantedDups(s, dir), "doc_id", "text",
+      val docs = documents(s, dir)
+      val found = Dedup.minhashNearDup(withCopies(docs), "doc_id", "text",
         numHashes = 64, bands = 16, shingleK = 3, minJaccard = 0.5)
       recallStats(plantedTruth(docs, 0.5), found, floor = 0.95)
     }
@@ -210,8 +222,8 @@ object TextBattery {
         "SELECT doc_id + 1000000 FROM documents UNION ALL " +
         "SELECT doc_id + 2000000 FROM documents) ORDER BY 1"),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      val f = withPlantedDups(s, dir).unionByName(
+      val docs = documents(s, dir)
+      val f = withCopies(docs).unionByName(
         docs.select((col("doc_id") + 2000000).as("doc_id"), col("text")))
       spanningClosureOk(f,
         Dedup.minhashNearDup(f, "doc_id", "text",
@@ -235,9 +247,8 @@ object TextBattery {
     "q_neardup_minhash_delta",
     Some(truthSql(0.5)),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      val delta = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        substring(col("text"), 12, 1000000).as("text"))
+      val docs = documents(s, dir)
+      val delta = Planted.copies(docs)
       val model = Dedup.minhashBuild(docs, "doc_id", "text",
         numHashes = 64, bands = 16, shingleK = 3)
       val found = Dedup.minhashDeltaPairs(model, delta, "doc_id", "text",
@@ -258,9 +269,8 @@ object TextBattery {
     "q_minhash_persist",
     Some(s"SELECT n_truth, recall_ok, true AS roundtrip_ok FROM (${truthSql(0.5)})"),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      val delta = docs.select((col("doc_id") + 1000000).as("doc_id"),
-        substring(col("text"), 12, 1000000).as("text"))
+      val docs = documents(s, dir)
+      val delta = Planted.copies(docs)
       val model = Dedup.minhashBuild(docs, "doc_id", "text",
         numHashes = 64, bands = 16, shingleK = 3)
       // Pairs from the loaded index are eagerly checkpointed inside
@@ -296,8 +306,8 @@ object TextBattery {
     "q_neardup_simhash",
     Some(truthSql(0.9)),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
-      val found = Dedup.simhashNearDup(withPlantedDups(s, dir), "doc_id", "text",
+      val docs = documents(s, dir)
+      val found = Dedup.simhashNearDup(withCopies(docs), "doc_id", "text",
         maxHamming = 3)
       recallStats(plantedTruth(docs, 0.9), found, floor = 0.65)
     }
@@ -309,13 +319,11 @@ object TextBattery {
     * the corpus (doc_id % 4 = 0): closure equality is a per-group
     * property, not a volume one, and the full variants' quadratic
     * sides stay bounded in the battery. */
-  private def spanningFixture(s: org.apache.spark.sql.SparkSession,
+  private def spanningFixture(s: SparkSession,
                               dir: String) = {
-    val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = documents(s, dir)
       .filter(col("doc_id") % 4 === 0)
-    docs
-      .unionByName(docs.select((col("doc_id") + 1000000).as("doc_id"),
-        substring(col("text"), 12, 1000000).as("text")))
+    withCopies(docs)
       .unionByName(docs.select((col("doc_id") + 2000000).as("doc_id"),
         col("text")))
   }
@@ -347,8 +355,8 @@ object TextBattery {
   /** Spark side of the spanning gates: spanning pair graph →
     * ConnectedComponents labels, compared row-for-row against the
     * oracle's independently recomputed closure. */
-  private def spanningComponents(f: org.apache.spark.sql.DataFrame,
-                                 pairs: org.apache.spark.sql.DataFrame) =
+  private def spanningComponents(f: DataFrame,
+                                 pairs: DataFrame) =
     graft.graph.ConnectedComponents.run(
         f.select(col("doc_id").as("id")),
         pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
@@ -366,9 +374,9 @@ object TextBattery {
     * cost — at battery scale the CC rounds' fixed per-stage overhead,
     * not data volume, dominates these gates (measured: quartering the
     * corpus moved q_neardup_simhash_spanning only 8.8 → 7.4 s). */
-  private def spanningClosureOk(f: org.apache.spark.sql.DataFrame,
-                                full: org.apache.spark.sql.DataFrame,
-                                span: org.apache.spark.sql.DataFrame) = {
+  private def spanningClosureOk(f: DataFrame,
+                                full: DataFrame,
+                                span: DataFrame) = {
     val fullP = full.select(col("id_a"), col("id_b"))
     val spanP = span.select(col("id_a"), col("id_b"))
     val lbl = graft.graph.ConnectedComponents.run(
@@ -427,13 +435,12 @@ object TextBattery {
         "ORDER BY doc_id % 97 DESC, doc_id) AS rn FROM comp) " +
         "SELECT doc_id, component, quality FROM rk WHERE rn = 1 ORDER BY 1"),
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = documents(s, dir)
         .filter(col("doc_id") % 5 === 0)
       val f = docs
         .unionByName(docs.select((col("doc_id") + 1000000).as("doc_id"),
           col("text")))
-        .unionByName(docs.select((col("doc_id") + 2000000).as("doc_id"),
-          substring(col("text"), 12, 1000000).as("text")))
+        .unionByName(Planted.copies(docs, 2000000L))
       Dedup.textDedup(f, "doc_id", "text",
           scores = f.select(col("doc_id"), (col("doc_id") % 97).as("quality")),
           scoreCol = "quality", minJaccard = 0.9)
@@ -538,7 +545,7 @@ object TextBattery {
       // valves (the 90× ScaleUp corpus host-OOMs the exact path,
       // BENCH_NOTES r10/r11). Unset under the driver's gate — the
       // oracle states the exact uncapped pair set.
-      Dedup.ngramJaccardNearDup(withPlantedDups(s, dir), "doc_id", "text",
+      Dedup.ngramJaccardNearDup(withCopies(documents(s, dir)), "doc_id", "text",
         shingleK = 3, minJaccard = 0.7,
         maxPosting = Env.intOr("GRAFT_SSJOIN_MAX_POSTING", Int.MaxValue),
         maxCandidates = Env.longOr("GRAFT_SSJOIN_MAX_CANDIDATES", 0L))
@@ -577,7 +584,7 @@ object TextBattery {
         "SELECT doc_id, min(pos) AS span_start, max(pos) + 7 AS span_end, " +
         "count(*) AS n_grams FROM i2 GROUP BY doc_id, island ORDER BY 1, 2"),
     (s, dir) =>
-      Dedup.repeatedSpans(withPlantedDups(s, dir), "doc_id", "text",
+      Dedup.repeatedSpans(withCopies(documents(s, dir)), "doc_id", "text",
         k = 8, minDocs = 2)
         .select(col("id").as("doc_id"),
           col("span_start").cast("long").as("span_start"),
@@ -649,7 +656,7 @@ object TextBattery {
         "LEFT JOIN txt ON txt.doc_id = r.doc_id ORDER BY 1"
     },
     (s, dir) => {
-      val docs = Td(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = documents(s, dir)
       val corpus = docs.unionByName(docs.select(
         (col("doc_id") + 1000000).as("doc_id"),
         expr("substring(text, 1, length(text) div 2)").as("text")))
@@ -1017,7 +1024,7 @@ object TextBattery {
       val docs = Td(s, dir, "documents")
       val right = docs.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("rid"),
-          substring(col("text"), 12, 1000000).as("rtext"))
+          Planted.text(col("text")).as("rtext"))
       // Same scale-run pressure valves as the self-join (unset under
       // the driver's gate — the oracle states the exact uncapped set).
       Dedup.crossJaccardJoin(docs, right,

@@ -25,7 +25,7 @@ object Tuning {
   }
 
   /** ~1 initial shuffle partition per MB of compressed input, clamped
-    * to [floor, cap]. */
-  def initialPartitions(sfDir: String, floor: Int = 256, cap: Int = 16384): Int =
-    math.min(cap.toLong, math.max(floor.toLong, inputBytes(sfDir) >> 20)).toInt
+    * to [256, 16384]. */
+  def initialPartitions(sfDir: String): Int =
+    math.min(16384L, math.max(256L, inputBytes(sfDir) >> 20)).toInt
 }

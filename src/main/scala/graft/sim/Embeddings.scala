@@ -22,14 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object Embeddings {
 
-  /** Add `outCol` = the L2-normalized vector (array<double>). Zero
+  /** Add `unit` = the L2-normalized vector (array<double>). Zero
     * vectors normalize to null (0/0 would be NaN). Runs on the native
     * one-pass kernel ([[graft.functions.L2NormalizeExpr]]) — the
     * composed form below is the definitional twin it is asserted
     * bit-identical to (EmbeddingsSpec). */
-  def withL2Normalized(df: DataFrame, vecCol: String,
-                       outCol: String = "unit"): DataFrame =
-    df.withColumn(outCol, graft.functions.L2NormalizeExpr(col(vecCol)))
+  def withL2Normalized(df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("unit", graft.functions.L2NormalizeExpr(col(vecCol)))
 
   /** The composed-HOF definition of [[withL2Normalized]] — kept as the
     * spec reference. NOT the hot path: CollapseProject inlines the
@@ -37,37 +36,34 @@ object Embeddings {
     * re-deriving the interpreted norm once per element (a dim×
     * blow-up; 72 s of task time to normalize the 90× corpus vs ~1 s
     * native). */
-  private[graft] def withL2NormalizedComposed(df: DataFrame, vecCol: String,
-                                              outCol: String = "unit"): DataFrame =
+  private[graft] def withL2NormalizedComposed(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("__n", Similarity.norm(col(vecCol)))
-      .withColumn(outCol,
+      .withColumn("unit",
         when(col("__n") > 0.0,
           transform(col(vecCol), x => x.cast("double") / col("__n"))))
       .drop("__n")
 
-  /** Add `qCol` = int8-range quantized vector (array<int> in
-    * [-127, 127]) and `scaleCol` = the per-vector scale, so
-    * `q / scale` dequantizes. Native one-pass kernels
+  /** Add `q` = int8-range quantized vector (array<int> in
+    * [-127, 127]) and `q_scale` = the per-vector scale, so
+    * `q / q_scale` dequantizes. Native one-pass kernels
     * ([[graft.functions.Int8QuantizeExpr]] /
     * [[graft.functions.Int8ScaleExpr]]) — the composed form below is
     * the spec-asserted definitional twin, subject to the same
     * CollapseProject per-element re-derivation as the normalize. */
-  def withInt8Quantized(df: DataFrame, vecCol: String,
-                        qCol: String = "q", scaleCol: String = "q_scale"): DataFrame =
-    df.withColumn(scaleCol, graft.functions.Int8ScaleExpr(col(vecCol)))
-      .withColumn(qCol, graft.functions.Int8QuantizeExpr(col(vecCol)))
+  def withInt8Quantized(df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("q_scale", graft.functions.Int8ScaleExpr(col(vecCol)))
+      .withColumn("q", graft.functions.Int8QuantizeExpr(col(vecCol)))
 
   /** Composed-HOF definition of [[withInt8Quantized]] (spec
     * reference; not the hot path — see [[withL2NormalizedComposed]]). */
-  private[graft] def withInt8QuantizedComposed(df: DataFrame, vecCol: String,
-      qCol: String = "q", scaleCol: String = "q_scale"): DataFrame =
+  private[graft] def withInt8QuantizedComposed(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("__maxabs",
       array_max(transform(col(vecCol), x => abs(x.cast("double")))))
-      .withColumn(scaleCol,
+      .withColumn("q_scale",
         when(col("__maxabs") > 0.0, lit(127.0) / col("__maxabs")))
-      .withColumn(qCol,
-        when(col(scaleCol).isNotNull,
+      .withColumn("q",
+        when(col("q_scale").isNotNull,
           transform(col(vecCol),
-            x => floor(x.cast("double") * col(scaleCol) + 0.5).cast("int"))))
+            x => floor(x.cast("double") * col("q_scale") + 0.5).cast("int"))))
       .drop("__maxabs")
 }

@@ -26,15 +26,13 @@ object JdbcSink {
 
   /** Append a staged batch through Spark's JDBC writer. */
   def append(df: DataFrame, url: String, table: String,
-             batchSize: Int = 100, numPartitions: Option[Int] = None): Unit = {
-    val w = df.write.format("jdbc")
+             batchSize: Int = 100): Unit =
+    df.write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
       .option("batchsize", batchSize)
       .option("isolationLevel", "READ_COMMITTED")
-    numPartitions.foreach(n => w.option("numPartitions", n))
-    w.mode("append").save()
-  }
+      .mode("append").save()
 
   /** The upsert statement the reference generates per table — staged
     * (temp) relation merged into the target on its PK

@@ -117,10 +117,8 @@ object Upsert {
     * honest: a sf-scale test table derives to the floor, a 100 TB
     * table derives to wide pruning. Existing targets ignore this —
     * the layout marker pins their count (see readBucketMarker). */
-  def bucketsFor(expectedBytes: Long, floor: Int = 4,
-                 perBucketBytes: Long = 32L << 20, cap: Int = 4096): Int =
-    math.max(floor,
-      math.min(cap, (expectedBytes / math.max(1L, perBucketBytes)).toInt))
+  def bucketsFor(expectedBytes: Long): Int =
+    math.max(4, math.min(4096L, expectedBytes / (32L << 20)).toInt)
 
   /** Marker file pinning the bucket count a target was laid out with.
     * The underscore prefix keeps parquet readers from treating it as

@@ -71,12 +71,12 @@ object StreamingSync {
       .start()
 
   /** Directory-feed variant: new quad-parquet files appearing under
-    * `sourceDir` stream in, `maxFilesPerTrigger` bounds batch size. */
-  def fromParquetDir(spark: org.apache.spark.sql.SparkSession, sourceDir: String,
-                     maxFilesPerTrigger: Int = 16): DataFrame =
+    * `sourceDir` stream in, at most 16 files per micro-batch. */
+  def fromParquetDir(spark: org.apache.spark.sql.SparkSession,
+                     sourceDir: String): DataFrame =
     spark.readStream
       .schema(graft.source.QuadSource.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 16)
       .parquet(sourceDir)
 
   private def sanitize(table: String): String = table.replace('.', '_')

@@ -54,14 +54,15 @@ object TemporalJoins {
     * @param tieCol    right-side column breaking equal-instant ties
     *                  (greatest wins); must cast to long
     * @param valueCols right-side columns to append to matched left rows
-    * @param matchedTimeCol output column carrying the matched right
-    *                  row's time (null when unmatched)
+    *
+    * The output column `asof_t` carries the matched right row's time
+    * (null when unmatched).
     */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
                leftTime: String, rightTime: String, tieCol: String,
                valueCols: Seq[String],
-               toleranceUs: Option[Long] = None,
-               matchedTimeCol: String = "asof_t"): DataFrame = {
+               toleranceUs: Option[Long] = None): DataFrame = {
+    val matchedTimeCol = "asof_t"
     val leftCarry = left.columns.filterNot(_ == key).toSeq
     // Null literals of the exact struct types, so both union arms line
     // up without resolving columns across frames.

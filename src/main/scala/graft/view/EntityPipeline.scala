@@ -119,12 +119,8 @@ object EntityPipeline {
     // collection family (av-audio.sparql:341-362)
     val IsPartOf = SchemaNs + "isPartOf"
     val SeasonNumber = SchemaNs + "seasonNumber"
-    val CollectionTypes: Seq[(String, String)] = Seq(
-      SchemaNs + "Episode" -> "episode",
-      SchemaNs + "ArchiveComponent" -> "archive",
-      SchemaNs + "CreativeWorkSeries" -> "series",
-      SchemaNs + "CreativeWorkSeason" -> "season",
-      SchemaNs + "BroadcastEvent" -> "program")
+    val CollectionTypes: Seq[String] = Seq("Episode", "ArchiveComponent",
+      "CreativeWorkSeries", "CreativeWorkSeason", "BroadcastEvent").map(SchemaNs + _)
     // carrier family (av-audio.sparql:364-453)
     val RelNs = "http://id.loc.gov/vocabulary/preservation/relationshipSubType/"
     val Isr = RelNs + "isr"
@@ -186,34 +182,28 @@ object EntityPipeline {
                               langFilter: Option[String] = None,
                               via: Option[String] = None)
 
-  /** An `EXISTS { ?s <p1>/<p2> <obj> }` boolean bind on the entity row
-    * (av-audio.sparql:392-394 `BIND(EXISTS { ?pc
-    * ebucore:hasCaptioning/rdf:type ebucore:OpenCaptions } AS …)`). */
-  final case class FlagSpec(flagCol: String, p1: String, p2: String, obj: String)
-
   /** The four reference queries as configs (entity-type VALUES
     * av-audio.sparql:193, MIME VALUES :491, peaks :504,
     * license NULL rule :222-227 vs newspaper.sparql:212). */
   final case class Config(
-      name: String,
       entityTypes: Seq[String],
       mimeTypes: Seq[String],
       includePeaks: Boolean,
       nullLicenses: Seq[String]) // licenses BIND'd to NULL for this family
 
-  val avAudio = Config("av-audio",
+  val avAudio = Config(
     Seq(SchemaNs + "AudioObject"),
     Seq("audio/mpeg", "audio/wav", "application/json"), // peaks are json
     includePeaks = true,
     nullLicenses = Seq("VIAA-PUBLIEK-CONTENT", "Publiek-Domein"))
-  val avVideo = avAudio.copy(name = "av-video",
+  val avVideo = avAudio.copy(
     entityTypes = Seq(SchemaNs + "VideoObject", SchemaNs + "MediaObject"),
     mimeTypes = Seq("video/mp4"), includePeaks = false)
-  val avComplex = avAudio.copy(name = "av-complex",
+  val avComplex = avAudio.copy(
     entityTypes = Seq(SchemaNs + "MediaObject", SchemaNs + "CreativeWork"),
     mimeTypes = Seq("video/mp4", "audio/mpeg", "application/json"),
     includePeaks = true)
-  val newspaper = Config("newspaper",
+  val newspaper = Config(
     Seq(SchemaNs + "Newspaper"),
     Seq("image/jpeg", "application/xml"),
     includePeaks = false,
@@ -242,11 +232,6 @@ object EntityPipeline {
       "schema_copyright_holder", via = Some(CopyrightHolder)),
     BranchSpec("graph.schema_copyright_holder", SchemaNs + "name",
       "schema_copyright_holder", via = Some(CopyrightHolder)))
-
-  /** The EXISTS-flag binds (av-audio.sparql:392-394 captioning). */
-  private val flags: Seq[FlagSpec] = Seq(
-    FlagSpec("has_open_captions", HasCaptioning, graft.model.Ns.RdfType,
-      OpenCaptions))
 
   import Patterns._
 
@@ -328,14 +313,14 @@ object EntityPipeline {
       (IsPartOfRel, "relation_is_part_of", None))
     // ONE conditional-agg pass for all scalar OPTIONALs (10 predicates
     // → 1 shuffle + 1 join, not 10 of each — see Patterns.optionalSingles).
-    val ieJoined = base.join(optionalSingles(quads, ieScalars), Seq("s"), "left")
-    val ieFlagged = flags.foldLeft(ieJoined) { (acc, f) =>
-      acc.join(existsFlag(quads, f.p1, f.p2, f.obj, f.flagCol), Seq("s"), "left")
-        .withColumn(f.flagCol, coalesce(col(f.flagCol), lit(false)))
-    }
-    val ie = ieFlagged.select(
-      (col("s").as("id") +: ieScalars.map { case (_, c, _) => col(c) }) ++
-        flags.map(f => col(f.flagCol)): _*)
+    // The EXISTS captioning bind (av-audio.sparql:392-394
+    // `BIND(EXISTS { ?pc ebucore:hasCaptioning/rdf:type
+    // ebucore:OpenCaptions } AS …)`).
+    val ie = base.join(optionalSingles(quads, ieScalars), Seq("s"), "left")
+      .join(existsFlag(quads, HasCaptioning, graft.model.Ns.RdfType, OpenCaptions,
+        "has_open_captions"), Seq("s"), "left")
+      .select((col("s").as("id") +: ieScalars.map { case (_, c, _) => col(c) }) :+
+        coalesce(col("has_open_captions"), lit(false)).as("has_open_captions"): _*)
 
     // License child rows with the family's NULL rule: excluded licenses
     // produce a row with a NULL value (BIND(?unbound) — :222-227), they
@@ -428,9 +413,6 @@ object EntityPipeline {
     // optional season number / parent — emitted as graph.collection
     // (one row per collection) + graph.schema_is_part_of (the ie ↔
     // collection link carrying the type name).
-    val collTypeName = CollectionTypes.foldLeft(lit(null).cast("string")) {
-      case (acc, (iri, nm)) => when(col("coll_type") === iri, lit(nm)).otherwise(acc)
-    }
     val collLinks = po(quads, IsPartOf, "collection_id")
       .join(base, Seq("s"), "left_semi")
       // distinct: RDF quads are a SET, but a melted feed may repeat the
@@ -440,9 +422,10 @@ object EntityPipeline {
         .select(col("subject").as("collection_id"), col("obj").as("coll_type"))
         .distinct(),
         Seq("collection_id"))
-      .filter(col("coll_type").isin(CollectionTypes.map(_._1): _*))
+      .filter(col("coll_type").isin(CollectionTypes: _*))
       .select(col("s").as("intellectual_entity_id"),
-        collTypeName.as("type"), col("collection_id"))
+        CollectionPipeline.collectionType(col("coll_type")).as("type"),
+        col("collection_id"))
     // the three collection scalars share ONE conditional-agg pass
     // (the ieScalars fusion): 1 shuffle + 1 join instead of 3 of each
     val collectionRows = collLinks.select(col("collection_id").as("s"),
@@ -471,17 +454,8 @@ object EntityPipeline {
     // mid| — measured as a 3-partition billion-row spilling sort at
     // sf0.1. Aggregated first, the label side is one row per mid and
     // the join is linear in the links.
-    def hop2(p1: String, p2: String, as: String,
-             langFilter: Option[String] = None): DataFrame = {
-      val raw = po(quads, p2, as)
-      // `FILTER langMatches(lang(?label), "nl")` inside the thesauri
-      // hop (av-audio.sparql:386-390,400-402,446-449): a non-nl-labeled
-      // mid node contributes nothing.
-      val fl = langFilter match {
-        case Some(l) => raw.filter(col(s"${as}_lang").startsWith(l))
-        case None    => raw
-      }
-      val labels = fl.groupBy(col("s"))
+    def hop2(p1: String, p2: String, as: String): DataFrame = {
+      val labels = po(quads, p2, as).groupBy(col("s"))
         .agg(F.langPreferredFirst(col(as), col(s"${as}_lang")).as(as))
         .select(col("s").as("mid"), col(as))
       po(quads, p1, "mid").select(col("s"), col("mid"))
