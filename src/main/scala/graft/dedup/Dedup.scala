@@ -376,34 +376,23 @@ object Dedup {
   }
 
   /** Persist a built index: both tables as parquet plus the geometry
-    * as a 1-row meta parquet — same at-rest shape as
-    * [[graft.sim.Similarity.ivfSave]]. */
-  def minhashSave(model: MinHashIndexModel, path: String): Unit = {
-    model.buckets.write.mode("overwrite").parquet(s"$path/buckets")
-    model.sets.write.mode("overwrite").parquet(s"$path/sets")
-    val s = model.buckets.sparkSession
-    import s.implicits._
-    Seq((model.numHashes, model.bands, model.shingleK, model.idCol,
-        model.builtN, model.extendedN))
-      .toDF("num_hashes", "bands", "shingle_k", "id_col",
-        "built_n", "extended_n")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+    * in the meta row of the shared at-rest layout
+    * ([[graft.sim.ExtendableIndex.save]]). */
+  def minhashSave(model: MinHashIndexModel, path: String): Unit =
+    ExtendableIndex.save(path, model,
+      Seq("buckets" -> model.buckets, "sets" -> model.sets),
+      lit(model.numHashes).as("num_hashes"), lit(model.bands).as("bands"),
+      lit(model.shingleK).as("shingle_k"), lit(model.idCol).as("id_col"))
 
   /** Load a [[minhashSave]]d index; [[minhashDeltaPairs]] over it
     * matches the original build exactly (spec-pinned). */
   def minhashLoad(spark: org.apache.spark.sql.SparkSession,
                   path: String): MinHashIndexModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (builtN, extendedN) = ExtendableIndex.sizesOf(meta)
-    MinHashIndexModel(
-      numHashes = meta.getAs[Int]("num_hashes"),
-      bands = meta.getAs[Int]("bands"),
-      shingleK = meta.getAs[Int]("shingle_k"),
-      buckets = spark.read.parquet(s"$path/buckets"),
-      sets = spark.read.parquet(s"$path/sets"),
-      idCol = meta.getAs[String]("id_col"),
-      builtN = builtN, extendedN = extendedN)
+    val saved = ExtendableIndex.load(spark, path)
+    MinHashIndexModel(saved[Int]("num_hashes"), saved[Int]("bands"),
+      saved[Int]("shingle_k"), buckets = saved.frame("buckets"),
+      sets = saved.frame("sets"), idCol = saved[String]("id_col"),
+      builtN = saved.builtN, extendedN = saved.extendedN)
   }
 
   /** Exact n-gram Jaccard near-dup via the prefix-filter set-similarity
@@ -722,7 +711,7 @@ object Dedup {
     // The derived-plane path counts the projection AND scans it again
     // for bucketing (plus both verify-side joins) — localCheckpoint it
     // so the count doesn't recompute the whole upstream tree once and
-    // the bucketing scan again (r13 advice; mirrors ivfTopK's corpus2
+    // the bucketing scan again (r13 advice; mirrors ivfBuild's corpus2
     // handling). An explicit plane count keeps the plan fully lazy.
     val proj = if (planes > 0) proj0 else proj0.localCheckpoint()
     val nPlanes =

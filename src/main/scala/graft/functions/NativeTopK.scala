@@ -169,7 +169,7 @@ object TopKCellCosExpr {
 }
 
 /** PQ siblings of the cosine kernel, backing the bulk
-  * [[graft.sim.Similarity.pqSearch]] path. The PQ shortlist CANNOT be
+  * IVF-PQ [[graft.sim.Similarity.ivfSearch]] path. The PQ shortlist CANNOT be
   * shrunk per cell the way the IVF top-k can (derived shortlist n/100
   * outgrows cell occupancy ~2·√n past n ≈ 40k, so per-cell truncation
   * keeps everything) — the win is the ROW SHAPE, not the row count:

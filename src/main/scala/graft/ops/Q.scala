@@ -96,27 +96,48 @@ object Scratch {
 }
 
 /** View-shaped quads melted from relational testdata rows. Every
-  * quad-path gate builds its feed the same way: one `quad` struct per
+  * quad-path gate builds its feed the same way: one `quad` per
   * statement, exploded per row by `explode` — a narrow transformation,
   * no shuffle. */
 object Quads {
   private val NoStr = lit(null).cast("string")
 
-  /** One quad as a struct with `QuadSource.schema`'s fields, in its
-    * order. The object is cast to string; datatype and graph are NULL. */
+  /** One statement of a melted row. The object is cast to string at
+    * the melt; datatype and graph are NULL. */
+  final case class Quad(subject: Column, predicate: String, obj: Column,
+                        lang: Option[String])
+
   def quad(subject: Column, predicate: String, obj: Column,
-           lang: Option[String] = None): Column =
-    struct(subject.as("subject"), lit(predicate).as("predicate"),
-      obj.cast("string").as("obj"), lang.fold(NoStr)(lit).as("lang"),
-      NoStr.as("datatype"), NoStr.as("graph"))
+           lang: Option[String] = None): Quad = Quad(subject, predicate, obj, lang)
 
   /** Each row of `rows` melted into its `quads`, in `QuadSource.schema`
     * form. A quad whose object is NULL is dropped: an absent optional
-    * value melts to no quad. */
-  def frame(rows: DataFrame, quads: Column*): DataFrame =
-    rows.select(explode(array(quads: _*)).as("t"))
-      .filter(col("t.obj").isNotNull)
-      .select(QuadSource.schema.fieldNames.map(f => col(s"t.$f").as(f)).toSeq: _*)
+    * value melts to no quad. When all quads share one subject it stays
+    * a row column, so a consumer's filter on it (a join's inferred
+    * `isnotnull`) is pushed below the explode onto the scan, and the
+    * subject is computed only for the quads that pass the consumer's
+    * filters. Otherwise each distinct subject is evaluated once per row
+    * before the explode, and each quad's struct carries all six
+    * fields. */
+  def frame(rows: DataFrame, quads: Quad*): DataFrame = {
+    val subjects = quads.map(_.subject).distinct
+    def po(q: Quad): Seq[Column] = Seq(lit(q.predicate).as("predicate"),
+      q.obj.cast("string").as("obj"), q.lang.fold(NoStr)(lit).as("lang"))
+    if (subjects.size == 1)
+      rows.select(subjects.head.as("subject"),
+          explode(array(quads.map(q => struct(po(q): _*)): _*)).as("t"))
+        .filter(col("t.obj").isNotNull)
+        .select(col("subject"), col("t.predicate").as("predicate"),
+          col("t.obj").as("obj"), col("t.lang").as("lang"),
+          NoStr.as("datatype"), NoStr.as("graph"))
+    else
+      rows.select(col("*") +: subjects.indices.map(i => subjects(i).as(s"__s$i")): _*)
+        .select(explode(array(quads.map(q => struct(
+          col(s"__s${subjects.indexOf(q.subject)}").as("subject") +: po(q) :+
+            NoStr.as("datatype") :+ NoStr.as("graph"): _*)): _*)).as("t"))
+        .filter(col("t.obj").isNotNull)
+        .select(QuadSource.schema.fieldNames.map(f => col(s"t.$f").as(f)).toSeq: _*)
+  }
 }
 
 /** Deterministic file-feed replay for the streaming gates.

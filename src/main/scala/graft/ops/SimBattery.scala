@@ -159,7 +159,7 @@ object SimBattery {
     * into few cells; the floor here gates the machinery, not the
     * data. */
   val annIvf = recallGate("q_ann_ivf") { (emb, probes) =>
-    Similarity.ivfTopK(emb, probes, topK = 3)
+    Similarity.ivfSearch(Similarity.ivfBuild(emb), probes, topK = 3)
   }
 
   /** Int8 scalar quantization + L2 normalization under an exact oracle:
@@ -315,7 +315,7 @@ object SimBattery {
     * truth — the ADC shortlist does not lose cell-reachable true
     * neighbors). */
   val annPq = recallGate("q_ann_pq") { (emb, probes) =>
-    Similarity.ivfPqTopK(emb, probes, topK = 3)
+    Similarity.ivfSearch(Similarity.pqBuild(emb), probes, topK = 3)
   }
 
   /** SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
@@ -373,7 +373,7 @@ object SimBattery {
     * shuffle path's dedup/rank determinism) fails here, not in a
     * user's 100 TB run. */
   val annPqBulk = recallGate("q_ann_pq_bulk") { (emb, probes) =>
-    Similarity.pqSearch(Similarity.pqBuild(emb), probes, topK = 3,
+    Similarity.ivfSearch(Similarity.pqBuild(emb), probes, topK = 3,
       broadcastProbes = false)
   }
 
@@ -404,20 +404,20 @@ object SimBattery {
     Similarity.ivfSearch(extended, probes, topK = 3)
   }
 
-  /** [[annIvfExtend]]'s IVF-PQ twin: half-corpus `pqBuild`, `pqExtend`
+  /** [[annIvfExtend]]'s IVF-PQ twin: half-corpus `pqBuild`, `ivfExtend`
     * with the other half (frozen codebooks encode the delta), recall
     * floor vs full-corpus brute force through the extended index —
     * both the compressed candidate side and the exact re-rank side
     * must have grown correctly for the floor to hold. */
   val annPqExtend = recallGate("q_ann_pq_extend") { (emb, probes) =>
     val model = Similarity.pqBuild(emb.filter(col("vec_id") % 2 === 0))
-    val extended = Similarity.pqExtend(model,
+    val extended = Similarity.ivfExtend(model,
       emb.filter(col("vec_id") % 2 === 1))
-    Similarity.pqSearch(extended, probes, topK = 3)
+    Similarity.ivfSearch(extended, probes, topK = 3)
   }
 
-  /** PQ index persistence under the oracle: build → `pqSave` →
-    * `pqLoad` in the same session, search the LOADED index, and hold
+  /** PQ index persistence under the oracle: `pqBuild` → `ivfSave` →
+    * `ivfLoad` in the same session, search the LOADED index, and hold
     * the `q_ann_pq` recall floor. The round trip exercises the full
     * at-rest shape (compressed index + normalized corpus + 1-row
     * nested-array quantizer parquet), so a serialization change that
@@ -431,9 +431,9 @@ object SimBattery {
       // Scoped scratch: the result is eagerly checkpointed before the
       // saved index is deleted — nothing lazy may still read idxDir.
       Scratch.withDir("graft_pq_persist") { idxDir =>
-        Similarity.pqSave(Similarity.pqBuild(emb), idxDir)
+        Similarity.ivfSave(Similarity.pqBuild(emb), idxDir)
         probeRecall(emb, probes, floor = 1)(
-          Similarity.pqSearch(Similarity.pqLoad(s, idxDir), probes, topK = 3))
+          Similarity.ivfSearch(Similarity.ivfLoad(s, idxDir), probes, topK = 3))
           .localCheckpoint()
       }
     }

@@ -1,12 +1,13 @@
 package graft.sim
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 
-/** Rebuild-trigger bookkeeping shared by the three extendable indexes
-  * (`Dedup.MinHashIndexModel`, [[Similarity.IvfIndexModel]],
-  * [[Similarity.PqIndexModel]]): a build pins `builtN`, every
-  * no-retrain extend adds the rows it admitted to `extendedN`, and
-  * [[needsRebuild]] flips once the extends outgrow the build.
+/** Rebuild-trigger bookkeeping and the at-rest format shared by the
+  * three extendable indexes (`Dedup.MinHashIndexModel` and
+  * [[Similarity.IvfIndexModel]], flat or PQ): a build pins `builtN`,
+  * every no-retrain extend adds the rows it admitted to `extendedN`,
+  * and [[needsRebuild]] flips once the extends outgrow the build.
   */
 trait ExtendableIndex {
   def builtN: Long
@@ -38,13 +39,33 @@ object ExtendableIndex {
       extended
     }
 
-  /** (builtN, extendedN) of a saved index's meta row. Saves made
-    * before the rebuild trigger existed carry neither column and load
-    * as (−1, 0): no baseline, so needsRebuild stays false. */
-  def sizesOf(meta: Row): (Long, Long) = {
-    def field(name: String, absent: Long): Long =
-      if (meta.schema.fieldNames.contains(name)) meta.getAs[Long](name)
-      else absent
-    (field("built_n", -1L), field("extended_n", 0L))
+  /** Write `index` at rest under `path`: each named frame as parquet
+    * in `path/<name>`, and one meta row — the `meta` columns plus
+    * `built_n`/`extended_n` — as a one-file parquet in `path/meta`
+    * (nested arrays, no side-format parser). */
+  def save(path: String, index: ExtendableIndex,
+           frames: Seq[(String, DataFrame)], meta: Column*): Unit = {
+    frames.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$path/$name")
+    }
+    frames.head._2.sparkSession.range(1)
+      .select(meta :+ lit(index.builtN).as("built_n") :+
+        lit(index.extendedN).as("extended_n"): _*)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
+
+  /** An index read back from [[save]]: its meta row and its frames. */
+  final class Saved(spark: SparkSession, path: String) {
+    val meta: Row = spark.read.parquet(s"$path/meta").head()
+    def has(field: String): Boolean = meta.schema.fieldNames.contains(field)
+    def apply[T](field: String): T = meta.getAs[T](field)
+    def frame(name: String): DataFrame = spark.read.parquet(s"$path/$name")
+    /** The build size and extends. Saves made before the rebuild
+      * trigger existed carry neither column and load as (−1, 0): no
+      * baseline, so needsRebuild stays false. */
+    def builtN: Long = if (has("built_n")) apply[Long]("built_n") else -1L
+    def extendedN: Long = if (has("extended_n")) apply[Long]("extended_n") else 0L
+  }
+
+  def load(spark: SparkSession, path: String): Saved = new Saved(spark, path)
 }

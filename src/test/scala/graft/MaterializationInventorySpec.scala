@@ -16,8 +16,10 @@ class MaterializationInventorySpec extends AnyFunSuite {
     * partition of the flags' `distinct`; the caller frees them with
     * `Checkpoints.free`. 48 → 47: that stage now calls `Upsert.stage`,
     * the engine's one staging form, instead of its own inline
-    * `localCheckpoint`. */
-  private val pinned = 47
+    * `localCheckpoint`. 47 → 44: the IVF-flat and IVF-PQ indexes are
+    * one cell index, so their two builds (two sites each) and two
+    * extends (one each) are one of each. */
+  private val pinned = 44
 
   /** `ensurePersisted` persists through one `.persist(` in its own
     * body, so each of its callers is a site too; its definition is

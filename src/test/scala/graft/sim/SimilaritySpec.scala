@@ -112,8 +112,8 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("IVF finds the planted duplicate through its own cell") {
-    val out = Similarity.ivfTopK(vecs, vecs.filter("vec_id IN (1, 2)"), topK = 1,
-      k = 3, nprobe = 2, dim = 8)
+    val out = Similarity.ivfSearch(Similarity.ivfBuild(vecs, k = 3, nprobe = 2),
+      vecs.filter("vec_id IN (1, 2)"), topK = 1)
       .collect().map(r => r.getAs[Long]("probe_id") ->
         r.getAs[Long]("neighbor_id")).toMap
     assert(out(1L) == 100L) // identical vectors share a cell by construction
@@ -133,8 +133,8 @@ class SimilaritySpec extends SparkSuite {
     // exact re-rank must then agree with brute force exactly — this
     // validates the encode → ADC → re-rank mechanism, not recall luck.
     val probes = vecs.filter("vec_id IN (1, 2)")
-    val pq = Similarity.ivfPqTopK(vecs, probes, topK = 1,
-      cells = 3, nprobe = 3, m = 4, k = 4, shortlist = 10, dim = 8)
+    val pq = Similarity.ivfSearch(Similarity.pqBuild(vecs,
+      cells = 3, nprobe = 3, m = 4, k = 4, shortlist = 10), probes, topK = 1)
       .collect().map(r => r.getAs[Long]("probe_id") ->
         r.getAs[Long]("neighbor_id")).toMap
     val brute = Similarity.bruteTopK(vecs, probes, k = 1)
@@ -144,19 +144,14 @@ class SimilaritySpec extends SparkSuite {
     assert(pq(1L) == 100L) // the planted duplicate
   }
 
-  test("PQ index build-once/search-many equals the one-shot path and is stable across searches") {
+  test("PQ index build-once/search-many is stable across searches") {
     val model = Similarity.pqBuild(vecs, cells = 3, nprobe = 3, m = 4, k = 4,
-      shortlist = 10, dim = 8)
+      shortlist = 10)
     def run(probes: org.apache.spark.sql.DataFrame) =
-      Similarity.pqSearch(model, probes, topK = 1)
+      Similarity.ivfSearch(model, probes, topK = 1)
         .collect().map(r => r.getAs[Long]("probe_id") ->
           r.getAs[Long]("neighbor_id")).toMap
-    val oneShot = Similarity.ivfPqTopK(vecs, vecs.filter("vec_id IN (1, 2)"),
-      topK = 1, cells = 3, nprobe = 3, m = 4, k = 4, shortlist = 10, dim = 8)
-      .collect().map(r => r.getAs[Long]("probe_id") ->
-        r.getAs[Long]("neighbor_id")).toMap
     val first = run(vecs.filter("vec_id IN (1, 2)"))
-    assert(first === oneShot) // one-shot is literally build+search
     assert(run(vecs.filter("vec_id IN (1, 2)")) === first) // idempotent reuse
     // a different probe batch against the SAME build — no retraining
     val third = run(vecs.filter("vec_id = 3"))
@@ -165,14 +160,15 @@ class SimilaritySpec extends SparkSuite {
 
   test("PQ index survives save/load: searches on the loaded index equal the original") {
     val model = Similarity.pqBuild(vecs, cells = 3, nprobe = 3, m = 4, k = 4,
-      shortlist = 10, dim = 8)
+      shortlist = 10)
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
-    Similarity.pqSave(model, dir)
-    val loaded = Similarity.pqLoad(spark, dir)
-    assert(loaded.cells === model.cells && loaded.shortlist === model.shortlist)
-    assert(loaded.coarse.map(_.toSeq).toSeq === model.coarse.map(_.toSeq).toSeq)
-    def run(m: Similarity.PqIndexModel) =
-      Similarity.pqSearch(m, vecs.filter("vec_id IN (1, 2)"), topK = 1)
+    Similarity.ivfSave(model, dir)
+    val loaded = Similarity.ivfLoad(spark, dir)
+    assert(loaded.cells === model.cells &&
+      loaded.pq.get.shortlist === model.pq.get.shortlist)
+    assert(loaded.centroids.map(_.toSeq).toSeq === model.centroids.map(_.toSeq).toSeq)
+    def run(m: Similarity.IvfIndexModel) =
+      Similarity.ivfSearch(m, vecs.filter("vec_id IN (1, 2)"), topK = 1)
         .collect().map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSet
     assert(run(loaded) === run(model)) // exact, cos included
@@ -180,29 +176,24 @@ class SimilaritySpec extends SparkSuite {
 
   test("bulk-probe (non-broadcast) PQ search returns identical results") {
     val model = Similarity.pqBuild(vecs, cells = 3, nprobe = 3, m = 4, k = 4,
-      shortlist = 10, dim = 8)
+      shortlist = 10)
     def run(bc: Boolean) =
-      Similarity.pqSearch(model, vecs.filter("vec_id IN (1, 2)"), topK = 1,
+      Similarity.ivfSearch(model, vecs.filter("vec_id IN (1, 2)"), topK = 1,
         broadcastProbes = bc)
         .collect().map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSet
     assert(run(bc = false) === run(bc = true))
   }
 
-  test("IVF index build-once/search-many equals the one-shot path; " +
+  test("IVF index build-once/search-many is stable; " +
     "bulk (non-broadcast) and loaded searches are identical") {
-    val model = Similarity.ivfBuild(vecs, k = 3, nprobe = 2, dim = 8)
+    val model = Similarity.ivfBuild(vecs, k = 3, nprobe = 2)
     def run(m: Similarity.IvfIndexModel, bc: Boolean = true) =
       Similarity.ivfSearch(m, vecs.filter("vec_id IN (1, 2)"), topK = 1,
         broadcastProbes = bc)
         .collect().map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSet
-    val oneShot = Similarity.ivfTopK(vecs, vecs.filter("vec_id IN (1, 2)"),
-      topK = 1, k = 3, nprobe = 2, dim = 8)
-      .collect().map(r => (r.getAs[Long]("probe_id"),
-        r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSet
     val first = run(model)
-    assert(first === oneShot) // one-shot is literally build+search
     assert(run(model) === first) // idempotent reuse, no retraining
     assert(run(model, bc = false) === first) // strategy split, same rows
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
@@ -221,7 +212,7 @@ class SimilaritySpec extends SparkSuite {
     val base = vecs.filter("vec_id < 100")
     val delta = vecs.filter("vec_id >= 100")
     val extended = Similarity.ivfExtend(
-      Similarity.ivfBuild(base, k = 3, nprobe = 3, dim = 8), delta)
+      Similarity.ivfBuild(base, k = 3, nprobe = 3), delta)
     // Each id indexed exactly once — including after a re-extend with
     // overlapping ids (the anti-join contract).
     val again = Similarity.ivfExtend(extended, delta)
@@ -241,24 +232,24 @@ class SimilaritySpec extends SparkSuite {
     "the re-rank corpus; frozen codebooks encode the delta") {
     val base = vecs.filter("vec_id < 100")
     val delta = vecs.filter("vec_id >= 100")
-    val extended = Similarity.pqExtend(
+    val extended = Similarity.ivfExtend(
       Similarity.pqBuild(base, cells = 3, nprobe = 3, m = 4, k = 4,
-        shortlist = 10, dim = 8), delta)
-    val again = Similarity.pqExtend(extended, delta)
+        shortlist = 10), delta)
+    val again = Similarity.ivfExtend(extended, delta)
     for (m <- Seq(extended, again)) {
       assert(m.indexed.count() === vecs.count())
-      assert(m.corpus2.count() === vecs.count()) // exact re-rank side grew too
+      assert(m.pq.get.corpus2.count() === vecs.count()) // exact re-rank side grew too
       assert(m.indexed.select("neighbor_id").distinct().count() === vecs.count())
     }
-    def top(m: Similarity.PqIndexModel, probe: String) =
-      Similarity.pqSearch(m, vecs.filter(s"vec_id = $probe"), topK = 1)
+    def top(m: Similarity.IvfIndexModel, probe: String) =
+      Similarity.ivfSearch(m, vecs.filter(s"vec_id = $probe"), topK = 1)
         .collect().map(r => r.getAs[Long]("neighbor_id")).toSet
     assert(top(extended, "1") === Set(100L))
     assert(top(again, "1") === Set(100L))
     // The extended index round-trips save/load like any built index.
     graft.ops.Scratch.withDir("graft_pq_ext_idx") { dir =>
-      Similarity.pqSave(extended, dir)
-      val got = Similarity.pqSearch(Similarity.pqLoad(spark, dir),
+      Similarity.ivfSave(extended, dir)
+      val got = Similarity.ivfSearch(Similarity.ivfLoad(spark, dir),
         vecs.filter("vec_id = 1"), topK = 1)
         .collect().map(r => r.getAs[Long]("neighbor_id")).toSet
       assert(got === Set(100L))
@@ -276,12 +267,12 @@ class SimilaritySpec extends SparkSuite {
         .collect().map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos"))).toSet
     // Arm A: force the matrix BEFORE extending → extend merges it.
-    val mA0 = Similarity.ivfBuild(base, k = 3, nprobe = 3, dim = 8)
+    val mA0 = Similarity.ivfBuild(base, k = 3, nprobe = 3)
     bulk(mA0) // forces mA0.cellMatrix
     val mA = Similarity.ivfExtend(mA0, delta)
     // Arm B: never force pre-extend → the extended model re-groups.
     val mB = Similarity.ivfExtend(
-      Similarity.ivfBuild(base, k = 3, nprobe = 3, dim = 8), delta)
+      Similarity.ivfBuild(base, k = 3, nprobe = 3), delta)
     assert(bulk(mA) === bulk(mB))
     // Matrix content equal as (cell → id multiset): the merge appends
     // the delta per cell, never drops, duplicates, or re-cells a row.
@@ -297,17 +288,17 @@ class SimilaritySpec extends SparkSuite {
         .select((col("vec_id") + 500).as("vec_id"), col("embedding")))
     assert(mA2.indexed.count() === mA.indexed.count() + 3)
     assert(matIds(mA2).values.map(_.size).sum === mA2.indexed.count())
-    // PQ sibling: same contract through pqExtend.
+    // PQ sibling: same contract through ivfExtend on a PQ index.
     val pA0 = Similarity.pqBuild(base, cells = 3, nprobe = 3, m = 4, k = 4,
-      shortlist = 10, dim = 8)
-    def pqBulk(m: Similarity.PqIndexModel) =
-      Similarity.pqSearch(m, vecs.filter("vec_id IN (1, 2)"), topK = 1,
+      shortlist = 10)
+    def pqBulk(m: Similarity.IvfIndexModel) =
+      Similarity.ivfSearch(m, vecs.filter("vec_id IN (1, 2)"), topK = 1,
         broadcastProbes = false)
         .collect().map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"))).toSet
     pqBulk(pA0) // force
-    val pA = Similarity.pqExtend(pA0, delta)
-    val pB = Similarity.pqExtend(pA0.copy(), delta) // fresh lazy val, unforced
+    val pA = Similarity.ivfExtend(pA0, delta)
+    val pB = Similarity.ivfExtend(pA0.copy(), delta) // fresh lazy val, unforced
     assert(pqBulk(pA) === pqBulk(pB))
     assert(pqBulk(pA).contains(1L -> 100L)) // planted duplicate survives the merge
   }
@@ -351,7 +342,7 @@ class SimilaritySpec extends SparkSuite {
       (1000L + i, Array.tabulate(8)(d =>
         if (d == i % 8) -5f else r.nextFloat()))
     }).toDF("vec_id", "embedding")
-    val m = Similarity.ivfBuild(skewed, k = 6, nprobe = 6, dim = 8)
+    val m = Similarity.ivfBuild(skewed, k = 6, nprobe = 6)
     def run(bc: Boolean) =
       Similarity.ivfSearch(m, skewed.filter("vec_id IN (0, 1, 1000)"),
         topK = 3, broadcastProbes = bc)
@@ -364,7 +355,7 @@ class SimilaritySpec extends SparkSuite {
     assert(m.chunkedMatrix._2.select(explode(col("mat"))).count() ===
       skewed.count())
     // The balanced fixture derives modulus 1 (zero chunk overhead).
-    val balanced = Similarity.ivfBuild(vecs, k = 3, nprobe = 3, dim = 8)
+    val balanced = Similarity.ivfBuild(vecs, k = 3, nprobe = 3)
     balanced.chunkedMatrix
     assert(balanced.chunkedMatrix._1 === 1)
   }
@@ -385,7 +376,7 @@ class SimilaritySpec extends SparkSuite {
     assert(brute.contains(100L)) // the exact duplicate survives at rank 1
     // IVF: broadcast (window) and bulk (kernel) must agree on the
     // poisoned corpus — the NaN skip is applied on both strategies.
-    val m = Similarity.ivfBuild(poisoned, k = 4, nprobe = 4, dim = 8)
+    val m = Similarity.ivfBuild(poisoned, k = 4, nprobe = 4)
     def run(bc: Boolean) =
       Similarity.ivfSearch(m, poisoned.filter("vec_id IN (1, 2)"),
         topK = 3, broadcastProbes = bc)
@@ -447,15 +438,16 @@ class SimilaritySpec extends SparkSuite {
     }
     // Same trigger on the PQ lifecycle.
     val p0 = Similarity.pqBuild(synth(0, 60), cells = 4, nprobe = 4,
-      m = 2, k = 8, shortlist = 16, dim = 8)
+      m = 2, k = 8, shortlist = 16)
     assert(p0.builtN === 60L && !p0.needsRebuild)
-    val p1 = Similarity.pqExtend(p0, synth(200, 61))
+    val p1 = Similarity.ivfExtend(p0, synth(200, 61))
     assert(p1.extendedN === 61L && p1.needsRebuild)
   }
 
   test("IVF-PQ plan contains no CartesianProduct") {
-    val plan = Similarity.ivfPqTopK(vecs, vecs.filter("vec_id IN (1, 2)"),
-      topK = 1, cells = 3, nprobe = 2, m = 4, k = 4, shortlist = 5, dim = 8)
+    val plan = Similarity.ivfSearch(Similarity.pqBuild(vecs, cells = 3,
+        nprobe = 2, m = 4, k = 4, shortlist = 5),
+      vecs.filter("vec_id IN (1, 2)"), topK = 1)
       .queryExecution.executedPlan
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty,
       "PQ candidate generation must stay a cell equi-join")
