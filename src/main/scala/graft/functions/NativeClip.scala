@@ -1,14 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, NullType, StringType, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, NullType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass raw-text span clip backing [[ClipRunsExpr]] — the apply
@@ -125,10 +123,11 @@ object NativeClip {
 
   /** `spans` is an array of (span_start, span_end) LONG structs over
     * 0-based token indices, inclusive on both ends, disjoint but in
-    * arbitrary order (collect_list). Null or empty spans → the text
-    * unchanged (byte-identical: no-span docs must not be rewritten). */
+    * arbitrary order (collect_list). Null text → null; null or empty
+    * spans → the text unchanged (byte-identical: no-span docs must not
+    * be rewritten). */
   def clipRuns(text: UTF8String, spans: ArrayData): UTF8String = {
-    if (spans == null || spans.numElements() == 0) return text
+    if (text == null || spans == null || spans.numElements() == 0) return text
     val n = spans.numElements()
     val starts = new Array[Long](n)
     val ends = new Array[Long](n)
@@ -256,71 +255,39 @@ object NativeClip {
   * spans → the text unchanged — a left join against the (tiny) spans
   * table feeds this directly, no coalesce-to-typed-empty-array needed. */
 case class ClipRunsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeCall(NativeClip, "clipRuns") with BinaryLike[Expression] {
 
   override def dataType: DataType = StringType
-  override def nullable: Boolean = left.nullable
   override def prettyName: String = "clip_runs"
+  // The kernel takes both NULL sides itself.
+  override protected def propagateNull = false
+  override protected def kernelNullable = left.nullable
+  // A NULL-typed spans literal means no spans: the text unchanged.
+  override lazy val replacement: Expression =
+    if (right.dataType == NullType) left else kernelCall
 
   // clipRuns reads the spans via getLong, so reject non-long span
   // fields at analysis time instead of a runtime cast error on an
   // executor. NullType on the spans side is fine — a null literal
   // means "no spans", the unchanged-text path.
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (left.dataType != StringType)
-      return TypeCheckResult.TypeCheckFailure(
-        s"clip_runs requires STRING text (got ${left.dataType.simpleString})")
-    right.dataType match {
-      case NullType => TypeCheckResult.TypeCheckSuccess
-      case ArrayType(st: StructType, _)
-          if st.fields.length == 2 &&
-            st.fields.forall(_.dataType == LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "clip_runs requires spans as array<struct<span_start: bigint, " +
-          s"span_end: bigint>> (got ${other.simpleString}); cast the " +
-          "span bounds to long as Dedup.clipSpans does")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult = requireTypes(
+    (left.dataType == StringType, "STRING text", left.dataType),
+    (right.dataType match {
+      case NullType | ArrayType(StructType(Array(StructField(_, LongType, _, _),
+        StructField(_, LongType, _, _))), _) => true
+      case _ => false
+    }, "spans as array<struct<span_start: bigint, span_end: bigint>> (cast the " +
+      "span bounds to long as Dedup.clipSpans does)", right.dataType))
 
-  override def eval(input: InternalRow): Any = {
-    val t = left.eval(input)
-    if (t == null) null
-    else {
-      val sp = right.eval(input)
-      NativeClip.clipRuns(t.asInstanceOf[UTF8String],
-        if (sp == null) null else sp.asInstanceOf[ArrayData])
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    ev.copy(code = code"""
-      ${leftGen.code}
-      boolean ${ev.isNull} = ${leftGen.isNull};
-      UTF8String ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${rightGen.code}
-        ${ev.value} = graft.functions.NativeClip.clipRuns(
-          ${leftGen.value},
-          ${rightGen.isNull} ? null :
-            (org.apache.spark.sql.catalyst.util.ArrayData) ${rightGen.value});
-      }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ClipRunsExpr =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ClipRunsExpr =
+    copy(left = l, right = r)
 }
 
 object ClipRunsExpr {
   /** Column-API entry point: `text` raw, `spans` an
     * array<struct<span_start: long, span_end: long>> column. */
   def apply(text: Column, spans: Column): Column =
-    ColumnBridge.column(
-      new ClipRunsExpr(ColumnBridge.expression(text), ColumnBridge.expression(spans)))
+    column(new ClipRunsExpr(expression(text), expression(spans)))
 }
 
 /** Native Catalyst expression: raw text → normalized-token run count
@@ -328,28 +295,19 @@ object ClipRunsExpr {
   * without the lowercase copy, the regex scan, or the token-array
   * materialization, and guaranteed run-for-run consistent with
   * [[ClipRunsExpr]] because both share one classifier. */
-case class TokenRunCountExpr(child: Expression) extends UnaryExpression {
+case class TokenRunCountExpr(child: Expression)
+    extends NativeCall(NativeClip, "countRuns") with UnaryLike[Expression] {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "token_run_count"
+  override protected def kernelNullable = false
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_run_count requires STRING text (got ${child.dataType.simpleString})")
+    requireTypes((child.dataType == StringType, "STRING text", child.dataType))
 
-  override protected def nullSafeEval(input: Any): Any =
-    NativeClip.countRuns(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.NativeClip.countRuns($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TokenRunCountExpr = copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): TokenRunCountExpr = copy(child = c)
 }
 
 object TokenRunCountExpr {
-  def apply(text: Column): Column =
-    ColumnBridge.column(new TokenRunCountExpr(ColumnBridge.expression(text)))
+  def apply(text: Column): Column = column(new TokenRunCountExpr(expression(text)))
 }

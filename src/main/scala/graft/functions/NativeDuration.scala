@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,10 +24,18 @@ object NativeDuration {
   private val dateOrder = "YMWD"
   private val timeOrder = "HMS"
 
-  /** Boxed so generated Java can branch on null. */
+  /** The kernel entry point: a Catalyst string → seconds, or null. */
+  def seconds(s: UTF8String): java.lang.Double = parseBoxed(s.toString)
+
+  /** Boxed so a non-duration can return null. */
   def parseBoxed(s: String): java.lang.Double = {
     if (s == null) return null
     var i = 0
+    def digits(): Int = {
+      val from = i
+      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+      i - from
+    }
     var sign = 1.0
     if (i < s.length && s.charAt(i) == '-') { sign = -1.0; i += 1 }
     if (i >= s.length || s.charAt(i) != 'P') return null
@@ -40,18 +48,18 @@ object NativeDuration {
       val c = s.charAt(i)
       if (c == 'T' && !inTime) { inTime = true; lastIdx = -1; i += 1 }
       else {
+        // The composed form's numeral, `\d+(?:\.\d+)?`: ASCII digits,
+        // with at least one on each side of a point.
         val numStart = i
-        while (i < s.length && (s.charAt(i).isDigit || s.charAt(i) == '.')) i += 1
-        if (i == numStart || i >= s.length) return null
+        if (digits() == 0) return null
+        if (i < s.length && s.charAt(i) == '.') { i += 1; if (digits() == 0) return null }
+        if (i >= s.length) return null
         val unit = s.charAt(i)
         val order = if (inTime) timeOrder else dateOrder
         val factors = if (inTime) timeFactors else dateFactors
         val idx = order.indexOf(unit)
         if (idx < 0 || idx <= lastIdx) return null // unknown or out-of-order unit
-        val v =
-          try s.substring(numStart, i).toDouble
-          catch { case _: NumberFormatException => return null }
-        total += v * factors(unit)
+        total += s.substring(numStart, i).toDouble * factors(unit)
         components += 1
         lastIdx = idx
         i += 1
@@ -61,43 +69,20 @@ object NativeDuration {
   }
 }
 
-/** Native Catalyst expression: ISO-8601 duration string → seconds.
-  *
-  * The (b) tier of the custom-operator ladder (SURVEY.md §7.3): a real
-  * `Expression` with `doGenCode`, so it stays inside whole-stage codegen
-  * instead of breaking the stage the way a Scala UDF would. The
-  * generated code is one static-forwarder call on [[NativeDuration]].
+/** Native Catalyst expression: ISO-8601 duration string → seconds
+  * ([[NativeDuration.seconds]] through one [[NativeCall]]). It stays
+  * inside whole-stage codegen instead of breaking the stage the way a
+  * Scala UDF would.
   */
 case class IsoDurationSecondsExpr(child: Expression)
-    extends UnaryExpression {
-
+    extends NativeCall(NativeDuration, "seconds") with UnaryLike[Expression] {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "iso_duration_seconds"
-
-  override def nullSafeEval(input: Any): Any =
-    NativeDuration.parseBoxed(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val resultTerm = ctx.freshName("durParsed")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |java.lang.Double $resultTerm =
-         |  graft.functions.NativeDuration.parseBoxed($c.toString());
-         |if ($resultTerm == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $resultTerm.doubleValue();
-         |}
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IsoDurationSecondsExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): IsoDurationSecondsExpr =
+    copy(child = c)
 }
 
 object IsoDurationSecondsExpr {
   /** Column-API entry point. */
-  def apply(c: Column): Column =
-    ColumnBridge.column(new IsoDurationSecondsExpr(ColumnBridge.expression(c)))
+  def apply(c: Column): Column = column(new IsoDurationSecondsExpr(expression(c)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Single-pass MinHash signature kernel backing [[MinHashSignatureExpr]].
@@ -23,12 +23,19 @@ object NativeMinHash {
 
   private val SparkHashSeed = 42L
 
+  private val seedsBySize =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
+
   /** Per-member inner seeds: xxhash64's fold of the literal member index.
     * The composed form's `lit(i)` is an INT literal, so the fold step is
     * `hashInt` (dispatch is by dataType), then the long element folds
-    * with `hashLong`. */
+    * with `hashLong`. One shared array per `numHashes`: the seeds reach
+    * the kernel as an object literal, which compares by reference, so
+    * two signatures of one size must hold the same array to
+    * canonicalize equal (cache and exchange-reuse matching). */
   def memberSeeds(numHashes: Int): Array[Long] =
-    Array.tabulate(numHashes)(i => XXH64.hashInt(i, SparkHashSeed))
+    seedsBySize.computeIfAbsent(numHashes,
+      n => Array.tabulate(n.intValue)(i => XXH64.hashInt(i, SparkHashSeed)))
 
   /** Signature of one base-hash array. Mirrors the composed form's edge
     * cases: an empty array yields all-null members (`array_min([])` is
@@ -58,40 +65,25 @@ object NativeMinHash {
 }
 
 /** Native Catalyst expression: array<long> base shingle hashes → the
-  * H-member MinHash signature in ONE pass.
-  *
-  * The (b) tier of the custom-operator ladder (SURVEY.md §7.3), same
-  * pattern as [[IsoDurationSecondsExpr]]: a real `Expression` with
-  * `doGenCode` so the signature computation stays inside whole-stage
-  * codegen — replacing H interpreted higher-order lambdas (the
-  * `array_min(transform(...))` per member) with one primitive loop.
+  * H-member MinHash signature in ONE pass ([[NativeMinHash.compute]]
+  * through one [[NativeCall]]), replacing H interpreted higher-order
+  * lambdas (the `array_min(transform(...))` per member) with one
+  * primitive loop inside whole-stage codegen.
   */
 case class MinHashSignatureExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends NativeCall(NativeMinHash, "compute") with UnaryLike[Expression] {
 
   require(numHashes > 0, "numHashes must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = true
   override def prettyName: String = "minhash_signature"
-
-  @transient private lazy val seeds = NativeMinHash.memberSeeds(numHashes)
-
-  override def nullSafeEval(input: Any): Any =
-    NativeMinHash.compute(input.asInstanceOf[ArrayData], seeds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeMinHash.compute($c, $seedsRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignatureExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(NativeMinHash.memberSeeds(numHashes))
+  override protected def withNewChildInternal(c: Expression): MinHashSignatureExpr =
+    copy(child = c)
 }
 
 object MinHashSignatureExpr {
   /** Column-API entry point. */
   def apply(c: Column, numHashes: Int): Column =
-    ColumnBridge.column(new MinHashSignatureExpr(ColumnBridge.expression(c), numHashes))
+    column(new MinHashSignatureExpr(expression(c), numHashes))
 }

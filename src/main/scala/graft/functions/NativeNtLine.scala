@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -91,36 +91,14 @@ object NativeNtLine {
 
 /** `nt_parse(line)` → struct(subject, predicate, obj, lang, datatype,
   * graph), or NULL for a non-statement line. */
-case class NtLineParseExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("subject", StringType),
-    StructField("predicate", StringType),
-    StructField("obj", StringType),
-    StructField("lang", StringType),
-    StructField("datatype", StringType),
-    StructField("graph", StringType)))
-  override def nullable: Boolean = true
+case class NtLineParseExpr(child: Expression)
+    extends NativeCall(NativeNtLine, "parse") with UnaryLike[Expression] {
+  override def dataType: DataType = StructType(
+    Seq("subject", "predicate", "obj", "lang", "datatype", "graph").map(StructField(_, StringType)))
   override def prettyName: String = "nt_parse"
-
-  override def nullSafeEval(v: Any): Any =
-    NativeNtLine.parse(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("ntRes")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.functions.NativeNtLine.parse($v);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NtLineParseExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): NtLineParseExpr = copy(child = c)
 }
 
 object NtLineParseExpr {
-  def apply(c: Column): Column =
-    ColumnBridge.column(new NtLineParseExpr(ColumnBridge.expression(c)))
+  def apply(c: Column): Column = column(new NtLineParseExpr(expression(c)))
 }

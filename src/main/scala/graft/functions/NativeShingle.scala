@@ -3,10 +3,10 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,29 +96,19 @@ object NativeGrams {
   * no shuffle; `posexplode` downstream yields (pos, hash) without the
   * per-doc window-lead shuffle a lag/lead formulation needs. */
 case class GramHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends NativeCall(NativeGrams, "compute") with UnaryLike[Expression] {
 
   require(k > 0, "gram size must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "gram_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    NativeGrams.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeGrams.compute($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashesExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(k)
+  override protected def withNewChildInternal(c: Expression): GramHashesExpr = copy(child = c)
 }
 
 object GramHashesExpr {
   /** Column-API entry point — pass a NORMALIZED text column. */
-  def apply(c: Column, k: Int): Column =
-    ColumnBridge.column(new GramHashesExpr(ColumnBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column = column(new GramHashesExpr(expression(c), k))
 }
 
 /** Native Catalyst expression: normalized text → distinct k-shingle
@@ -128,27 +118,17 @@ object GramHashesExpr {
   * this replaces the interpreted shingle/distinct/hash HOF stack.
   */
 case class ShingleHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends NativeCall(NativeShingle, "compute") with UnaryLike[Expression] {
 
   require(k > 0, "shingle size must be positive")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "shingle_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    NativeShingle.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NativeShingle.compute($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(k)
+  override protected def withNewChildInternal(c: Expression): ShingleHashesExpr = copy(child = c)
 }
 
 object ShingleHashesExpr {
   /** Column-API entry point — pass a NORMALIZED text column. */
-  def apply(c: Column, k: Int): Column =
-    ColumnBridge.column(new ShingleHashesExpr(ColumnBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column = column(new ShingleHashesExpr(expression(c), k))
 }

@@ -3,12 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{TernaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
+
+import NativeVector.{isFloatArray, isVector}
 
 /** Per-cell top-k cosine kernel backing the bulk IVF search path
   * ([[graft.sim.Similarity.ivfSearch]] with `broadcastProbes = false`).
@@ -104,7 +105,7 @@ object NativeTopK {
   * array<struct<long, array<float|double>>>); `k` is a literal. */
 case class TopKCellCosExpr(first: Expression, second: Expression,
                            third: Expression, k: Int)
-    extends TernaryExpression {
+    extends NativeCall(NativeTopK, "topKCellCos") with TernaryLike[Expression] {
 
   require(k >= 1, "k must be >= 1")
 
@@ -114,58 +115,30 @@ case class TopKCellCosExpr(first: Expression, second: Expression,
       StructField("cos", DoubleType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "topk_cell_cos"
-
-  @transient private lazy val pF =
-    NativeVector.isFloatArray(second.dataType)
-  @transient private lazy val cF = third.dataType match {
-    case ArrayType(st: StructType, _) =>
-      NativeVector.isFloatArray(st.fields(1).dataType)
-    case other => throw new IllegalArgumentException(
-      s"expected array of (id, vector) structs, got $other")
+  override protected def kernelNullable = false
+  override protected def constants = {
+    val ArrayType(StructType(Array(_, cv)), _) = third.dataType
+    Seq(k, isFloatArray(second.dataType), isFloatArray(cv.dataType))
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def vecOk(dt: DataType) = dt match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+  override def checkInputDataTypes(): TypeCheckResult = requireTypes(
+    (first.dataType == LongType, "a BIGINT probe id", first.dataType),
+    (isVector(second.dataType), "an array<float|double> probe vector", second.dataType),
+    (third.dataType match {
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _), v)), _) =>
+        isVector(v.dataType)
       case _ => false
-    }
-    if (first.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"topk_cell_cos requires a BIGINT probe id (got ${first.dataType.simpleString})")
-    else if (!vecOk(second.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"topk_cell_cos requires an array<float|double> probe vector (got ${second.dataType.simpleString})")
-    else third.dataType match {
-      case ArrayType(st: StructType, _)
-          if st.fields.length == 2 && st.fields(0).dataType == LongType &&
-            vecOk(st.fields(1).dataType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "topk_cell_cos requires cells as array<struct<neighbor_id: " +
-          s"bigint, cv: array<float|double>>> (got ${other.simpleString})")
-    }
-  }
-
-  override def nullSafeEval(pid: Any, pv: Any, cells: Any): Any =
-    NativeTopK.topKCellCos(pid.asInstanceOf[Long],
-      pv.asInstanceOf[ArrayData], cells.asInstanceOf[ArrayData], k, pF, cF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (pid, pv, cells) =>
-      s"${ev.value} = graft.functions.NativeTopK.topKCellCos(" +
-        s"$pid, $pv, $cells, $k, $pF, $cF);")
+    }, "cells as array<struct<neighbor_id: bigint, cv: array<float|double>>>",
+      third.dataType))
 
   override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): TopKCellCosExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
+      a: Expression, b: Expression, c: Expression): TopKCellCosExpr =
+    copy(first = a, second = b, third = c)
 }
 
 object TopKCellCosExpr {
   def apply(probeId: Column, pv: Column, cells: Column, k: Int): Column =
-    ColumnBridge.column(new TopKCellCosExpr(
-      ColumnBridge.expression(probeId), ColumnBridge.expression(pv),
-      ColumnBridge.expression(cells), k))
+    column(new TopKCellCosExpr(expression(probeId), expression(pv), expression(cells), k))
 }
 
 /** PQ siblings of the cosine kernel, backing the bulk
@@ -293,7 +266,7 @@ object NativeAdc {
   * array<int>>>); `s` (the shortlist width) is a literal. */
 case class AdcTopSExpr(first: Expression, second: Expression,
                        third: Expression, s: Int)
-    extends TernaryExpression {
+    extends NativeCall(NativeAdc, "adcTopS") with TernaryLike[Expression] {
 
   require(s >= 1, "shortlist must be >= 1")
 
@@ -303,86 +276,53 @@ case class AdcTopSExpr(first: Expression, second: Expression,
       StructField("adc", DoubleType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "adc_top_s"
+  override protected def kernelNullable = false
+  override protected def constants = Seq(s)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (first.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"adc_top_s requires a BIGINT probe id (got ${first.dataType.simpleString})")
-    else if (!(second.dataType match {
+  override def checkInputDataTypes(): TypeCheckResult = requireTypes(
+    (first.dataType == LongType, "a BIGINT probe id", first.dataType),
+    (second.dataType match {
       case ArrayType(ArrayType(DoubleType, _), _) => true
       case _ => false
-    }))
-      TypeCheckResult.TypeCheckFailure(
-        s"adc_top_s requires an array<array<double>> ADC table (got ${second.dataType.simpleString})")
-    else third.dataType match {
-      case ArrayType(st: StructType, _)
-          if st.fields.length == 2 && st.fields(0).dataType == LongType &&
-            (st.fields(1).dataType match {
-              case ArrayType(IntegerType, _) => true
-              case _ => false
-            }) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "adc_top_s requires cells as array<struct<neighbor_id: bigint, " +
-          s"codes: array<int>>> (got ${other.simpleString})")
-    }
-  }
-
-  override def nullSafeEval(pid: Any, dtable: Any, cells: Any): Any =
-    NativeAdc.adcTopS(pid.asInstanceOf[Long],
-      dtable.asInstanceOf[ArrayData], cells.asInstanceOf[ArrayData], s)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (pid, dtable, cells) =>
-      s"${ev.value} = graft.functions.NativeAdc.adcTopS(" +
-        s"$pid, $dtable, $cells, $s);")
+    }, "an array<array<double>> ADC table", second.dataType),
+    (third.dataType match {
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+        StructField(_, ArrayType(IntegerType, _), _, _))), _) => true
+      case _ => false
+    }, "cells as array<struct<neighbor_id: bigint, codes: array<int>>>", third.dataType))
 
   override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): AdcTopSExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
+      a: Expression, b: Expression, c: Expression): AdcTopSExpr =
+    copy(first = a, second = b, third = c)
 }
 
 object AdcTopSExpr {
   def apply(probeId: Column, dtable: Column, cells: Column, s: Int): Column =
-    ColumnBridge.column(new AdcTopSExpr(
-      ColumnBridge.expression(probeId), ColumnBridge.expression(dtable),
-      ColumnBridge.expression(cells), s))
+    column(new AdcTopSExpr(expression(probeId), expression(dtable), expression(cells), s))
 }
 
 /** Catalyst expression for [[NativeAdc.mergeTopS]]. Child: the
   * collect_list of per-cell sorted arrays; `s` is a literal. Returns
   * array<long> — the global shortlist's neighbor ids in rank order. */
 case class MergeTopSExpr(child: Expression, s: Int)
-    extends UnaryExpression {
+    extends NativeCall(NativeAdc, "mergeTopS") with UnaryLike[Expression] {
 
   require(s >= 1, "shortlist must be >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "merge_top_s"
+  override protected def kernelNullable = false
+  override protected def constants = Seq(s)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ArrayType(st: StructType, _), _)
-        if st.fields.length == 2 && st.fields(0).dataType == LongType &&
-          st.fields(1).dataType == DoubleType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "merge_top_s requires array<array<struct<neighbor_id: bigint, " +
-        s"adc: double>>> (got ${other.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = requireTypes((child.dataType match {
+    case ArrayType(ArrayType(StructType(Array(StructField(_, LongType, _, _),
+      StructField(_, DoubleType, _, _))), _), _) => true
+    case _ => false
+  }, "array<array<struct<neighbor_id: bigint, adc: double>>>", child.dataType))
 
-  override def nullSafeEval(arrs: Any): Any =
-    NativeAdc.mergeTopS(arrs.asInstanceOf[ArrayData], s)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arrs =>
-      s"${ev.value} = graft.functions.NativeAdc.mergeTopS($arrs, $s);")
-
-  override protected def withNewChildInternal(newChild: Expression): MergeTopSExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): MergeTopSExpr = copy(child = c)
 }
 
 object MergeTopSExpr {
-  def apply(arrs: Column, s: Int): Column =
-    ColumnBridge.column(new MergeTopSExpr(ColumnBridge.expression(arrs), s))
+  def apply(arrs: Column, s: Int): Column = column(new MergeTopSExpr(expression(arrs), s))
 }

@@ -1,15 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+
+import NativeVector.isFloatArray
 
 /** Single-pass vector kernels backing the native similarity
   * expressions — the (b) tier of the custom-operator ladder
-  * (SURVEY.md §7.3), same pattern as [[NativeMinHash]].
+  * (SURVEY.md §7.3), each called through one [[NativeCall]].
   *
   * Spark evaluates higher-order functions (`zip_with`/`aggregate`)
   * interpreted: a 64-dim dot product is ~130 closure dispatches, and
@@ -29,8 +31,10 @@ object NativeVector {
     if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
 
   /** Fused cosine: dot/(‖a‖·‖b‖) in one pass — accumulation order
-    * matches the composed dot/norm/norm exactly. */
+    * matches the composed dot/norm/norm exactly. A null vector (a cell
+    * entry's, from [[NativeTopK.topKCellCos]]) gives NULL. */
   def cosine(a: ArrayData, b: ArrayData, aF: Boolean, bF: Boolean): java.lang.Double = {
+    if (a == null || b == null) return null
     val n = a.numElements()
     if (n != b.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -217,245 +221,128 @@ object NativeVector {
       throw new IllegalArgumentException(
         s"expected array<float> or array<double>, got $other")
   }
+
+  private[functions] def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
+  }
 }
 
 /** Native fused cosine similarity of two vectors → double. */
 case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends NativeCall(NativeVector, "cosine") with BinaryLike[Expression] {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
-
-  @transient private lazy val lF = NativeVector.isFloatArray(left.dataType)
-  @transient private lazy val rF = NativeVector.isFloatArray(right.dataType)
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NativeVector.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], lF, rF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("cosRes")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |java.lang.Double $r = graft.functions.NativeVector.cosine($a, $b, $lF, $rF);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimExpr =
-    copy(left = newLeft, right = newRight)
+  override protected def constants = Seq(isFloatArray(left.dataType), isFloatArray(right.dataType))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
+    copy(left = l, right = r)
 }
 
 object CosineSimExpr {
-  def apply(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      new CosineSimExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def apply(a: Column, b: Column): Column = column(new CosineSimExpr(expression(a), expression(b)))
+}
+
+/** A kernel of one vector `child`, which takes the child's
+  * float-vs-double flag last. */
+sealed abstract class VectorKernelExpr(kernel: String)
+    extends NativeCall(NativeVector, kernel) with UnaryLike[Expression] {
+  protected def vF: Boolean = isFloatArray(child.dataType)
+  override protected def constants: Seq[Any] = Seq(vF)
 }
 
 /** Native one-pass L2 normalization of a vector → array<double> (see
   * [[NativeVector.l2normalize]] for the bit-identity contract). */
-case class L2NormalizeExpr(child: Expression) extends UnaryExpression {
+case class L2NormalizeExpr(child: Expression) extends VectorKernelExpr("l2normalize") {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
   override def prettyName: String = "l2_normalize"
-  @transient private lazy val vF: Boolean = NativeVector.isFloatArray(child.dataType)
-
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.l2normalize(v.asInstanceOf[ArrayData], vF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("unitRes")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.NativeVector.l2normalize($v, $vF);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): L2NormalizeExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): L2NormalizeExpr = copy(child = c)
 }
 
 object L2NormalizeExpr {
-  def apply(c: Column): Column =
-    ColumnBridge.column(new L2NormalizeExpr(ColumnBridge.expression(c)))
+  def apply(c: Column): Column = column(new L2NormalizeExpr(expression(c)))
 }
 
 /** Native one-pass int8 quantization of a vector → array<int> (see
   * [[NativeVector.int8quantize]]). */
-case class Int8QuantizeExpr(child: Expression) extends UnaryExpression {
+case class Int8QuantizeExpr(child: Expression) extends VectorKernelExpr("int8quantize") {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
-  override def nullable: Boolean = true
   override def prettyName: String = "int8_quantize"
-  @transient private lazy val vF: Boolean = NativeVector.isFloatArray(child.dataType)
-
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.int8quantize(v.asInstanceOf[ArrayData], vF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("qRes")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.NativeVector.int8quantize($v, $vF);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Int8QuantizeExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): Int8QuantizeExpr = copy(child = c)
 }
 
 object Int8QuantizeExpr {
-  def apply(c: Column): Column =
-    ColumnBridge.column(new Int8QuantizeExpr(ColumnBridge.expression(c)))
+  def apply(c: Column): Column = column(new Int8QuantizeExpr(expression(c)))
 }
 
 /** Native per-vector int8 quantization scale (127/max|x|) → double
   * (see [[NativeVector.int8scale]]). */
-case class Int8ScaleExpr(child: Expression) extends UnaryExpression {
+case class Int8ScaleExpr(child: Expression) extends VectorKernelExpr("int8scale") {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "int8_scale"
-  @transient private lazy val vF: Boolean = NativeVector.isFloatArray(child.dataType)
-
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.int8scale(v.asInstanceOf[ArrayData], vF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("qsRes")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |java.lang.Double $r = graft.functions.NativeVector.int8scale($v, $vF);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Int8ScaleExpr =
-    copy(child = newChild)
+  override protected def withNewChildInternal(c: Expression): Int8ScaleExpr = copy(child = c)
 }
 
 object Int8ScaleExpr {
-  def apply(c: Column): Column =
-    ColumnBridge.column(new Int8ScaleExpr(ColumnBridge.expression(c)))
-}
-
-/** Shared shape of the three vector-vs-constant-matrix expressions. */
-sealed abstract class MatrixKernelExpr extends UnaryExpression {
-  def matrix: Array[Array[Double]]
-  override def nullable: Boolean = true
-  @transient protected lazy val vF: Boolean = NativeVector.isFloatArray(child.dataType)
-  protected def kernel: String // NativeVector static method name
-  protected def boxed: String // boxed java type of the kernel result
-  protected def unbox: String // unboxing accessor
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("kernelMatrix", matrix, "double[][]")
-    val r = ctx.freshName("vecRes")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |$boxed $r = graft.functions.NativeVector.$kernel($v, $mRef, $vF);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r$unbox; }
-       """.stripMargin)
-  }
+  def apply(c: Column): Column = column(new Int8ScaleExpr(expression(c)))
 }
 
 /** Native dots of a vector column against a constant matrix →
   * array<double> (one element per matrix row). */
 case class MatVecDotsExpr(child: Expression, matrix: Array[Array[Double]])
-    extends MatrixKernelExpr {
+    extends VectorKernelExpr("dots") {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "matvec_dots"
-  override protected val kernel = "dots"
-  override protected val boxed = "org.apache.spark.sql.catalyst.util.ArrayData"
-  override protected val unbox = ""
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.dots(v.asInstanceOf[ArrayData], matrix, vF)
-  override protected def withNewChildInternal(newChild: Expression): MatVecDotsExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(matrix, vF)
+  override protected def withNewChildInternal(c: Expression): MatVecDotsExpr = copy(child = c)
 }
 
 object MatVecDotsExpr {
   def apply(c: Column, m: Array[Array[Double]]): Column =
-    ColumnBridge.column(new MatVecDotsExpr(ColumnBridge.expression(c), m))
+    column(new MatVecDotsExpr(expression(c), m))
 }
 
 /** Native ADC lookup-sum of a per-vector code array against a
   * per-probe distance table → double (see [[NativeVector.adcSum]]). */
 case class AdcSumExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeCall(NativeVector, "adcSum") with BinaryLike[Expression] {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "adc_sum"
-
-  override def nullSafeEval(codes: Any, dtable: Any): Any =
-    NativeVector.adcSum(codes.asInstanceOf[ArrayData], dtable.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("adcRes")
-    nullSafeCodeGen(ctx, ev, (c, d) =>
-      s"""
-         |java.lang.Double $r = graft.functions.NativeVector.adcSum($c, $d);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AdcSumExpr =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcSumExpr =
+    copy(left = l, right = r)
 }
 
 object AdcSumExpr {
   def apply(codes: Column, dtable: Column): Column =
-    ColumnBridge.column(
-      new AdcSumExpr(ColumnBridge.expression(codes), ColumnBridge.expression(dtable)))
+    column(new AdcSumExpr(expression(codes), expression(dtable)))
 }
 
 /** Native sign-bit LSH bucket of a vector under constant hyperplanes →
   * long. */
 case class HyperplaneBucketExpr(child: Expression, matrix: Array[Array[Double]])
-    extends MatrixKernelExpr {
+    extends VectorKernelExpr("bucket") {
   require(matrix.length <= 63, "at most 63 hyperplanes fit the long bucket")
   override def dataType: DataType = LongType
   override def prettyName: String = "hyperplane_bucket"
-  override protected val kernel = "bucket"
-  override protected val boxed = "java.lang.Long"
-  override protected val unbox = ".longValue()"
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.bucket(v.asInstanceOf[ArrayData], matrix, vF)
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBucketExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(matrix, vF)
+  override protected def withNewChildInternal(c: Expression): HyperplaneBucketExpr = copy(child = c)
 }
 
 object HyperplaneBucketExpr {
   def apply(c: Column, m: Array[Array[Double]]): Column =
-    ColumnBridge.column(new HyperplaneBucketExpr(ColumnBridge.expression(c), m))
+    column(new HyperplaneBucketExpr(expression(c), m))
 }
 
 /** Native argmax-dot (first maximal row index) of a vector against a
   * constant centroid matrix → int. */
 case class ArgMaxDotExpr(child: Expression, matrix: Array[Array[Double]])
-    extends MatrixKernelExpr {
+    extends VectorKernelExpr("argmaxDot") {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "argmax_dot"
-  override protected val kernel = "argmaxDot"
-  override protected val boxed = "java.lang.Integer"
-  override protected val unbox = ".intValue()"
-  override def nullSafeEval(v: Any): Any =
-    NativeVector.argmaxDot(v.asInstanceOf[ArrayData], matrix, vF)
-  override protected def withNewChildInternal(newChild: Expression): ArgMaxDotExpr =
-    copy(child = newChild)
+  override protected def constants = Seq(matrix, vF)
+  override protected def withNewChildInternal(c: Expression): ArgMaxDotExpr = copy(child = c)
 }
 
 object ArgMaxDotExpr {
   def apply(c: Column, m: Array[Array[Double]]): Column =
-    ColumnBridge.column(new ArgMaxDotExpr(ColumnBridge.expression(c), m))
+    column(new ArgMaxDotExpr(expression(c), m))
 }

@@ -10,7 +10,8 @@ class NativeDurationSpec extends SparkSuite {
 
   private val cases = Seq(
     "PT1H2M3S", "P1DT2H", "P3Y", "P2M", "P1W", "-PT30S", "PT0.5S",
-    "P1YT1S", "P", "PT", "not-a-duration", "1H", "PT1H1H", "PTS", null)
+    "P1YT1S", "P", "PT", "not-a-duration", "1H", "PT1H1H", "PTS",
+    "PT1.S", "PT.5S", "P1.D", "P.5D", null)
 
   test("native expression matches the composed regex form on all cases") {
     val s = spark
@@ -44,8 +45,9 @@ class NativeDurationSpec extends SparkSuite {
         concat(lit("PT"), col("s_suppkey"), lit("S"))).as("sec"))
     val plan = df.queryExecution.executedPlan.toString
     // `*(n)` marks a WholeStageCodegen stage in the plan string; the
-    // projection carrying the expression must sit inside one.
-    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[iso_duration_seconds.*"),
+    // projection carrying the expression's kernel call must sit inside one.
+    assert(plan.matches(
+      "(?s).*\\*\\(\\d+\\) Project \\[static_invoke\\(graft\\.functions\\.NativeDuration\\.seconds\\(.*"),
       s"codegen lost:\n$plan")
     // and it must actually evaluate through the generated path
     assert(df.limit(3).collect().forall(!_.isNullAt(0)))

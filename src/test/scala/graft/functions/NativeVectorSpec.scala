@@ -127,7 +127,7 @@ class NativeVectorSpec extends SparkSuite {
   }
 
   test("kernels run inside whole-stage codegen (no fallback)") {
-    // If doGenCode were broken, Spark silently falls back to interpreted
+    // If the kernel call failed to compile, Spark silently falls back to interpreted
     // eval; assert the generated plan keeps the project in a codegen
     // stage. A local Seq would constant-fold to LocalTableScan, so the
     // vectors are derived from a range (a real codegen source).
