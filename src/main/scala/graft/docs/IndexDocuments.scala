@@ -1,8 +1,11 @@
 package graft.docs
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sink.Upsert
 
 /** Index-document builder — the composed denormalization job
   * (reference: flows/queries/update_partition.sql: doc assembly :6-49,
@@ -219,10 +222,18 @@ object IndexDocuments {
         coalesce(col("duration_sec"), lit(0.0)).as("duration_sec"))
   }
 
-  /** Partitioned write (LIST partition per org,
-    * arc_db_load_index_tables_flow.py:70-74 → `partitionBy("index")`). */
-  def writePartitioned(docs: DataFrame, path: String): Unit =
-    docs.write.mode("overwrite").partitionBy("index").parquet(path)
+  /** Full partitioned write (LIST partition per org,
+    * arc_db_load_index_tables_flow.py:70-74 → `partitionBy("index")`).
+    * The job writes a snapshot beside `path` that [[Upsert.swapIn]]
+    * puts in place, as `Upsert`'s full sync does: a write that fails
+    * leaves the previous documents as they were, where a static
+    * overwrite would delete them before its job runs. */
+  def writePartitioned(docs: DataFrame, path: String): Unit = {
+    val tmp = new Path(path + "__tmp")
+    docs.write.mode("overwrite").partitionBy("index").parquet(tmp.toString)
+    Upsert.swapIn(tmp.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration),
+      tmp, new Path(path))
+  }
 
   /** Partition-scoped refresh (SURVEY.md §2.9 #79): dynamic partition
     * overwrite rewrites ONLY the partitions present in `docs` — the
@@ -239,10 +250,7 @@ object IndexDocuments {
     * flow's empty-partition cleanup (arc_db_delete_flow.py:97-130). */
   def dropPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
                      indexes: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    indexes.foreach { idx =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/index=$idx"), true)
-    }
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    indexes.foreach(idx => fs.delete(new Path(s"$path/index=$idx"), true))
   }
 }

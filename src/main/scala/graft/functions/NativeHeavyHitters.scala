@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -128,12 +128,4 @@ object MisraGriesExpr {
   def apply(c: Column, k: Int): Column =
     ColumnBridge.column(
       new MisraGriesExpr(ColumnBridge.expression(c), k).toAggregateExpression())
-}
-
-/** Static helpers shared with specs. */
-object NativeHeavyHitters {
-  /** Items of a summary array (the gate's containment side). */
-  def items(summary: ArrayData): Set[Long] =
-    (0 until summary.numElements())
-      .map(i => summary.getStruct(i, 2).getLong(0)).toSet
 }

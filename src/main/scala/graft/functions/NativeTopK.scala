@@ -47,7 +47,8 @@ import NativeVector.{isFloatArray, isVector}
   * ([[graft.sim.Similarity]]'s `dropNanCos`), so the two strategies
   * stay result-identical on NaN corpora.
   * Entries whose id equals `probeId` are skipped (the
-  * `probe_id =!= neighbor_id` filter, applied pre-rank as before). */
+  * `probe_id =!= neighbor_id` filter, applied pre-rank as before), and
+  * so are NULL entries. */
 object NativeTopK {
 
   /** `cells` is array<struct<neighbor_id: long, cv: array<float|double>>>.
@@ -61,9 +62,9 @@ object NativeTopK {
     var size = 0
     var i = 0
     while (i < n) {
-      val s = cells.getStruct(i, 2)
-      val id = s.getLong(0)
-      if (id != probeId) {
+      val s = if (cells.isNullAt(i)) null else cells.getStruct(i, 2)
+      if (s != null && s.getLong(0) != probeId) {
+        val id = s.getLong(0)
         val c = NativeVector.cosine(pv, s.getArray(1), pF, cF)
         // NaN cosines (a NaN vector component) are skipped alongside
         // the NULL zero-norm skip: a NaN admitted while the buffer is
@@ -177,10 +178,11 @@ object NativeAdc {
   /** `cells` is array<struct<neighbor_id: long, codes: array<int>>>.
     * Returns the cell's candidates scored by ADC
     * ([[NativeVector.adcSum]] per candidate), sorted (adc desc, id
-    * asc), truncated to `s`, excluding the probe's own id. Entries
-    * whose ADC is NULL (malformed codes, or a code that hits a NULL
-    * table entry) are skipped — the window form ranked them behind
-    * every finite candidate. */
+    * asc), truncated to `s`, excluding the probe's own id. A NULL
+    * entry, an entry with NULL `codes` and an entry whose ADC is NULL
+    * (malformed codes, or a code that hits a NULL table entry) are
+    * skipped — the window form ranked them behind every finite
+    * candidate. */
   def adcTopS(probeId: Long, dtable: ArrayData, cells: ArrayData,
               s: Int): ArrayData = {
     val n = cells.numElements()
@@ -189,18 +191,19 @@ object NativeAdc {
     var cnt = 0
     var i = 0
     while (i < n) {
-      val st = cells.getStruct(i, 2)
-      val id = st.getLong(0)
-      if (id != probeId) {
+      val st = if (cells.isNullAt(i)) null else cells.getStruct(i, 2)
+      if (st != null && !st.isNullAt(1) && st.getLong(0) != probeId) {
         val a = NativeVector.adcSum(st.getArray(1), dtable)
         if (a != null) {
-          ids(cnt) = id; adcs(cnt) = a.doubleValue(); cnt += 1
+          ids(cnt) = st.getLong(0); adcs(cnt) = a.doubleValue(); cnt += 1
         }
       }
       i += 1
     }
     emitSorted(ids, adcs, cnt, s)
   }
+
+  private val NoCandidates: ArrayData = new GenericArrayData(Array.empty[Any])
 
   private def emitSorted(ids: Array[Long], adcs: Array[Double],
                          cnt: Int, s: Int): ArrayData = {
@@ -221,7 +224,7 @@ object NativeAdc {
     * exactly one cell, so ids never repeat across arrays). K-way
     * merges them and returns the global top-`s` neighbor ids in
     * (adc desc, id asc) order — exactly the ids the shortlist window
-    * kept. */
+    * kept. A NULL per-cell array reads as empty. */
   def mergeTopS(arrs: ArrayData, s: Int): ArrayData = {
     val k = arrs.numElements()
     val cells = new Array[ArrayData](k)
@@ -229,7 +232,7 @@ object NativeAdc {
     var total = 0
     var i = 0
     while (i < k) {
-      cells(i) = arrs.getArray(i)
+      cells(i) = if (arrs.isNullAt(i)) NoCandidates else arrs.getArray(i)
       total += cells(i).numElements()
       i += 1
     }

@@ -155,8 +155,6 @@ object Tables {
     dctermsFormat, mhFragmentIdentifier, schemaLicense, thing, schemaRole,
     file, representation, includes, indexDocuments)
 
-  def byName: Map[String, TableSpec] = all.map(t => t.name -> t).toMap
-
   /** FK-dependency topological order for merge application (reference:
     * typescript/src/2_database_load.ts:188-207 builds the same order with
     * a dependency-graph lib). Kahn's algorithm; deterministic (name-sorted

@@ -9,15 +9,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column processing: image/audio/video as opaque `binary`
-  * columns with typed metadata, plus the decode / feature-extract /
-  * frame-sample stages a training pipeline hangs off them.
+  * columns with typed metadata, plus the decode / resize / frame-sample
+  * stages a training pipeline hangs off them.
   *
   * Decodes are REAL, via codecs the JVM ships: `javax.imageio`
   * (PNG/JPEG/BMP/GIF) for images and `javax.sound.sampled` (WAV/PCM,
-  * AIFF, AU) for audio — no external dependency. Formats the JDK has no
-  * codec for (video containers, MP3/FLAC) fall back to a deterministic
-  * byte-hash feature vector, clearly reported as such via the `decoded`
-  * flag. All stages are one `mapPartitions` pass, batch-shaped like an
+  * AIFF, AU) for audio — no external dependency. A payload no JDK codec
+  * reads (video containers, MP3/FLAC, corrupt bytes) yields no decoded
+  * row. All stages are one `mapPartitions` pass, batch-shaped like an
   * Arrow UDF (iterator in, iterator out — constant memory, no driver
   * collect, embarrassingly parallel: at 100 TB this scales with
   * partition count and shuffles nothing).
@@ -26,14 +25,6 @@ object Multimodal {
 
   /** One media asset: payload + typed metadata. */
   final case class MediaRow(id: Long, media: Array[Byte], mime: String)
-
-  /** Per-asset feature summary: byte stats always; `features` comes
-    * from the real decode when a JVM codec handled the payload
-    * (`decoded = true`), else from the deterministic byte-hash
-    * fallback. */
-  final case class MediaFeatures(
-      id: Long, n_bytes: Int, header: String, decoded: Boolean,
-      features: Array[Float])
 
   /** A decoded raster image: dimensions, channel means, and the
     * per-column luminance profile (mean of (r+g+b)/3 down each pixel
@@ -48,8 +39,6 @@ object Multimodal {
   final case class DecodedAudio(
       id: Long, sample_rate: Int, channels: Int, n_samples: Long,
       mean_abs: Double, peak_abs: Long)
-
-  val FeatureDim = 16
 
   // ImageIO's default path spills decode scratch to disk files; media
   // payloads here are in-memory byte arrays, so keep scratch on-heap.
@@ -163,8 +152,7 @@ object Multimodal {
     } catch { case _: Exception => None }
 
   /** Image decode over the media column: one `mapPartitions` pass;
-    * undecodable payloads are dropped (use [[extractFeatures]] when
-    * every row must survive with fallback features). */
+    * undecodable payloads are dropped. */
   def decodeImages(media: Dataset[MediaRow]): Dataset[DecodedImage] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap(r => decodeImage(r.id, r.media)))
@@ -218,59 +206,6 @@ object Multimodal {
         }
       } catch { case _: Exception => None }
     })
-  }
-
-  /** Deterministic byte-hash fallback features (rolling polynomial hash
-    * per stripe) for payloads no JVM codec decodes — stable across runs
-    * so downstream join/dedup tests remain reproducible. */
-  def byteHashFeatures(bytes: Array[Byte]): Array[Float] = {
-    val acc = new Array[Long](FeatureDim)
-    var i = 0
-    while (i < bytes.length) {
-      val j = i % FeatureDim
-      acc(j) = acc(j) * 31 + (bytes(i) & 0xff)
-      i += 1
-    }
-    acc.map(v => (v % 1000003L).toFloat / 1000003f)
-  }
-
-  /** Feature extraction over a mixed-modality media column: real decode
-    * per mime family where the JVM has a codec, byte-hash fallback
-    * elsewhere — every input row yields exactly one output row. */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val header = r.media.take(4).map(b => f"${b & 0xff}%02x").mkString
-        val real: Option[Array[Float]] =
-          if (r.mime.startsWith("image/"))
-            decodeImage(r.id, r.media).map { d =>
-              val f = new Array[Float](FeatureDim)
-              f(0) = d.width.toFloat; f(1) = d.height.toFloat
-              f(2) = d.mean_r.toFloat; f(3) = d.mean_g.toFloat
-              f(4) = d.mean_b.toFloat
-              var i = 5
-              while (i < FeatureDim) {
-                // downsample the column profile into the remaining slots
-                val at = (i - 5) * d.col_luma.length / (FeatureDim - 5)
-                f(i) = (d.col_luma(at) / 255.0).toFloat
-                i += 1
-              }
-              f
-            }
-          else if (r.mime.startsWith("audio/"))
-            decodeAudio(r.id, r.media).map { d =>
-              val f = new Array[Float](FeatureDim)
-              f(0) = d.sample_rate.toFloat; f(1) = d.channels.toFloat
-              f(2) = d.n_samples.toFloat; f(3) = (d.mean_abs / 32768.0).toFloat
-              f(4) = (d.peak_abs / 32768.0).toFloat
-              f
-            }
-          else None
-        MediaFeatures(r.id, r.media.length, header, real.isDefined,
-          real.getOrElse(byteHashFeatures(r.media)))
-      }
-    }
   }
 
   /** Frame sampling as a pure expression: split the payload into

@@ -205,9 +205,8 @@ object WindowSetBattery {
         .orderBy(col("status"), col("priority"), col("g_status"), col("g_priority"))
   )
 
-  /** Tumbling event-time window aggregation (batch twin of
-    * `graft.streaming.EventTimeOps.windowedCounts` — SURVEY.md §2.10
-    * #86): per-user hourly event counts via `window()`. `ts` enters as
+  /** Tumbling event-time window aggregation (SURVEY.md §2.10 #86):
+    * per-user hourly event counts via the built-in `window()`. `ts` enters as
     * a µs-grid timestamp on both engines (`Td.tsStamp` adapts to the
     * parquet encoding); the window start serializes as a string so
     * timestamp encodings can't diverge. */
@@ -233,8 +232,8 @@ object WindowSetBattery {
   /** The built-in `session_window` operator (batch mode) — the
     * declarative sibling of the lag-cumsum `q_sessionize`. Spark merges
     * a session with the next event when `next <= end` (INCLUSIVE — an
-    * exactly-at-gap event extends the session; verified empirically in
-    * EventTimeOpsSpec, 10:50 merging into a 10:20+30min session), so
+    * exactly-at-gap event extends the session; EventTimeOpsSpec's
+    * `session_window` test merges 10:50 into a 10:20+30min session), so
     * the oracle's new-session rule is `>`, identical to q_sessionize's
     * lag form. Same single window shuffle. */
   val sessionWindow = Q(

@@ -257,7 +257,7 @@ object Upsert {
     * target as it was. A leftover from a swap that crashed is cleared
     * first: deleted if the target survived, else moved back as the
     * target. */
-  private def swapIn(fs: FileSystem, fresh: Path, target: Path): Unit = {
+  private[graft] def swapIn(fs: FileSystem, fresh: Path, target: Path): Unit = {
     val aside = new Path(target.toString + "__old")
     if (fs.exists(aside)) {
       if (fs.exists(target)) fs.delete(aside, true)

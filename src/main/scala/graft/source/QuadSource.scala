@@ -25,12 +25,6 @@ object QuadSource {
     StructField("datatype", StringType),
     StructField("graph", StringType)))
 
-  /** Quads at rest (columnar). Partition the directory by `graph` (the
-    * per-org metadata graphs, av-audio.sparql:185-190) and org-scoped
-    * runs prune partitions instead of scanning the full corpus. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
   // One N-Triples/N-Quads statement:
   //   <s> <p> <o> [<g>] .                         (IRI object)
   //   <s> <p> "lit"[@lang | ^^<dt>] [<g>] .       (literal object)

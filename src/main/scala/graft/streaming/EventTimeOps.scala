@@ -1,23 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time streaming operators (SURVEY.md §2.10 #86 — absent in the
   * reference, which is a bounded single-pass pipeline; added as the
   * Structured-Streaming-native layer a continuously-fed corpus needs).
   *
-  * Two shapes:
-  *  - watermarked tumbling-window aggregation — the declarative form:
-  *    late events beyond the watermark are dropped, window state is
-  *    evicted once the watermark passes, so state is bounded at any
-  *    corpus rate;
-  *  - stateful gap sessionization via `flatMapGroupsWithState` — the
-  *    custom-state form (the streaming sibling of the batch
+  * Watermarked windows and session windows are Spark built-ins
+  * (`window`, `session_window`); the gates call them directly
+  * (`q_event_window`, `q_session_window`). This object holds the two
+  * custom-state forms, both on `flatMapGroupsWithState`:
+  *  - gap sessionization (the streaming sibling of the batch
   *    `q_sessionize` window query): sessions close either when a new
   *    event arrives past the gap or when the event-time timeout fires,
-  *    so idle keys cannot accumulate state forever.
+  *    so idle keys cannot accumulate state forever;
+  *  - first-seen-wins exact dedup across micro-batches.
   */
 object EventTimeOps {
 
@@ -37,17 +35,6 @@ object EventTimeOps {
   /** Open (not yet watermark-expired) sessions of one key, sorted by
     * start. Public for the same reflective-encoder reason. */
   final case class OpenSessions(intervals: Seq[SessState])
-
-  /** Watermarked tumbling-window counts per user. Append-mode safe:
-    * a window emits once its end passes the watermark. */
-  def windowedCounts(events: DataFrame, windowDur: String = "1 hour",
-                     watermarkDelay: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(col("user_id"), window(col("ts"), windowDur))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("window.start").as("window_start"),
-        col("n_events"))
 
   /** One document of a streaming corpus feed. */
   final case class Doc(doc_id: Long, content_hash: String)
@@ -84,25 +71,6 @@ object EventTimeOps {
           }
       }
   }
-
-  /** Declarative streaming sessionization via the built-in
-    * `session_window`: Spark merges a session with the next event when
-    * `next <= session end` — INCLUSIVE, so an exactly-at-gap event
-    * extends the session (asserted in the spec; same `>` new-session
-    * rule as the lag-cumsum q_sessionize) — and emits a session once
-    * the watermark passes its end. The declarative twin of
-    * [[sessionize]] below: state eviction and late-event handling come
-    * from the watermark, no custom state code. */
-  def sessionWindowCounts(events: DataFrame, gap: String = "30 minutes",
-                          watermarkDelay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
 
   /** Gap-based streaming sessionization: per user, a session closes
     * after `gapMinutes` of event-time silence.
@@ -172,56 +140,6 @@ object EventTimeOps {
               }
             }
             settle(merged.reverse)
-          }
-      }
-  }
-
-  /** One timestamped document of a streaming corpus feed. */
-  final case class TDoc(doc_id: Long, content_hash: String,
-                        ts: java.sql.Timestamp)
-
-  /** Retention key for [[streamingExactDedupTtl]]: keeper id + last
-    * time the hash was seen. Public for the reflective encoder. */
-  final case class SeenState(keeper: Long, lastSeen: Long)
-
-  /** TTL-bounded streaming dedup: exact WITHIN the retention window.
-    * Like [[streamingExactDedup]] but state for a content hash is
-    * evicted once the watermark passes `lastSeen + ttl` — so state is
-    * bounded by the distinct-hash arrival rate × TTL instead of the
-    * whole corpus history. The honest trade: a duplicate arriving
-    * after its hash expired is re-admitted as if new (asserted in the
-    * spec). Deploy with the TTL at the contamination horizon you care
-    * about; use [[streamingExactDedup]] (with a RocksDB state store)
-    * when the guarantee must span the full corpus. */
-  def streamingExactDedupTtl(docs: Dataset[TDoc], ttlMinutes: Int,
-                             watermarkDelay: String = "10 minutes"): Dataset[TDoc] = {
-    import docs.sparkSession.implicits._
-    val ttlMs = ttlMinutes * 60L * 1000L
-    docs
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState[SeenState, TDoc](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (hash: String, ds: Iterator[TDoc], state: GroupState[SeenState]) =>
-          // NULL hashes: singleton pass-through, no state — the batch
-          // family's shared NULL contract (see streamingExactDedup).
-          if (hash == null) ds
-          else if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = ds.toSeq
-            val newest = batch.map(_.ts.getTime).max
-            val out =
-              if (state.exists) Iterator.empty[TDoc]
-              else Iterator.single(batch.minBy(_.doc_id))
-            val last = math.max(newest,
-              state.getOption.map(_.lastSeen).getOrElse(Long.MinValue))
-            state.update(SeenState(
-              state.getOption.map(_.keeper).getOrElse(batch.minBy(_.doc_id).doc_id),
-              last))
-            // newest >= watermark for admitted rows, so last + ttl is
-            // always a legal (future-of-watermark) timeout.
-            state.setTimeoutTimestamp(last + ttlMs)
-            out
           }
       }
   }

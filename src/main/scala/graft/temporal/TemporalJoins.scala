@@ -162,22 +162,4 @@ object TemporalJoins {
       .filter(col(pointTime) >= col(startCol) && col(pointTime) <= col(endCol))
       .drop("__b")
   }
-
-  /** [[rangeJoin]] with `bucketUs` derived from the data: the median
-    * interval length (via `approxQuantile` — one extra bounded job over
-    * the intervals side), which keeps per-interval fan-out ~2 while the
-    * candidate set stays near the true result size. Use the explicit
-    * overload when the interval-length distribution is known or wildly
-    * skewed. */
-  def rangeJoinAuto(points: DataFrame, intervals: DataFrame,
-                    pointTime: String, startCol: String, endCol: String,
-                    maxBucketsPerInterval: Int = 1 << 20): DataFrame = {
-    val lens = intervals
-      .filter(col(startCol) <= col(endCol))
-      .select((col(endCol).cast("long") - col(startCol).cast("long")).as("len"))
-    val median = lens.stat.approxQuantile("len", Array(0.5), 0.01)
-      .headOption.map(_.toLong).getOrElse(1L)
-    rangeJoin(points, intervals, pointTime, startCol, endCol,
-      bucketUs = math.max(1L, median), maxBucketsPerInterval)
-  }
 }

@@ -25,8 +25,6 @@ object TextFunctions {
   def regexTokens(c: Column): Column =
     regexp_extract_all(c, lit("""[a-zA-Z]+|[0-9]+|[^\sa-zA-Z0-9]"""), lit(0))
 
-  def tokenCount(c: Column): Column = size(tokens(c))
-
   /** k-word shingles from an *already materialized* token-array column;
     * texts shorter than k words collapse to one whole-text shingle so
     * every doc has ≥1.
@@ -41,10 +39,6 @@ object TextFunctions {
       transform(sequence(lit(1), size(toks) - (k - 1)),
         i => concat_ws(" ", slice(toks, i, lit(k)))))
       .otherwise(array(array_join(toks, " ")))
-
-  /** Convenience single-expression form — ONLY for tiny inputs (tests,
-    * fixtures); see the perf warning on [[shinglesFromTokens]]. */
-  def shingles(c: Column, k: Int): Column = shinglesFromTokens(tokens(c), k)
 
   /** Count of regex hits — helper for stopword scoring. */
   def hits(c: Column, pattern: String): Column =
@@ -108,8 +102,4 @@ object TextFunctions {
     * materialized shingle column (see [[shinglesFromTokens]]). */
   def fingerprintFromShingles(sh: Column): Column =
     array_min(transform(sh, s => md5(s)))
-
-  /** Convenience single-expression form — ONLY for tiny inputs. */
-  def fingerprint(c: Column, k: Int = 3): Column =
-    fingerprintFromShingles(shingles(c, k))
 }

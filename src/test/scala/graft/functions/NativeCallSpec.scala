@@ -83,7 +83,8 @@ class NativeCallSpec extends SparkSuite {
       named_struct('neighbor_id', 2L, 'cv', array(0.5F, 0.5F)),
       named_struct('neighbor_id', 3L, 'cv', array(0F, 1F)),
       named_struct('neighbor_id', 4L, 'cv', array(1F, CAST(NULL AS FLOAT))),
-      named_struct('neighbor_id', 5L, 'cv', CAST(NULL AS ARRAY<FLOAT>))) AS cells) c""")
+      named_struct('neighbor_id', 5L, 'cv', CAST(NULL AS ARRAY<FLOAT>)),
+      CAST(NULL AS STRUCT<neighbor_id: BIGINT, cv: ARRAY<FLOAT>>)) AS cells) c""")
 
   kernelCase("topk_cell_cos")(cells,
     TopKCellCosExpr(col("pid"), col("pv"), col("cells"), 2))
@@ -101,7 +102,9 @@ class NativeCallSpec extends SparkSuite {
       named_struct('neighbor_id', 2L, 'codes', array(1, 0)),
       named_struct('neighbor_id', 3L, 'codes', array(1, 1)),
       named_struct('neighbor_id', 4L, 'codes', array(0, CAST(NULL AS INT))),
-      named_struct('neighbor_id', 5L, 'codes', array(7, 0))) AS cells) c""")
+      named_struct('neighbor_id', 5L, 'codes', array(7, 0)),
+      named_struct('neighbor_id', 6L, 'codes', CAST(NULL AS ARRAY<INT>)),
+      CAST(NULL AS STRUCT<neighbor_id: BIGINT, codes: ARRAY<INT>>)) AS cells) c""")
 
   kernelCase("adc_top_s")(adcCells,
     AdcTopSExpr(col("pid"), col("dtable"), col("cells"), 2))
@@ -113,6 +116,9 @@ class NativeCallSpec extends SparkSuite {
       array(named_struct('neighbor_id', 2L, 'adc', 0.9D),
         named_struct('neighbor_id', 3L, 'adc', 0.5D)))),
     (array(CAST(array() AS ARRAY<STRUCT<neighbor_id: BIGINT, adc: DOUBLE>>))),
+    (array(
+      array(named_struct('neighbor_id', 7L, 'adc', 0.4D)),
+      CAST(NULL AS ARRAY<STRUCT<neighbor_id: BIGINT, adc: DOUBLE>>))),
     (CAST(NULL AS ARRAY<ARRAY<STRUCT<neighbor_id: BIGINT, adc: DOUBLE>>>))
     AS t(arrs)""")
 

@@ -3,7 +3,7 @@ package graft.multimodal
 import graft.SparkSuite
 
 /** Multimodal decode + plumbing: real ImageIO / javax.sound round
-  * trips against the synthesis formulas, fallback determinism, and the
+  * trips against the synthesis formulas, undecodable payloads, and the
   * shuffle-free frame-sample shape. */
 class MultimodalSpec extends SparkSuite {
   import Multimodal._
@@ -89,8 +89,7 @@ class MultimodalSpec extends SparkSuite {
     }
   }
 
-  test("undecodable payloads are dropped by decodeImages, kept with " +
-    "fallback features by extractFeatures") {
+  test("undecodable payloads are dropped by decodeImages") {
     val s = spark
     import s.implicits._
     val media = Seq(
@@ -100,26 +99,6 @@ class MultimodalSpec extends SparkSuite {
       MediaRow(4L, Array.emptyByteArray, "video/mp4")
     ).toDS()
     assert(decodeImages(media).collect().map(_.id).toSeq == Seq(1L))
-    val feats = extractFeatures(media).collect().sortBy(_.id)
-    assert(feats.map(_.id).toSeq == Seq(1L, 2L, 3L, 4L))
-    assert(feats.map(_.decoded).toSeq == Seq(true, false, false, false))
-    assert(feats.forall(_.features.length == FeatureDim))
-    assert(feats(0).features(0) == (8 + 2 * 1).toFloat) // width in slot 0
-    assert(feats(2).header == "00010203")
-    assert(feats(3).n_bytes == 0)
-    // determinism: same bytes → same features on a second run
-    val again = extractFeatures(media).collect().sortBy(_.id)
-    assert(feats.zip(again).forall { case (x, y) => x.features.sameElements(y.features) })
-  }
-
-  test("decoded audio features flow through extractFeatures") {
-    val s = spark
-    import s.implicits._
-    val media = Seq(MediaRow(10L, MediaSynth.synthWav(10L), "audio/wav")).toDS()
-    val f = extractFeatures(media).collect().head
-    assert(f.decoded)
-    assert(f.features(0) == 8000f && f.features(1) == 1f)
-    assert(f.features(2) == (160 + 10 % 100).toFloat)
   }
 
   test("frameSample windows the payload without a shuffle") {

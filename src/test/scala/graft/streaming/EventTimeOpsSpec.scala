@@ -1,45 +1,18 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, count, lit, session_window}
 
 import graft.SparkSuite
-import EventTimeOps.{Doc, Ev, Session, TDoc}
+import EventTimeOps.{Doc, Ev, Session}
 
-/** Event-time semantics under MemoryStream: watermarked window
-  * emission, late-event dropping, and timeout-closed sessions. */
+/** Event-time semantics: timeout-closed sessions and first-seen dedup
+  * under MemoryStream, and the inclusive gap of the built-in
+  * `session_window` that q_session_window runs. */
 class EventTimeOpsSpec extends SparkSuite {
 
   private def ts(hhmm: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-
-  test("watermarked tumbling windows emit once the watermark passes, drop late") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    val input = MemoryStream[Ev]
-    val q = EventTimeOps.windowedCounts(input.toDF(),
-      windowDur = "1 hour", watermarkDelay = "30 minutes")
-      .writeStream.format("memory").queryName("win")
-      .outputMode("append").start()
-    try {
-      input.addData(Ev(1, ts("10:00")), Ev(1, ts("10:20")), Ev(2, ts("10:40")))
-      q.processAllAvailable()
-      // advance watermark past 11:00 window end: wm = 11:45 - 30m = 11:15
-      input.addData(Ev(1, ts("11:45")))
-      q.processAllAvailable()
-      // this event is behind the watermark → dropped, window already final
-      input.addData(Ev(1, ts("10:30")))
-      q.processAllAvailable()
-      input.addData(Ev(1, ts("13:00")))
-      q.processAllAvailable()
-      val out = spark.table("win").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2)))
-      // the 10:00-11:00 windows emitted WITHOUT the late 10:30 event
-      assert(out.contains((1L, ts("10:00"), 2L)))
-      assert(out.contains((2L, ts("10:00"), 1L)))
-    } finally q.stop()
-  }
 
   test("stateful sessionize closes on gap and on event-time timeout") {
     val s = spark
@@ -173,40 +146,6 @@ class EventTimeOpsSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("TTL dedup evicts state past lastSeen+ttl and re-admits the hash") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    val input = MemoryStream[TDoc]
-    val q = EventTimeOps.streamingExactDedupTtl(input.toDS(),
-      ttlMinutes = 30, watermarkDelay = "10 minutes")
-      .writeStream.format("memory").queryName("dedup_ttl")
-      .outputMode("append").start()
-    try {
-      input.addData(TDoc(1L, "h", ts("10:00")))
-      q.processAllAvailable()
-      // duplicate within the TTL → suppressed, and it SLIDES the TTL
-      // (lastSeen 10:00 → 10:10, so expiry moves to 10:40)
-      input.addData(TDoc(2L, "h", ts("10:10")))
-      q.processAllAvailable()
-      // advance the watermark to 11:50 (> 10:40) → "h" state evicted
-      input.addData(TDoc(9L, "x", ts("12:00")))
-      q.processAllAvailable()
-      input.addData(TDoc(10L, "y", ts("12:01")))
-      q.processAllAvailable()
-      // beyond the retention window the same hash is re-admitted as new;
-      // NULL hashes pass through as stateless singletons (the batch
-      // family's NULL contract) — both survive across batches
-      input.addData(TDoc(3L, "h", ts("12:05")), TDoc(50L, null, ts("12:05")))
-      q.processAllAvailable()
-      input.addData(TDoc(51L, null, ts("12:06")))
-      q.processAllAvailable()
-      val out = spark.table("dedup_ttl").as[TDoc].collect().map(_.doc_id).toSet
-      assert(out == Set(1L, 9L, 10L, 3L, 50L, 51L))
-    } finally q.stop()
-  }
-
   test("streaming exact dedup keeps the first-seen doc per content hash " +
     "across micro-batches") {
     val s = spark
@@ -241,15 +180,20 @@ class EventTimeOpsSpec extends SparkSuite {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
+    // The q_session_window form: the built-in session_window, here fed
+    // from a stream behind a watermark so sessions emit in append mode.
     val input = MemoryStream[Ev]
-    val q = EventTimeOps.sessionWindowCounts(input.toDF(),
-      gap = "30 minutes", watermarkDelay = "10 minutes")
+    val q = input.toDF()
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("session_window.start"), col("n_events"))
       .writeStream.format("memory").queryName("sess_win")
       .outputMode("append").start()
     try {
       // 10:00 and 10:20 merge; 10:50 sits EXACTLY at 10:20's window end
       // (10:20 + 30m) — the merge bound is INCLUSIVE, so it extends the
-      // session; 11:21 is 1µs-class past 10:50's end → new session
+      // session; 11:21 is past 10:50's end → a new session
       input.addData(Ev(1, ts("10:00")), Ev(1, ts("10:20")), Ev(1, ts("10:50")),
         Ev(1, ts("11:21")))
       q.processAllAvailable()
@@ -259,7 +203,7 @@ class EventTimeOpsSpec extends SparkSuite {
       input.addData(Ev(2, ts("14:01")))
       q.processAllAvailable()
       val out = spark.table("sess_win").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(3)))
+        .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2)))
       assert(out.contains((1L, ts("10:00"), 3L)))
       assert(out.contains((1L, ts("11:21"), 1L)))
     } finally q.stop()

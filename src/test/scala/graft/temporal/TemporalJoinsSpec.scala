@@ -128,21 +128,6 @@ class TemporalJoinsSpec extends SparkSuite {
     assert(msgs(err).exists(_.contains("fan-out guard")), s"got: $err")
   }
 
-  test("rangeJoinAuto derives a workable bucket from the interval lengths") {
-    val r = new scala.util.Random(11)
-    val points = Seq.tabulate(200)(i => (i.toLong, r.nextInt(10000).toLong))
-      .toDF("p_id", "t")
-    val intervals = Seq.tabulate(40) { i =>
-      val s = r.nextInt(9000).toLong; (i.toLong, s, s + 100 + r.nextInt(900))
-    }.toDF("iv_id", "s", "e")
-    val brute = points.crossJoin(intervals)
-      .filter($"t" >= $"s" && $"t" <= $"e")
-      .select($"p_id", $"iv_id").as[(Long, Long)].collect().toSet
-    val got = TemporalJoins.rangeJoinAuto(points, intervals, "t", "s", "e")
-      .select($"p_id", $"iv_id").as[(Long, Long)].collect().toSet
-    assert(got === brute)
-  }
-
   test("rangeJoin agrees with a brute-force theta join on random data") {
     val r = new scala.util.Random(7)
     val points = Seq.tabulate(200)(i => (i.toLong, r.nextInt(10000).toLong))

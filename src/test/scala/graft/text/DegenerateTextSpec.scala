@@ -32,11 +32,15 @@ class DegenerateTextSpec extends SparkSuite {
     .toDF("doc_id", "text")
 
   test("scalar text functions null-propagate and never throw") {
-    val rows = f.select(col("doc_id"),
+    // Token count and fingerprint in the forms the gates run: the
+    // shingles read a materialized token column (q_doc_fingerprint).
+    val rows = f.withColumn("toks", TextFunctions.tokens(col("text")))
+      .select(col("doc_id"),
         TextFunctions.qualityScore(col("text")).as("q"),
         TextFunctions.langId(col("text")).as("lang"),
-        TextFunctions.tokenCount(col("text")).as("tc"),
-        TextFunctions.fingerprint(col("text")).as("fp"))
+        size(col("toks")).as("tc"),
+        TextFunctions.fingerprintFromShingles(
+          TextFunctions.shinglesFromTokens(col("toks"), 3)).as("fp"))
       .collect().map(r => r.getLong(0) ->
         (r.get(1), r.get(2), r.get(3), r.get(4))).toMap
     // NULL text: every scalar is NULL — including langId, which must
