@@ -17,11 +17,10 @@ import graft.sim.ExtendableIndex
   *    runs only inside buckets.
   *  - Band count r×b trades recall vs bucket width independently of
   *    corpus size; skewed buckets (boilerplate shingles) are the one
-  *    hazard — AQE skew-join handles moderate skew, and the exact
-  *    SSJoin's `maxPosting` cap (implemented: posting count + broadcast
-  *    anti-join before the candidate self-join, with a logged drop
-  *    count) bounds the worst case at an explicit, documented recall
-  *    cost instead of an executor OOM.
+  *    hazard — AQE skew-join handles moderate skew. The exact SSJoin
+  *    has no posting cap: on a skewed corpus its Σ|posting|² grows
+  *    without bound, so the operator-choice rule at
+  *    [[ngramJaccardNearDup]] sends such corpora to MinHash-LSH.
   *  - Signatures are computed with codegen'd higher-order functions in
   *    one scan; the only wide stages are the bucket join and the
   *    pair-verify join on doc id.
@@ -420,58 +419,21 @@ object Dedup {
     * this operator only when 100%-recall-at-threshold is a hard
     * requirement and the Σ|posting|² budget fits; default to
     * MinHash-LSH for corpus-scale dedup, and treat its banding
-    * (b, r) as the recall/cost dial.
-    *
-    * `maxPosting` caps the inverted-index posting length (the measured
-    * 90× host-OOM, BENCH_NOTES.md r10, was Σ|posting|² blow-up from hot
-    * boilerplate shingles landing in many prefixes): index entries for
-    * tokens whose posting exceeds the cap are dropped via a broadcast
-    * anti-join BEFORE the candidate self-join, so the worst bucket
-    * contributes at most cap² candidate rows. The drop is logged
-    * (token count + candidate volume) and costs recall explicitly: a
-    * pair whose prefixes share ONLY capped tokens is missed — so the
-    * default is uncapped (exact), and the cap is the operator-choice
-    * rule's pressure valve for skewed corpora where LSH is rejected.
-    *
-    * `maxCandidates` is the budget form of the same valve: instead of
-    * guessing a posting length, bound the TOTAL surviving candidate
-    * volume Σ n·C(plen,2) and let the operator derive the cap from the
-    * posting-length histogram (driver-side binary search over a
-    * one-row-per-distinct-length aggregate). Size it from executor
-    * memory at ~500 bytes per candidate — the pair-verify hash-
-    * aggregation state dominates, not the 48-byte row (measured at
-    * 90×/24 g: budget 2·10⁸ → derived cap 154 → host OOM; budget
-    * 4·10⁷ → derived cap 121 → completes in 31.2 s). So budget
-    * ≈ executor-memory / 500: a 24 g node holds ~4·10⁷. */
+    * (b, r) as the recall/cost dial. (The measured 90× host-OOM,
+    * BENCH_NOTES.md r10, was that Σ|posting|² blow-up from hot
+    * boilerplate shingles landing in many prefixes.) */
   def ngramJaccardNearDup(df: DataFrame, idCol: String, textCol: String,
-                          shingleK: Int = 3, minJaccard: Double = 0.8,
-                          maxPosting: Int = Int.MaxValue,
-                          maxCandidates: Long = 0L): DataFrame =
-    ngramSelfJoin(persistedShingles(df, idCol, textCol, shingleK),
-      minJaccard, maxPosting, maxCandidates)
-
-  /** The SSJoin as a self-join over a materialized (id, hs) frame:
-    * pairs id_a < id_b, and a token of posting length plen puts
-    * C(plen, 2) pairs into the candidate join. */
-  private def ngramSelfJoin(docs: DataFrame, minJaccard: Double,
-                            maxPosting: Int, maxCandidates: Long): DataFrame =
-    ssJoin(docs, None, minJaccard, maxPosting, maxCandidates,
-      volume = col("plen") * (col("plen") - 1) / 2)
+                          shingleK: Int = 3, minJaccard: Double = 0.8): DataFrame =
+    ssJoin(persistedShingles(df, idCol, textCol, shingleK), None, minJaccard)
 
   /** SSJoin core shared by [[ngramJaccardNearDup]], its spanning
     * variant and [[crossJaccardJoin]]: the prefix-filter /
     * positional-filter / exact-verify machinery over materialized
     * (id, hs) frames. `r = None` is the self-join of `l` (pairs
     * id_a < id_b); `Some(r)` joins every `l` doc against every `r` doc.
-    * Returns (id_a, id_b, jaccard), id_a from `l`.
-    *
-    * `volume` is the caller's candidate rows per token over the
-    * posting table — (tok, plen) for the self-join, (tok, plen_l,
-    * plen_r, plen = the larger side) for the cross join — and drives
-    * the `maxCandidates` cap derivation and the drop log. */
-  private def ssJoin(l: DataFrame, r: Option[DataFrame], minJaccard: Double,
-                     maxPosting: Int, maxCandidates: Long,
-                     volume: Column): DataFrame = {
+    * Returns (id_a, id_b, jaccard), id_a from `l`. */
+  private def ssJoin(l: DataFrame, r: Option[DataFrame],
+                     minJaccard: Double): DataFrame = {
     val t = minJaccard
     val sides = l +: r.toSeq
     // Global rare-first order: (document frequency asc, token asc) over
@@ -496,10 +458,7 @@ object Dedup {
               ceil(lit(t) * size(col("ord")) - lit(1e-9)).cast("int") + 1))))
       .select(col("id"), col("n"), col("pos").as("p"),
         col("col").getField("tok").as("tok"))
-    val prefixes = sides.map(prefix)
-    val pt =
-      if (maxPosting == Int.MaxValue && maxCandidates <= 0L) prefixes
-      else capPostings(prefixes, maxPosting, maxCandidates, volume)
+    val pt = sides.map(prefix)
     // Candidate pruning, in increasing strength (all standard prunes of
     // the set-similarity-join literature):
     //  - length filter: J ≥ t forces t·max(na,nb) ≤ min(na,nb);
@@ -533,79 +492,6 @@ object Dedup {
     verifyJaccard(candidates, "id_a", "id_b", l, r.getOrElse(l), minJaccard)
   }
 
-  /** The SSJoin posting cap over the per-side (id, n, p, tok) prefix
-    * frames: measure the ACTUAL index posting length per token — the
-    * quantity that blows up the candidate join — and anti-join the
-    * tokens over the cap out of every side. The capped length is the
-    * per-side posting length (the larger side's in the cross join), so
-    * `maxPosting` means "no single posting list longer than this feeds
-    * the candidate join" in both joins; tokens present on only one side
-    * produce no candidates, so the cross join's posting table
-    * inner-joins the two sides. The hot set is by construction tiny
-    * (≤ |index| / cap tokens), so the anti-join broadcasts; the extra
-    * actions run only in capped mode and are the price of an
-    * attributable, logged degradation instead of a silent executor
-    * kill.
-    *
-    * `maxCandidates` derives the cap from a TOTAL candidate-volume
-    * budget instead of a hand-guessed posting length (measured at 90×:
-    * cap 200 still admitted a host-OOM-scale Σ C(plen,2) — the right
-    * knob is the volume itself). The histogram of `volume` by posting
-    * length is tiny (one row per distinct length), so it collects to
-    * the driver and a binary search finds the largest cap whose
-    * SURVIVING volume fits the budget — exact for this drop-whole-token
-    * implementation. */
-  private def capPostings(prefixes: Seq[DataFrame], maxPosting: Int,
-                          maxCandidates: Long,
-                          volume: Column): Seq[DataFrame] = {
-    val cached = prefixes.map(
-      graft.view.Patterns.ensurePersisted(_, graft.view.Patterns.TextInflation))
-    def plen(s: DataFrame, as: String) =
-      s.groupBy(col("tok")).agg(count(lit(1)).as(as))
-    val post = (
-      if (cached.size == 1) plen(cached.head, "plen")
-      else plen(cached.head, "plen_l")
-        .join(plen(cached.last, "plen_r"), Seq("tok"))
-        .withColumn("plen", greatest(col("plen_l"), col("plen_r"))))
-      .withColumn("vol", volume)
-    val cap: Int =
-      if (maxCandidates <= 0L) maxPosting
-      else {
-        val hist = post.groupBy(col("plen"))
-          .agg(sum(col("vol")).cast("double"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1)))
-        def volumeAt(c: Long): Double =
-          hist.iterator.filter(_._1 <= c).map(_._2).sum
-        var lo = 1L
-        var hi = if (hist.isEmpty) 1L else hist.map(_._1).max
-        if (volumeAt(hi) <= maxCandidates) lo = hi
-        else while (lo < hi) {
-          val mid = lo + (hi - lo + 1) / 2
-          if (volumeAt(mid) <= maxCandidates) lo = mid else hi = mid - 1
-        }
-        math.min(lo, maxPosting.toLong).toInt
-      }
-    val hot = post.filter(col("plen") > cap)
-    val stats = hot.agg(count(lit(1)),
-      coalesce(sum(col("vol")), lit(0)).cast("long")).head()
-    val capTag = s"[graft.dedup] ${if (cached.size == 1) "ngram" else "cross"} " +
-      s"SSJoin posting cap $cap engaged" +
-      (if (maxCandidates > 0L) s" (derived from candidate budget $maxCandidates)"
-       else "")
-    // The degradation warning only when tokens were actually dropped —
-    // a generous budget can derive a cap above every posting length,
-    // and telling operators "recall < 100%" about an output identical
-    // to the uncapped one is a false alarm.
-    System.err.println(
-      if (stats.getLong(0) > 0L)
-        capTag + s": dropping ${stats.getLong(0)} hot tokens " +
-          s"(${stats.getLong(1)} candidate rows) — pairs sharing ONLY " +
-          "capped prefix tokens are missed (recall < 100%)"
-      else capTag + ": no posting exceeds the cap — nothing dropped, recall 100%")
-    val hotToks = broadcast(hot.select(col("tok")))
-    cached.map(_.join(hotToks, Seq("tok"), "left_anti"))
-  }
-
   /** Duplicate-group-collapsed variant of [[ngramJaccardNearDup]] —
     * the exact-SSJoin sibling of [[minhashNearDupSpanning]], and the
     * variant that matters MOST at scale for this engine: duplicate
@@ -614,33 +500,26 @@ object Dedup {
     * entries into EVERY posting of their shingles, inflating the
     * candidate join's Σ|posting|² — the measured 90× host-OOM driver
     * (BENCH_NOTES r10) — before a single pair is emitted. Collapsing
-    * exact groups first shrinks both at once, so the posting cap /
-    * candidate budget (`maxPosting`/`maxCandidates`) then derives from
-    * the collapsed corpus — the corpus whose volume actually hits the
-    * join.
+    * exact groups first shrinks both at once.
     *
     * Grouping key: the sorted shingle-hash array (multiset equality —
     * exact, no hash-collision false grouping). Set-equal docs have
     * J = n/(2n−n) = 1.0 exactly, so stars are emitted at 1.0 without a
     * verify; cross-group pairs have J(x, y) = J(rep_x, rep_y) and the
-    * rep pair is found by the full engine (which is 100%-recall at
-    * threshold when uncapped), so the transitive closure equals the
-    * full variant's — with caps engaged, both variants lose exactly
-    * the pairs whose prefixes share only capped tokens. NULL-text docs
+    * rep pair is found by the full engine (100%-recall at threshold),
+    * so the transitive closure equals the full variant's. NULL-text docs
     * (NULL shingle set) pass through as pairless singletons, matching
     * the full variant's no-pair behavior (same guard as the MinHash
     * sibling). The representatives derive from the materialized
     * collapse, so the engine reads them without a second persist. */
   def ngramJaccardNearDupSpanning(df: DataFrame, idCol: String,
                                   textCol: String, shingleK: Int = 3,
-                                  minJaccard: Double = 0.8,
-                                  maxPosting: Int = Int.MaxValue,
-                                  maxCandidates: Long = 0L): DataFrame =
+                                  minJaccard: Double = 0.8): DataFrame =
     collapse(
       shingleProjection(df, idCol, textCol, shingleK)
         .filter(size(col("hs")) > 0),
       array_sort(col("hs")), lit(1.0).as("jaccard"))(
-      ngramSelfJoin(_, minJaccard, maxPosting, maxCandidates))
+      ssJoin(_, None, minJaccard))
 
   /** Cross-table fuzzy join (record linkage): every (left, right) pair
     * whose shingle Jaccard clears `minJaccard` — the two-table sibling
@@ -660,22 +539,13 @@ object Dedup {
     * min(na−i, nb−j), as in the self-join version), then verified
     * exactly. If J(a,b) ≥ t the prefixes must share a token under any
     * shared total order, so recall is 100% — never all-pairs, shuffle
-    * ∝ sum of prefix lengths.
-    *
-    * The posting valves mean the same as in the self-join: a token
-    * feeds plen_l · plen_r candidate rows, `maxPosting` caps the larger
-    * side's posting length, and `maxCandidates` budgets the surviving
-    * Σ plen_l · plen_r. */
+    * ∝ sum of prefix lengths. */
   def crossJaccardJoin(left: DataFrame, right: DataFrame,
                        leftId: String, leftText: String,
                        rightId: String, rightText: String,
-                       shingleK: Int = 3, minJaccard: Double = 0.8,
-                       maxPosting: Int = Int.MaxValue,
-                       maxCandidates: Long = 0L): DataFrame =
+                       shingleK: Int = 3, minJaccard: Double = 0.8): DataFrame =
     ssJoin(persistedShingles(left, leftId, leftText, shingleK),
-      Some(persistedShingles(right, rightId, rightText, shingleK)),
-      minJaccard, maxPosting, maxCandidates,
-      volume = col("plen_l") * col("plen_r"))
+      Some(persistedShingles(right, rightId, rightText, shingleK)), minJaccard)
       .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("jaccard"))
 
   /** Embedding-cosine near-dup: semantic duplicates via random-hyperplane
@@ -818,16 +688,9 @@ object Dedup {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     scores: DataFrame, scoreCol: String, dim: Int,
                     minCosine: Double = 0.95, planes: Int = -1,
-                    seed: Long = 42L): DataFrame = {
-    val pairs = embeddingNearDupSpanning(df, idCol, vecCol, dim,
-      minCosine, planes, seed)
-    val comps = graft.graph.ConnectedComponents.run(
-      df.select(col(idCol).as("id")), pairs, srcCol = "id_a", dstCol = "id_b")
-    graft.graph.ConnectedComponents.keepersBy(
-      comps, scores.select(col(idCol).as("id"), col(scoreCol).as("score")))
-      .select(col("id").as(idCol), col("component"),
-        col("score").as(scoreCol))
-  }
+                    seed: Long = 42L): DataFrame =
+    keepers(df, idCol, scores, scoreCol,
+      embeddingNearDupSpanning(df, idCol, vecCol, dim, minCosine, planes, seed))
 
   /** One-call TEXT near-dedup with quality keepers — the MinHash-LSH
     * sibling of [[semanticDedup]], and the composition a 100 TB text
@@ -853,9 +716,15 @@ object Dedup {
   def textDedup(df: DataFrame, idCol: String, textCol: String,
                 scores: DataFrame, scoreCol: String,
                 numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
-                minJaccard: Double = 0.9): DataFrame = {
-    val pairs = minhashNearDupSpanning(df, idCol, textCol,
-      numHashes, bands, shingleK, minJaccard)
+                minJaccard: Double = 0.9): DataFrame =
+    keepers(df, idCol, scores, scoreCol,
+      minhashNearDupSpanning(df, idCol, textCol, numHashes, bands, shingleK, minJaccard))
+
+  /** The composition [[semanticDedup]] and [[textDedup]] share: the
+    * (id_a, id_b) pairs → connected components over every `df` id →
+    * the highest-`scoreCol` keeper per component. */
+  private def keepers(df: DataFrame, idCol: String, scores: DataFrame,
+                      scoreCol: String, pairs: DataFrame): DataFrame = {
     val comps = graft.graph.ConnectedComponents.run(
       df.select(col(idCol).as("id")), pairs, srcCol = "id_a", dstCol = "id_b")
     graft.graph.ConnectedComponents.keepersBy(

@@ -24,24 +24,6 @@ final case class Q(
     run: (SparkSession, String) => DataFrame
 )
 
-/** Env-knob parsing with attributable failures: a bare
-  * `NumberFormatException` from `sys.env(...).toInt` names neither the
-  * variable nor the bad value, so a typo'd scale-run knob dies
-  * unattributably mid-battery. (Round-11 advice.)
-  */
-object Env {
-  private def parse[A](name: String, kind: String, conv: String => A): Option[A] =
-    sys.env.get(name).map { v =>
-      try conv(v.trim)
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"env knob $name must be $kind, got '$v'")
-      }
-    }
-  def intOr(name: String, default: Int): Int = parse(name, "an integer", _.toInt).getOrElse(default)
-  def longOr(name: String, default: Long): Long = parse(name, "an integer", _.toLong).getOrElse(default)
-}
-
 /** Per-JVM cache of deterministic streaming feed directories.
   *
   * The streaming replay queries build their file-source feeds from the

@@ -246,11 +246,13 @@ object QuadBattery {
     }
   )
 
-  /** The N-Triples parser under the oracle gate: customers are
-    * serialized to NT statement lines (IRI objects, lang-tagged and
-    * plain literals), parsed back through `QuadSource.fromNtLines`, and
-    * pivoted — the closed-form oracle checks the whole
-    * serialize→parse→pivot round-trip. */
+  /** N-Triples through the Turtle parser under the oracle gate:
+    * customers are serialized to NT statement lines (plain, lang-tagged
+    * and typed literals), each line parsed back as its own Turtle
+    * document through `QuadSource.fromTurtleDocs` (what
+    * `QuadSource.ntriples` does with a file's lines), and pivoted — the
+    * closed-form oracle checks the whole serialize→parse→pivot
+    * round-trip. */
   val ntRoundtrip = Q(
     "q_nt_roundtrip",
     Some(
@@ -277,8 +279,9 @@ object QuadBattery {
       val spec = TableSpec("graph.customer_nt", Seq(
         "c_name" -> ColType.Str, "seg_nl" -> ColType.Str,
         "c_nationkey" -> ColType.IntT))
+      import s.implicits._
       SubjectPivot.pivotTable(
-        graft.source.QuadSource.fromNtLines(lines), spec)
+        graft.source.QuadSource.fromTurtleDocs(lines.as[String]), spec)
         .select(col("subject").as("id"), col("c_name"), col("seg_nl"),
           col("c_nationkey"))
         .orderBy(col("id"))

@@ -541,14 +541,8 @@ object TextBattery {
         "FROM ov JOIN sz na ON na.doc_id = id_a JOIN sz nb ON nb.doc_id = id_b " +
         "WHERE CAST(o AS DOUBLE) / (na.n + nb.n - o) >= 0.7 ORDER BY 1, 2"),
     (s, dir) =>
-      // GRAFT_SSJOIN_MAX_POSTING / _MAX_CANDIDATES: scale-run pressure
-      // valves (the 90× ScaleUp corpus host-OOMs the exact path,
-      // BENCH_NOTES r10/r11). Unset under the driver's gate — the
-      // oracle states the exact uncapped pair set.
       Dedup.ngramJaccardNearDup(withCopies(documents(s, dir)), "doc_id", "text",
-        shingleK = 3, minJaccard = 0.7,
-        maxPosting = Env.intOr("GRAFT_SSJOIN_MAX_POSTING", Int.MaxValue),
-        maxCandidates = Env.longOr("GRAFT_SSJOIN_MAX_CANDIDATES", 0L))
+        shingleK = 3, minJaccard = 0.7)
         .orderBy(col("id_a"), col("id_b"))
   )
 
@@ -1025,13 +1019,9 @@ object TextBattery {
       val right = docs.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("rid"),
           Planted.text(col("text")).as("rtext"))
-      // Same scale-run pressure valves as the self-join (unset under
-      // the driver's gate — the oracle states the exact uncapped set).
       Dedup.crossJaccardJoin(docs, right,
         leftId = "doc_id", leftText = "text",
-        rightId = "rid", rightText = "rtext", minJaccard = 0.5,
-        maxPosting = Env.intOr("GRAFT_SSJOIN_MAX_POSTING", Int.MaxValue),
-        maxCandidates = Env.longOr("GRAFT_SSJOIN_MAX_CANDIDATES", 0L))
+        rightId = "rid", rightText = "rtext", minJaccard = 0.5)
         .orderBy(col("id_l"), col("id_r"))
     }
   )

@@ -116,7 +116,7 @@ object Upsert {
     * streaming replay width derives from feed bytes keeps both ends
     * honest: a sf-scale test table derives to the floor, a 100 TB
     * table derives to wide pruning. Existing targets ignore this —
-    * the layout marker pins their count (see readBucketMarker). */
+    * the layout marker pins their count (see layoutBuckets). */
   def bucketsFor(expectedBytes: Long): Int =
     math.max(4, math.min(4096L, expectedBytes / (32L << 20)).toInt)
 
@@ -131,42 +131,36 @@ object Upsert {
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Three-way marker read result: a present-but-unreadable marker is
-    * NOT the same as a missing one. Treating them alike would let the
-    * legacy-upgrade path overwrite a corrupt marker with the caller's
-    * numBuckets — silently re-pinning a possibly wrong modulus on a
-    * target whose true layout is unknown, the exact dup-key corruption
-    * the marker exists to prevent. */
-  private sealed trait MarkerState
-  private case object MarkerAbsent extends MarkerState
-  private final case class MarkerValid(n: Int) extends MarkerState
-  private final case class MarkerInvalid(reason: String) extends MarkerState
-
-  /** Reads the whole marker (single `read` calls may return short on
-    * FSDataInputStream — a short read would parse a truncated count,
-    * e.g. '6' from '64', and silently merge under the wrong modulus)
-    * and rejects values outside a sane layout range. Absent markers
-    * mean a legacy (pre-marker) target; unparseable/out-of-range
-    * content or a read error means the layout is UNKNOWN — callers
-    * must refuse to merge incrementally rather than guess. */
-  private def readBucketMarker(fs: FileSystem,
-                               dir: Path): MarkerState = {
+  /** The bucket count `dir`'s marker pins. The whole marker is read
+    * (single `read` calls may return short on FSDataInputStream — a
+    * short read would parse a truncated count, e.g. '6' from '64', and
+    * silently merge under the wrong modulus). An absent, unparseable or
+    * out-of-range marker, or a read error, means the layout is UNKNOWN:
+    * merging under a guessed modulus is the dup-key corruption the
+    * marker exists to prevent, so the incremental merge is refused and
+    * the marker left as it is. A full sync rewrites layout and marker
+    * atomically. */
+  private def layoutBuckets(fs: FileSystem, dir: Path): Int = {
+    def refuse(reason: String): Nothing =
+      throw new IllegalStateException(
+        s"bucket marker at $dir is $reason; refusing incremental " +
+          "merge — run a full sync to re-pin the layout")
     val p = new Path(dir, BucketMarker)
-    if (!fs.exists(p)) MarkerAbsent
-    else try {
+    if (!fs.exists(p)) refuse("absent")
+    val v = try {
       val in = fs.open(p)
       try {
         val buf = new java.io.ByteArrayOutputStream(32)
         val chunk = new Array[Byte](32)
         var n = in.read(chunk)
         while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        val v = new String(buf.toByteArray, "UTF-8").trim.toInt
-        if (v >= 1 && v <= (1 << 20)) MarkerValid(v)
-        else MarkerInvalid(s"bucket count $v outside [1, ${1 << 20}]")
+        new String(buf.toByteArray, "UTF-8").trim.toInt
       } finally in.close()
     } catch {
-      case e: Exception => MarkerInvalid(s"unreadable: ${e.getMessage}")
+      case e: Exception => refuse(s"unreadable: ${e.getMessage}")
     }
+    if (v >= 1 && v <= (1 << 20)) v
+    else refuse(s"bucket count $v outside [1, ${1 << 20}]")
   }
 
   /** Parquet-backed upsert, partition-scoped: the target lives
@@ -211,30 +205,11 @@ object Upsert {
       // directories laid out under another: a key whose old row sits
       // in (say) bucket-64 dir 20 but hashes to staged bucket-16 id 4
       // would not be read, not merged, and end up DUPLICATED across
-      // two dirs. The marker makes the layout self-describing; targets
-      // written before the marker existed fall back to the caller's
-      // value (the historical behavior).
-      val layoutBuckets = readBucketMarker(fs, new Path(path)) match {
-        case MarkerValid(n) => n
-        case MarkerAbsent =>
-          // Upgrade legacy (pre-marker) targets in place: once the
-          // caller's value has been used to merge, it IS the layout —
-          // pin it so the target stops being vulnerable to a future
-          // mismatched caller.
-          writeBucketMarker(fs, new Path(path), numBuckets)
-          numBuckets
-        case MarkerInvalid(reason) =>
-          // Fail loudly: merging under a guessed modulus on a target
-          // whose layout is unknown is the dup-key corruption the
-          // marker exists to prevent. Recover with a full sync (which
-          // rewrites layout + marker atomically).
-          throw new IllegalStateException(
-            s"bucket marker at $path is $reason; refusing incremental " +
-              "merge — run a full sync to re-pin the layout")
-      }
-      val bucket = bucketOf(spec, layoutBuckets)
+      // two dirs. The marker makes the layout self-describing.
+      val layout = layoutBuckets(fs, new Path(path))
+      val bucket = bucketOf(spec, layout)
       val touched = staged.select(bucket.as(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).sorted // ≤ layoutBuckets values
+        .collect().map(_.getInt(0)).sorted // ≤ layout values
       // A batch that touches no bucket leaves the target as it is.
       if (touched.nonEmpty) {
         val targetTouched = spark.read.parquet(path)

@@ -9,11 +9,13 @@ import graft.model.{Ns, Quad}
   * gzipped Turtle and parses it as one Node stream).
   *
   * Turtle is NOT line-splittable (prefix state + multi-line statements),
-  * so unlike the N-Triples expression parser in [[QuadSource]] this runs
-  * per *document*: one file = one parse call on one executor, many files
-  * parallelize across the cluster. That is exactly the reference's
-  * constraint (a single Node stream) — at 100 TB the at-rest format
-  * should be Parquet quads or NT; Turtle is the ingest edge.
+  * so this runs per *document*: one file = one parse call on one
+  * executor, many files parallelize across the cluster. That is exactly
+  * the reference's constraint (a single Node stream) — at 100 TB the
+  * at-rest format should be Parquet quads or NT; Turtle is the ingest
+  * edge. N-Triples reads through this parser too: every statement line
+  * is a complete Turtle document, so [[QuadSource.ntriples]] parses each
+  * line as one and keeps the line read split-parallel.
   *
   * Grammar coverage (the subset triplestore exports use):
   *  - `@prefix`/`@base` and SPARQL-style `PREFIX`/`BASE` directives
@@ -217,7 +219,8 @@ object TurtleParser {
         } else if (i + 1 < s.length && s.charAt(i) == '^' && s.charAt(i + 1) == '^') {
           i += 2
           skipWs()
-          val dt = if (s.charAt(i) == '<') parseIriRef() else resolvePrefixed(parseNameChars())
+          val dt = if (i < s.length && s.charAt(i) == '<') parseIriRef()
+            else resolvePrefixed(parseNameChars())
           (value, null, dt)
         } else (value, null, null)
       } else if (c == '(' || c == '[') fail("collections / anonymous property lists unsupported")
@@ -243,12 +246,12 @@ object TurtleParser {
           val p = parseNameChars() // "ex:" or ":"
           if (!p.endsWith(":")) fail(s"bad prefix declaration '$p'")
           skipWs()
-          if (s.charAt(i) != '<') fail("prefix IRI expected")
+          if (i >= s.length || s.charAt(i) != '<') fail("prefix IRI expected")
           prefixes(p.dropRight(1)) = parseIriRef()
           if (!sparqlStyle) expect('.')
         case w if w.startsWith("base") =>
           skipWs()
-          if (s.charAt(i) != '<') fail("base IRI expected")
+          if (i >= s.length || s.charAt(i) != '<') fail("base IRI expected")
           base = parseIriRef()
           baseUri = null // re-parse on next relative reference
           if (!sparqlStyle) expect('.')

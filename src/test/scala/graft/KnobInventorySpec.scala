@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the reason it must stay. */
 class KnobInventorySpec extends AnyFunSuite {
 
-  /** Knob -> why it exists (harness, deployment, platform or scale
-    * valve). */
+  /** Knob -> why it exists (harness, deployment or platform). */
   private val pinned: Map[String, String] = Map(
     "SPARK_GRAFT_SF_DIR" -> "harness: testdata directory Bench and Inspect run on",
     "SPARK_GRAFT_CPUS" -> "harness: local[N] core count of the LocalSession (Bench, Verify, ScaleUp, Inspect)",
@@ -22,9 +21,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "GRAFT_LOAD_GATE" -> "harness: ambient load1 threshold before timing",
     "GRAFT_LOAD_GATE_MAX_WAIT" -> "harness: bound on the load-gate wait",
     "SPARK_GRAFT_NO_SHM" -> "deployment: keep Spark local dirs off /dev/shm",
-    "GRAFT_STATE_STORE" -> "platform: HDFS state store where rocksdbjni is missing",
-    "GRAFT_SSJOIN_MAX_POSTING" -> "scale valve: SSJoin per-side posting cap",
-    "GRAFT_SSJOIN_MAX_CANDIDATES" -> "scale valve: SSJoin candidate budget")
+    "GRAFT_STATE_STORE" -> "platform: HDFS state store where rocksdbjni is missing")
 
   private val stringLiteral = "\"(?:[^\"\\\\\n]|\\\\.)*\"".r
   private val knob = "(?:SPARK_)?GRAFT_[A-Z_]+|spark\\.graft\\.[A-Za-z0-9_.]*".r

@@ -18,8 +18,10 @@ class MaterializationInventorySpec extends AnyFunSuite {
     * the engine's one staging form, instead of its own inline
     * `localCheckpoint`. 47 → 44: the IVF-flat and IVF-PQ indexes are
     * one cell index, so their two builds (two sites each) and two
-    * extends (one each) are one of each. */
-  private val pinned = 44
+    * extends (one each) are one of each. 44 → 43: the SSJoin posting
+    * cap (`Dedup.capPostings`, an `ensurePersisted` caller) is
+    * deleted with the scale valves that opened it. */
+  private val pinned = 43
 
   /** `ensurePersisted` persists through one `.persist(` in its own
     * body, so each of its callers is a site too; its definition is

@@ -317,70 +317,43 @@ class DedupSpec extends SparkSuite {
     assert(cartesian.isEmpty, "prefix-filter candidates must be an equi-join")
   }
 
-  test("ngram-jaccard posting cap degrades predictably: rare-token pairs " +
-    "survive, hot-token-only pairs are dropped, uncapped is a superset") {
-    // 12 identical all-boilerplate docs: every one of their prefix
-    // shingles has posting length 12; plus one rare pair (1,2) whose
-    // shingles appear in exactly two docs.
+  test("ngram self-join equals the cross join of a corpus with itself") {
+    // 12 identical all-boilerplate docs plus one rare pair (1,2) whose
+    // shingles appear in exactly two docs. Joined with itself, every
+    // document frequency doubles, so both joins see the same token
+    // order.
     val boiler = "alpha beta gamma delta epsilon zeta eta theta"
     val rare = "unique one two three four five six seven"
     val f = docs(
       (Seq(1L -> rare, 2L -> rare) ++
         (3L to 14L).map(_ -> boiler)): _*)
-    def pairsOf(cap: Int) =
-      Dedup.ngramJaccardNearDup(f, "doc_id", "text",
-        shingleK = 3, minJaccard = 0.5, maxPosting = cap)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
-        .toSet
-    val uncapped = pairsOf(Int.MaxValue)
-    val capped = pairsOf(5)
-    // uncapped: the rare pair + all 66 boiler pairs (exact recall)
-    assert(uncapped.contains((1L, 2L)))
-    assert(uncapped.size == 1 + 66)
-    // capped at 5 (< 12 boiler posting length): boiler index entries
-    // drop, so boiler-only pairs disappear — the documented recall
-    // cost — while the rare pair (posting length 2) is untouched
-    assert(capped == Set((1L, 2L)))
-    assert(capped.subsetOf(uncapped))
-    // candidate-BUDGET form: the boiler tokens' surviving volume
-    // (5+ tokens × C(12,2)=66) blows a 100-candidate budget, so the
-    // derived cap lands below 12 and only the rare pair survives; a
-    // generous budget derives no effective cap and matches uncapped
-    def budgetPairs(b: Long) =
-      Dedup.ngramJaccardNearDup(f, "doc_id", "text",
-        shingleK = 3, minJaccard = 0.5, maxCandidates = b)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(budgetPairs(100L) == Set((1L, 2L)))
-    assert(budgetPairs(1000000L) == uncapped)
-  }
-
-  test("ngram self-join equals the cross join of a corpus with itself " +
-    "(id_l < id_r), uncapped and capped") {
-    // The posting-cap fixture: joined with itself, every posting
-    // length doubles in the document frequency but not in the per-side
-    // posting, so both joins see the same token order and the same cap.
-    val boiler = "alpha beta gamma delta epsilon zeta eta theta"
-    val rare = "unique one two three four five six seven"
-    val f = docs(
-      (Seq(1L -> rare, 2L -> rare) ++
-        (3L to 14L).map(_ -> boiler)): _*)
-    for (cap <- Seq(Int.MaxValue, 5)) {
-      val self = Dedup.ngramJaccardNearDup(f, "doc_id", "text",
-        shingleK = 3, minJaccard = 0.5, maxPosting = cap)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-          r.getAs[Double]("jaccard"))).toSet
-      val cross = Dedup.crossJaccardJoin(f, f, "doc_id", "text",
-        "doc_id", "text", shingleK = 3, minJaccard = 0.5, maxPosting = cap)
-        .filter(col("id_l") < col("id_r"))
-        .collect()
-        .map(r => (r.getAs[Long]("id_l"), r.getAs[Long]("id_r"),
-          r.getAs[Double]("jaccard"))).toSet
-      assert(self.nonEmpty, s"cap $cap")
-      assert(self === cross, s"cap $cap")
-    }
+    val self = Dedup.ngramJaccardNearDup(f, "doc_id", "text",
+      shingleK = 3, minJaccard = 0.5)
+      .collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[Double]("jaccard"))).toSet
+    val cross = Dedup.crossJaccardJoin(f, f, "doc_id", "text",
+      "doc_id", "text", shingleK = 3, minJaccard = 0.5)
+      .filter(col("id_l") < col("id_r"))
+      .collect()
+      .map(r => (r.getAs[Long]("id_l"), r.getAs[Long]("id_r"),
+        r.getAs[Double]("jaccard"))).toSet
+    // exact recall: the rare pair + all C(12,2) = 66 boiler pairs
+    assert(self.map(p => (p._1, p._2)).contains((1L, 2L)))
+    assert(self.size == 1 + 66)
+    assert(self === cross)
+    // across two corpora: the rare left/right pair + all 6×6 boiler pairs
+    val left = docs((Seq(1L -> rare) ++ (3L to 8L).map(_ -> boiler)): _*)
+      .withColumnsRenamed(Map("doc_id" -> "lid", "text" -> "ltext"))
+    val right = docs((Seq(101L -> rare) ++ (103L to 108L).map(_ -> boiler)): _*)
+      .withColumnsRenamed(Map("doc_id" -> "rid", "text" -> "rtext"))
+    val twoSided = Dedup.crossJaccardJoin(left, right, "lid", "ltext", "rid", "rtext",
+      shingleK = 3, minJaccard = 0.5)
+      .collect()
+      .map(r => (r.getAs[Long]("id_l"), r.getAs[Long]("id_r")))
+      .toSet
+    assert(twoSided.contains((1L, 101L)))
+    assert(twoSided.size == 1 + 36)
   }
 
   test("embedding near-dup multi-probe recovers a near-boundary pair") {
@@ -511,46 +484,6 @@ class DedupSpec extends SparkSuite {
     } yield (lid, rid) -> j).toMap
     assert(got.keySet === brute.keySet)
     got.foreach { case (k, j) => assert(math.abs(j - brute(k)) < 1e-12, k) }
-  }
-
-  test("crossJaccardJoin posting cap degrades predictably: rare pairs " +
-    "survive, hot-token-only pairs drop, generous budget matches uncapped") {
-    // Mirror of the self-join cap fixture across two corpora: boiler
-    // text on both sides (per-side posting length 6 per boiler prefix
-    // token) plus one rare left/right pair whose tokens appear once
-    // per side (per-side length 1). The cap quantity is per-side
-    // max(plen_l, plen_r) — same meaning as the self-join knob.
-    val boiler = "alpha beta gamma delta epsilon zeta eta theta"
-    val rare = "unique one two three four five six seven"
-    val left = docs((Seq(1L -> rare) ++ (3L to 8L).map(_ -> boiler)): _*)
-      .withColumnsRenamed(Map("doc_id" -> "lid", "text" -> "ltext"))
-    val right = docs((Seq(101L -> rare) ++ (103L to 108L).map(_ -> boiler)): _*)
-      .withColumnsRenamed(Map("doc_id" -> "rid", "text" -> "rtext"))
-    def pairsOf(cap: Int, budget: Long = 0L) =
-      Dedup.crossJaccardJoin(left, right, "lid", "ltext", "rid", "rtext",
-        shingleK = 3, minJaccard = 0.5, maxPosting = cap, maxCandidates = budget)
-        .collect()
-        .map(r => (r.getAs[Long]("id_l"), r.getAs[Long]("id_r")))
-        .toSet
-    val uncapped = pairsOf(Int.MaxValue)
-    // exact recall: the rare cross pair + all 6×6 boiler cross pairs
-    assert(uncapped.contains((1L, 101L)))
-    assert(uncapped.size == 1 + 36)
-    // per-side cap 5 (< 6): boiler tokens drop from both sides'
-    // indexes, boiler-only pairs disappear, the rare pair (per-side
-    // posting length 1) is untouched
-    val capped = pairsOf(5)
-    assert(capped == Set((1L, 101L)))
-    assert(capped.subsetOf(uncapped))
-    // cap 6 = exactly the per-side boiler posting length: nothing is
-    // dropped. Pins the per-side reading — under the old combined
-    // plen_l+plen_r (=12) semantics this cap would prune the boiler.
-    assert(pairsOf(6) == uncapped)
-    // budget form: boiler volume (≥5 tokens × 6·6=36) blows a
-    // 50-candidate budget → derived cap < 12, only the rare pair
-    // survives; a generous budget derives no effective cap
-    assert(pairsOf(Int.MaxValue, budget = 50L) == Set((1L, 101L)))
-    assert(pairsOf(Int.MaxValue, budget = 1000000L) == uncapped)
   }
 
   test("repeatedSpans finds the shared run, merges overlapping windows, " +

@@ -124,18 +124,6 @@ class NativeCallSpec extends SparkSuite {
 
   kernelCase("merge_top_s")(shortlists, MergeTopSExpr(col("arrs"), 3))
 
-  private lazy val lines = {
-    val s = spark
-    import s.implicits._
-    Seq("<http://a/s> <http://a/p> \"x\\ty \\\"q\\\"\"@en .",
-      "<http://a/s> <http://a/p> <http://a/o> <http://a/g> .",
-      "_:b1 <http://a/p> \"5\"^^<http://www.w3.org/2001/XMLSchema#int> .",
-      "# a comment", "", "<http://a/s> not a statement", null)
-      .toDF("line").localCheckpoint()
-  }
-
-  kernelCase("nt_parse")(lines, NtLineParseExpr(col("line")))
-
   private lazy val hashes = frame("""SELECT * FROM VALUES
     (array(11L, -3L, 42L)), (array(7L, CAST(NULL AS BIGINT))),
     (CAST(array() AS ARRAY<BIGINT>)), (CAST(NULL AS ARRAY<BIGINT>)) AS t(h)""")

@@ -1,5 +1,7 @@
 package graft.sink
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSuite
@@ -258,16 +260,24 @@ class UpsertSpec extends SparkSuite {
         java.nio.file.Paths.get(tmp, "_graft_buckets")), "UTF-8") == bad,
         "a corrupt marker must be preserved as evidence, not overwritten")
     }
-    // ABSENT marker stays the legacy path: merge under the caller's
-    // width and pin it.
+    // An ABSENT marker is refused the same way: the caller's width is
+    // a guess, and nothing is written — no data, no marker.
     val tmp = seedTarget()
     java.nio.file.Files.delete(java.nio.file.Paths.get(tmp, "_graft_buckets"))
-    Upsert.mergeAndWrite(spark, tmp, update, spec,
-      fullSync = false, numBuckets = 8)
-    assert(new java.io.File(tmp, "_graft_buckets").isFile)
+    def files(): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
+      try walk.iterator().asScala.map(_.toString).toSet finally walk.close()
+    }
+    val before = files()
+    val e = intercept[IllegalStateException] {
+      Upsert.mergeAndWrite(spark, tmp, update, spec,
+        fullSync = false, numBuckets = 8)
+    }
+    assert(e.getMessage.contains("absent; refusing incremental"))
+    assert(files() == before)
     val m = spark.read.parquet(tmp).select("id", "v").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(m("r1") == "new1" && m.size == 20)
+    assert(m("r1") == "old1" && m.size == 20)
   }
 
   test("bucketsFor derives one bucket per ~32 MB, floored and capped") {

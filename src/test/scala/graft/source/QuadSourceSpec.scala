@@ -2,16 +2,27 @@ package graft.source
 
 import graft.SparkSuite
 
-/** N-Triples/N-Quads line parser (SURVEY.md §2.1 #3). */
+/** N-Triples read through the Turtle parser, one line per document
+  * (SURVEY.md §2.1 #3). */
 class QuadSourceSpec extends SparkSuite {
 
-  private def parse(lines: String*) = {
-    val s = spark
-    import s.implicits._
-    QuadSource.fromNtLines(lines.toDF("value")).collect()
+  private type Row6 = (String, String, String, Option[String], Option[String], Option[String])
+
+  /** `lines` written to one N-Triples file. */
+  private def ntFile(lines: Seq[String]): String = {
+    val f = java.nio.file.Files.createTempDirectory("quadsource").resolve("in.nt")
+    java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  private def parse(lines: String*): Array[Row6] =
+    QuadSource.ntriples(spark, ntFile(lines)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         Option(r.getString(3)), Option(r.getString(4)), Option(r.getString(5))))
-  }
+
+  /** The lines of a one-column frame, as written by a serializer. */
+  private def linesOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.getString(0)).toSeq
 
   test("IRI object triple") {
     val out = parse("""<urn:s> <urn:p> <urn:o> .""")
@@ -34,13 +45,25 @@ class QuadSourceSpec extends SparkSuite {
     assert(out(0)._3 == "a \"quoted\" line\nnext")
   }
 
-  test("N-Quads 4th term becomes graph; malformed lines dropped") {
+  test("Unicode escapes in literals decode to their code points") {
     val out = parse(
-      """<urn:s> <urn:p> "v" <urn:g/or-1> .""",
-      """# comment line""",
-      """not a triple at all""")
-    assert(out.length == 1)
-    assert(out(0)._6.contains("urn:g/or-1"))
+      "<urn:s/1> <urn:p> \"caf\\u00E9\" .",
+      "<urn:s/2> <urn:p> \"\\U0001F600\"@en .")
+    assert(out.map(r => r._1 -> r._3).toMap ==
+      Map("urn:s/1" -> "caf\u00e9", "urn:s/2" -> "\ud83d\ude00"))
+  }
+
+  test("a malformed line fails with its offset; comment and blank lines yield nothing") {
+    assert(parse("# comment line", "", "   ", "# <urn:s> <urn:p> <urn:o> .").isEmpty)
+    Seq("""not a triple at all""",
+      """<urn:s> <missing-object> .""",
+      """<urn:s> <urn:p> "unknown \q escape" .""",
+      """<urn:s> <urn:p> "v" <urn:g/or-1> .""").foreach { bad =>
+      val e = intercept[Exception](parse("""<urn:s> <urn:p> "ok" .""", bad))
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: TurtleParser.TurtleParseException => t }
+      assert(cause.exists(_.getMessage.contains("at offset")), s"$bad: $e")
+    }
   }
 
   test("blank node subject and object pass through as tokens") {
@@ -48,7 +71,43 @@ class QuadSourceSpec extends SparkSuite {
     assert(out(0)._1 == "_:b0" && out(0)._3 == "_:b1")
   }
 
-  test("ntEscapeLiteral round-trips hostile literals through fromNtLines") {
+  test("statement lines parse to their expected tuples") {
+    // Every N-Triples grammar branch: IRI/blank/literal objects, lang
+    // and datatype suffixes, whitespace slack, every escape, internal
+    // quotes, adjacent backslash runs, empty literals.
+    val expected: Seq[(String, Row6)] = Seq(
+      """<urn:s> <urn:p> <urn:o> .""" ->
+        ("urn:s", "urn:p", "urn:o", None, None, None),
+      """  <urn:s>   <urn:p>   "padded"   .  """ ->
+        ("urn:s", "urn:p", "padded", None, None, None),
+      """<urn:s> <urn:p> "Journaal"@nl .""" ->
+        ("urn:s", "urn:p", "Journaal", Some("nl"), None, None),
+      """<urn:s> <urn:p> "PT1H"^^<http://www.w3.org/2001/XMLSchema#duration> .""" ->
+        ("urn:s", "urn:p", "PT1H", None,
+          Some("http://www.w3.org/2001/XMLSchema#duration"), None),
+      """_:b0 <urn:p> _:b1 .""" ->
+        ("_:b0", "urn:p", "_:b1", None, None, None),
+      """_:b0 <urn:p> "blank-subject literal" .""" ->
+        ("_:b0", "urn:p", "blank-subject literal", None, None, None),
+      """<urn:s> <urn:p> "a \"quoted\" line\nnext" .""" ->
+        ("urn:s", "urn:p", "a \"quoted\" line\nnext", None, None, None),
+      """<urn:s> <urn:p> "tabs\tand\rcr and \\ backslash" .""" ->
+        ("urn:s", "urn:p", "tabs\tand\rcr and \\ backslash", None, None, None),
+      """<urn:s> <urn:p> "adjacent \\n run" .""" ->
+        ("urn:s", "urn:p", "adjacent \\n run", None, None, None),
+      """<urn:s> <urn:p> "trailing backslash \\" .""" ->
+        ("urn:s", "urn:p", "trailing backslash \\", None, None, None),
+      """<urn:s> <urn:p> "" .""" ->
+        ("urn:s", "urn:p", "", None, None, None),
+      """<urn:s> <urn:p> ""@en .""" ->
+        ("urn:s", "urn:p", "", Some("en"), None, None))
+    expected.foreach { case (line, want) =>
+      assert(parse(line).toSeq == Seq(want), line)
+    }
+    assert(parse(expected.map(_._1): _*).toSeq == expected.map(_._2))
+  }
+
+  test("ntEscapeLiteral round-trips hostile literals through ntriples") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
@@ -71,41 +130,9 @@ class QuadSourceSpec extends SparkSuite {
         lit("<urn:s/"), col("id"), lit("> <urn:p> \""),
         graft.functions.Functions.ntEscapeLiteral(col("v")),
         lit("\" .")).as("value"))
-    val parsed = QuadSource.fromNtLines(lines).collect().map(_.getAs[String]("obj"))
+    val parsed = parse(linesOf(lines): _*).map(_._3)
     assert(parsed.toSeq.sorted == nasty.sorted,
       s"NT round-trip mismatch: ${parsed.toSeq.sorted.zip(nasty.sorted).filter(p => p._1 != p._2)}")
-  }
-
-  test("native one-pass parse is behaviorally identical to the composed form") {
-    val s = spark
-    import s.implicits._
-    // Every grammar branch plus the hostile cases: IRI/blank/literal
-    // objects, lang and datatype suffixes, quads, comments, malformed
-    // lines, whitespace slack, every escape the chain handles, unknown
-    // escapes, internal quotes, adjacent backslash runs.
-    val fixture = Seq(
-      """<urn:s> <urn:p> <urn:o> .""",
-      """  <urn:s>   <urn:p>   "padded"   .  """,
-      """<urn:s> <urn:p> "Journaal"@nl .""",
-      """<urn:s> <urn:p> "PT1H"^^<http://www.w3.org/2001/XMLSchema#duration> .""",
-      """<urn:s> <urn:p> "v" <urn:g/or-1> .""",
-      """_:b0 <urn:p> _:b1 .""",
-      """_:b0 <urn:p> "blank-subject literal" .""",
-      """<urn:s> <urn:p> "a \"quoted\" line\nnext" .""",
-      """<urn:s> <urn:p> "tabs\tand\rcr and \\ backslash" .""",
-      """<urn:s> <urn:p> "adjacent \\n run and unknown \q escape" .""",
-      """<urn:s> <urn:p> "trailing backslash \\" .""",
-      """<urn:s> <urn:p> "" .""",
-      """<urn:s> <urn:p> ""@en .""",
-      """# comment line""",
-      """""",
-      """not a triple at all""",
-      """<urn:s> <missing-object> .""")
-    val lines = fixture.toDF("value")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (0 until 6).map(i => Option(r.getString(i))).toList).toList
-    assert(rows(QuadSource.fromNtLines(lines)) ===
-      rows(QuadSource.fromNtLinesComposed(lines)))
   }
 
   test("generated escape-heavy literals round-trip through BOTH parsers") {
@@ -114,7 +141,9 @@ class QuadSourceSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     // Seeded generator biased toward the characters the escape chain
     // must handle: backslashes, quotes, control chars, multi-byte.
-    // Tokens (not chars), so surrogate pairs stay intact.
+    // Tokens (not chars), so surrogate pairs stay intact. The two
+    // parses are the line-split one of `ntriples` and one whole
+    // document of every statement.
     val alphabet = IndexedSeq(
       "\\", "\"", "n", "t", "r", " ", "\n", "\r", "\t", "a", "b",
       "\ud83d\ude00", "\u00e9")
@@ -123,27 +152,17 @@ class QuadSourceSpec extends SparkSuite {
       val len = 1 + rnd.nextInt(20)
       (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
     }.distinct
-    val df = values.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val lines = linesOf(values.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("id", "v")
-    // NT expression-parser path
-    val ntLines = df.select(concat(
-      lit("<urn:s/"), col("id"), lit("> <urn:p> \""),
-      graft.functions.Functions.ntEscapeLiteral(col("v")), lit("\" .")).as("value"))
-    val ntBack = QuadSource.fromNtLines(ntLines).collect()
-      .map(r => r.getAs[String]("subject") -> r.getAs[String]("obj")).toMap
-    // Turtle character-parser path (one doc with all statements)
-    val ttlDoc = df.select(concat(
-      lit("<urn:s/"), col("id"), lit("> <urn:p> \""),
-      graft.functions.Functions.ntEscapeLiteral(col("v")), lit("\" .")).as("stmt"))
-      .agg(concat_ws("\n", collect_list(col("stmt"))).as("doc"))
-      .as[String].collect().head
-    val ttlBack = TurtleParser.parse(ttlDoc)
+      .select(concat(
+        lit("<urn:s/"), col("id"), lit("> <urn:p> \""),
+        graft.functions.Functions.ntEscapeLiteral(col("v")), lit("\" ."))))
+    val split = parse(lines: _*).map(r => r._1 -> r._3).toMap
+    val whole = TurtleParser.parse(lines.mkString("\n"))
       .map(q => q.subject -> q.obj).toMap
+    assert(split == whole)
     values.zipWithIndex.foreach { case (v, i) =>
-      assert(ntBack(s"urn:s/$i") == v,
-        s"NT path corrupted ${v.map(_.toInt.toHexString)}")
-      assert(ttlBack(s"urn:s/$i") == v,
-        s"Turtle path corrupted ${v.map(_.toInt.toHexString)}")
+      assert(split(s"urn:s/$i") == v, s"corrupted ${v.map(_.toInt.toHexString)}")
     }
   }
 }

@@ -72,6 +72,10 @@ class TurtleParserSpec extends SparkSuite {
     intercept[TurtleParser.TurtleParseException](p("ex:s <urn:p> 1 .")) // undeclared prefix
     intercept[TurtleParser.TurtleParseException](p("<urn:s> <urn:p> \"unterminated"))
     intercept[TurtleParser.TurtleParseException](p("<urn:s> <urn:p> \"x\""))
+    // end of document where an IRI must follow
+    intercept[TurtleParser.TurtleParseException](p("<urn:s> <urn:p> \"x\"^^"))
+    intercept[TurtleParser.TurtleParseException](p("@prefix ex:"))
+    intercept[TurtleParser.TurtleParseException](p("BASE"))
   }
 
   test("truncated or malformed unicode escapes fail the parser contract") {
