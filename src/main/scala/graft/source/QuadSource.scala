@@ -36,10 +36,8 @@ object QuadSource {
     * within a file; many files parallelize across executors, which is
     * the same per-stream constraint the reference's Node pipeline has.
     * Use NT or Parquet for splittable at-rest storage. */
-  def turtle(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    fromTurtleDocs(spark.read.option("wholetext", "true").text(path).as[String])
-  }
+  def turtle(spark: SparkSession, path: String): DataFrame =
+    fromTurtleDocs(spark.read.option("wholetext", "true").textFile(path))
 
   /** [[TurtleParser]] over an existing one-document-per-row Dataset. */
   def fromTurtleDocs(docs: Dataset[String]): DataFrame = {

@@ -66,6 +66,22 @@ class QuadSourceSpec extends SparkSuite {
     }
   }
 
+  test("turtle reads each file as one document") {
+    // Prefix state and a statement spanning lines only parse when the
+    // file is not split into lines.
+    val dir = java.nio.file.Files.createTempDirectory("quadsource")
+    java.nio.file.Files.write(dir.resolve("a.ttl"),
+      "@prefix ex: <urn:ex/> .\nex:s ex:p \"one\" ;\n  ex:q ex:o .\n".getBytes("UTF-8"))
+    java.nio.file.Files.write(dir.resolve("b.ttl"),
+      "<urn:t> <urn:p>\n  \"two\"@en .\n".getBytes("UTF-8"))
+    val out = QuadSource.turtle(spark, dir.toString).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), Option(r.getString(3))))
+    assert(out.toSet == Set(
+      ("urn:ex/s", "urn:ex/p", "one", None),
+      ("urn:ex/s", "urn:ex/q", "urn:ex/o", None),
+      ("urn:t", "urn:p", "two", Some("en"))))
+  }
+
   test("blank node subject and object pass through as tokens") {
     val out = parse("""_:b0 <urn:p> _:b1 .""")
     assert(out(0)._1 == "_:b0" && out(0)._3 == "_:b1")
